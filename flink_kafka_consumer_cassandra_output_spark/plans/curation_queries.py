@@ -1816,7 +1816,7 @@ def doc_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ])
         totals = ucnt.agg(F.sum("c").alias("nu")).withColumn(
-            "nb", F.lit(obs.get["nb"])
+            "nb", F.lit(obs.get["nb"]).cast("long")
         )
     parts = F.split(F.col("gram"), " ")
     b = (

@@ -62,6 +62,24 @@ def stream_events(spark: SparkSession, input_dir: str, max_files_per_trigger: in
     return reader.parquet(input_dir)
 
 
+def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write one micro-batch's rows to ``path/_batch_id=<batch_id>``, the
+    idempotent sink every ``foreachBatch`` stream here shares.
+
+    Readers of ``path`` discover ``_batch_id`` as an ``int`` partition, so
+    the frame never carries the column and the plan holds no per-batch
+    literal: a warm batch compiles no new codegen classes.  Overwrite
+    deletes only this batch's own directory, so a REPLAYED batch replaces
+    its rows instead of appending dupes.  A crash mid-write leaves the
+    directory empty (the committer's ``_temporary`` files stay hidden until
+    commit) until the WAL replays the uncommitted batch -- the same end
+    state dynamic partition overwrite reached, without its staging
+    directory and rename.  A zero-row frame still leaves one zero-row
+    parquet file, so a completed batch is never an empty directory.
+    """
+    df.write.mode("overwrite").parquet(f"{path}/_batch_id={batch_id}")
+
+
 def run_detail_stream(
     spark: SparkSession,
     input_dir: str,
@@ -180,9 +198,21 @@ def run_dual_sink_stream(
     (run_detail_stream + run_summary_stream), this reads and decodes the
     input ONCE and cannot let the two sinks drift to different offsets --
     the atomicity upgrade SURVEY.md section 3.3 commits to.  Restart
-    safety: each write lands in a ``_batch_id`` partition with dynamic
-    partition overwrite, so a REPLAYED batch replaces its own partition
+    safety: each write goes straight into its ``_batch_id=<id>`` directory
+    (:func:`_write_batch`), so a REPLAYED batch replaces its own directory
     instead of appending dupes -- idempotence by deterministic batch id.
+    A crash between the two writes leaves the batch uncommitted; the WAL
+    replays it and both writes overwrite whatever the crash left.
+
+    The ``persist`` is load-bearing: without it each write re-reads and
+    re-decodes the input files, and the query's progress counts every
+    input row twice.  The two writes stay sequential on purpose: issuing
+    them concurrently over the persisted batch won only 11 of 20
+    interleaved rounds (median 0.843 -> 0.803 s per 10 000-message round,
+    ``local[4]``), within noise.  Anyone revisiting that must submit the
+    writes through ``pyspark.inheritable_thread_target``: plain pool
+    threads drop the stream's job group, so ``query.stop()`` would not
+    cancel their jobs.
 
     Summary semantics match the reference at the storage model each side
     has: Cassandra dedupes re-inserts at storage (upsert); parquet cannot,
@@ -199,21 +229,9 @@ def run_dual_sink_stream(
         batch_df.persist()
         try:
             detail = mp.detail_table(batch_df, encrypt=True)
-            (
-                detail.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(f"{out_root}/message_history")
-            )
+            _write_batch(detail, f"{out_root}/message_history", batch_id)
             summary = mp.summary_distinct(batch_df)
-            (
-                summary.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(f"{out_root}/message_history_summary")
-            )
+            _write_batch(summary, f"{out_root}/message_history_summary", batch_id)
         finally:
             batch_df.unpersist()
 
@@ -717,13 +735,13 @@ def run_curation_funnel_stream(
     ``counts_dir`` records (batch_id, stage0_raw, stage1_quality).
     Stage-2/3 counts are reads over the state table.
 
-    All three tables land under a ``_batch_id`` partition with dynamic
-    overwrite, and every state/index READ filters ``_batch_id <
-    batch_id``: a replayed batch therefore sees exactly the pre-batch
-    state (not its own half-committed output -- without the filter a
-    replay would anti-join its docs against themselves and overwrite its
-    partition with an EMPTY one) and replaces its partitions
-    deterministically.
+    Every table is written straight into its ``_batch_id=<id>`` directory
+    (:func:`_write_batch`), and every state/index READ filters
+    ``_batch_id < batch_id``: a replayed batch therefore sees exactly the
+    pre-batch state (not its own half-committed output -- without the
+    filter a replay would anti-join its docs against themselves and
+    overwrite its directory with an EMPTY one) and replaces its
+    directories deterministically.
     """
     from pyspark.errors import AnalysisException
 
@@ -733,9 +751,9 @@ def run_curation_funnel_stream(
     docs = stream_documents(spark, input_dir)
     bands_path = bands_dir if bands_dir is not None else state_dir + "_bands"
 
-    #: Explicit state-table schemas: reads never infer, so a LEGITIMATELY
-    #: empty state dir (a zero-row first batch -- every doc quality-failed
-    #: -- writes only _SUCCESS) reads as zero rows instead of dying with
+    #: Explicit state-table schemas: reads never infer, so a state dir
+    #: with no data files (a crash after the overwrite cleared batch 0's
+    #: directory) reads as zero rows instead of dying with
     #: UNABLE_TO_INFER_SCHEMA on every subsequent batch and restart.
     state_schema = "doc_id long, fp string, sh array<string>, dropped boolean, _batch_id int"
     bands_schema = "doc_id long, band_id int, band_val string, _batch_id int"
@@ -764,13 +782,16 @@ def run_curation_funnel_stream(
                     return None
                 raise
             if not df.inputFiles():
-                # Directory exists but holds no data files (a zero-row
-                # batch leaves only _SUCCESS).  Treat as empty state AND
-                # keep the scan out of the plan entirely: this batch's own
-                # dynamic-overwrite write to the same path re-lists it,
-                # and recomputing a plan that captured partitionSchema=[]
-                # against a now-partitioned layout trips Spark's
-                # partitionValues arity assertion.  Driver-side listing
+                # Directory exists but holds no data files.  A completed
+                # batch always leaves one (a zero-row batch writes one
+                # zero-row parquet file); only a crash between the
+                # overwrite's delete and its commit leaves none, with the
+                # committer's _temporary files hidden from listing.  Treat
+                # as empty state AND keep the scan out of the plan
+                # entirely: no plan that captured partitionSchema=[] is
+                # then recomputed after this batch's own write adds a
+                # _batch_id directory under the same root (Spark's
+                # partitionValues arity assertion).  Driver-side listing
                 # check -- no job.
                 return None
             return df.filter(F.col("_batch_id") < batch_id).select(*cols)
@@ -847,42 +868,17 @@ def run_curation_funnel_stream(
                     "sh",
                     F.coalesce(F.col("is_dropped"), F.lit(False)).alias("dropped"),
                 )
-                .withColumn("_batch_id", F.lit(batch_id))
             )
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(state_dir)
-            )
-            (
-                new_banded.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(bands_path)
-            )
-            (
-                verified.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(state_dir + "_pairs")
-            )
+            _write_batch(out, state_dir, batch_id)
+            _write_batch(new_banded, bands_path, batch_id)
+            _write_batch(verified, state_dir + "_pairs", batch_id)
             verified.unpersist()
-            (
-                spark.range(1)
-                .select(
-                    F.lit(batch_id).alias("batch_id"),
-                    F.lit(stage0).cast("long").alias("stage0_raw"),
-                    F.lit(stage1).cast("long").alias("stage1_quality"),
-                    F.lit(batch_id).alias("_batch_id"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(counts_dir)
+            counts = spark.range(1).select(
+                F.lit(batch_id).alias("batch_id"),
+                F.lit(stage0).cast("long").alias("stage0_raw"),
+                F.lit(stage1).cast("long").alias("stage1_quality"),
             )
+            _write_batch(counts, counts_dir, batch_id)
             new_banded.unpersist()
             new.unpersist()
         finally:
@@ -913,9 +909,9 @@ def run_cms_stream(
 
     CMS is ADDITIVE (cell-wise sum of per-batch sketches == sketch of the
     union), so the exactly-once state model needs no cross-batch read at
-    all: each micro-batch writes its own D x W delta sketch into a
-    ``_batch_id`` partition with dynamic overwrite (a replayed batch
-    REPLACES its partition rather than double-counting), and the live
+    all: each micro-batch writes its own D x W delta sketch into its
+    ``_batch_id=<id>`` directory (a replayed batch REPLACES that
+    directory rather than double-counting), and the live
     sketch is just ``read_cms_sketch`` -- a sum over all committed
     partitions, at most D*W rows per batch.  This is the mergeable-sketch
     pattern a 100 TB deployment runs: partial sketches merge by union +
@@ -927,13 +923,7 @@ def run_cms_stream(
 
     def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
         delta = SK.cms_build(batch_df, F.col("user_id"))
-        (
-            delta.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(sketch_dir)
-        )
+        _write_batch(delta, sketch_dir, batch_id)
 
     return (
         ev.writeStream.foreachBatch(sketch_batch)
@@ -966,9 +956,9 @@ def run_bloom_filter_stream(
     A Bloom filter is ADDITIVE under union (bit-OR of per-batch filters
     == filter of the union), so it gets the same exactly-once mergeable-
     sketch treatment as ``run_cms_stream``: each micro-batch of arriving
-    NEEDLE documents writes its delta bit set into a ``_batch_id``
-    partition with dynamic overwrite (a replayed batch REPLACES its
-    partition -- bit sets are idempotent under replay by construction,
+    NEEDLE documents writes its delta bit set into its ``_batch_id=<id>``
+    directory (a replayed batch REPLACES that directory -- bit sets are
+    idempotent under replay by construction,
     the overwrite just keeps the storage bounded), and the live filter is
     ``read_bloom_bits`` -- a distinct over all committed partitions,
     at most BLOOM_M rows total regardless of needle volume.  This is how
@@ -993,13 +983,7 @@ def run_bloom_filter_stream(
                 F.array(*[SK.bloom_bit(j, F.col("gram")) for j in range(SK.BLOOM_K)])
             ).alias("bit")
         ).distinct()
-        (
-            delta.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(bits_dir)
-        )
+        _write_batch(delta, bits_dir, batch_id)
 
     return (
         docs.writeStream.foreachBatch(bits_batch)
@@ -1047,9 +1031,9 @@ def run_dedup_clusters_stream(
     past prefixes.  Cost: somewhat wider prefixes than rarest-first; the
     verified pair set is identical (both exact-verified, 100% recall).
 
-    State tables (all ``_batch_id``-partitioned, dynamic overwrite, reads
-    filter ``_batch_id < batch_id`` -- same replay discipline as the
-    curation funnel):
+    State tables (all ``_batch_id``-partitioned, each batch written to its
+    own directory by :func:`_write_batch`, reads filter ``_batch_id <
+    batch_id`` -- same replay discipline as the curation funnel):
 
     - ``state_dir + "_sh"``: (doc_id, sh) shingle store, appended once
       per arriving doc;
@@ -1193,27 +1177,9 @@ def run_dedup_clusters_stream(
             edges = star.unionByName(edges)
         labels = SIM.connected_components(nodes.distinct(), edges)
 
-        (
-            labels.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(labels_path)
-        )
-        (
-            new.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(sh_path)
-        )
-        (
-            new_pfx.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(pfx_path)
-        )
+        _write_batch(labels, labels_path, batch_id)
+        _write_batch(new, sh_path, batch_id)
+        _write_batch(new_pfx, pfx_path, batch_id)
 
     return (
         docs.writeStream.foreachBatch(cluster_batch)
@@ -1253,8 +1219,9 @@ def run_user_erasure_stream(
     batches and an idempotent re-run on a grown corpus (restart + more
     chunks) must converge to exactly the batch query's report.
 
-    State model (the ``_batch_id`` dynamic-overwrite pattern shared with
-    the funnel/dedup streams; replayed batches replace their partitions):
+    State model (the ``_batch_id=<id>`` directory-per-batch pattern of
+    :func:`_write_batch`, shared with the funnel/dedup streams; replayed
+    batches replace their directories):
 
     - ``state_dir``           : raw detail rows, one partition per batch;
     - ``state_dir + "_erase"``: per-batch erased-username deltas;
@@ -1308,13 +1275,7 @@ def run_user_erasure_stream(
             .persist()
         )
         try:
-            (
-                new_detail.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(detail_path)
-            )
+            _write_batch(new_detail, detail_path, batch_id)
             new_erase = (
                 new_detail.filter(
                     F.conv(
@@ -1326,13 +1287,7 @@ def run_user_erasure_stream(
                 .select("username")
                 .distinct()
             )
-            (
-                new_erase.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(erase_path)
-            )
+            _write_batch(new_erase, erase_path, batch_id)
 
             stored_detail = read_committed(detail_path, detail_schema)
             full_detail = stored_detail.filter(
@@ -1349,13 +1304,7 @@ def run_user_erasure_stream(
             clean = full_detail.join(
                 F.broadcast(erase_names), "username", "left_anti"
             )
-            (
-                clean.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(clean_path)
-            )
+            _write_batch(clean, clean_path, batch_id)
             clean_stored = spark.read.parquet(clean_path).filter(
                 F.col("_batch_id") == batch_id
             )
@@ -1391,13 +1340,7 @@ def run_user_erasure_stream(
             report = row(full_detail, clean_stored.drop("_batch_id"), "detail").unionAll(
                 row(summary, s_clean, "summary")
             )
-            (
-                report.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(report_path)
-            )
+            _write_batch(report, report_path, batch_id)
         finally:
             new_detail.unpersist()
 
@@ -1449,8 +1392,8 @@ def run_scd2_stream(
     the open row's version, so the drained stream's table EQUALS the
     batch query's.
 
-    State table ``state_dir + "_scd2"`` (``_batch_id``-partitioned,
-    dynamic overwrite, reads filter ``_batch_id < batch_id`` -- the
+    State table ``state_dir + "_scd2"`` (``_batch_id``-partitioned, one
+    directory per batch, reads filter ``_batch_id < batch_id`` -- the
     replay discipline shared with the other incremental streams): each
     batch writes the COMPLETE row set of the users it touched; the
     current table is, per user, the rows of that user's latest committed
@@ -1558,14 +1501,7 @@ def run_scd2_stream(
             valid_to.isNull().alias("is_current"),
         )
 
-        (
-            closed.unionByName(new_rows)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(scd2_path)
-        )
+        _write_batch(closed.unionByName(new_rows), scd2_path, batch_id)
 
     return (
         stream_events(spark, input_dir, max_files_per_trigger=1)
@@ -1663,13 +1599,7 @@ def run_hll_stream(
                 .groupBy("event_type", "reg")
                 .agg(F.max("m").alias("m"))
             )
-        (
-            delta.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(hll_path)
-        )
+        _write_batch(delta, hll_path, batch_id)
 
     return (
         stream_events(spark, input_dir, max_files_per_trigger=1)
@@ -1750,20 +1680,8 @@ def run_histogram_stream(
         ext = vals.agg(
             F.min("value").alias("vmin"), F.max("value").alias("vmax")
         )
-        (
-            delta.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(state_dir + "_hist")
-        )
-        (
-            ext.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(state_dir + "_ext")
-        )
+        _write_batch(delta, state_dir + "_hist", batch_id)
+        _write_batch(ext, state_dir + "_ext", batch_id)
 
     return (
         ev.writeStream.foreachBatch(hist_batch)
@@ -1839,7 +1757,8 @@ def run_pq_encode_stream(
     vectors arriving as files are encoded against a PINNED codebook and
     their codes appended -- a vector's codes never change once written,
     so the state model is append-only per-batch partitions (replay
-    replaces a partition, the usual dynamic-overwrite discipline) and the
+    replaces its ``_batch_id=<id>`` directory, the usual
+    :func:`_write_batch` discipline) and the
     drained stream's code table is row-identical to a batch encode of the
     same corpus.
 
@@ -1910,14 +1829,7 @@ def run_pq_encode_stream(
             ).select("m", "cent_id", "cent_sv")
             cb.write.mode("overwrite").parquet(cb_path)
             cb = spark.read.parquet(cb_path)
-        (
-            pq_encode(batch_df, cb)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(codes_path)
-        )
+        _write_batch(pq_encode(batch_df, cb), codes_path, batch_id)
 
     reader = (
         spark.readStream.schema(emb_schema)
@@ -1974,9 +1886,9 @@ def run_entity_resolution_stream(
     min-label CC is associative under the star merge, so the drained
     labels EQUAL the batch query's (tested across restart).
 
-    State tables (``_batch_id``-partitioned, dynamic overwrite, reads
-    filter ``_batch_id < batch_id`` -- the replay discipline every stream
-    here follows):
+    State tables (``_batch_id``-partitioned, one directory per batch,
+    reads filter ``_batch_id < batch_id`` -- the replay discipline every
+    stream here follows):
 
     - ``state_dir + "_recs"``: (record_id, name, block key) index;
     - ``state_dir + "_labels"``: the COMPLETE (v, lbl) table per batch.
@@ -2094,23 +2006,11 @@ def run_entity_resolution_stream(
         # reader keys on the latest committed labels batch, so the labels
         # table must never be ahead of the records backing it -- a crash
         # between the two writes then leaves only a stale-but-consistent
-        # labels batch (the half-written recs batch is replayed and
-        # dynamically overwritten on restart), never a labels batch whose
+        # labels batch (the half-written recs batch is replayed and its
+        # directory overwritten on restart), never a labels batch whose
         # canonical records are missing from _recs.
-        (
-            new.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(recs_path)
-        )
-        (
-            labels.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(labels_path)
-        )
+        _write_batch(new, recs_path, batch_id)
+        _write_batch(labels, labels_path, batch_id)
 
     reader = (
         spark.readStream.schema(cust_schema)
@@ -2175,8 +2075,8 @@ def run_cdc_apply_stream(
     it with full history count, exactly like the batch window) and is
     filtered out by :func:`read_cdc_snapshot`.
 
-    State table ``state_dir + "_cdc"`` (``_batch_id``-partitioned,
-    dynamic overwrite, reads filter ``_batch_id < batch_id``): each
+    State table ``state_dir + "_cdc"`` (``_batch_id``-partitioned, one
+    directory per batch, reads filter ``_batch_id < batch_id``): each
     batch writes ONLY the users it touched -- per-batch write volume is
     O(affected keys), the same property that makes the SCD2 twin the
     100 TB shape for a billion-key snapshot absorbing small batches.
@@ -2280,13 +2180,10 @@ def run_cdc_apply_stream(
                     F.col("b_cnt") + F.coalesce(F.col("n_changes"), F.lit(0))
                 ).alias("n_changes"),
             )
-        (
-            merged.withColumn("deleted", F.col("cur_type") == "error")
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(cdc_path)
+        _write_batch(
+            merged.withColumn("deleted", F.col("cur_type") == "error"),
+            cdc_path,
+            batch_id,
         )
 
     return (
@@ -2338,8 +2235,8 @@ def run_skyline_stream(
     the next read -- no explicit retraction bookkeeping, because the
     frontier is a pure function of the maintained summary.
 
-    State tables (``_batch_id``-partitioned, dynamic overwrite, reads
-    filter ``_batch_id < batch_id``):
+    State tables (``_batch_id``-partitioned, one directory per batch,
+    reads filter ``_batch_id < batch_id``):
 
     - ``state_dir + "_bydate"``: (d, mx, keys) per date the batch
       touched, where ``keys`` is the orderkey set achieving ``mx``
@@ -2421,13 +2318,7 @@ def run_skyline_stream(
             ).select("d", F.col("m").alias("mx"), F.col("k").alias("keys"))
         else:
             merged = fresh
-        (
-            merged.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(bydate_path)
-        )
+        _write_batch(merged, bydate_path, batch_id)
 
     reader = (
         spark.readStream.schema(

@@ -59,6 +59,7 @@ def _drop(chunks, input_dir, lo, hi):
 
 def _run(query):
     query.awaitTermination()
+    return query
 
 
 def _run_resilient(start_query):
@@ -152,11 +153,35 @@ def test_summary_stream_watermarked_dedup(spark, sf_dir, event_chunks, tmp_path)
     assert rows == expect
 
 
+def _dual(spark, input_dir, out, cp):
+    """Drain one run of the dual-sink stream; return the finished query."""
+    return _run(sp.run_dual_sink_stream(spark, str(input_dir), str(out), str(cp)))
+
+
+def _batch_truth(spark, *paths):
+    """Batch truth over the events parquet ``paths``: the detail message
+    ids (after O9) and the summary's distinct set."""
+    ev = spark.read.schema(sp.EVENTS_STREAM_SCHEMA).parquet(*map(str, paths))
+    msgs = mp.messages_from_events_df(ev)
+    ids = {r.message_id for r in mp.detail_table(msgs, encrypt=False).collect()}
+    summary = {tuple(r) for r in mp.summary_distinct(msgs).collect()}
+    return ids, summary
+
+
+def _without_k(chunk):
+    """``chunk`` with every ``props`` stripped of ``$.k``: the stanza is
+    null on every row, so O9 drops the whole batch from the detail sink."""
+    i = chunk.schema.get_field_index("props")
+    return chunk.set_column(i, "props", pa.array(["{}"] * chunk.num_rows, pa.string()))
+
+
 def test_dual_sink_stream_one_pass_two_sinks(spark, sf_dir, event_chunks, tmp_path):
     """The reference's fan-out shape: ONE stream feeding BOTH sinks from the
     same micro-batch (foreachBatch), idempotent by batch_id partition
     overwrite.  Restart with no new data changes nothing; the summary's
-    distinct read-view equals the batch truth."""
+    distinct read-view equals the batch truth.  The persisted micro-batch
+    feeds both writes, so progress counts every input row exactly once
+    (re-reading the input per write would count it twice)."""
     input_dir = tmp_path / "in"
     out = tmp_path / "out"
     cp = tmp_path / "cp_dual"
@@ -164,11 +189,12 @@ def test_dual_sink_stream_one_pass_two_sinks(spark, sf_dir, event_chunks, tmp_pa
     total = sum(c.num_rows for c in event_chunks)
 
     _drop(event_chunks, input_dir, 0, 2)
-    _run(sp.run_dual_sink_stream(spark, str(input_dir), str(out), str(cp)))
+    runs = [_dual(spark, input_dir, out, cp)]
     _drop(event_chunks, input_dir, 2, N_CHUNKS)
-    _run(sp.run_dual_sink_stream(spark, str(input_dir), str(out), str(cp)))
+    runs.append(_dual(spark, input_dir, out, cp))
     # restart with NO new data: no new batches, nothing rewritten
-    _run(sp.run_dual_sink_stream(spark, str(input_dir), str(out), str(cp)))
+    runs.append(_dual(spark, input_dir, out, cp))
+    assert sum(p.numInputRows for q in runs for p in q.recentProgress) == total
 
     detail = spark.read.parquet(str(out / "message_history"))
     assert detail.count() == total  # no loss
@@ -184,6 +210,140 @@ def test_dual_sink_stream_one_pass_two_sinks(spark, sf_dir, event_chunks, tmp_pa
         for r in mp.summary_distinct(mp.messages_from_events(spark, sf_dir)).collect()
     }
     assert view == truth  # the upsert log's distinct view IS the converged set
+
+
+def test_dual_sink_stream_replays_uncommitted_batch(spark, event_chunks, tmp_path):
+    """A batch whose sink writes landed but whose commit did not (its
+    commit-log entry deleted, as after a crash before the commit) replays
+    on restart and overwrites its own ``_batch_id`` directories: detail ids
+    stay distinct and complete, and the replayed batch's summary is
+    exactly its distinct set, not two copies of it."""
+    from pyspark.sql import functions as F
+
+    input_dir, out, cp = tmp_path / "in", tmp_path / "out", tmp_path / "cp"
+    input_dir.mkdir()
+    _drop(event_chunks, input_dir, 0, 2)
+    _dual(spark, input_dir, out, cp)
+    _drop(event_chunks, input_dir, 2, N_CHUNKS)
+    _dual(spark, input_dir, out, cp)
+
+    commits = cp / "commits"
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if (commits / name).exists():
+            (commits / name).unlink()
+    q = _dual(spark, input_dir, out, cp)
+    phase2 = sum(c.num_rows for c in event_chunks[2:])
+    assert [p.batchId for p in q.recentProgress if p.numInputRows] == [last]
+    assert sum(p.numInputRows for p in q.recentProgress) == phase2
+    assert (commits / str(last)).exists()
+
+    total = sum(c.num_rows for c in event_chunks)
+    ids, _ = _batch_truth(spark, input_dir)
+    detail = spark.read.parquet(str(out / "message_history"))
+    assert detail.count() == len(ids) == total
+    assert {r.message_id for r in detail.select("message_id").collect()} == ids
+
+    _, replayed_truth = _batch_truth(
+        spark, *(input_dir / f"chunk{i}.parquet" for i in range(2, N_CHUNKS))
+    )
+    replayed = (
+        spark.read.parquet(str(out / "message_history_summary"))
+        .filter(F.col("_batch_id") == last)
+        .select("username", "jid", "date_partition")
+        .collect()
+    )
+    assert len(replayed) == len(replayed_truth)  # replaced, not appended
+    assert {tuple(r) for r in replayed} == replayed_truth
+
+
+def test_dual_sink_stream_empty_detail_batch(spark, event_chunks, tmp_path):
+    """A micro-batch whose every row O9 drops leaves its detail
+    ``_batch_id=<id>/`` directory holding one zero-row parquet file, and
+    both sinks still read back exactly the batch truth over all input."""
+    input_dir, out, cp = tmp_path / "in", tmp_path / "out", tmp_path / "cp"
+    input_dir.mkdir()
+    _drop(event_chunks, input_dir, 0, 1)
+    _dual(spark, input_dir, out, cp)
+    pq.write_table(_without_k(event_chunks[1]), str(input_dir / "no_k.parquet"))
+    assert sum(p.numInputRows for p in _dual(spark, input_dir, out, cp).recentProgress)
+    _drop(event_chunks, input_dir, 2, 3)
+    _dual(spark, input_dir, out, cp)
+
+    empty_dir = out / "message_history" / "_batch_id=1"
+    files = [f for f in os.listdir(empty_dir) if f.endswith(".parquet")]
+    assert len(files) == 1
+    assert pq.read_metadata(str(empty_dir / files[0])).num_rows == 0
+
+    ids, summary = _batch_truth(spark, input_dir)
+    detail = spark.read.parquet(str(out / "message_history"))
+    assert sorted(detail.columns) == sorted(
+        ["message_id", "username", "jid", "date_partition", "sent_time", "stanza", "_batch_id"]
+    )
+    assert detail.count() == len(ids)
+    assert {r.message_id for r in detail.select("message_id").collect()} == ids
+    view = {
+        tuple(r)
+        for r in spark.read.parquet(str(out / "message_history_summary"))
+        .select("username", "jid", "date_partition")
+        .distinct()
+        .collect()
+    }
+    assert view == summary
+
+
+def test_user_erasure_stream_empty_detail_batch(spark, sf_dir, event_chunks, tmp_path):
+    """The erasure stream's ``read_committed`` state reads over a table
+    whose middle batch directory holds only a zero-row file give the same
+    report as the stream without that batch: the batch query's."""
+    from flink_kafka_consumer_cassandra_output_spark.plans import all_specs
+
+    input_dir, state, cp = tmp_path / "in", tmp_path / "erasure_state", tmp_path / "cp"
+    input_dir.mkdir()
+    _drop(event_chunks, input_dir, 0, 2)
+    _run(sp.run_user_erasure_stream(spark, str(input_dir), str(state), str(cp)))
+    pq.write_table(_without_k(event_chunks[0]), str(input_dir / "no_k.parquet"))
+    _run(sp.run_user_erasure_stream(spark, str(input_dir), str(state), str(cp)))
+    assert os.path.isdir(state / "_batch_id=1")
+    _drop(event_chunks, input_dir, 2, N_CHUNKS)
+    _run(sp.run_user_erasure_stream(spark, str(input_dir), str(state), str(cp)))
+
+    streamed = {
+        tuple(r)
+        for r in sp.read_erasure_report(spark, str(state) + "_report").collect()
+    }
+    batch = {
+        tuple(r)
+        for r in all_specs()["msg_user_erasure"].builder(spark, sf_dir).collect()
+    }
+    assert streamed == batch, f"stream {sorted(streamed)} != batch {sorted(batch)}"
+
+
+def test_dual_sink_stream_warm_batches_compile_nothing(spark, event_chunks, tmp_path):
+    """After one warm-up batch, further batches reuse every generated
+    class: no per-batch literal (such as the batch id) reaches a plan."""
+    jvm = spark.sparkContext._jvm
+
+    def compiled() -> int:
+        return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+    input_dir, out, cp = tmp_path / "in", tmp_path / "out", tmp_path / "cp"
+    input_dir.mkdir()
+
+    def one_batch(i: int) -> None:
+        pq.write_table(event_chunks[i % N_CHUNKS], str(input_dir / f"b{i}.parquet"))
+        _dual(spark, input_dir, out, cp)
+
+    # Batch 0 warms up.  The measured batches get ids 3 and 4, which no
+    # other test in this module reaches: the codegen cache is JVM-wide, so
+    # on ids 1 and 2 a per-batch literal could reuse classes compiled by an
+    # earlier test and go unnoticed.
+    for i in range(3):
+        one_batch(i)
+    before = compiled()
+    for i in (3, 4):
+        one_batch(i)
+    assert compiled() - before == 0
 
 
 def test_session_window_stream_with_watermark(spark, sf_dir, event_chunks, tmp_path):
@@ -329,9 +489,9 @@ def doc_chunks(sf_dir):
 def test_curation_funnel_stream_survives_empty_state_tables(
     spark, sf_dir, doc_chunks, tmp_path
 ):
-    """A zero-row batch (every doc quality-failed or already deduped)
-    writes state tables holding only _SUCCESS.  Later batches must read
-    those as EMPTY state -- with the explicit-schema read there is no
+    """State tables holding no data files (what a crash between a
+    batch's overwrite and its commit leaves behind).  Later batches must
+    read those as EMPTY state -- with the explicit-schema read there is no
     inference to die in -- not crash-loop on UNABLE_TO_INFER_SCHEMA
     (regression for the PATH_NOT_FOUND narrowing of read_committed)."""
     from pyspark.sql import functions as F
@@ -343,7 +503,7 @@ def test_curation_funnel_stream_survives_empty_state_tables(
         tmp_path / "cp",
     )
     input_dir.mkdir()
-    # exactly what a zero-row batch leaves behind: dirs with no part files
+    # dirs with no part files, only _SUCCESS
     spark.createDataFrame(
         [], "doc_id long, fp string, sh array<string>, dropped boolean, _batch_id int"
     ).write.partitionBy("_batch_id").parquet(str(state))
@@ -474,7 +634,7 @@ def test_curation_funnel_stream_converges_to_batch_truth(
 def test_cms_stream_matches_batch_sketch(spark, sf_dir, event_chunks, tmp_path):
     """The incremental CMS equals the batch-built sketch cell for cell,
     across a mid-stream restart (additivity + per-batch delta partitions
-    with dynamic overwrite = exactly-once without cross-batch reads)."""
+    overwritten in place = exactly-once without cross-batch reads)."""
     from pyspark.sql import functions as F
 
     from flink_kafka_consumer_cassandra_output_spark.functions import sketch as SK
@@ -529,7 +689,7 @@ def test_cms_stream_matches_batch_sketch(spark, sf_dir, event_chunks, tmp_path):
 def test_bloom_stream_matches_batch_filter(spark, sf_dir, doc_chunks, tmp_path):
     """The incrementally-maintained Bloom filter equals the batch-built
     one bit for bit, across a mid-stream restart (bit sets are additive
-    under union; per-batch delta partitions with dynamic overwrite make
+    under union; per-batch delta partitions overwritten in place make
     replay idempotent) -- and therefore the streamed filter classifies
     every corpus gram exactly as the batch doc_decontamination_bloom
     query's filter does."""

@@ -1139,7 +1139,7 @@ UNION ALL SELECT * FROM jpeg_stats
     sibling="mm_jpeg_ac_stats",
 )
 def mm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.pixel_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "pixel")
 
 
 @register(
@@ -1183,7 +1183,7 @@ FROM blk GROUP BY doc_id, width, height
     # surface at 50.
 )
 def mm_jpeg_ac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_ac_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_ac")
 
 
 @register(
@@ -1249,7 +1249,7 @@ FROM rgb GROUP BY doc_id, width, height
     sibling="mm_jpeg_color12_stats",
 )
 def mm_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_color_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_color")
 
 
 @register(
@@ -1316,7 +1316,7 @@ FROM rgb GROUP BY doc_id, width, height
     sibling="mm_jpeg_arith_stats",
 )
 def mm_jpeg_420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_420_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_420")
 
 
 @register(
@@ -1358,7 +1358,7 @@ FROM px GROUP BY doc_id, width, height
     # hold the surface at 50.
 )
 def mm_png_filtered_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.png_filtered_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "png_filtered")
 
 
 @register(
@@ -1417,7 +1417,7 @@ FROM vals GROUP BY doc_id, width, height
     # hold the surface at 50.
 )
 def mm_jpeg_restart_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_restart_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_restart")
 
 
 @register(
@@ -1458,7 +1458,7 @@ FROM px GROUP BY doc_id, width, height
     # hold the surface at 50.
 )
 def mm_jpeg12_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg12_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg12")
 
 
 @register(
@@ -1522,7 +1522,7 @@ FROM rgb GROUP BY doc_id, width, height
     # green, 8-bit color twin) sits out to hold the surface at 50.
 )
 def mm_jpeg_color12_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_color12_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_color12")
 
 
 @register(
@@ -1576,7 +1576,7 @@ FROM px GROUP BY doc_id, width, height
     # zero dependents) sits out to hold the surface at 50.
 )
 def mm_jpeg_arith_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_arith_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_arith")
 
 
 @register(
@@ -1634,7 +1634,7 @@ FROM fin GROUP BY doc_id, width, height
     # classify inside the full detail pipeline).
 )
 def mm_jpeg_hier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_hier_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_hier")
 
 
 @register(
@@ -1694,7 +1694,7 @@ FROM v GROUP BY doc_id, width, height
     # doc_zipf_fit (the token-frequency family's kept driver anchor).
 )
 def mm_jpeg_arith_prog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_arith_prog_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_arith_prog")
 
 
 @register(
@@ -1740,7 +1740,7 @@ FROM px GROUP BY doc_id, width, height
     # doc_char_kl_gibberish (kept n-gram-statistics driver anchor).
 )
 def mm_jpeg_lossless_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_lossless_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_lossless")
 
 
 @register(
@@ -1809,7 +1809,7 @@ FROM allv GROUP BY doc_id, law, n
     # re-pointed to doc_k_anonymity (kept sampling/privacy anchor).
 )
 def mm_wav_codec_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.wav_codec_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "wav_codec")
 
 
 @register(
@@ -1876,7 +1876,7 @@ FROM v GROUP BY doc_id, arm, width, height
     # surface at 50.
 )
 def mm_png_types_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.png_types_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "png_types")
 
 
 @register(
@@ -1946,7 +1946,7 @@ FROM rgb GROUP BY doc_id, width, height, nf
     # with restarts in every scan) sits out to hold the surface at 50.
 )
 def mm_gif_anim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.gif_anim_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "gif_anim")
 
 @register(
     "mm_jpeg_progressive_stats",
@@ -2029,7 +2029,7 @@ SELECT * FROM color UNION ALL SELECT * FROM refined
     sibling="mm_jpeg_restart_stats",
 )
 def mm_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_progressive_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_progressive")
 
 
 @register(
@@ -2115,7 +2115,7 @@ SELECT * FROM gray UNION ALL SELECT * FROM color
     sibling="mm_jpeg_color12_stats",
 )
 def mm_jpeg_partial_mcu_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return MM.jpeg_partial_mcu_stats(_docs(spark, sf_dir))
+    return MM.decode_stats(_docs(spark, sf_dir), "jpeg_partial_mcu")
 
 
 # --------------------------------------------------------------------------

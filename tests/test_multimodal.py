@@ -3192,3 +3192,43 @@ def test_pnm_truncation_raises_or_never_fabricates(cutseed, kind):
     except ValueError:
         return
     assert d == full, f"prefix of {cut} bytes decoded DIFFERENT pixels"
+
+
+def test_decode_gate_degrade_fails_loudly(monkeypatch):
+    """Every decode-stats gate checks the decoded format (and, for the
+    animated GIF, the frame count) before it emits a row: a blob that
+    decodes to anything else raises ValueError naming the gate and the
+    document instead of emitting plausible stats.  The gate table and the
+    registered mm_<key>_stats queries name the same 17 gates."""
+    import re
+
+    from flink_kafka_consumer_cassandra_output_spark.plans import all_specs
+
+    gates = mm.DECODE_GATES
+    pixel, gif_anim = gates["pixel"], gates["gif_anim"]
+    monkeypatch.setitem(
+        gates, "jpeg_ac", lambda d: (mm.synth_jpeg_color(8, 8, d), "jpeg_gray")
+    )
+    # the pixel gate's BMP arm (doc_id % 6 == 0) hands over a PPM
+    monkeypatch.setitem(
+        gates,
+        "pixel",
+        lambda d: (mm.synth_ppm(3, 2, d), "bmp") if d % 6 == 0 else pixel(d),
+    )
+    # one frame more than the gate expects
+    monkeypatch.setitem(
+        gates,
+        "gif_anim",
+        lambda d: (mm.synth_gif_animated(5, 4, d, d % 3 + 3), "gif_anim"),
+    )
+    with pytest.raises(ValueError, match=r"^jpeg_ac_stats: .* doc 5 \(fmt='jpeg_rgb'"):
+        mm._decode_stats_row("jpeg_ac", 5)
+    with pytest.raises(ValueError, match=r"^pixel_stats: .* doc 12 \(fmt='ppm'"):
+        mm._decode_stats_row("pixel", 12)
+    assert mm._decode_stats_row("pixel", 13)[1] == "ppm"  # other arms untouched
+    with pytest.raises(ValueError, match=r"^gif_anim_stats: .* doc 7 .*n_frames=4"):
+        mm._decode_stats_row("gif_anim", 7)
+    assert gif_anim(7)[1] == "gif_anim"
+
+    registered = {n for n in all_specs() if re.fullmatch(r"mm_\w+_stats", n)}
+    assert {f"mm_{k}_stats" for k in gates} == registered

@@ -1398,42 +1398,44 @@ def test_skyline_stream_reverse_arrival_matches_batch(
     assert streamed == batch, f"{len(streamed ^ batch)} frontier rows differ"
 
 
-def test_jpeg_ac_stats_stream_matches_batch_with_restart(
-    spark, sf_dir, doc_chunks, tmp_path
+@pytest.mark.parametrize("gate", ["jpeg_ac", "jpeg_lossless"])
+def test_decode_stats_stream_matches_batch_with_restart(
+    spark, sf_dir, doc_chunks, tmp_path, gate
 ):
-    """Streaming twin of the mm_jpeg_ac_stats decode gate (VERDICT r15
-    task 5): documents streamed as files through the SAME mapInPandas
-    decode stage must (a) survive a restart from the checkpoint with no
-    loss and no dupes, and (b) reproduce the batch operator's rows
-    EXACTLY -- every decoded stat, not just counts."""
+    """Streaming twin of the mm_<gate>_stats decode gates: documents
+    streamed as files through the SAME mapInPandas decode stage must
+    (a) survive a restart from the checkpoint with no loss and no dupes,
+    and (b) reproduce the batch operator's rows EXACTLY -- every decoded
+    stat, not just counts."""
     from flink_kafka_consumer_cassandra_output_spark.operators.multimodal import (
-        jpeg_ac_stats,
+        decode_stats,
     )
 
-    input_dir, out, cp = tmp_path / "in", tmp_path / "ac_stats", tmp_path / "cp_ac"
+    input_dir, out, cp = tmp_path / "in", tmp_path / "stats", tmp_path / "cp"
     input_dir.mkdir()
+
+    def run():
+        _run(sp.run_decode_stats_stream(spark, gate, str(input_dir), str(out), str(cp)))
+        return sp.read_decode_stats(spark, str(out))
 
     # phase 1: half the corpus
     _drop(doc_chunks, input_dir, 0, 2)
-    _run(sp.run_jpeg_ac_stats_stream(spark, str(input_dir), str(out), str(cp)))
-    n1 = sp.read_jpeg_ac_stats(spark, str(out)).count()
+    n1 = run().count()
     assert n1 == sum(c.num_rows for c in doc_chunks[:2])
 
     # phase 2: restart with NO new data -> nothing reprocessed
-    _run(sp.run_jpeg_ac_stats_stream(spark, str(input_dir), str(out), str(cp)))
-    assert sp.read_jpeg_ac_stats(spark, str(out)).count() == n1
+    assert run().count() == n1
 
     # phase 3: rest arrives; restart from checkpoint
     _drop(doc_chunks, input_dir, 2, N_CHUNKS)
-    _run(sp.run_jpeg_ac_stats_stream(spark, str(input_dir), str(out), str(cp)))
-    streamed = sp.read_jpeg_ac_stats(spark, str(out))
+    streamed = run()
     total = sum(c.num_rows for c in doc_chunks)
     assert streamed.count() == total  # no loss
     assert streamed.select("doc_id").distinct().count() == total  # no dupes
 
     # batch-vs-stream equivalence: identical decoded stats row-for-row
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    batch = {tuple(r) for r in jpeg_ac_stats(docs).collect()}
+    batch = {tuple(r) for r in decode_stats(docs, gate).collect()}
     got = {tuple(r) for r in streamed.collect()}
     assert got == batch, f"{len(got ^ batch)} decoded stat rows differ"
 
@@ -1481,39 +1483,3 @@ def test_dsir_score_stream_matches_batch_with_restart(
     assert streamed.select("doc_id").distinct().count() == len(batch)  # no dupes
     got = {tuple(r) for r in streamed.collect()}
     assert got == batch, f"{len(got ^ batch)} score rows differ"
-
-
-def test_jpeg_lossless_stats_stream_matches_batch_with_restart(
-    spark, sf_dir, doc_chunks, tmp_path
-):
-    """Streaming twin of the r17 mm_jpeg_lossless_stats decode gate
-    (one twin per decode family round): same exactly-once contract as
-    the AC-stats twin -- restart from checkpoint with no loss/no dupes,
-    and row-for-row equality with the batch operator's decoded stats."""
-    from flink_kafka_consumer_cassandra_output_spark.operators.multimodal import (
-        jpeg_lossless_stats,
-    )
-
-    input_dir = tmp_path / "in"
-    out, cp = tmp_path / "lossless_stats", tmp_path / "cp_lossless"
-    input_dir.mkdir()
-
-    _drop(doc_chunks, input_dir, 0, 2)
-    _run(sp.run_jpeg_lossless_stats_stream(spark, str(input_dir), str(out), str(cp)))
-    n1 = sp.read_jpeg_lossless_stats(spark, str(out)).count()
-    assert n1 == sum(c.num_rows for c in doc_chunks[:2])
-
-    _run(sp.run_jpeg_lossless_stats_stream(spark, str(input_dir), str(out), str(cp)))
-    assert sp.read_jpeg_lossless_stats(spark, str(out)).count() == n1
-
-    _drop(doc_chunks, input_dir, 2, N_CHUNKS)
-    _run(sp.run_jpeg_lossless_stats_stream(spark, str(input_dir), str(out), str(cp)))
-    streamed = sp.read_jpeg_lossless_stats(spark, str(out))
-    total = sum(c.num_rows for c in doc_chunks)
-    assert streamed.count() == total
-    assert streamed.select("doc_id").distinct().count() == total
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    batch = {tuple(r) for r in jpeg_lossless_stats(docs).collect()}
-    got = {tuple(r) for r in streamed.collect()}
-    assert got == batch, f"{len(got ^ batch)} decoded stat rows differ"

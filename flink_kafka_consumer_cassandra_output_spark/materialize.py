@@ -45,6 +45,16 @@ def materialize(df: DataFrame) -> DataFrame:
     subdir whose application id is no longer running.  Without the
     scoping, staged intermediates from repeated builder invocations would
     accumulate unboundedly with no safe deletion rule.
+
+    Eagerness contract: every mode except schema-only runs ``df`` to
+    completion before returning, so an ``Observation`` attached to ``df``
+    (``df.observe(obs, ...)``) is filled when this call returns and
+    ``obs.get`` does not block -- ``doc_bigram_pmi`` reads its bigram
+    total that way after :func:`materialize_many`.  On a frame that was
+    never acted on, ``obs.get`` waits forever, so a lazy mode added here
+    would hang such callers; ``tests/test_staging_mode.py`` pins the
+    contract with a bounded wait.  Schema-only mode runs nothing: callers
+    must not read observations there.
     """
     if schema_only_builds():
         return df

@@ -30,10 +30,8 @@ curation stages real 100 TB pipelines run between dedup and packing:
 - ``doc_temperature_mixing`` -- per-source sampling weights
   ∝ share^(1/T) with IEEE-exact sqrt and a pinned-order normalizer.
 
-All eight are driver=False this round (the 50 driver slots are spent on the
-round-7 rotation promoting never-driver-checked queries); they are fully
-oracle-checked by tests/test_oracle_parity.py and are the first rotation
-candidates for round 8.
+Driver-facing or local-only, all eight are oracle-checked by
+tests/test_oracle_parity.py.
 
 Determinism notes (same contract as northstar_queries):
 - every ratio is a single division of exact integers, except BM25 where
@@ -132,7 +130,6 @@ FROM stats
         "flag.  Bigram stats are array expressions (no shuffle) except the "
         "top-bigram mode, which is an explode keyed by doc_id -- the one "
         "shuffle, partitioned by document so it scales horizontally.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def doc_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
@@ -226,11 +223,7 @@ FROM ranked
         "the corpus); at extreme scale the documented alternative is the "
         "two order-statistic cutoffs via orderBy+limit as in "
         "agg_exact_percentiles.",
-    # r10 driver-slot rotation: token-frequency scoring family keeps BM25.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_arith_prog_stats registration.
     sibling="doc_zipf_fit",
 )
 def doc_lm_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,12 +375,7 @@ FROM ranked WHERE rank <= {_TOPK}
         "per-document expression stays JVM-side).  Large dynamic query sets "
         "route through the posting-list explode+equi-join form instead "
         "(the machinery doc_tfidf_top_terms already exercises).",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_arith_prog_stats registration.
     sibling="doc_zipf_fit",
 )
 def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,12 +479,7 @@ LIMIT {_PASSAGE_TOPK}
         "per-partition top-k then merge, no single-task sort).  The "
         "suffix-array literature's exact-substring dedup reduced to the "
         "n-gram explode Spark executes as two keyed shuffles.",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_lossless_stats registration.
     sibling="doc_char_kl_gibberish",
 )
 def doc_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,11 +567,7 @@ WHERE CAST(n_shared_grams AS DOUBLE) / CAST(n_needle_grams AS DOUBLE)
         "the 'benchmark' is itself web-scale (dedup-against-eval at "
         "100 TB): both sides shard by gram, the hot-gram skew ceiling is "
         "the same one the PPJoin prefix filter bounds.",
-    # r10 driver-slot rotation: decontamination family anchor moves to the promoted Bloom variant.
     driver=False,
-    # r13 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_lossless_stats registration.
     sibling="doc_char_kl_gibberish",
 )
 def doc_decontamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -683,11 +662,7 @@ GROUP BY h.doc_id"""
         "probe is a broadcast join on bit position -- the corpus never "
         "shuffles, which is the whole reason production pipelines put a "
         "Bloom filter in FRONT of the exact n-gram join.",
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_lossless_stats registration.
     sibling="doc_char_kl_gibberish",
 )
 def doc_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -796,10 +771,6 @@ LIMIT 20
         "tiny pair-key space; document frequencies are a token-level "
         "aggregate joined back, N rides along as a broadcast scalar -- "
         "the same shape doc_tfidf_top_terms uses.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r17 interim sit-out: paired with the new
-    # mm_jpeg_arith_prog_stats first-round registration; re-enters
-    # the queue at age 1.
     driver=False,
     sibling="doc_zipf_fit",
 )
@@ -876,8 +847,6 @@ GROUP BY s.source, s.lang
         "(cross-source dup exposure -- the number a mixing decision reads "
         "first).  Two combinable aggregations plus one fingerprint "
         "equi-join; every stat is exact-integer with one final division.",
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
     sibling="doc_zipf_fit",
 )
@@ -951,7 +920,6 @@ FROM scored
         "integer division, 3-way label.  The lexicons are literal arrays "
         "here; a production lexicon becomes a broadcast join against the "
         "same counting shape (the taxonomy lookup-join pattern).",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def doc_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
@@ -1016,12 +984,7 @@ FROM summed
         "float fold is identical in both engines.  The weight table is "
         "|sources| rows -- broadcast-sized by construction; downstream "
         "sampling joins it to the corpus on the source key.",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r13 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_wav_codec_stats registration.
     sibling="doc_k_anonymity",
 )
 def doc_temperature_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1102,10 +1065,6 @@ FROM m GROUP BY ph
         "indexes store positions.  Scale: the phrase terms broadcast; "
         "each join touches only the matched terms' postings, shuffled on "
         "(doc, pos).",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r17 interim sit-out: paired with the new
-    # mm_jpeg_lossless_stats first-round registration; re-enters
-    # the queue at age 1.
     driver=False,
     sibling="doc_char_kl_gibberish",
 )
@@ -1217,9 +1176,6 @@ FROM aug
         "Python; at 100 TB this is a narrow map with no shuffle at all.  "
         "The redacted string itself is hash-checked (md5), so the gate "
         "pins masking byte-for-byte, not just the match counts.",
-    # r8 sibling re-point: pattern-scan-over-text family, driver-checked there.
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
     sibling="doc_k_anonymity",
 )
@@ -1282,12 +1238,7 @@ LIMIT 20
         "on a pair-key space bounded by |alphabet|^2, top-20 via "
         "TakeOrderedAndProject.  Integer counts, lexicographic tiebreak: "
         "bit-exact parity for free.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_zipf_fit",
 )
 def doc_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1348,9 +1299,6 @@ GROUP BY split, source
         "CMS/Bloom sketches, so DuckDB replicates it verbatim.  Scale: "
         "one narrow map + one combinable groupBy on a "
         "|splits| x |sources| key space.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r17 interim sit-out: paired with the new mm_wav_codec_stats
-    # first-round registration; re-enters the queue at age 1.
     driver=False,
     sibling="doc_k_anonymity",
 )
@@ -1432,10 +1380,7 @@ FROM joined GROUP BY status
         "on doc_id -- at 100 TB both snapshots are bucketed on it and the "
         "join is co-located) and a 4-row aggregate.  md5 fingerprints + "
         "integer counts: exact parity.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
-    # r13 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_zipf_fit",
 )
 def doc_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1521,11 +1466,7 @@ SELECT lang, doc_id, weight, n_copies FROM sel WHERE n_copies >= 1
         "construction.  Complements doc_stratified_sample (hash quotas: "
         "uniform within stratum) and doc_temperature_mixing (computes "
         "weights; this query consumes them).",
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_wav_codec_stats registration.
     sibling="doc_k_anonymity",
 )
 def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1604,12 +1545,7 @@ LIMIT 100
         "shape Spark map-side combines; no per-doc state, no driver "
         "collection.  Short docs (<3 tokens) are excluded on both "
         "sides rather than emitting the whole-doc fallback shingle.",
-    # r11 driver-slot rotation: promoted -- corpus n-gram frequency table, first driver check.
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_arith_prog_stats registration.
     sibling="doc_zipf_fit",
 )
 def doc_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1665,9 +1601,6 @@ GROUP BY d.lang
         "ordering hazard.  Scale: one shuffle on lang for the rank "
         "window, one for the re-agg; the bounds table is lang-bounded "
         "(broadcast join back).",
-    # r11 driver-slot rotation: promoted -- discrete-percentile robust stats, first driver check.
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
     sibling="doc_zipf_fit",
 )
@@ -1764,11 +1697,7 @@ LIMIT 50
         "strings (word-count shape, map-side combined), two equi-joins "
         "of bigram counts against the vocab table (unbounded -> no "
         "broadcast hint, AQE decides), one 1-row totals broadcast.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_zipf_fit",
 )
 def doc_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1870,7 +1799,6 @@ GROUP BY lang, n_chars // 100
         "DISTINCT, boolean flags.  Scale: a single map-side-combined "
         "groupBy; the COUNT DISTINCT expands to Spark's two-phase "
         "distinct-aggregate on the same key -- no second scan.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
 )
 def doc_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.col("n_chars").isNotNull())
@@ -1947,7 +1875,6 @@ FROM m
         "first-element-init F.aggregate), so slope/intercept/r2 doubles "
         "are bit-identical.  Scale: the only unbounded work is the "
         "word-count aggregate; everything after operates on <=1000 rows.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
 )
 def doc_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
@@ -2061,11 +1988,7 @@ FROM l2
         "Integer counts are order-free; every double is bit-identical "
         "cross-engine.  Scale: word-count shuffle + two bounded-width "
         "aggregations; nothing quadratic, no driver collection.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_zipf_fit",
 )
 def doc_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2567,9 +2490,6 @@ FROM alld CROSS JOIN lrow
         "explode; the importance model is O(B) state folded into the "
         "plan as literals regardless of corpus size, which is the point "
         "of DSIR's hashed features at 100 TB.",
-    # New registration (r16): takes a driver slot in its first round per
-    # the freshness-era lint rule; emb_ann_ivf sits out to hold the
-    # surface at 50 (ANN family anchor moves to emb_ann_recall_curve).
 )
 def doc_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())

@@ -50,11 +50,7 @@ FROM events
 """,
     doc="from_json with an explicit StructType on events.props (JSON scalar "
         "surface); typed struct field access, not string re-parsing per key",
-    # r10 driver-slot rotation: events-table typed extraction green 8 consecutive rounds; from_json stays parity- and streaming-test-gated.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_restart_stats registration.
     sibling="ev_max_concurrent_sessions",
 )
 def ev_json_props_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,11 +76,7 @@ GROUP BY 1, 2, 3
 """,
     doc="tumbling 1-hour window aggregate (epoch-aligned, matching "
         "F.window's origin); decimal-exact value sums",
-    # r10 driver-slot rotation: hourly time-bucketed aggregation exercised by the densified ACF spine.
     driver=False,
-    # r12 sibling re-point: prior anchor demoted this rotation.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="ev_cusum_alarm_minute",
 )
 def ev_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,15 +116,7 @@ GROUP BY 1, 2
         "overlapping buckets; the oracle materializes both bucket starts "
         "explicitly. Scale: Spark's window expand is a per-row flatMap (x2 "
         "rows), then one shuffle on the bucket",
-    # alignment and ev_session_windows the gap semantics; the slide variant
-    # (same operator, overlap factor 2) stays oracle-checked locally.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r15 interim edit: sits out so the new ev_cusum_alarm_minute takes a
-    # first-round driver slot at a constant 50-entry surface (fresh r14
-    # green; ev_session_windows -- the r15-promoted time-window anchor --
-    # covers the window-assignment machinery driver-side).
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="ev_max_concurrent_sessions",
 )
 def ev_sliding_hourly_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,9 +162,6 @@ GROUP BY user_id, session_id
         "the oracle is the classic gaps-and-islands rewrite (lag -> running "
         "sum of session starts).  Spark session semantics: start = first "
         "event, end = last event + gap",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="ev_max_concurrent_sessions",
 )
@@ -219,11 +200,10 @@ GROUP BY user_id
         "NULL on both engines (SUM over empty CASE).  Oracle SUMs are cast to "
         "BIGINT: DuckDB SUM yields HUGEINT, and the driver's value hash is "
         "type-sensitive even when values are identical",
-    # is the plain GROUP BY, so a wrong pivot cell cannot pass the driver's
-    # roundtrip gate; the wide form itself stays oracle-checked locally.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
+    # ev_unpivot_roundtrip (driver-checked) COMPOSES this pivot and its
+    # oracle is the plain GROUP BY, so a wrong pivot cell cannot pass the
+    # driver's roundtrip gate; the wide form itself stays oracle-checked
+    # locally.
     driver=False,
     sibling="agg_cube_orders",
 )
@@ -248,7 +228,6 @@ GROUP BY user_id, event_type
         "GROUP BY exactly -- the oracle IS that group-by, so the gate checks "
         "the pivot/unpivot round-trip, not just the melt mechanics.  NULL "
         "cells (user never produced the type) are dropped on both sides",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def ev_unpivot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = ev_pivot_user_type_counts(spark, sf_dir)
@@ -291,9 +270,7 @@ GROUP BY cohort_week, week_offset
         "is a tiny per-user table that broadcasts back onto the distinct "
         "user-week activity set); at 100 TB the cohort table is |users|, "
         "dimension-sized by construction.",
-    # r9 driver-slot rotation: per-user ordered-window family keeps two anchors.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="ev_cohort_revenue_curve",
 )
 def ev_user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,7 +326,6 @@ SELECT (SELECT COUNT(*) FROM v) AS n_view,
         "per stage.  Strictness under ties: the 1-preceding frame plus the "
         "explicit ts > comparison, with event_id completing the total "
         "order.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def ev_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir).select("user_id", "event_type", "ts", "event_id")
@@ -406,7 +382,6 @@ GROUP BY prev_type, next_type
         "order total, aggregated to (prev, next) pairs.  Plan: one shuffle "
         "on user_id for the window sort, then a 25-group aggregate; the "
         "window never re-shuffles an already user-partitioned stream.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def ev_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir)
@@ -447,7 +422,6 @@ LIMIT 20
         "event count with a (user, start) total-order tiebreak.  Plan: one "
         "user_id shuffle serves both windows AND the per-session "
         "aggregate; TakeOrderedAndProject does the global top-20.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def ev_top_sessions_by_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir)
@@ -522,7 +496,6 @@ FROM grid
         "volume, so densification cost is independent of the fact table.  "
         "The first grid hour is observed by construction, so the fill "
         "never emits leading NULLs.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def ev_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir).filter(F.col("value").isNotNull())
@@ -601,12 +574,7 @@ GROUP BY e.event_id, e.user_id
         "optimization (binned interval join): at 100 TB the naive form is "
         "a per-user cross product, the bucketed form shuffles both sides "
         "once on (user, bucket) with bounded per-bucket fan-in.",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg12_stats registration.
     sibling="ev_cusum_alarm_minute",
 )
 def ev_range_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,12 +659,7 @@ GROUP BY p.user_id, p.exact_cnt
         "(row, bucket), the probe an equi-join against a broadcast-sized "
         "table.  w < |keys| by design so collisions make estimates "
         "overestimate (CMS guarantee: never under).",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="approx_quantiles_price",
 )
 def ev_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,11 +722,7 @@ LIMIT 20
         "every subsequence (collect over a bounded 8-row frame -- state "
         "is O(pattern), not O(series)).  Integer weights keep the whole "
         "query float-free, so parity is exact by construction.",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_restart_stats registration.
     sibling="ev_max_concurrent_sessions",
 )
 def ev_ts_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -848,7 +807,6 @@ LIMIT 50
         "correctly-rounded.  Scale: one (user, hour) shuffle with map-side "
         "combine, a user-level stats aggregate joined back on the SAME "
         "user key, top-50 via TakeOrderedAndProject.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
 )
 def ev_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r17 (guide section 2.4): the per-user stats were a groupBy(user_id)
@@ -935,8 +893,6 @@ WHERE n_prior >= 3
         "against this query -- the batch plan IS the streaming truth.  "
         "One user shuffle, three window aggregates sharing one frame; "
         "integer prefix sums keep parity exact.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
     sibling="ev_cusum_alarm",
 )
@@ -1030,8 +986,6 @@ FROM folded WHERE n_hours >= 2
         "(hours in retention window); one user-keyed shuffle, state "
         "O(1) per step -- and the same recurrence runs incrementally in "
         "streaming/stateful.py's state model if maintained online.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
     sibling="ev_cusum_alarm",
 )
@@ -1124,11 +1078,7 @@ FROM islands
         "user_id, so AQE-coalesced local aggregation follows the same "
         "exchange; no per-user data ever funnels through one task wider "
         "than that user's own history.",
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
-    # r16 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg12_stats registration.
     sibling="ev_cusum_alarm_minute",
 )
 def ev_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1265,12 +1215,7 @@ FROM z GROUP BY 1
         "write path is repartitionByRange(zvalue) so parquet row-group "
         "min/max footers carry tight ranges on both dimensions -- this "
         "query IS that index build.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
-    # r13 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_wav_codec_stats registration.
     sibling="doc_k_anonymity",
 )
 def ev_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1424,11 +1369,7 @@ FROM corrected
         "bit-identical results (tests/test_streaming.py).  n_exact and "
         "rel_err are carried alongside so the estimate's quality is "
         "visible in the output (|rel_err| pinned in tests).",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="approx_quantiles_price",
 )
 def ev_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1546,11 +1487,7 @@ FROM probes p JOIN dim d
         "arithmetic is integer epoch-us division, never float seconds.".format(
             n=SCD2_PROBES
         ),
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg12_stats registration.
     sibling="ev_cusum_alarm_minute",
 )
 def ev_scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1640,9 +1577,6 @@ GROUP BY state
         "aggregate keyed by state.  The consumption-side triple is now "
         "complete: build (ev_scd2_user_state), point-in-time read "
         "(ev_scd2_asof_lookup), and duration analytics (this query).",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r16 interim sit-out: paired with the new mm_jpeg12_stats
-    # first-round registration; re-enters the queue at age 1.
     driver=False,
     sibling="ev_cusum_alarm_minute",
 )
@@ -1703,12 +1637,7 @@ FROM ranked WHERE rn = 1 AND event_type <> 'error'
         "exchange every window query here rides.  The streaming twin "
         "(streaming/pipeline.py run_cdc_apply_stream) maintains the same "
         "snapshot incrementally and is pinned stream==batch.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
-    # r13 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg12_stats registration.
     sibling="ev_cusum_alarm_minute",
 )
 def ev_cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1842,12 +1771,7 @@ def _dense_hourly_counts(ev: DataFrame) -> DataFrame:
         "hour), the lag windows ride ONE event_type exchange, and "
         "parallelism grows with the number of series (the per-type "
         "window is the unit of work) -- no global sort anywhere.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
-    # r13 sibling re-point: prior anchor demoted this rotation.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="ev_cusum_alarm_minute",
 )
 def ev_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1935,9 +1859,6 @@ LIMIT 20
         "exchange); the trigram count is a map-side-combined aggregate "
         "over at most |event-type|^3 groups and the top-20 is "
         "TakeOrderedAndProject.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r16 interim sit-out: paired with the new mm_jpeg_restart_stats
-    # first-round registration; re-enters the queue at age 1.
     driver=False,
     sibling="ev_max_concurrent_sessions",
 )
@@ -2020,9 +1941,6 @@ FROM sums
         "spine broadcast, one map-side-combined count shuffle, one "
         "event_type exchange for the row_number, one tiny per-type "
         "aggregate; parallelism grows with the number of series.",
-    # r11 driver-slot rotation: promoted -- closed-form OLS sufficient stats, first driver check.
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
     sibling="ev_anomaly_zscore",
 )
@@ -2117,7 +2035,6 @@ FROM running GROUP BY day
         "running-sum PREFIX MULTISET is permutation-invariant within an "
         "equal (ts, delta) group, so MAX(conc) is deterministic without "
         "a per-row total order.  Integer counting end to end.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
 )
 def ev_max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir)
@@ -2224,9 +2141,6 @@ GROUP BY day, status
         "serving both the lag and the lead, and a tiny (day, status) "
         "aggregate -- the same shape ev_user_retention_cohorts rides, "
         "completing the retention family's day-over-day axis.",
-    # r11 driver-slot rotation: promoted -- DAU new/retained/resurrected/churned, first driver check.
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
     sibling="ev_cohort_revenue_curve",
 )
@@ -2306,12 +2220,7 @@ FROM counts
         "so at 100 TB the whole chain rides ONE exchange of the events "
         "table (AQE reuses the partitioning) plus two tiny per-stage "
         "joins; the final counts frame is <= 3 rows.",
-    # r11 driver-slot rotation: promoted -- ordered multi-step funnel, first driver check.
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
-    # r16 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_restart_stats registration.
     sibling="ev_max_concurrent_sessions",
 )
 def ev_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2389,12 +2298,6 @@ GROUP BY d.event_type
         "documented exact-percentile trade, right for bounded "
         "categorical groups, with agg_histogram_quantile_sketch as the "
         "high-cardinality alternative.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r14 interim demote: the new doc_char_kl_gibberish registration must
-    # take a driver slot in its first round (freshness-era lint rule), so
-    # the freshest eligible veteran sits out -- green r13+r14-surface, one
-    # dependent, and the anomaly family keeps its stateful batch anchor
-    # ev_anomaly_zscore driver-side.
     driver=False,
     sibling="ev_anomaly_zscore",
 )
@@ -2484,9 +2387,6 @@ FROM stats
         "event_type key -- sufficient-statistics reduction is THE "
         "pattern for experiment analysis at 100 TB (never collect "
         "per-user frames to the driver).",
-    # r11 driver-slot rotation: promoted -- sufficient-statistics experiment readout, first driver check.
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
     sibling="ev_anomaly_zscore",
 )
@@ -2563,7 +2463,6 @@ GROUP BY user_id
         "user_id; hour-bounded partitions cap window state regardless of "
         "per-user volume -- a user with 1e9 events still windows in "
         "hour-sized slices.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
 )
 def ev_quota_flagging(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir)
@@ -2625,11 +2524,7 @@ GROUP BY event_type
         "the exchange), then a map-side-combined agg on the bounded "
         "event_type key; the stateful streaming twin of this shape is the "
         "applyInPandasWithState debouncer in streaming/stateful.py.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="ev_max_concurrent_sessions",
 )
 def ev_burst_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2706,9 +2601,6 @@ GROUP BY event_type
         "tie-break).  Scale: one shuffle on event_type; the running sum "
         "is a single sequential pass per group -- for very hot groups "
         "pre-aggregate to per-minute cents first (same algebra).",
-    # r11 driver-slot rotation: promoted -- integer-exact changepoint statistic, first driver check.
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
     sibling="ev_cusum_alarm",
 )
@@ -2773,11 +2665,7 @@ GROUP BY h.hr
         "constant-size state), which is why both are registered.  Oracle "
         "replicates via an interval range join + conditional COUNT "
         "DISTINCT.",
-    # r11 driver-slot rotation: promoted -- bucket-set range-window exact distinct, first driver check.
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="approx_quantiles_price",
 )
 def ev_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2844,7 +2732,6 @@ FROM tot t JOIN agg a USING (event_type)
         "inherent to the semantics -- the streaming deployment "
         "(streaming/stateful.py:debounced_events) keeps last-kept-ts "
         "state per key and never re-reads history.",
-    # r11 driver-slot rotation: promoted -- sequential fold + recursive-CTE oracle, first driver check.
 )
 def ev_debounce_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.debounce import debounce_exact
@@ -2899,11 +2786,7 @@ FROM slot, tot
         "Scale: one map-side-combined groupBy on a 168-value key plus a "
         "1-row totals broadcast -- nothing grows with data volume except "
         "the scan.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="ev_cusum_alarm_minute",
 )
 def ev_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2980,7 +2863,6 @@ FROM g
         "one agg on the bounded (cohort, age) grid, and a running sum "
         "over age within cohort -- the window partition is one cohort's "
         "WEEKS (bounded by calendar), never raw events.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
 )
 def ev_cohort_revenue_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r17 (guide section 2.4): the cohort map was a groupBy(user_id)
@@ -3116,7 +2998,6 @@ FROM s GROUP BY event_type
         "parameters -- stream==batch pinned in tests/test_stateful.py.  "
         "Scale: one event_type exchange reused by both window passes "
         "plus a bounded totals broadcast.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
 )
 def ev_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = cusum_alarm_rows(spark, sf_dir)
@@ -3241,9 +3122,6 @@ FROM s GROUP BY event_type
         "checkpoints).  Scale: one (type, minute) shuffle with map-side "
         "combine, a bounded totals broadcast, both window passes on one "
         "event_type exchange.",
-    # New registration (r15): takes a driver slot in its first round per
-    # the freshness-era lint rule; ev_sliding_hourly_30m sits out to hold
-    # the surface at 50.
 )
 def ev_cusum_alarm_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = cusum_minute_rows(spark, sf_dir)

@@ -104,12 +104,6 @@ FROM documents
     doc="north-star text analysis: whitespace + BPE-ish token counts, "
         "distinct tokens, stopword/punct counts, composite quality score -- "
         "all pure Column expressions (functions/text.py), zero Python UDFs",
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r15 interim edit: sits out so the new mm_jpeg_ac_stats takes a
-    # first-round driver slot at a constant 50-entry surface (the r14
-    # precedent: ev_anomaly_mad sat out for doc_char_kl_gibberish).
-    # Freshest multi-round veteran (6 greens, re-checked r14); the
-    # documents family keeps 10+ driver anchors.
     driver=False,
     sibling="doc_zipf_fit",
 )
@@ -141,9 +135,6 @@ GROUP BY lang, lang_pred
 """,
     doc="north-star language-ID: marker-lexicon argmax (deterministic "
         "tiebreak) cross-tabulated against the declared lang column",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="doc_char_kl_gibberish",
 )
@@ -169,14 +160,10 @@ FROM h
     doc="north-star SimHash (16-bit) document sketch: per-bit majority vote "
         "over 16-bit md5 token hashes; per-row fold, no shuffle, and the "
         "integer bit-sums are order-insensitive so parity is exact",
-    # construction end-to-end at 32 bits (hash-exact oracle); the bare
-    # 16-bit sketch column stays oracle-checked locally.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
+    # doc_near_dup_simhash runs the same sketch construction end-to-end at
+    # 32 bits (hash-exact oracle); the bare 16-bit sketch column stays
+    # oracle-checked locally.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_minhash_estimate_certificate",
 )
 def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,9 +229,6 @@ WHERE hamming <= {SIM.SIMHASH_RADIUS} AND jaccard >= 0.5
         "bit sketch); recall pinned in tests/test_similarity.py.  Scale: "
         "never-all-pairs -- band equi-join candidates, verify touches "
         "candidates only",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="doc_minhash_estimate_certificate",
 )
@@ -311,11 +295,7 @@ FROM documents
     doc="north-star rolling-hash document fingerprint (Rabin-Karp fold over "
         "the token stream, order-sensitive — complements the md5 "
         "fingerprint); per-row fold, no shuffle, exact int64 parity",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_minhash_estimate_certificate",
 )
 def doc_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -345,11 +325,7 @@ GROUP BY fingerprint
         "double-ingested corpus (the union simulates re-crawling the same "
         "snapshot); converges to one representative (min doc_id) per "
         "fingerprint with n_copies=2. Scale: one shuffle on the digest",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_curation_funnel",
 )
 def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -411,11 +387,7 @@ WHERE jaccard >= 0.5
         "3-word shingles.  Never all-pairs: candidates come from the "
         "(band_id, band_value) equi-join; exact Jaccard touches candidates "
         "only.  Recall vs brute force pinned in tests/test_similarity.py",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_minhash_estimate_certificate",
 )
 def doc_near_dup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -567,11 +539,7 @@ SELECT id_a AS doc_a, id_b AS doc_b, jaccard FROM pairs
         "the ones rarest-first ordering excludes from every prefix.  "
         "Equality with brute-force all-pairs pinned in "
         "tests/test_similarity.py",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_minhash_estimate_certificate",
 )
 def doc_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -632,10 +600,7 @@ FROM lbl
         "hash-matched driver row for a genuinely iterative algorithm.  "
         "Scale: each round is one equi-join + one shuffle on vertex id; "
         "dup clusters are near-cliques so rounds stay ~2-3",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_curation_funnel",
 )
 def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -685,9 +650,6 @@ WHERE rank <= 3
         "the term dimension is orders of magnitude smaller than the corpus "
         "and the n_docs scalar rides along as a broadcast, never a "
         "driver-side collect",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="doc_zipf_fit",
 )
@@ -739,9 +701,6 @@ WHERE rank <= 10
         "row_number -- one shuffle on lang; at 100 TB the same pattern "
         "hash-filters WITHOUT the window (bucket < k) when exact quotas "
         "aren't required",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="doc_curation_funnel",
 )
@@ -838,7 +797,6 @@ UNION ALL SELECT 'stage3_near_dedup', CAST(s3 AS BIGINT) FROM agg
         "oracle mirrors the same flags form.  The near-dup subtree is "
         "shared lineage (AQE exchange reuse deduplicates the common "
         "aggregate where possible)",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def doc_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
@@ -929,9 +887,6 @@ WHERE ks.k * 256 < length(d.text)
         "the bytes project as unchunked base64 (driver-hash-safe) and "
         "the oracle slices TEXT at k*256, valid because the media "
         "content is UTF-8 of ASCII fixture text.",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="mm_jpeg_ac_stats",
 )
@@ -960,11 +915,7 @@ FROM documents
         "Arrow-batched mapInPandas (the engine's one deliberate Python "
         "path); the real codec decode is stubbed (operators/multimodal.py), "
         "but the batch plumbing is oracle-checked via header-level features",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor sits out this rotation.
     sibling="mm_jpeg_color12_stats",
 )
 def mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,12 +958,7 @@ FROM documents
         "bytes), so the hash gate proves parse(synth(x)) == x per row; "
         "malformed-input behavior (return None, never raise) is pinned "
         "in tests/test_multimodal.py",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor sits out this rotation.
     sibling="mm_jpeg_color12_stats",
 )
 def mm_media_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1128,14 +1074,10 @@ UNION ALL SELECT * FROM jpeg_stats
         "the decoded values.  The oracle re-derives every stat "
         "arithmetically from range() cross products, so the hash gate "
         "proves decode(synth(x)) == x per row.  The one remaining stub "
-        "is color/progressive JPEG and codec video payloads.  Scale: "
+        "is codec video payloads.  Scale: "
         "narrow Arrow-batched mapInPandas; O(1)-width stats cross back "
         "to the JVM, never pixels",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="mm_jpeg_ac_stats",
 )
 def mm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1178,9 +1120,6 @@ FROM blk GROUP BY doc_id, width, height
         "min/max 128+m-+n), so the hash proves AC entropy decode + ZRL + "
         "non-DC dequant + full IDCT per row.  Scale: narrow Arrow-batched "
         "mapInPandas; O(1)-width stats cross to the JVM, never pixels.",
-    # New registration (r15): takes a driver slot in its first round per
-    # the freshness-era lint rule; doc_text_stats sits out to hold the
-    # surface at 50.
 )
 def mm_jpeg_ac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "jpeg_ac")
@@ -1239,12 +1178,8 @@ FROM rgb GROUP BY doc_id, width, height
         "32768)/65536.0) is exact because the dividend is < 2^24 and the "
         "divisor a power of two.  Scale: narrow Arrow-batched "
         "mapInPandas; O(1)-width stats cross to the JVM, never pixels.",
-    # New registration (r15): takes a driver slot in its first round per
-    # the freshness-era lint rule; msg_monthly_rollup sits out to hold
-    # the surface at 50.
-    # r17 sit-out: paired with the new mm_jpeg_color12_stats registration
-    # (its 12-bit superset exercises the same color decode + fixed-point
-    # conversion path); multi-round green (r15, r16).
+    # the 12-bit superset exercises the same color decode + fixed-point
+    # conversion path.
     driver=False,
     sibling="mm_jpeg_color12_stats",
 )
@@ -1307,11 +1242,6 @@ FROM rgb GROUP BY doc_id, width, height
         "wrong-table-loudness construction as mm_jpeg_color_stats.  The "
         "remaining JPEG stub is now progressive scans and partial MCUs.  "
         "Scale: narrow Arrow-batched mapInPandas; O(1)-width stats.",
-    # New registration (r15): takes a driver slot in its first round per
-    # the freshness-era lint rule; cust_interpurchase_gaps sits out to
-    # hold the surface at 50.
-    # r17 interim sit-out: paired with the new mm_jpeg_arith_stats
-    # first-round registration; re-enters the queue at age 1.
     driver=False,
     sibling="mm_jpeg_arith_stats",
 )
@@ -1353,9 +1283,6 @@ FROM px GROUP BY doc_id, width, height
         "replays the stats arithmetically and the hash proves the "
         "unfilter inversion byte-for-byte.  Scale: narrow Arrow-batched "
         "mapInPandas; O(1)-width stats cross to the JVM, never pixels.",
-    # New registration (r16): takes a driver slot in its first round per
-    # the freshness-era lint rule; join_anti_quiet_customers sits out to
-    # hold the surface at 50.
 )
 def mm_png_filtered_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "png_filtered")
@@ -1412,9 +1339,6 @@ FROM vals GROUP BY doc_id, width, height
         "128 + m + n*s(x)*s(y), replayed arithmetically; dims cross "
         "partial-MCU crops.  Scale: narrow Arrow-batched mapInPandas; "
         "O(1)-width stats cross to the JVM.",
-    # New registration (r16): takes a driver slot in its first round per
-    # the freshness-era lint rule; ev_session_path_trigrams sits out to
-    # hold the surface at 50.
 )
 def mm_jpeg_restart_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "jpeg_restart")
@@ -1453,9 +1377,6 @@ FROM px GROUP BY doc_id, width, height
         "by mm_jpeg_color12_stats).  Dims cross "
         "partial-MCU crops.  Scale: narrow Arrow-batched mapInPandas; "
         "O(1)-width stats cross to the JVM.",
-    # New registration (r16): takes a driver slot in its first round per
-    # the freshness-era lint rule; ev_scd2_state_durations sits out to
-    # hold the surface at 50.
 )
 def mm_jpeg12_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "jpeg12")
@@ -1517,9 +1438,6 @@ FROM rgb GROUP BY doc_id, width, height
         "binary64.  Dims cross partial-MCU crops.  Scale: narrow "
         "Arrow-batched mapInPandas; O(1)-width stats cross to the JVM, "
         "never pixels.",
-    # New registration (r17): takes a driver slot in its first round per
-    # the freshness-era lint rule; mm_jpeg_color_stats (multi-round
-    # green, 8-bit color twin) sits out to hold the surface at 50.
 )
 def mm_jpeg_color12_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "jpeg_color12")
@@ -1571,9 +1489,6 @@ FROM px GROUP BY doc_id, width, height
         "proves end-to-end.  Dims cross partial-MCU crops.  Scale: "
         "narrow Arrow-batched mapInPandas; O(1)-width stats cross to "
         "the JVM, never pixels.",
-    # New registration (r17): takes a driver slot in its first round per
-    # the freshness-era lint rule; mm_jpeg_420_stats (multi-round green,
-    # zero dependents) sits out to hold the surface at 50.
 )
 def mm_jpeg_arith_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "jpeg_arith")
@@ -1627,11 +1542,6 @@ FROM fin GROUP BY doc_id, width, height
         "accumulation exactly; dims cross partial-MCU crops at both "
         "pyramid levels.  Scale: narrow Arrow-batched mapInPandas; "
         "O(1)-width stats cross to the JVM, never pixels.",
-    # New registration (r17): takes a driver slot in its first round per
-    # the freshness-era lint rule; msg_type_taxonomy (multi-round green)
-    # sits out to hold the surface at 50, its dependents re-pointed to
-    # msg_detail_encrypted_verified (which runs the same taxonomy
-    # classify inside the full detail pipeline).
 )
 def mm_jpeg_hier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "jpeg_hier")
@@ -1688,10 +1598,6 @@ FROM v GROUP BY doc_id, width, height
         "every scan start.  Dims cross partial-MCU crops.  Scale: "
         "narrow Arrow-batched mapInPandas; O(1)-width stats cross to "
         "the JVM, never pixels.",
-    # New registration (r17): takes a driver slot in its first round per
-    # the freshness-era lint rule; doc_token_lift (multi-round green)
-    # sits out to hold the surface at 50, its dependents re-pointed to
-    # doc_zipf_fit (the token-frequency family's kept driver anchor).
 )
 def mm_jpeg_arith_prog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "jpeg_arith_prog")
@@ -1734,10 +1640,6 @@ FROM px GROUP BY doc_id, width, height
         "accumulation exactly.  Odd doc_ids add restart segmentation.  "
         "Scale: narrow Arrow-batched mapInPandas; O(1)-width stats "
         "cross to the JVM, never pixels.",
-    # New registration (r17): takes a driver slot in its first round per
-    # the freshness-era lint rule; doc_phrase_search (multi-round green)
-    # sits out to hold the surface at 50, its dependents re-pointed to
-    # doc_char_kl_gibberish (kept n-gram-statistics driver anchor).
 )
 def mm_jpeg_lossless_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "jpeg_lossless")
@@ -1803,10 +1705,6 @@ FROM allv GROUP BY doc_id, law, n
         "is not SQL-replayable).  Scale: narrow Arrow-batched "
         "mapInPandas; O(1)-width stats cross to the JVM, never "
         "samples.",
-    # New registration (r17): takes a driver slot in its first round per
-    # the freshness-era lint rule; doc_split_assignment (multi-round
-    # green) sits out to hold the surface at 50, its dependents
-    # re-pointed to doc_k_anonymity (kept sampling/privacy anchor).
 )
 def mm_wav_codec_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "wav_codec")
@@ -1869,11 +1767,6 @@ FROM v GROUP BY doc_id, arm, width, height
         "index->color lookup.  Widths (doc_id%11+3) keep sub-byte rows "
         "unaligned.  Scale: narrow Arrow-batched mapInPandas; "
         "O(1)-width stats cross to the JVM, never pixels.",
-    # New registration (r17): takes a driver slot in its first round per
-    # the freshness-era lint rule; mm_jpeg_partial_mcu_stats (multi-round
-    # green; pad-to-grid + crop is equally exercised by the staying
-    # 12-bit gates' non-multiple-of-8 dims) sits out to hold the
-    # surface at 50.
 )
 def mm_png_types_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "png_types")
@@ -1939,11 +1832,6 @@ FROM rgb GROUP BY doc_id, width, height, nf
         "and per-frame local palettes/interlacing are pinned by unit "
         "tests.  Scale: narrow Arrow-batched mapInPandas; O(1)-width "
         "stats cross to the JVM, never pixels.",
-    # New registration (r17): takes a driver slot in its first round per
-    # the freshness-era lint rule; mm_jpeg_progressive_stats (multi-round
-    # green; the progressive decoder stays driver-proven by
-    # mm_jpeg_restart_stats' odd arm, which decodes progressive scripts
-    # with restarts in every scan) sits out to hold the surface at 50.
 )
 def mm_gif_anim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_stats(_docs(spark, sf_dir), "gif_anim")
@@ -2018,13 +1906,8 @@ SELECT * FROM color UNION ALL SELECT * FROM refined
         "r16 (gated by mm_jpeg_restart_stats); refused loudly: "
         "arithmetic-coded/hierarchical JPEG.  Scale: narrow "
         "Arrow-batched mapInPandas; O(1)-width stats.",
-    # New registration (r15): takes a driver slot in its first round per
-    # the freshness-era lint rule; orderby_limit_top20_orders sits out to
-    # hold the surface at 50.
-    # r17 sit-out: paired with the new mm_gif_anim_stats registration;
-    # the progressive decoder stays driver-proven by
-    # mm_jpeg_restart_stats' odd arm (progressive scripts with restarts
-    # in every scan).  Multi-round green (r15, r16).
+    # mm_jpeg_restart_stats' odd arm decodes progressive scripts with
+    # restarts in every scan.
     driver=False,
     sibling="mm_jpeg_restart_stats",
 )
@@ -2104,13 +1987,8 @@ SELECT * FROM gray UNION ALL SELECT * FROM color
         "wrong crop.  The remaining JPEG stub is progressive scans "
         "only.  Scale: narrow Arrow-batched mapInPandas, O(1)-width "
         "stats.",
-    # New registration (r15): takes a driver slot in its first round per
-    # the freshness-era lint rule; emb_outlier_centroid_dist sits out to
-    # hold the surface at 50.
-    # r17 sit-out: paired with the new mm_png_types_stats registration;
-    # the pad-to-grid + crop path stays driver-proven by the 12-bit
-    # gates' non-multiple-of-8 dims (mm_jpeg_color12_stats crosses
-    # partial-MCU crops at 3 components).  Multi-round green (r15, r16).
+    # mm_jpeg_color12_stats' non-multiple-of-8 dims cross partial-MCU
+    # crops at 3 components.
     driver=False,
     sibling="mm_jpeg_color12_stats",
 )
@@ -2147,7 +2025,6 @@ WHERE rank <= 5
     doc="north-star similarity search, exact baseline: brute-force cosine "
         "top-5 for a 10-query set.  Scale: queries broadcast, corpus scanned "
         "once with no shuffle; the only wide op is the per-query top-k",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
@@ -2198,9 +2075,6 @@ WHERE rank <= 5
         "OPERATOR (similarity.brute_force_topk_arrow) for consumers; the "
         "registry projection drops it so the driver can hash-match the "
         "neighbor membership instead of recording rows-only",
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="emb_cosine_topk",
 )
@@ -2264,11 +2138,9 @@ WHERE rank <= 5
         "is exact; recall vs brute force is pinned separately in "
         "tests/test_similarity.py.  100 TB shape: assignment is a broadcast "
         "join vs the codebook; search touches ~nprobe/C of the corpus",
-    # ivf_topk machinery PLUS Lloyd training; the seed-codebook variant
-    # stays oracle-checked locally (and anchors the recall pin).
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r16 interim sit-out: paired with the new doc_dsir_importance
-    # first-round registration; re-enters the queue at age 1.
+    # emb_ann_ivf_trained runs the same ivf_assign + ivf_topk machinery
+    # PLUS Lloyd training; this seed-codebook variant stays oracle-checked
+    # locally (and anchors the recall pin).
     driver=False,
     sibling="emb_ann_recall_curve",
 )
@@ -2284,49 +2156,23 @@ def emb_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.ivf_topk(q, assigned, cent, k=5, nprobe=2)
 
 
-#: (applicationId, tag, schema-only?) -> rebroadcast codebook handle; see
-#: the _ivf16 memo note.  Stale-app entries are evicted on access.
-_IVF16_RB_MEMO: dict = {}
-
-
 def _ivf16(spark: SparkSession, sf_dir: str):
     """The (codebook, assignment) pair for the k=16 Lloyd-trained IVF over
     the embeddings fixture, shared by emb_ann_ivf_trained,
     emb_semantic_dedup, and emb_ann_recall_curve -- three queries that all
     train the IDENTICAL codebook.  The codebook is collect-rebroadcast
-    (constant-bounded: 16 x 64 doubles) and the corpus assignment is
-    session-memoized, so a full sweep runs the training lineage and the
-    assignment pass ONCE; at cluster scale that is a shared staging table
-    for the assignment and a driver-held codebook (the ivf_train docstring
-    pattern)."""
+    (constant-bounded: 16 x 64 doubles), and both it and the corpus
+    assignment are session-memoized, so a full sweep runs the training
+    lineage, its collect, and the assignment pass ONCE; at cluster scale
+    that is a shared staging table for the assignment and a driver-held
+    codebook (the ivf_train docstring pattern)."""
     e = _emb(spark, sf_dir)
     corpus = e.select("vec_id", "embedding")
-    # The rebroadcast handle is memoized per (session, sf_dir) like the
-    # sources/tables.py load() memo (r18, guide section 1.2): without it
-    # every BUILDER INVOCATION re-collected the 16-row codebook -- one
-    # tiny but real Spark job per bench repeat per consumer query (~9
-    # collect jobs per sweep for the three consumers).  A rebuilt
-    # ExistingRDD frame is an immutable local plan; reusing the handle
-    # changes no result.  Keyed on applicationId so a new session never
-    # sees a stale handle (the session_memo eviction rule).
-    from ..config import schema_only_builds
-
-    memo_key = (
-        spark.sparkContext.applicationId,
-        f"ivf16_cent_rb:{sf_dir}",
-        schema_only_builds(),
+    cent = session_memo(
+        spark,
+        f"ivf16_cent:{sf_dir}",
+        lambda: rebroadcast_small(SIM.ivf_train(corpus, k=16)),
     )
-    cent = _IVF16_RB_MEMO.get(memo_key)
-    if cent is None:
-        cent = rebroadcast_small(
-            session_memo(
-                spark, f"ivf16_cent:{sf_dir}", lambda: SIM.ivf_train(corpus, k=16)
-            )
-        )
-        stale = [k for k in _IVF16_RB_MEMO if k[0] != memo_key[0]]
-        for k in stale:
-            del _IVF16_RB_MEMO[k]
-        _IVF16_RB_MEMO[memo_key] = cent
     c = corpus.select(
         "vec_id",
         F.transform(F.col("embedding"), lambda v: v.cast("double")).alias(
@@ -2428,11 +2274,7 @@ WHERE rank <= 5"""
         "balance -- what Lloyd optimizes -- but not neighbor recall; on "
         "clustered real-scale data the trained codebook is the one that "
         "prunes correctly",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor sits out for the new
-    # doc_dsir_importance registration.
     sibling="emb_ann_recall_curve",
 )
 def emb_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2474,12 +2316,7 @@ WHERE rank <= 3
         "machinery exactly like positive neighbor search, with the label "
         "filter applied per bucket.  Sequential-fold cosine keeps the "
         "whole output hash-matched.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="emb_cosine_topk",
 )
 def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2558,12 +2395,7 @@ FROM topk WHERE rank = 1
         "candidate shape to emb_hard_negatives (bucket machinery at real "
         "scale); the margin adds one bounded window over k rows per "
         "query.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="emb_cosine_topk",
 )
 def emb_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2665,12 +2497,7 @@ SELECT * FROM (
         "same candidate shape as brute-force top-k; at real scale both "
         "rankers route through bucketed ANN and RRF fuses the returned "
         "lists -- fusion cost is per-query O(k), independent of corpus.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor sits out for the new
-    # doc_dsir_importance registration.
     sibling="emb_ann_recall_curve",
 )
 def emb_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2776,15 +2603,7 @@ FROM q
         "quality cost measured per vector, not asserted.  Zero-vector "
         "guard mirrors the cosine convention (NULL, not a fake zero "
         "error).  Pure per-row map, no shuffle.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
-    # r13 sibling re-point: prior anchor demoted this rotation.
-    # r14 interim re-point: emb_random_projection sits out for the new
-    # MMR registration; the quantization/compression anchor moves to the
-    # refreshed IVF entry.
-    # r16 sibling re-point: prior anchor sits out for the new
-    # doc_dsir_importance registration.
     sibling="emb_ann_recall_curve",
 )
 def emb_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2886,12 +2705,7 @@ LEFT JOIN dup_of d ON d.vec_id = a.vec_id"""
         "therefore quadratic in UNIQUE vectors per bucket, not rows -- "
         "the skewed-replica probe (SCALING.md table 5c) pins sec/k flat "
         "when one cluster holds half the corpus.",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor sits out for the new
-    # doc_dsir_importance registration.
     sibling="emb_ann_recall_curve",
 )
 def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3056,11 +2870,7 @@ SELECT * FROM (
         "tests/test_similarity.py.  100 TB shape: coding is a broadcast of "
         "4 planes, candidates come from a bucket equi-join of ~5/16 of the "
         "corpus per query",
-    # r10 driver-slot rotation: ANN family keeps IVF + PQ-ADC driver anchors.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor sits out for the new
-    # doc_dsir_importance registration.
     sibling="emb_ann_recall_curve",
 )
 def emb_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3144,11 +2954,7 @@ LIMIT 100
         "the most-similar same-label vectors (top-100 global).  The label "
         "equi-join is the IVF-style bucketing -- pairs never cross buckets, "
         "so the join co-partitions on label instead of a corpus cross join",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="emb_cosine_topk",
 )
 def emb_top_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3216,10 +3022,7 @@ FROM s
         "partition sizing, which maxPartitionBytes already governs.  "
         "Determinism: whitespace split and slice arithmetic are identical "
         "cross-engine; chunk_id = start DIV stride needs no tiebreak.",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_zipf_fit",
 )
 def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3271,7 +3074,6 @@ GROUP BY needle_src
         "aggregation is a tiny keyed shuffle.  For needle sets too big to "
         "broadcast, the n-gram route is doc_near_dup_jaccard's prefix-"
         "filter join.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tables.load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
@@ -3325,7 +3127,6 @@ FROM placed
         "per-group cumsums parallelize across the partition key).  "
         "Token counts are whitespace tokens, consistent with "
         "doc_chunking/doc_text_stats.".format(cap=PACK_CAPACITY),
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def doc_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tables.load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
@@ -3378,8 +3179,6 @@ SELECT
         "a<b storage convention approximates on near-clique dup graphs, "
         "and the join never materializes open wedges beyond the shuffle "
         "that closes them.",
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
     sibling="doc_graph_clustering_coeff",
 )
@@ -3454,8 +3253,6 @@ LEFT JOIN alive{rounds} a ON a.v = d.doc_id"""
         "its fixed point, and the Spark loop raises if it ever needs more "
         "rounds than the unroll.  Integer-only output, bit-exact parity "
         "for free.",
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
     sibling="doc_graph_clustering_coeff",
 )
@@ -3526,15 +3323,7 @@ FROM proj"""
         "(the executable form of the JL accuracy claim, like the MinHash "
         "certificate).  Scale: a narrow per-row map -- no shuffle at all; "
         "the sign matrix is config, not data.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r14 interim demote: the new emb_mmr_diversified_topk registration
-    # must take a driver slot in its first round (freshness-era lint
-    # rule) and the non-anchor veteran pool is reserved by the r15 plan;
-    # once-green is the rule-1 minimum.  Sibling: the vector-indexing /
-    # compression family anchor, refreshed this round.
     driver=False,
-    # r16 sibling re-point: prior anchor sits out for the new
-    # doc_dsir_importance registration.
     sibling="emb_ann_recall_curve",
 )
 def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3608,7 +3397,6 @@ LEFT JOIN tcnt t ON t.v = d.doc_id
         "a curation pass uses to pick CLUSTER removal vs document "
         "removal.  All-integer counts plus one exact int/int division; "
         "same two-equi-join triangle plan as doc_dup_graph_triangles.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
 )
 def doc_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _jaccard_verified_pairs(spark, sf_dir).select("id_a", "id_b")
@@ -3723,7 +3511,6 @@ FROM (
         "that can only be eyeballed.  tests/test_similarity.py pins the "
         "MEAN error below 0.15 on the fixture, making the accuracy claim "
         "executable, not prose.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def doc_minhash_estimate_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_shingled(spark, sf_dir)
@@ -3863,13 +3650,7 @@ FROM (
         "exact L2 top-k is pinned in tests/test_similarity.py (0.56 "
         "measured on the isotropic fixture -- the hardest case for a "
         "quantizer; clustered real embeddings quantize far tighter).",
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
-    # r14 interim re-point: emb_random_projection sits out for the new
-    # MMR registration; the PQ anchor moves to the refreshed IVF entry.
-    # r16 sibling re-point: prior anchor sits out for the new
-    # doc_dsir_importance registration.
     sibling="emb_ann_recall_curve",
 )
 def emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4071,8 +3852,6 @@ FROM r{PR_ITERS} r JOIN deg d ON d.src = r.v"""
         "vertex cannot blow a single row up to its full in-degree (the "
         "r8 single-level fold's hazard; star-graph width probe in "
         "SCALING.md).",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="part_copurchase_pagerank",
 )
@@ -4227,10 +4006,7 @@ FROM documents d LEFT JOIN reach{rounds} r ON r.v = d.doc_id"""
         "past the seed eccentricity are fixed-point no-ops (mirror of "
         "the k-core unroll argument).  Pure integer hops: bit-exact "
         "parity for free.".format(m=BFS_SEED_MOD, h=SIM.BFS_UNROLL),
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="doc_graph_clustering_coeff",
 )
 def doc_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4301,9 +4077,6 @@ FROM lbl{rounds}"""
         "vertex id; the frequency table is O(degree) ROWS per vertex, "
         "never a collected array -- hub-safe, unlike a collect_list "
         "fold.".format(r=SIM.LPA_ROUNDS),
-    # r11 driver-slot rotation: promoted -- frequency-LPA community detection, first driver check.
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="doc_graph_clustering_coeff",
 )
@@ -4356,9 +4129,6 @@ FROM lbl l JOIN documents d ON d.doc_id = l.doc_id
         "row_number (bounded by cluster size); singleton clusters pass "
         "through keep=1.  Composes the driver-checked doc_dedup_clusters "
         "chain, adding only the argmax.",
-    # r11 driver-slot rotation: promoted -- quality-ranked cluster representative, first driver check.
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="doc_curation_funnel",
 )
@@ -4426,12 +4196,7 @@ WHERE r = 1
         "(50 x labels)-row aggregate.  kNN over 1e9 corpus rows is the "
         "same plan with the ANN shortlist (emb_ann_ivf_trained / "
         "emb_pq_adc) replacing the brute-force scan.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="emb_cosine_topk",
 )
 def emb_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4520,12 +4285,7 @@ FROM l2
         "double is bit-identical.  Scale: two map-side-combinable "
         "aggregations (per-bucket width = group/8 vectors, bounded by "
         "raising the bucket count), no pair materialization anywhere.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r15 sibling re-point: prior anchor sat out for mm_jpeg_partial_mcu_stats.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="emb_cosine_topk",
 )
 def emb_cluster_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4635,12 +4395,7 @@ FROM r WHERE rn <= (5 * n + 99) // 100
         "bit-deterministic cross-engine.  Scale: one bounded-width "
         "aggregate pair for centroids, a label-bounded broadcast back, "
         "one rank window per label.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r15 interim edit: sits out so the new mm_jpeg_partial_mcu_stats takes
-    # a first-round driver slot at a constant 50-entry surface (fresh
-    # r13+r14 greens; emb_cosine_topk_arrow anchors the embeddings family).
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="emb_cosine_topk",
 )
 def emb_outlier_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4783,8 +4538,6 @@ FROM ({arms})"""
         "shared across the three probe arms: without the truncation the "
         "3-iteration Lloyd-training lineage re-executes per arm (4x the "
         "scans at cluster scale).",
-    # r16 interim promote (VERDICT r15 task 6): ANN recall certificate
-    # cycles back through a driver slot (last driver-checked r9).
 )
 def emb_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent, c, assigned = _ivf16(spark, sf_dir)
@@ -4924,15 +4677,7 @@ FROM r2, x{iters} x"""
         "actually uses, with the convergence loop unrolled a fixed "
         "number of steps (checkpoint x between steps on a real "
         "cluster, exactly the IVF codebook posture).",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
-    # r14 rotation amendment (VERDICT r13 task 2): sits out in place of
-    # msg_detail_encrypted_verified so the AES family keeps a hash-checked
-    # driver gate; green r12+r13, zero sibling dependents, family anchored
-    # by emb_knn_classifier / emb_ann_ivf on the surface.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="emb_cosine_topk",
 )
 def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5057,7 +4802,6 @@ _COPURCHASE_PAIRS_CTES = """ip AS (
         "Scale: pair generation is C(items,2) per order with bounded "
         "basket size (never |parts|^2); each PageRank round is "
         "O(edges) with hub-safe bounded row widths.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
 )
 def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Function-level import on purpose: a module-level one would register
@@ -5149,8 +4893,6 @@ WITH q AS (
         "operates on the rebroadcast 12-row candidate frame and its "
         "132-row pairwise-sim table -- constant-bounded, zero further "
         "corpus contact, no collect beyond the guarded codebook pattern.",
-    # r16 interim sit-out: paired with the emb_ann_recall_curve
-    # promote (VERDICT r15 task 6); re-enters the queue at age 1.
     driver=False,
     sibling="emb_ann_recall_curve",
 )

@@ -40,9 +40,6 @@ WHERE stanza IS NOT NULL
 """,
     doc="O5+O6+O10: detail-row projection without the (non-SQL) cipher column "
         "(CassandraOutputFormat.java:101-132)",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="msg_detail_encrypted",
 )
@@ -54,7 +51,6 @@ def msg_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     "msg_detail_encrypted",
     oracle=None,  # AES not expressible in DuckDB; rows-only even locally.
     doc="O7+O9+O12: full detail rows incl. AES-CBC ciphertext (Encryptor.java:15-28)",
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
 )
 def msg_detail_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mp.detail_table(_msgs(spark, sf_dir), encrypt=True)
@@ -83,12 +79,8 @@ WHERE stanza IS NOT NULL
         "golden KATs (tests/test_crypto_golden.py) that pin the wire "
         "format itself, this is the strongest gate available without AES "
         "in DuckDB (Encryptor.java:15-28).",
-    # r14 rotation amendment (VERDICT r13 task 2): the pre-written plan
-    # demoted this entry, but its promoted sibling msg_detail_encrypted is
-    # the registry's only rows-only (oracle=None) entry -- demoting the
-    # verified twin would leave the AES family with no hash-checked driver
-    # gate for the round.  Kept driver-side; emb_pca_power_iteration
-    # (2 greens, zero dependents) sits out instead.
+    # Stays driver-side beside msg_detail_encrypted: that entry is rows-only
+    # (oracle=None), so this is the AES family's hash-checked driver gate.
 )
 def msg_detail_encrypted_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = mp.detail_table(_msgs(spark, sf_dir), encrypt=True)
@@ -112,9 +104,7 @@ FROM messages
     doc="O7/O8 known-answer: decrypt(encrypt(stanza)) == stanza for every row; "
         "the oracle asserts true exactly where a stanza exists (NULL-aware "
         "equality on the Spark side), so any cipher divergence hash-mismatches",
-    # r9 driver-slot rotation: the promoted gate decrypt-verifies the same surface + golden KATs.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="msg_detail_encrypted",
 )
 def msg_crypto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,9 +128,7 @@ FROM messages
 """,
     doc="O11 distinct-set semantics of the Cassandra summary upsert "
         "(CassandraOutputFormat.java:95-108)",
-    # r10 driver-slot rotation: same decode->project->partition-key pipeline, detail side pinned row-for-row; 9 consecutive driver-green rounds.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="msg_summary_first",
 )
 def msg_summary_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,8 +146,6 @@ GROUP BY username, jid
 """,
     doc="O11 'first month' variant implied by the column name "
         "first_date_partition (CassandraOutputFormat.java:95)",
-    # holds the driver slot; the min() variant stays oracle-checked locally.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
 )
 def msg_summary_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mp.summary_first(_msgs(spark, sf_dir))
@@ -176,11 +162,8 @@ GROUP BY 1
 """,
     doc="O22: the 18-code MessageType taxonomy applied and re-extracted from "
         "the stanza (MessageType.java:7-24); regexp hot path (stanza_type_fast)",
-    # names by msg_taxonomy_all_codes, and the stanza regexp + grouped count
-    # by msg_taxonomy_lookup_join; this CASE-over-stanza form stays local.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r17 interim sit-out: paired with the new mm_jpeg_hier_stats
-    # first-round registration; re-enters the queue at age 1.
+    # msg_detail_encrypted_verified runs the same taxonomy classify inside
+    # the full detail pipeline; this CASE-over-stanza form stays local.
     driver=False,
     sibling="msg_detail_encrypted_verified",
 )
@@ -205,9 +188,7 @@ FROM messages
     doc="O21: stanza XML parse -- one from_xml parse per row into a typed "
         "struct (replaces the vendored 900-LoC pull parser, "
         "XmppPacketReader.java:308-435; 20x cheaper than per-field xpath)",
-    # r9 driver-slot rotation: stanza parse exercised transitively by the taxonomy CASE.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="msg_detail_encrypted",
 )
 def msg_stanza_xpath(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,10 +211,7 @@ WHERE sent_ts >= TIMESTAMP '2024-01-15 00:00:00'
 """,
     doc="O18: TTL/retention as an event-time predicate "
         "(BackupMessageConsumer.java:46-51); prunes month partitions at scan",
-    # r9 driver-slot rotation: retention also pytest-gated (tests/test_retention.py).
     driver=False,
-    # r10 sibling re-point: partition-lifecycle deletion family, driver-checked there.
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="msg_detail_encrypted",
 )
 def msg_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,9 +241,6 @@ SELECT
         "vice versa (SURVEY.md section 5 case 5); both counts must be 0. "
         "Single-plan form: one groupBy + one full_outer join + one aggregate "
         "-- no driver-side counts, no double pipeline recompute",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="msg_summary_first",
 )
@@ -314,12 +289,7 @@ GROUP BY t.type_name
 """,
     doc="O22 as a broadcast dimension join (the lookup-DataFrame form of the "
         "taxonomy; BHJ, no shuffle of the fact side)",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_hier_stats registration.
     sibling="msg_detail_encrypted_verified",
 )
 def msg_taxonomy_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,10 +318,7 @@ FROM messages
         "Arrow-batched mapInPandas pass: the bytes never leave the python "
         "worker, so the harness costs one python hop and no join (the r7 "
         "two-pass+equi-join form was 4x the msg-family bench band).",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="msg_detail_encrypted",
 )
 def msg_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,13 +360,6 @@ GROUP BY ROLLUP (date_partition, username)
         "-> per month -> grand total in ONE pass (Expand + single hash "
         "aggregate) -- the continuous-aggregate view a reader of the "
         "detail table (CassandraOutputFormat.java:87-89) would maintain",
-    # multi-COUNT(DISTINCT) by distinct_agg_lineitem; the messages-stream
-    # composition of the two stays oracle-checked locally.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r15 interim edit: sits out so the new mm_jpeg_color_stats takes a
-    # first-round driver slot at a constant 50-entry surface (fresh r14
-    # green, no sibling dependents; the msg family keeps
-    # msg_summary_first / msg_type_taxonomy / both AES entries driver-side).
     driver=False,
     sibling="msg_summary_first",
 )
@@ -459,12 +419,7 @@ FROM names n LEFT JOIN dim d USING (type_name)
         "lookup-join forms must agree code-for-code, including the "
         "PHOTO/IMAGE->P and CAPS_MEME/CAPS->M aliases (MessageType.java:7-24) "
         "and NULL for unknown names",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor sits out for the new
-    # mm_jpeg_hier_stats registration.
     sibling="msg_detail_encrypted_verified",
 )
 def msg_taxonomy_all_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -534,8 +489,6 @@ SELECT 'summary',
         "erasure set is request-sized); at 100 TB the detail table "
         "additionally prunes to the user's partitions.  All-integer "
         "output, exact parity.",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="msg_detail_encrypted",
 )

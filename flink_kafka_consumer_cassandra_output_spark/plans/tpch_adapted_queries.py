@@ -18,7 +18,7 @@ phone/comment columns, so Q13/Q16/Q22 substitute priority/acctbal/segment
 predicates.  Each adaptation preserves the original query's PLAN shape,
 which is what the engine is being exercised on.
 
-All entries are ``driver=False``: each names the driver-checked sibling that
+Each ``driver=False`` entry names the driver-checked sibling that
 already proves its operator family under the driver's budget-capped sweep
 (mapping recorded in COVERAGE.md); tests/test_oracle_parity.py hash-checks
 every entry here against its DuckDB oracle at sf0.001 (and sf0.01 via
@@ -94,11 +94,7 @@ QUALIFY ROW_NUMBER() OVER (PARTITION BY p_partkey
         "division is one double op per row, bit-identical cross-engine; "
         "the l_quantity > 0 guard (both sides) pins that: at 0 Spark's "
         "non-ANSI division yields NULL where DuckDB yields +inf.",
-    # r10 driver-slot rotation: correlated scalar-subquery threshold family keeps q22.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,11 +165,7 @@ GROUP BY o_orderpriority
         "orderkey equi-condition plus the non-equi lag predicate -- the "
         "semi join never duplicates orders, and the 3-month partition "
         "prune reaches the orders scan (PushedFilters).",
-    # r9 driver-slot rotation: EXISTS family keeps q21 + sql_correlated_exists.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,12 +203,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         "zero wide shuffles (partial agg collapses to one row).  All three "
         "predicates push to the parquet scan; at 100 TB this is the query "
         "whose cost IS the pruned scan.",
-    # r10 driver-slot rotation: single-table filter+agg revenue family keeps q19.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,12 +251,7 @@ GROUP BY supp_nation, cust_nation, l_year
         "two small joins, and lineitem shuffles only against pre-filtered "
         "orders.  Year bucketing is a scan-side expression, no extra "
         "shuffle beyond the final 4-group agg.",
-    # r9 driver-slot rotation: multi-dim join-agg family keeps q8/q9.
     driver=False,
-    # r10 sibling re-point: multi-dim join-agg family, driver-checked there.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -342,11 +324,7 @@ GROUP BY o_year
         "l_partkey (strategy left to AQE, see q14 note); the share is a "
         "conditional decimal aggregate -- numerator and denominator in ONE "
         "pass, one divide of exact sums at the end.",
-    # r10 driver-slot rotation: multi-dim join-agg family keeps q9.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,12 +402,7 @@ GROUP BY n_name, o_year
         "overflow behavior differs between engines.  Plan: part pruned by "
         "the name filter before the fact join; supplier|x|nation broadcast; "
         "orders joined only for the year column.",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -487,12 +460,7 @@ LIMIT 20
         "aggregate; TakeOrderedAndProject does the global top-20 without a "
         "total sort (revenue is an exact-decimal double, c_custkey breaks "
         "ties deterministically).",
-    # r9 driver-slot rotation: top-k family keeps q18 + sql_q3.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -551,11 +519,7 @@ WHERE pv * (SELECT COUNT(*) FROM v) > (SELECT SUM(pv) FROM v) * 2
         "total*2 -- DECIMAL times integer on both sides, no division, "
         "no doubles -- so the boundary is exact on both engines; only "
         "the OUTPUT column is surfaced as double.",
-    # r10 driver-slot rotation: global scalar-subquery HAVING threshold family keeps q22.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q11_important_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -610,7 +574,6 @@ GROUP BY lag_class
         "two columns); datediff is a scan-side expression; 2-group agg.  "
         "Fixture dates are midnight-aligned so day difference is exact on "
         "both engines.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def q12_ship_lag_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(
@@ -654,13 +617,7 @@ GROUP BY c_count
         "Plan: the filter lives IN the join condition (a WHERE would turn "
         "the outer join inner and drop the zero bucket); first agg "
         "shuffles on c_custkey, second on the tiny c_count domain.",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,7 +661,6 @@ WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
         "bits).  Plan: one shuffle agg on l_suppkey; the max is a 1-row "
         "broadcast; supplier joins by broadcast.  Ties all surface (the "
         "TPC-H spec's multi-winner semantics), so no tiebreak is needed.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(
@@ -746,9 +702,7 @@ GROUP BY p_brand, p_type, p_size
         "LEFT ANTI against the pruned supplier set (s_suppkey is non-null, "
         "so anti-join and NOT IN agree); part filters prune before the "
         "fact join; COUNT DISTINCT expands to a two-phase aggregate.",
-    # r9 driver-slot rotation: count-distinct agg family, driver-checked there.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="agg_cube_orders",
 )
 def q16_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -800,7 +754,6 @@ WHERE p_brand = 'Brand#5'
         "Determinism: quantities are integer-valued doubles, so SUM/COUNT "
         "is exact and the 0.2x threshold is one multiply; AVG is spelled "
         "SUM/COUNT on both engines to force the same operation order.",
-    # r17 rotation: promoted for stale re-verification (tools/r17_rotation_plan.md).
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
@@ -854,10 +807,7 @@ LIMIT 20
         "few qualifying orderkeys join onward -- at 100 TB the big-order "
         "set is tiny, so both downstream joins broadcast it; top-20 via "
         "TakeOrderedAndProject with the o_orderkey tiebreak.",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r15 sibling re-point: prior anchor sat out for mm_jpeg_progressive_stats.
     sibling="window_order_running_total",
 )
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,13 +860,7 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
         "(BHJ/SMJ by size) with the disjunction as a post-join filter; "
         "Catalyst additionally pushes the derivable single-side bounds "
         "(p_size <= 35, l_quantity <= 35) down to both scans.",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -969,11 +913,7 @@ WHERE n_name = 'NATION_7'
         "broadcast, then collapses to a distinct supplier set that LEFT "
         "SEMI joins the nation-pruned supplier dim -- the semi join runs "
         "on the small side, never duplicating suppliers.",
-    # r9 driver-slot rotation: nested-subquery family keeps q22.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q20_excess_qty_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1028,11 +968,7 @@ GROUP BY s_name
         "orderkey shuffles against the same lineitem projection, no "
         "correlated re-execution.  The nation+status prunes shrink l1 "
         "before either.",
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1112,12 +1048,7 @@ GROUP BY c_mktsegment
         "average balance; the date cutoff), the dormancy test a LEFT ANTI "
         "against the recent-orders custkey projection (date filter + "
         "2-column pruned scan); final agg over 5 segments.",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q22_dormant_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1201,8 +1132,6 @@ SELECT constraint_name, metric, satisfied FROM (
         "100 TB costs two scans regardless of how many constraints the "
         "suite declares.  The 1-row x 1-row combine is a "
         "BroadcastNestedLoopJoin over scalars, not a data cross product.",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="supplier_delivery_scorecard",
 )
@@ -1322,11 +1251,7 @@ FROM pick p JOIN exact e ON e.q = p.q
         "tests -- the one-bucket error bound IS the sketch's contract.  "
         "Float bucket/edge expressions are mirrored node-for-node; the "
         "cum window runs over exactly 64 rows regardless of data size.",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
     sibling="approx_quantiles_price",
 )
 def agg_histogram_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1643,8 +1568,6 @@ LIMIT 100
         "can broadcast when part is small; the 1-row order count rides "
         "an explicit bounded broadcast; top-100 is "
         "TakeOrderedAndProject.".format(m=BASKET_MIN_SUPPORT),
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
     sibling="part_copurchase_pagerank",
 )
@@ -1759,8 +1682,6 @@ LEFT JOIN seg_pick s ON s.cluster_id = a.cluster_id
         "O(log d) CC rounds; the vote and max aggregates ride one "
         "cluster_id shuffle over the small label "
         "table.".format(d=SURV_DRIFT, t=SURV_BAL_TOL),
-    # r12 driver-slot rotation (tools/r12_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for a never-checked promotion.
     driver=False,
     sibling="cust_entity_resolution",
 )
@@ -1921,11 +1842,7 @@ WHERE o.o_totalprice = r.mx
         "date's max AND strictly beats every prior date's.  Same "
         "three-step plan on both engines; pure comparisons on the "
         "2-dp-clean price, bit-exact parity.",
-    # r11 driver-slot rotation: promoted -- decomposed skyline, first driver check.
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
     sibling="window_order_running_total",
 )
 def orders_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2005,11 +1922,7 @@ FROM base CROSS JOIN thr
         "decimal sum, comparisons and the small-integer adds are "
         "exact.  Customers with zero orders are out of scope (RFM is "
         "defined on purchasers).",
-    # r11 driver-slot rotation: promoted -- quintile segmentation, first driver check.
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
-    # r15 sibling re-point: prior anchor sat out for mm_jpeg_420_stats.
     sibling="cust_entity_resolution",
 )
 def cust_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2096,9 +2009,6 @@ LIMIT 20
         "pair generation is the bounded per-order self-join (never "
         "all-pairs across parts), min-support prunes the tail before "
         "the frequency joins, and the top-k is TakeOrderedAndProject.",
-    # r11 driver-slot rotation: promoted -- item-item cosine collaborative filter, first driver check.
-    # r13 driver-slot rotation (tools/r13_rotation_plan.md): multi-round
-    # driver-green veteran; slot freed for the final backlog tranche.
     driver=False,
     sibling="part_copurchase_pagerank",
 )
@@ -2164,11 +2074,6 @@ FROM r GROUP BY segment
         "no float.  Scale: one shuffle on o_custkey for the lag, one on "
         "the bounded segment key for the rank window; the customer join "
         "is an equi-join AQE sizes.",
-    # r13 rotation: promoted to the driver surface (tools/r13_rotation_plan.md).
-    # r15 interim edit: sits out so the new mm_jpeg_420_stats takes a
-    # first-round driver slot at a constant 50-entry surface (fresh
-    # r13+r14 greens; cust_entity_resolution anchors the customer-
-    # analytics family driver-side).
     driver=False,
     sibling="cust_entity_resolution",
 )
@@ -2240,7 +2145,6 @@ LIMIT 20
         "AQE sizes plus the supplier-keyed agg -- the scorecard pattern "
         "at 100 TB is 'join narrow, reduce first, rank the "
         "reduction'.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
 )
 def supplier_delivery_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
@@ -2315,9 +2219,6 @@ FROM c GROUP BY abc_class
         "the decomposed cum_rev is bit-identical to the oracle's "
         "global-window form regardless of where the sampled range "
         "boundaries land.",
-    # r12 rotation: promoted to the driver surface (tools/r12_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="window_order_running_total",
 )

@@ -62,11 +62,7 @@ GROUP BY l_returnflag, l_linestatus
 """,
     doc="TPC-H Q1 pricing summary: multi-aggregate hash aggregation with "
         "decimal-exact sums/avgs; map-side partial agg into a 6-group shuffle",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,9 +93,7 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """,
     doc="ROLLUP hierarchy (flag -> flag+status -> grand total); Spark expands "
         "to one Expand + single hash aggregate, no extra shuffle per level",
-    # r9 driver-slot rotation: the grouping-sets superset covers rollup.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="agg_cube_orders",
 )
 def agg_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,8 +114,6 @@ FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """,
     doc="CUBE over two low-cardinality dims (all 2^2 grouping combinations)",
-    # and agg_rollup_lineitem hold the driver slots for the Expand family.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
 )
 def agg_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -145,8 +137,6 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
     oracle=_GROUPING_SETS_SQL,
     doc="GROUPING SETS via the spark.sql parser surface -- the same ANSI text "
         "runs verbatim on both engines (SURVEY.md section 2: SQL parser row)",
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="agg_cube_orders",
 )
@@ -208,9 +198,6 @@ GROUP BY l_returnflag
         "fails the driver's value hash; raw sketch accuracy stays pinned by "
         "tests/test_approx.py.  The exact column exists FOR the certificate "
         "-- production users keep only the sketch and skip that pass",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="approx_quantiles_price",
 )
@@ -246,11 +233,7 @@ FROM o
         "round-trip, conditional-count FILTER.  The fixtures have no NULL "
         "cells, so NULLIF manufactures them in-query -- these are exactly "
         "the semantics a user silently relies on when switching engines",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def null_semantics_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -297,11 +280,7 @@ AND NOT EXISTS (
         "left-semi and a left-anti join on c_custkey -- the rewrite "
         "(DecorrelateInnerQuery) that makes correlated subqueries usable "
         "at scale instead of per-row re-execution",
-    # r10 driver-slot rotation: EXISTS/NOT EXISTS family keeps the harder q21 self-join plan.
     driver=False,
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def sql_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -355,11 +334,7 @@ FROM s
         "Scale: "
         "this is also the 100 TB-correct formulation -- one pass, map-side "
         "partial sums, no second pass for the mean",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="agg_cube_orders",
 )
 def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -419,11 +394,7 @@ WHERE o_orderkey % 100 = 0
         "JVM built-ins; Spark dayofweek is 1=Sunday vs DuckDB dow 0=Sunday, "
         "reconciled explicitly (dayofweek - 1), the kind of off-by-one "
         "convention divergence the oracle gate exists to pin",
-    # r15 rotation: promoted for stale re-verification (tools/r15_rotation_plan.md).
-    # r16 driver-slot rotation (tools/r16_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="ev_hourly_gapfill",
 )
 def date_functions_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,7 +445,6 @@ GROUP BY o_orderstatus
         "pinned by tests/test_approx.py's rank-error test.  Scale: one "
         "sketch aggregation + one broadcast-join counting pass, both "
         "shuffle-on-status",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
 )
 def approx_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
@@ -547,9 +517,6 @@ FROM nation
         "SHORT strings -- titles, names -- where shingle Jaccard is too "
         "coarse; O(len^2) per pair, so at scale it only ever runs on "
         "candidate pairs, never all-pairs)",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="cust_entity_resolution",
 )
@@ -581,9 +548,6 @@ GROUP BY l_returnflag
 """,
     doc="multiple exact COUNT(DISTINCT) in one aggregate (Catalyst plans one "
         "Expand + two-phase distinct aggregation, not N scans)",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="agg_cube_orders",
 )
@@ -621,9 +585,6 @@ GROUP BY n_name
         "broadcast hints; customer and supplier grow with SF (150k/10k x SF "
         "-- ~15B/1B rows at 100 TB), so AQE picks BHJ vs SMJ from runtime "
         "sizes instead of a hint that would OOM the driver at scale.",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="q15_top_supplier",
 )
@@ -677,9 +638,6 @@ GROUP BY ship_month
         "(tests/test_bucketing.py demonstrates the mechanism).  promo_pct "
         "is one double multiply + one divide of exact decimal sums, so "
         "cross-engine parity is exact",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="q15_top_supplier",
 )
@@ -724,12 +682,7 @@ LIMIT 10
     doc="TPC-H Q3 through spark.sql: join + filter + aggregate + "
         "deterministic top-10 (revenue DESC with unique o_orderkey tiebreak); "
         "identical ANSI text on both engines",
-    # r10 driver-slot rotation: top-k-over-join-agg family keeps q18.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r15 sibling re-point: prior anchor demoted this rotation.
-    # r16 sibling re-point: prior anchor demoted this rotation.
-    # r17 sibling re-point: prior anchor demoted this rotation.
     sibling="q15_top_supplier",
 )
 def sql_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -750,12 +703,6 @@ WHERE EXISTS (
     doc="LEFT SEMI join: customers with at least one >400k order "
         "(EXISTS form in the oracle). Scale: semi join never duplicates the "
         "probe side, so output is bounded by |customer|",
-    # (EXISTS decorrelates to exactly this join); DataFrame form stays local.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r15 driver-slot rotation (tools/r15_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
-    # r16 sibling re-point: prior anchor sits out for the new
-    # mm_png_filtered_stats registration.
     driver=False,
     sibling="set_ops_customer_activity",
 )
@@ -780,10 +727,6 @@ WHERE NOT EXISTS (
 """,
     doc="LEFT ANTI join: customers with no orders in 2001+ (NOT EXISTS form). "
         "The build side is date-pruned before the join",
-    # (NOT EXISTS decorrelates to exactly this join); DataFrame form is local.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r16 interim sit-out: paired with the new mm_png_filtered_stats
-    # first-round registration; re-enters the freshness queue at age 1.
     driver=False,
     sibling="set_ops_customer_activity",
 )
@@ -805,9 +748,6 @@ WHERE c_acctbal > (SELECT {N.davg_expr('c_acctbal')} FROM customer)
     doc="scalar-subquery predicate: customers above the global average "
         "balance (decimal-exact avg so the threshold is bit-identical); "
         "Spark side: broadcast 1-row aggregate cross join",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="q15_top_supplier",
 )
@@ -841,10 +781,6 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     doc="window functions: row_number + lag + running decimal-exact sum with "
         "an explicit ROWS frame; one shuffle on o_custkey serves all three "
         "(same window spec). Order total: (o_orderdate, unique o_orderkey)",
-    # (window_functions_extended: 6 functions incl. a ROWS frame;
-    # window_trailing_90d_revenue: RANGE frame; topk_orders_per_customer:
-    # rank-filter); this starter trio stays oracle-checked locally.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
 )
 def window_order_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -876,9 +812,6 @@ WHERE rk <= 3
     doc="top-k per group via row_number (k=3; o_orderkey tiebreak per the "
         "registry determinism contract). Scale: rank-then-filter shuffles "
         "once on the group key; no global sort",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="window_order_running_total",
 )
@@ -916,9 +849,6 @@ FROM orders
         "epoch seconds because Spark's rangeBetween takes numeric offsets.  "
         "Scale: one shuffle + sort per customer partition, frame evaluated "
         "by a sliding accumulator, decimal-exact sums",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="window_order_running_total",
 )
@@ -960,10 +890,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey)
         "first_value, percent_rank, and a sliding ROWS-frame decimal-exact "
         "average -- all over ONE window spec, so Catalyst plans a single "
         "shuffle + sort on o_custkey for every function",
-    # r11 driver-slot rotation: multi-round driver-green veteran demoted
-    # to drain the never-checked backlog; family anchor stays driver-side.
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
     sibling="window_order_running_total",
 )
 def window_functions_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1005,9 +932,6 @@ WHERE rn = 1
         "-- the range never becomes a cross product because the equi-key "
         "partitions the join. 100 TB shape: shuffle both sides on the user "
         "key once; the window touches only each event's own matches",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
-    # r17 driver-slot rotation (tools/r17_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="ev_hourly_gapfill",
 )
@@ -1044,12 +968,6 @@ LIMIT 20
     doc="global top-20 by price (unique-key tiebreak). Scale: Spark plans "
         "TakeOrderedAndProject -- per-partition top-20 then a 20-row merge on "
         "the driver, never a full global sort",
-    # LIMIT (same TakeOrderedAndProject node); the bare form stays local and
-    # keeps the plan-invariant gate in tests/test_plan_invariants.py.
-    # r14 rotation: promoted for stale re-verification (tools/r14_rotation_plan.md).
-    # r15 interim edit: sits out so the new mm_jpeg_progressive_stats takes
-    # a first-round driver slot at a constant 50-entry surface (fresh r14
-    # green; window_order_running_total anchors the ordering family).
     driver=False,
     sibling="window_order_running_total",
 )
@@ -1075,7 +993,6 @@ SELECT 'done_only' AS activity, o_custkey FROM (SELECT * FROM done_c EXCEPT SELE
 """,
     doc="set operations: INTERSECT + EXCEPT + UNION ALL classifying customers "
         "by order-status activity; distinct key sets keep inputs small",
-    # r16 rotation: promoted for stale re-verification (tools/r16_rotation_plan.md).
 )
 def set_ops_customer_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -1109,12 +1026,7 @@ GROUP BY o_orderpriority
         "values -- right for the 5-priority grouping here, wrong for "
         "high-cardinality groups, where the sketch variant is the "
         "documented alternative.",
-    # r10 driver-slot rotation: quantile family keeps the sketch anchor (exact side pytest-pinned).
     driver=False,
-    # r14 sibling re-point: prior anchor demoted this rotation.
-    # r14 interim re-point: ev_anomaly_mad sits out for the new
-    # doc_char_kl_gibberish registration; the exact-percentile anchor
-    # moves to the zscore sibling (same percentile() determinism story).
     sibling="ev_anomaly_zscore",
 )
 def agg_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1152,7 +1064,7 @@ WHERE levenshtein(probe_name, c_name) <= 2
         "the block key is the shuffle key; skewed blocks take the salting "
         "path (tests/test_salting.py).  Every probe provably matches its "
         "source at distance <= 2, so the result is never empty.",
-    # r10 driver-slot rotation: the promoted end-to-end ER pipeline embeds the same blocked fuzzy matching stage.
+    # cust_entity_resolution embeds the same blocked fuzzy matching stage.
     driver=False,
     sibling="cust_entity_resolution",
 )
@@ -1206,9 +1118,6 @@ WINDOW w AS (
         "and bit-deterministic over a total order).  Scale: one shuffle "
         "on the bounded priority key; all five functions share one "
         "window frame and one sort.",
-    # r11 driver-slot rotation: promoted -- all-5-rank-functions window anchor (replaces window_functions_extended as the family's driver anchor).
-    # r14 driver-slot rotation (tools/r14_rotation_plan.md): freshness
-    # cycle -- multi-round veteran sits out for a stale re-verification.
     driver=False,
     sibling="window_order_running_total",
 )

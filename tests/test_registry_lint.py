@@ -72,12 +72,12 @@ def test_every_local_only_query_names_a_driver_checked_sibling():
 
 
 def test_never_driver_checked_entries_hold_a_driver_slot():
-    """Freshness-era rule (r13, tools/r14_rotation_plan.md): the
-    never-driver-checked backlog drained to 0 and must STAY empty — any
-    entry that has never appeared in a CORRECTNESS_r*.json sweep must be
-    driver=True so its first round faces the external oracle.  New
-    registrations therefore take a driver slot immediately; rotations may
-    demote them only after their first green sweep lands."""
+    """Freshness-era rule (r13): the never-driver-checked backlog drained
+    to 0 and must STAY empty — any entry that has never appeared in a
+    CORRECTNESS_r*.json sweep must be driver=True so its first round faces
+    the external oracle.  New registrations therefore take a driver slot
+    immediately, and may go local-only only after their first green sweep
+    lands."""
     import json
     import os
 
@@ -111,6 +111,43 @@ def test_driver_queries_carry_oracles_except_documented_aes():
         f"driver-facing queries without an oracle: {bad} — add the DuckDB "
         "SQL or document the exception here with its compensating gate"
     )
+
+
+def test_named_tool_paths_exist():
+    """Every ``tools/<name>.py|md`` path that the code, tests, bench,
+    benchmark, README or skill notes name must exist, so retiring a tool
+    cannot leave a comment or doc pointing at nothing.  History records
+    (COVERAGE.md's round sections, OPTIMIZATION_r*.md, VERDICT.md,
+    BENCH_TREND*.md, ROADMAP.md) describe what ran and stay out of scope."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    scope = [
+        root / "flink_kafka_consumer_cassandra_output_spark",
+        root / "tests",
+        root / "bench.py",
+        root / "perfbench",
+        root / "__spark_entry__.py",
+        root / "README.md",
+        root / ".claude",
+    ]
+    files = [
+        f
+        for p in scope
+        for f in ([p] if p.is_file() else sorted(p.rglob("*")))
+        if f.is_file() and "__pycache__" not in f.parts
+    ]
+    named = {
+        (m.group(0), f.relative_to(root).as_posix())
+        for f in files
+        for m in re.finditer(
+            r"tools/[A-Za-z0-9_]+\.(?:py|md)\b", f.read_text(errors="ignore")
+        )
+    }
+    assert named, "no tool path found in scope; the lint is vacuous"
+    missing = sorted((p, src) for p, src in named if not (root / p).is_file())
+    assert not missing, f"named tool paths that do not exist: {missing}"
 
 
 def test_register_rejects_local_only_without_sibling():

@@ -1,4 +1,4 @@
-"""Unit tests for the rotation/staleness tooling (pure logic, no Spark).
+"""Unit tests for the driver-check staleness audit (pure logic, no Spark).
 
 ADVICE r13: ``staleness.last_checked`` must count only GREEN sweep rows --
 a red/errored entry treated as freshly verified could evade re-promotion
@@ -14,7 +14,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools import staleness  # noqa: E402
-from tools.rotation_lib import entry_is_green  # noqa: E402
+from tools.staleness import entry_is_green  # noqa: E402
 
 GREEN = {"rows_match": True, "schema_match": True, "hash_match": True,
          "spark_rows": 5, "oracle_rows": 5, "err": None}
@@ -44,7 +44,7 @@ def test_entry_is_green_accepts_driver_rows_only_shape():
     with every *_match field None and only spark_rows populated (first
     observed when msg_detail_encrypted took a driver slot in r14; the
     r14 judge adjudicated that shape as the contract's allowed rows-only
-    green, and the r15 rotation precondition must accept it).  A
+    green, so the staleness audit must accept it).  A
     no_oracle row WITHOUT a real spark_rows count stays red: the query
     did not provably run."""
     driver_shape = {"rows_match": None, "schema_match": None,
@@ -104,3 +104,12 @@ def test_last_checked_counts_driver_rows_only_shape(tmp_path, monkeypatch):
     last = staleness.last_checked(1)
     assert last.get(names[0]) == 1
     assert names[1] not in last
+
+
+def test_default_round_is_latest_correctness_file(tmp_path, monkeypatch):
+    """The bare command audits against the newest sweep on disk, not a
+    hard-coded round."""
+    for r in (1, 3):
+        (tmp_path / f"CORRECTNESS_r{r:02d}.json").write_text("{}")
+    monkeypatch.setattr(staleness, "ROOT", str(tmp_path))
+    assert staleness.latest_round() == 3

@@ -187,8 +187,16 @@ def test_session_memo_nested_builds_bill_self_time_only():
 def test_materialize_many_positional_and_mode_equivalence(spark, sf_dir, tmp_path, monkeypatch):
     """materialize_many must (a) return frames positionally aligned with
     its input, (b) produce the same rows as serial materialize in both
-    the localCheckpoint and staging modes, and (c) stay a lazy no-op in
-    schema-only mode (no jobs, plan untouched)."""
+    the localCheckpoint and staging modes, (c) run its inputs eagerly in
+    both modes, so an Observation attached to an input is readable as
+    soon as it returns (doc_bigram_pmi's contract; a lazy mode fails here
+    within a bounded wait instead of hanging), and (d) stay a lazy no-op
+    in schema-only mode (no jobs, plan untouched)."""
+    import threading
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from flink_kafka_consumer_cassandra_output_spark.materialize import (
         STAGING_ENV,
         materialize_many,
@@ -201,14 +209,27 @@ def test_materialize_many_positional_and_mode_equivalence(spark, sf_dir, tmp_pat
     want_a = {(r[0], r[1]) for r in a.collect()}
     want_b = b.collect()[0][0]
 
-    got_a, got_b = materialize_many([a, b])
-    assert {(r[0], r[1]) for r in got_a.collect()} == want_a
-    assert got_b.collect()[0][0] == want_b
+    def observed_total(obs):
+        got = {}
+        reader = threading.Thread(target=lambda: got.update(obs.get), daemon=True)
+        reader.start()
+        reader.join(30)
+        assert not reader.is_alive(), (
+            "Observation.get still blocked 30 s after materialize_many "
+            "returned: the materialization did not run its input"
+        )
+        return got["n"]
 
-    monkeypatch.setenv(STAGING_ENV, str(tmp_path / "stage"))
-    st_a, st_b = materialize_many([a, b])
-    assert {(r[0], r[1]) for r in st_a.collect()} == want_a
-    assert st_b.collect()[0][0] == want_b
+    for staging in (None, str(tmp_path / "stage")):
+        if staging:
+            monkeypatch.setenv(STAGING_ENV, staging)
+        obs = Observation()
+        got_a, got_b = materialize_many(
+            [a.observe(obs, F.sum("count").alias("n")), b]
+        )
+        assert observed_total(obs) == sum(n for _, n in want_a)
+        assert {(r[0], r[1]) for r in got_a.collect()} == want_a
+        assert got_b.collect()[0][0] == want_b
     monkeypatch.delenv(STAGING_ENV)
 
     monkeypatch.setenv("SPARK_GRAFT_SCHEMA_ONLY", "1")

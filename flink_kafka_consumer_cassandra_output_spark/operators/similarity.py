@@ -504,6 +504,15 @@ def blockwise_connected_components(
     inside one block and global CC decomposes into independent per-block
     problems.
 
+    Caller contract, NOT checked at run time: the block key must be a
+    function of the vertex (each vertex id carries exactly one value of
+    ``block_cols`` across all of ``pairs``), and both endpoints of every
+    edge must share it.  Both current call sites meet it through their
+    equi-join on the name prefix and ``nationkey``.  Break either rule
+    and a component that spans two blocks is silently split in two --
+    each block's union-find sees only its own edges, and the same
+    vertex can come back with two different labels; no error is raised.
+
     ``pairs``: columns ``(a, b, *block_cols)``.  Returns (v, lbl) for
     every vertex APPEARING IN ``pairs``, where lbl is the minimum vertex
     id in the component -- exactly :func:`connected_components`' labels
@@ -825,24 +834,24 @@ def brute_force_topk_arrow(
 
     Same semantics as :func:`brute_force_topk`, different execution: the
     corpus is salted into ``fanout`` groups (default: the session's
-    parallelism), the query set is replicated onto every salt with a
-    broadcast cross join, and a cogrouped ``applyInPandas`` hands each
-    task (corpus chunk, full query set) as pandas frames — numpy does one
-    (chunk x dim) @ (dim x n_queries) matmul per group and only the
-    per-group top-k survives (a combiner) before a final global top-k
-    window.  This is the documented escape hatch for when the JVM
-    expression path is the bottleneck: higher-order-function folds are
-    interpreted per element, while the matmul is BLAS over the whole
-    chunk.
+    parallelism), the query set is replicated onto every salt by an
+    ``explode`` of ``sequence(0, fanout - 1)``, and a cogrouped
+    ``applyInPandas`` hands each task (corpus chunk, full query set) as
+    pandas frames — numpy does one (chunk x dim) @ (dim x n_queries)
+    matmul per group and only the per-group top-k survives (a combiner)
+    before a final global top-k window.  This is the documented escape
+    hatch for when the JVM expression path is the bottleneck:
+    higher-order-function folds are interpreted per element, while the
+    matmul is BLAS over the whole chunk.
 
     The query side is a DATAFRAME, never a driver-materialized list: the
-    replication is |queries| x fanout rows of a broadcast join, so the
-    same plan serves ten queries or a hundred thousand without a
-    driver-memory bottleneck — the shape that matters at production
-    query volumes.  The price vs the closure-shipped variant is one
-    corpus-wide hash repartition on the salt (the cogroup's exchange);
-    the combiner still bounds what leaves every task at k x |queries|
-    rows.
+    replication is |queries| x fanout rows of a narrow explode (no join,
+    no broadcast job), so the same plan serves ten queries or a hundred
+    thousand without a driver-memory bottleneck — the shape that matters
+    at production query volumes.  The price vs the closure-shipped
+    variant is one corpus-wide hash repartition on the salt (the
+    cogroup's exchange); the combiner still bounds what leaves every task
+    at k x |queries| rows.
 
     Caveat, and why the oracle gate for this operator is rows-only: BLAS
     accumulates dot products in SIMD-blocked order, so cosine values can
@@ -897,9 +906,7 @@ def brute_force_topk_arrow(
         return pd.DataFrame(out)
 
     salted = corpus.withColumn("salt", F.pmod(F.hash("vec_id"), F.lit(p)))
-    q_rep = queries.crossJoin(
-        F.broadcast(spark.range(p).select(F.col("id").cast("int").alias("salt")))
-    )
+    q_rep = queries.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(p - 1))))
     cand = (
         salted.groupBy("salt")
         .cogroup(q_rep.groupBy("salt"))

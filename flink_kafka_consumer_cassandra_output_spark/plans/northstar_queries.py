@@ -1239,8 +1239,9 @@ FROM rgb GROUP BY doc_id, width, height
         "channel integer-certifiable: the oracle reads chroma from block "
         "(x//16, y//16) at in-block position ((x//2)%8, (y//2)%8) and "
         "recomputes libjpeg's fixed-point YCbCr->RGB exactly.  Same "
-        "wrong-table-loudness construction as mm_jpeg_color_stats.  The "
-        "remaining JPEG stub is now progressive scans and partial MCUs.  "
+        "wrong-table-loudness construction as mm_jpeg_color_stats.  Partial "
+        "MCUs and progressive scans decode too (gated by "
+        "mm_jpeg_partial_mcu_stats and mm_jpeg_progressive_stats).  "
         "Scale: narrow Arrow-batched mapInPandas; O(1)-width stats.",
     driver=False,
     sibling="mm_jpeg_arith_stats",
@@ -1903,8 +1904,10 @@ SELECT * FROM color UNION ALL SELECT * FROM refined
         "correction bits) where EVERY refinement bit is worth a full "
         "pixel step -- a decoder that skips, mis-orders, or mis-applies "
         "one bit cannot hash-match.  Restart intervals decode too as of "
-        "r16 (gated by mm_jpeg_restart_stats); refused loudly: "
-        "arithmetic-coded/hierarchical JPEG.  Scale: narrow "
+        "r16 (gated by mm_jpeg_restart_stats), and so do arithmetic-coded "
+        "(mm_jpeg_arith_stats) and hierarchical (mm_jpeg_hier_stats) "
+        "JPEG; remaining: SOF11 arithmetic lossless and "
+        "differential-hierarchical variants.  Scale: narrow "
         "Arrow-batched mapInPandas; O(1)-width stats.",
     # mm_jpeg_restart_stats' odd arm decodes progressive scripts with
     # restarts in every scan.
@@ -1984,8 +1987,9 @@ SELECT * FROM gray UNION ALL SELECT * FROM color
         "closed per-block form, so the oracle enumerates pixels "
         "arithmetically; sums no longer cancel per block at the cropped "
         "edges, which is exactly what makes this gate sensitive to a "
-        "wrong crop.  The remaining JPEG stub is progressive scans "
-        "only.  Scale: narrow Arrow-batched mapInPandas, O(1)-width "
+        "wrong crop.  Progressive scans decode too (gated by "
+        "mm_jpeg_progressive_stats); the remaining stub is codec video "
+        "payloads.  Scale: narrow Arrow-batched mapInPandas, O(1)-width "
         "stats.",
     # mm_jpeg_color12_stats' non-multiple-of-8 dims cross partial-MCU
     # crops at 3 components.
@@ -2060,7 +2064,7 @@ SELECT query_id, neighbor_id FROM (
 WHERE rank <= 5
 """,
     doc="north-star similarity search via the Arrow-vectorized Python path: "
-        "salted corpus chunks cogroup with the broadcast-replicated query "
+        "salted corpus chunks cogroup with the explode-replicated query "
         "DataFrame (no driver-side query bootstrap), one BLAS matmul "
         "scores each chunk against the full query set, a per-group top-k "
         "combiner bounds what leaves each task, and a "

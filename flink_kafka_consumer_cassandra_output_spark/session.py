@@ -13,6 +13,17 @@ count for tests, but on a real cluster it should be ~2-3x the executor-core
 total (or left to AQE's coalescing with a high initial value).  Nothing in
 the engine hard-codes a partition count; operators that need co-location
 call ``repartition`` on keys explicitly.
+
+Python workers: every session starts PySpark's worker daemon through
+``pyworker`` (``spark.python.daemon.module``), which makes zip-archive
+cache invalidation lazy as Python 3.13 does.  PySpark invalidates import
+caches at the start of every Python task, and before 3.13 that re-read
+all of ``pyspark.zip``, py4j and the spark-core jar each time: a warm
+four-partition ``mapInPandas`` of 2 000 rows took about 0.48 s, and
+0.28-0.34 s with the daemon (4-vCPU host, ``local[4]``).  The package's
+parent directory is prepended to ``spark.executorEnv.PYTHONPATH`` so the
+daemon, and every function pickled by reference to this package, imports
+in the workers from any working directory.
 """
 
 from __future__ import annotations
@@ -20,6 +31,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -87,6 +100,10 @@ def build_session(
     }
     if extra_conf:
         conf.update(extra_conf)
+    conf["spark.python.daemon.module"] = f"{__package__}.pyworker"
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -251,6 +251,17 @@ def test_arrow_topk_matches_fold_topk(spark, sf_dir):
     assert arrow == fold
 
 
+def test_arrow_topk_replicates_queries_without_a_join(spark, sf_dir):
+    """The query set reaches every salt through an explode, not a
+    broadcast cross join: no nested-loop join (and no broadcast job) in
+    the physical plan."""
+    df = all_specs()["emb_cosine_topk_arrow"].builder(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    assert "Generate explode" in plan, plan
+
+
 def test_ivf_recall_at_5(spark, sf_dir):
     specs = all_specs()
     bf = {

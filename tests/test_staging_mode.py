@@ -134,14 +134,61 @@ def test_rebroadcast_small_roundtrip_and_guard(spark):
     orig = sorted((r.id, tuple(r.v)) for r in df.collect())
     got = sorted((r.id, tuple(r.v)) for r in back.collect())
     assert got == orig  # exact ==, no tolerance: IEEE binary64 round-trip
-    # zero-lineage: the rebuilt plan is a bare ExistingRDD scan with no
+    # zero-lineage: the rebuilt plan is a bare local-table scan with no
     # trace of the original source lineage
     plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan
+    assert "LocalTableScan" in plan
     assert "Range" not in plan and "Project" not in plan
 
     with pytest.raises(ValueError, match="exceeds"):
         rebroadcast_small(spark.range(100), max_rows=16)
+
+
+def test_rebroadcast_small_runs_no_python_task(spark):
+    """The rebuilt frame comes from Arrow decoded by the JVM: its RDD
+    lineage names no ``PythonRDD`` (a Row-list ``createDataFrame`` runs a
+    Python map per partition), and signed zeros, NaN and NULL array
+    elements and NULL cells come back exactly."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from flink_kafka_consumer_cassandra_output_spark.materialize import (
+        rebroadcast_small,
+    )
+
+    df = spark.range(4).select(
+        F.col("id"),
+        F.when(F.col("id") == 2, F.lit(None)).otherwise(F.col("id") * 3).alias("n"),
+        F.array(
+            F.lit(-0.0),
+            F.lit(float("nan")),
+            F.lit(None).cast("double"),
+            F.col("id") / F.lit(7.0),
+        ).alias("v"),
+    )
+    back = rebroadcast_small(df)
+    lineage = back._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert back.schema == df.schema
+
+    def cells(frame):
+        return sorted(
+            (
+                r.id,
+                r.n,
+                [
+                    None if x is None else ("nan" if math.isnan(x) else (x, math.copysign(1.0, x)))
+                    for x in r.v
+                ],
+            )
+            for r in frame.collect()
+        )
+
+    got = cells(back)
+    assert got == cells(df)
+    assert got[0] == (0, 0, [(0.0, -1.0), "nan", None, (0.0, 1.0)])
+    assert got[2][1] is None
 
 
 def test_session_memo_nested_builds_bill_self_time_only():

@@ -3,14 +3,18 @@
 Prints exactly ONE JSON line on stdout:
 
     {"metric": "total_query_seconds", "value": <sum>, "unit": "sec",
-     "queries": {"<name>": <sec>, ...}, "control": {...}, "controls":
-     {"<family>": {...}}, "sf": <sf>, "cpus": <n>, ...}
+     "queries": {"<name>": <sec>, ...},
+     "counters": {"<name>": [<jobs>, <stages>], ...},
+     "shared_stage_seconds": <sec>, "shared_stages": {"<stage>": <sec>, ...},
+     "pre_sweep_load": <1-min load>, "sf": <sf>, "cpus": <n>,
+     "n_queries": <n>, "n_registered": <n>, "repeats": <n>,
+     "failures": {"<name>": "<error>", ...}}     # only when a query failed
 
 Configuration (env):
     SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
     SPARK_GRAFT_CPUS     local[...] core count (default: os.cpu_count())
     SPARK_GRAFT_BENCH_QUERIES  comma-separated subset (default: all)
-    SPARK_GRAFT_BENCH_REPEATS  timed runs per query, min reported (default 2)
+    SPARK_GRAFT_BENCH_REPEATS  timed runs per query, min reported (default 3)
 
 Timing methodology: each query's DataFrame is fully materialized via the
 ``noop`` sink (forces every column expression to execute, unlike ``count()``
@@ -21,6 +25,23 @@ sweep, GC and codegen-cache pressure from earlier queries can inflate one
 later query 1.5-2x run-to-run (observed), and min-of-N measures the
 query's cost rather than the sweep's interference.  All Spark logs go to
 stderr; stdout carries only the JSON line.
+
+Counters: ``counters[name]`` is ``[jobs, stages]`` for one repeat: the
+Spark jobs started while the query built and ran (eager build-time jobs
+and ``materialize_many``'s pool included, since no builder sets a job
+group) and the stages each of those jobs scheduled, skipped ones
+included, summed over the jobs.  The summed form is fixed by each job's
+lineage; a count of distinct stage ids is not, because whether two jobs
+share a stage id depends on whether the first job's stage was still
+registered when the second one started.  The first repeat also carries
+one-time jobs (file listing, ``session_memo`` shared-stage builds), so the
+recorded value is the smallest pair over the later repeats: AQE picks a
+join's build side from whichever input finishes first, and when both are
+small that choice can add a broadcast job in some repeats (observed on
+``emb_ann_recall_curve``), while a plan change shows in every repeat.
+``tools/bench_trend.py`` gates on these counts.  ``pre_sweep_load`` is the
+1-minute load average read before the Spark session exists: a record of
+the window, not a gate.
 """
 
 from __future__ import annotations
@@ -38,68 +59,10 @@ from flink_kafka_consumer_cassandra_output_spark.materialize import (  # noqa: E
 from flink_kafka_consumer_cassandra_output_spark.plans import all_specs  # noqa: E402
 from flink_kafka_consumer_cassandra_output_spark.session import local_session  # noqa: E402
 
-#: Fixed calibration query: measured (min-of-3) at sweep start AND end,
-#: with the 1-minute load average at each point.  Round-over-round trend
-#: adjudication divides by the control instead of requiring a manual
-#: quiet-machine re-measure (the r9->r10 CPU-steal flags each cost a full
-#: re-adjudication cycle).  q6 is the judge's own control query: tiny,
-#: stable, exercises scan+filter+agg.
-CONTROL_QUERY = "q6_forecast_revenue"
-
-#: Per-table-family controls (r13 lesson: the whole events/documents region
-#: ran 40-70% slower in one sweep window while the lineitem control was
-#: FASTER -- a single control is provably blind to table-family-specific
-#: host drift, and 17 flags needed manual old-tree adjudication).  One
-#: cheap, session_memo-FREE query per base table family; the trend gate
-#: normalizes each query by its own family's control.  q6 stays the
-#: primary (and the legacy "control" output field) for old tooling.
-CONTROL_QUERIES = {
-    "lineitem": CONTROL_QUERY,
-    "events": "ev_json_props_typed",
-    "documents": "doc_rolling_hash",
-    "embeddings": "emb_int8_quantization",
-}
-
-#: Contention gate (VERDICT r13 task 3): the r13 sweep ran concurrently
-#: with another workload and cost a 17-flag manual adjudication pass.
-#: Two-part design, because raw in-sweep load CANNOT be the per-family
-#: signal on a local[n] runner: an r14 calibration sweep on a verifiably
-#: idle 32-cpu box (load 0.35 one minute after it finished) recorded its
-#: OWN 1-minute load at 10-19 -- the sweep's 32 executor threads are the
-#: load, so any in-sweep threshold either always trips or never does.
-#:
-#: (a) PRE-SWEEP: 1-minute load sampled before the Spark session exists.
-#:     Above cpus * LOAD_GATE_FACTOR the machine is already busy and the
-#:     whole sweep is marked busy_at_start -- the caller should rerun on
-#:     an idle window rather than adjudicate flags later.
-#: (b) IN-SWEEP, per family: the single-shot quarter-point control samples
-#:     are compared to the family's own min(start_s, end_s) timing; a
-#:     sample more than CONTROL_STALL_RATIO slower marks that family's
-#:     window contended.  Timing-based, so self-load cancels out.  Marked
-#:     families get ONE re-time pass at sweep end; if the rerun window's
-#:     control sample is still inflated the family is reported invalid
-#:     instead of recorded as a clean measurement.
-LOAD_GATE_FACTOR = 0.25
-CONTROL_STALL_RATIO = 2.0
-
-
-def control_stalled_families(
-    controls: dict, ratio: float = CONTROL_STALL_RATIO
-) -> list[str]:
-    """Families with a mid-sweep control sample more than ``ratio`` times
-    slower than the family's own min(start_s, end_s) -- the timing-based
-    contention signal (load-independent; see module comment above)."""
-    out = []
-    for fam, ctl in controls.items():
-        ends = [t for t in (ctl.get("start_s"), ctl.get("end_s")) if t]
-        if not ends:
-            continue
-        base = min(ends)
-        secs = [s.get("sec") for s in ctl.get("samples", [])
-                if s.get("after_n") != "rerun"]
-        if any(sec is not None and sec > ratio * base for sec in secs):
-            out.append(fam)
-    return sorted(out)
+#: Untimed warm-up query: tiny, never session_memo-backed, so cold-JVM
+#: cost can't leak into the shared-stage billing (a memo-consumer warm-up
+#: would trigger the one-time shared builds while the JVM is coldest).
+WARMUP_QUERY = "q6_forecast_revenue"
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -110,58 +73,59 @@ def _sf_from_dir(sf_dir: str) -> float:
         return -1.0
 
 
-def materialize(df) -> int:
-    """Force full execution of every column; return the row count."""
+def materialize(df) -> None:
+    """Force full execution of every column; returns nothing."""
     df.write.format("noop").mode("overwrite").save()
-    return -1
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of the ungrouped jobs the status store holds, read after the
+    listener bus has delivered every event already posted (job starts are
+    recorded asynchronously)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def _counters(spark, jobs: set[int]) -> list[int]:
+    """[jobs, stages scheduled by those jobs, summed per job]."""
+    tracker = spark.sparkContext.statusTracker()
+    infos = [tracker.getJobInfo(j) for j in jobs]
+    return [len(jobs), sum(len(i.stageIds) for i in infos if i is not None)]
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
     only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
-    # pre-sweep load, read BEFORE the Spark session exists (gate part (a))
+    # 3, not 2: the container shows multi-second CPU-steal stalls (the same
+    # untouched query measured 0.9s and 7.9s across two sweeps); min-of-3
+    # keeps one stalled repeat from poisoning a query's number.
+    repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     pre_sweep_load = os.getloadavg()[0]
-    busy_at_start = pre_sweep_load > cpus * LOAD_GATE_FACTOR
-    if busy_at_start:
-        print(
-            f"bench: WARNING machine busy at sweep start (1-min load "
-            f"{pre_sweep_load:.1f} > {cpus * LOAD_GATE_FACTOR:.0f}); sweep "
-            "will be marked busy_at_start -- prefer rerunning on an idle window",
-            file=sys.stderr,
-        )
     spark = local_session(cores=cpus)
     specs = all_specs()
     names = sorted(specs)
     if only:
         names = [n for n in names if n in set(only.split(","))]
 
-    # Warm-up: run one small NON-MEMOIZED query so JIT/codegen and the
-    # parquet footer cache don't bill the first measured query.  The
-    # control query (never session_memo-backed) is used so cold-JVM cost
-    # can't leak into the shared-stage billing: a memo-consumer warm-up
-    # would trigger the one-time shared builds while the JVM is coldest.
     try:
-        warm = CONTROL_QUERY if CONTROL_QUERY in specs else names[0]
+        warm = WARMUP_QUERY if WARMUP_QUERY in specs else names[0]
         materialize(specs[warm].builder(spark, sf_dir))
     except Exception:
         pass
 
-    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-    # 3, not 2: the container shows multi-second CPU-steal stalls (the same
-    # untouched query measured 0.9s and 7.9s across two sweeps); min-of-3
-    # keeps one stalled repeat from poisoning a query's number.
-
-    def _measure(name: str, reps: int | None = None) -> tuple[float | None, str | None]:
-        best = None
-        err = None
-        for _ in range(max(1, reps if reps is not None else repeats)):
+    timings: dict[str, float] = {}
+    counters: dict[str, list[int]] = {}
+    failures: dict[str, str] = {}
+    for name in names:
+        best = err = None
+        seen = []
+        for rep in range(repeats):
             # Shared-stage (session_memo) builds triggered inside this repeat
             # are billed under shared_stage_seconds, NOT under this query:
-            # subtract the repeat's own memo-build delta from its timing.
-            # Without this, repeats=1 double-billed the build (once in the
-            # query's number, once in shared_stage_seconds); with repeats>=2
-            # it merely made the first repeat meaningless (r11 ADVICE).
+            # subtract the repeat's own memo-build delta from its timing, so
+            # repeats=1 does not bill the build twice.
+            before = _job_ids(spark)
             m0 = sum(SESSION_MEMO_BUILD_SECONDS.values())
             t0 = time.perf_counter()
             try:
@@ -172,98 +136,14 @@ def main() -> None:
             dt = time.perf_counter() - t0
             dt -= sum(SESSION_MEMO_BUILD_SECONDS.values()) - m0
             best = dt if best is None else min(best, dt)
-        return best, err
-
-    controls = {
-        fam: {"query": q, "start_s": None, "end_s": None, "samples": []}
-        for fam, q in CONTROL_QUERIES.items()
-        if q in specs
-    }
-
-    def _sample_controls(key: str, after_n: int | None = None) -> None:
-        for fam, ctl in controls.items():
-            # Mid-sweep samples are SINGLE-SHOT (ADVICE r13): min-of-repeats
-            # suppresses exactly the transient-stall signal the wobble gate
-            # reads -- a stall had to poison all 3 repeats to surface.  The
-            # start/end normalization points keep min-of-N.
-            c = _measure(ctl["query"], reps=1 if key == "sample" else None)[0]
-            if c is None:
-                continue
-            if key == "sample":
-                ctl["samples"].append({
-                    "after_n": after_n,
-                    "sec": round(c, 3),
-                    "load": round(os.getloadavg()[0], 2),
-                })
-            else:
-                ctl[key] = round(c, 3)
-                ctl[f"load_{key.removesuffix('_s')}"] = round(os.getloadavg()[0], 2)
-
-    _sample_controls("start_s")
-    control_start = controls.get("lineitem", {}).get("start_s")
-    load_start = os.getloadavg()[0]
-
-    # Mid-sweep control samples at the quarter points: a host stall that
-    # starts AND ends inside the sweep is invisible to the start/end pair
-    # (r12 lesson: a concurrent pytest run inflated 11 queries while both
-    # endpoint controls looked fine).  The trend gate normalizes by the
-    # median of all samples.
-    quarter = max(1, len(names) // 4)
-
-    timings: dict[str, float] = {}
-    failures: dict[str, str] = {}
-    for i, name in enumerate(names):
-        best, err = _measure(name)
+            if rep > 0 or repeats == 1:
+                seen.append(_counters(spark, _job_ids(spark) - before))
+        if seen:
+            counters[name] = min(seen)
         if best is not None:
             timings[name] = round(best, 3)
         else:
             failures[name] = err or "no successful repeat"
-        if (i + 1) % quarter == 0 and (i + 1) < len(names):
-            _sample_controls("sample", after_n=i + 1)
-
-    _sample_controls("end_s")
-    control_end = controls.get("lineitem", {}).get("end_s")
-    load_end = os.getloadavg()[0]
-
-    # Contention gate part (b) (VERDICT r13 task 3): families whose control
-    # windows saw a timing stall get ONE re-timing pass; a rerun whose own
-    # control sample comes back clean replaces the contended numbers,
-    # otherwise the family is reported invalid rather than recorded as if
-    # it were a clean measurement.
-    flagged = control_stalled_families(controls)
-    recovered, invalid = [], []
-    if flagged:
-        from tools.bench_trend import family_of
-        fam_of = {n: family_of(n) for n in names}
-        for fam in flagged:
-            members = [n for n in names if fam_of[n] == fam]
-            retimed = {}
-            for n in members:
-                best, _err = _measure(n)
-                if best is not None:
-                    retimed[n] = round(best, 3)
-            ctl = controls.get(fam)
-            rerun_clean = False
-            if ctl is not None:
-                c = _measure(ctl["query"], reps=1)[0]
-                if c is not None:
-                    ctl["samples"].append({
-                        "after_n": "rerun",
-                        "sec": round(c, 3),
-                        "load": round(os.getloadavg()[0], 2),
-                    })
-                    ends = [t for t in (ctl.get("start_s"), ctl.get("end_s")) if t]
-                    rerun_clean = bool(ends) and c <= CONTROL_STALL_RATIO * min(ends)
-            if rerun_clean:
-                timings.update(retimed)
-                recovered.append(fam)
-            else:
-                invalid.append(fam)
-        print(
-            f"bench: contention gate flagged {flagged}; rerun recovered "
-            f"{recovered}, still invalid {invalid}",
-            file=sys.stderr,
-        )
 
     # Shared stages (session_memo) build ONCE per sweep; their cost lands
     # in the first consumer's first repeat, which min-of-N then drops.
@@ -274,35 +154,17 @@ def main() -> None:
         "value": round(sum(timings.values()) + shared, 3),
         "unit": "sec",
         "queries": timings,
+        "counters": counters,
         "shared_stage_seconds": shared,
         "shared_stages": {
             k: round(v, 3) for k, v in sorted(SESSION_MEMO_BUILD_SECONDS.items())
         },
-        # legacy single-control shape (the lineitem/primary control) kept
-        # for old tooling and the driver-file tail recovery
-        "control": {
-            "query": CONTROL_QUERY,
-            "start_s": control_start,
-            "end_s": control_end,
-            "load_start": round(load_start, 2),
-            "load_end": round(load_end, 2),
-            "samples": controls.get("lineitem", {}).get("samples", []),
-        },
-        "controls": controls,
-        "load_gate": {
-            "pre_sweep_load": round(pre_sweep_load, 2),
-            "pre_sweep_threshold": round(cpus * LOAD_GATE_FACTOR, 2),
-            "busy_at_start": busy_at_start,
-            "stall_ratio": CONTROL_STALL_RATIO,
-            "flagged": flagged,
-            "rerun_recovered": recovered,
-            "invalid": invalid,
-        },
+        "pre_sweep_load": round(pre_sweep_load, 2),
         "sf": _sf_from_dir(sf_dir),
         "cpus": cpus,
         "n_queries": len(timings),
         "n_registered": len(names),
-        "repeats": max(1, repeats),
+        "repeats": repeats,
     }
     if failures:
         out["failures"] = failures

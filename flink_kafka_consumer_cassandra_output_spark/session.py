@@ -71,20 +71,6 @@ def build_session(
         # SparkSession (spark-submit on a real cluster sets its own).
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         "spark.ui.enabled": "false",
-        # Join strategy preference knob (optimization guide section 9).
-        # MEASURED r18 (full 199-query sweep at sf0.1/local[32], one
-        # variable): preferSortMergeJoin=false is a WASH here -- geomean
-        # 1.00x vs the default, because post-AQE shuffle sides are far
-        # below the sizes where skipping the sort pays.  Default stays
-        # Spark's (true); the env knob keeps the experiment repeatable on
-        # a cluster, where moderate build sides can favor shuffled hash
-        # (with the usual build-side-OOM caveat).  Join strategy never
-        # changes results in this engine: every aggregate is
-        # order-insensitive-exact by design (integer/decimal sums,
-        # array_sort'd collect_list folds, explicit window orders).
-        "spark.sql.join.preferSortMergeJoin": os.environ.get(
-            "SPARK_GRAFT_PREFER_SMJ", "true"
-        ),
         # Parquet vectorized reader + pushdown are on by default; kept
         # explicit as documentation of the scan posture.
         "spark.sql.parquet.filterPushdown": "true",

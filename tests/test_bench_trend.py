@@ -1,521 +1,129 @@
-"""Unit tests for the bench trend gate (pure logic, no Spark)."""
+"""tools/bench_trend.py: the counter gate over two ``bench.py`` lines.
+
+The gate fails only on a job or stage count that rose; wall time is
+reported, never gated on alone.  Most tests run the tool on synthetic
+lines (no Spark); the last one runs ``bench.py`` itself on two queries and
+checks the line it prints is one the gate reads.
+"""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-
-from bench_trend import (  # noqa: E402
-    MIN_SECONDS,
-    compare,
-    host_ratio,
-    load_run,
-)
+ROOT = Path(__file__).resolve().parents[1]
+TOOL = ROOT / "tools" / "bench_trend.py"
 
 
-def test_regression_flagged():
-    cmp = compare({"q": 1.0}, {"q": 1.6})
-    assert "q" in cmp["regressed"] and cmp["regressed"]["q"]["ratio"] == 1.6
-
-
-def test_improvement_and_steady():
-    cmp = compare({"a": 3.0, "b": 1.0}, {"a": 1.0, "b": 1.2})
-    assert "a" in cmp["improved"]
-    assert "b" in cmp["steady"]
-
-
-def test_noise_floor_exempts_tiny_queries():
-    # 3x ratio but both runs under the noise floor: not a gate failure
-    cmp = compare({"q": 0.05}, {"q": 0.15})
-    assert not cmp["regressed"]
-    assert MIN_SECONDS > 0.15
-
-
-def test_added_and_removed_tracked():
-    cmp = compare({"old": 1.0}, {"new": 1.0})
-    assert cmp["added"] == ["new"] and cmp["removed"] == ["old"]
-
-
-def test_mid_object_truncated_tail_recovers(tmp_path):
-    """The r05 driver-file shape: tail starts INSIDE the queries object;
-    load_run re-braces from the first full entry and drops the partial
-    leading one."""
-    import json
-
-    f = tmp_path / "r.json"
-    f.write_text(json.dumps({
-        "parsed": None,
-        "tail": 'lineitem": 1.034, "asof": 0.82, "topk": 0.3}, '
-                '"sf": 0.1, "repeats": 3}\n',
-    }))
-    queries, repeats, control, meta = load_run(str(f))
-    assert queries == {"asof": 0.82, "topk": 0.3} and repeats == 3
-    assert control is None
-    assert meta == {"sf": 0.1}
-
-
-def test_tail_truncated_past_queries_refuses(tmp_path):
-    """If the truncation ate the whole queries object, the re-brace lands
-    on run metadata; the tool must refuse loudly, not gate the trend on
-    phantom 'sf'/'repeats' queries."""
-    import json
-
-    import pytest
-
-    f = tmp_path / "r.json"
-    f.write_text(json.dumps({
-        "parsed": None,
-        "tail": '4, "sf": 0.1, "cpus": 32, "repeats": 3}\n',
-    }))
-    with pytest.raises(SystemExit, match="unrecoverable"):
-        load_run(str(f))
-
-
-def test_methodology_mismatch_disarms_gate(tmp_path):
-    """A repeats change makes ratios apples-to-oranges: the tool must report
-    but NOT gate (exit 0) until both runs share a methodology."""
-    import json
-    import subprocess
-    import sys as _sys
-    from pathlib import Path
-
-    base = tmp_path / "base.json"
-    cur = tmp_path / "cur.json"
-    base.write_text(json.dumps({"queries": {"q": 1.0}}))  # old: no repeats key
-    cur.write_text(json.dumps({"queries": {"q": 3.0}, "repeats": 2}))  # 3x "regression"
-    tool = Path(__file__).resolve().parents[1] / "tools" / "bench_trend.py"
-    r = subprocess.run(
-        [_sys.executable, str(tool), str(base), str(cur)],
-        capture_output=True, text=True,
-    )
-    assert r.returncode == 0, r.stdout + r.stderr
-    assert "METHODOLOGY CHANGED" in r.stdout
-
-    # same methodology: the 3x regression gates (exit 1)
-    base.write_text(json.dumps({"queries": {"q": 1.0}, "repeats": 2}))
-    r2 = subprocess.run(
-        [_sys.executable, str(tool), str(base), str(cur)],
-        capture_output=True, text=True,
-    )
-    assert r2.returncode == 1
-
-
-def _ctl(q, s, e):
-    return {"query": q, "start_s": s, "end_s": e}
-
-
-def test_host_normalization_clears_uniform_slowdown():
-    """A 2x-slower host window shows every query 2x slower AND the control
-    2x slower; normalization must clear the phantom flags."""
-    h = host_ratio(_ctl("q6", 0.2, 0.2), _ctl("q6", 0.4, 0.4))
-    assert h == 2.0
-    cmp = compare({"a": 1.0, "b": 2.0}, {"a": 2.0, "b": 4.0}, host=h)
-    assert not cmp["regressed"]
-    assert cmp["steady"]["a"]["norm"] == 1.0 and cmp["steady"]["a"]["ratio"] == 2.0
-
-
-def test_host_normalization_keeps_real_regressions():
-    """A genuine 3x regression on a steady host (control flat) still gates."""
-    h = host_ratio(_ctl("q6", 0.2, 0.2), _ctl("q6", 0.21, 0.19))
-    cmp = compare({"a": 1.0}, {"a": 3.0}, host=h)
-    assert "a" in cmp["regressed"]
-
-
-def test_host_ratio_refuses_out_of_band_and_mismatched():
-    # control shifted 5x: more likely a control-query code change; refuse
-    assert host_ratio(_ctl("q6", 0.1, 0.1), _ctl("q6", 0.5, 0.5)) is None
-    # different control queries across runs: not comparable
-    assert host_ratio(_ctl("q6", 0.2, 0.2), _ctl("q1", 0.2, 0.2)) is None
-    # missing control on either side
-    assert host_ratio(None, _ctl("q6", 0.2, 0.2)) is None
-
-
-def test_sub_floor_regression_still_gated_on_current_side():
-    """Regression guard for the r11 orders_skyline_pareto shape: base under
-    the noise floor (0.297s) but current well above it (0.672s) -- the
-    floor applies to max(base, current), so this MUST flag."""
-    cmp = compare({"q": 0.297}, {"q": 0.672})
-    assert "q" in cmp["regressed"]
-
-
-def test_control_seconds_uses_sample_median():
-    """Mid-sweep samples join the endpoint pair, median-combined: a
-    transient spike in one sample (or one endpoint) must not swing the
-    normalization factor."""
-    from bench_trend import _control_seconds
-
-    ctl = {
-        "query": "q6", "start_s": 0.2, "end_s": 0.2,
-        "samples": [
-            {"after_n": 45, "sec": 0.21, "load": 2.0},
-            {"after_n": 90, "sec": 5.0, "load": 30.0},  # transient stall
-            {"after_n": 135, "sec": 0.19, "load": 2.1},
-        ],
+def _line(queries=None, counters=None, **meta) -> dict:
+    queries = queries or {"q_a": 0.5, "q_b": 1.0}
+    line = {
+        "metric": "total_query_seconds",
+        "value": sum(queries.values()),
+        "unit": "sec",
+        "queries": queries,
+        "counters": counters or {"q_a": [2, 3], "q_b": [4, 6]},
+        "sf": 0.1,
+        "cpus": 4,
+        "repeats": 3,
     }
-    assert _control_seconds(ctl) == 0.2
-    # no samples: mean-of-two becomes median-of-two (same value)
-    assert _control_seconds({"query": "q6", "start_s": 0.3, "end_s": 0.1}) == 0.2
+    line.update(meta)
+    return line
 
 
-def test_control_wobble_detects_mid_sweep_load_change():
-    from bench_trend import control_wobble
-
-    steady = {"query": "q6", "start_s": 0.2, "end_s": 0.21,
-              "samples": [{"after_n": 45, "sec": 0.19, "load": 2.0}]}
-    assert control_wobble(steady) < 2.0
-    # the benign pattern: sweep starts warm (slower) and ends fast -- the
-    # max/median metric must NOT flag it
-    warm_start = {"query": "q6", "start_s": 0.38, "end_s": 0.18}
-    assert control_wobble(warm_start) < 2.0
-    stalled = {"query": "q6", "start_s": 0.2, "end_s": 0.21,
-               "samples": [{"after_n": 90, "sec": 0.9, "load": 28.0}]}
-    assert control_wobble(stalled) > 2.0
-    assert control_wobble(None) is None
-    assert control_wobble({"query": "q6", "start_s": 0.2}) is None
-    # the r13b phantom: warm start (0.417) + uniformly fast interior
-    # (0.178-0.196) is a HEALTHY sweep; the max must span only the
-    # interior so this stays under the gate
-    r13b_shape = {"query": "q6", "start_s": 0.417, "end_s": 0.178,
-                  "samples": [{"after_n": n, "sec": s, "load": 1.0}
-                              for n, s in [(44, 0.196), (88, 0.182),
-                                           (132, 0.191), (176, 0.196)]]}
-    assert control_wobble(r13b_shape) < 2.0
-
-
-def test_truncated_tail_recovers_control_and_meta(tmp_path):
-    """r12 verdict What's-wrong #1: the head-truncated driver files carry
-    the full trailing control object (samples included) plus sf/cpus, but
-    the re-bracing path rebuilt only {queries, repeats} -- silently
-    disabling host normalization for driver-vs-driver comparisons.
-    load_run must recover all of it."""
-    import json
-
-    f = tmp_path / "r.json"
-    f.write_text(json.dumps({
-        "parsed": None,
-        "tail": 'lineitem": 1.034, "asof": 0.82}, '
-                '"control": {"query": "q6_forecast_revenue", "start_s": 0.49, '
-                '"end_s": 0.21, "load_start": 7.9, "load_end": 3.1, '
-                '"samples": [{"after_n": 44, "sec": 0.22, "load": 14.5}]}, '
-                '"sf": 0.1, "cpus": 32, "n_queries": 179, "repeats": 3}\n',
-    }))
-    queries, repeats, control, meta = load_run(str(f))
-    assert queries == {"asof": 0.82} and repeats == 3
-    assert control is not None
-    assert control["query"] == "q6_forecast_revenue"
-    assert control["samples"][0]["sec"] == 0.22
-    assert meta == {"sf": 0.1, "cpus": 32}
-
-
-def test_real_driver_bench_tail_recovers_control():
-    """The actual BENCH_r12.json shipped by the driver is head-truncated
-    with parsed=null; its tail contains the full control object.  Pin the
-    recovery against the real artifact so the fixture above can't drift
-    from the production shape."""
-    import json
-    from pathlib import Path
-
-    path = Path(__file__).resolve().parents[1] / "BENCH_r12.json"
-    if not path.exists():
-        import pytest
-
-        pytest.skip("BENCH_r12.json not present")
-    raw = json.loads(path.read_text())
-    if not (raw.get("parsed") is None and isinstance(raw.get("tail"), str)):
-        import pytest
-
-        pytest.skip("BENCH_r12.json not the truncated shape")
-    queries, repeats, control, meta = load_run(str(path))
-    # the head truncation eats most of the queries object; only the tail
-    # survives — the point of THIS test is the trailing control/meta
-    assert len(queries) > 10 and repeats == 3
-    assert control is not None and control.get("query")
-    assert meta.get("cpus") == 32
-
-
-def test_control_regression_escalates_to_gate(tmp_path):
-    """r12 ADVICE: a control ratio beyond THRESHOLD (but inside the 3x
-    normalization band) used to normalize a sweep-wide regression into
-    'steady' with only an informational note.  With identical cpus/sf
-    metadata the tool must now FAIL the gate; with differing metadata it
-    warns loudly but exits 0."""
-    import json
-    import subprocess
-    import sys as _sys
-    from pathlib import Path
-
-    tool = Path(__file__).resolve().parents[1] / "tools" / "bench_trend.py"
-
-    def run(base_obj, cur_obj):
-        b, c = tmp_path / "b.json", tmp_path / "c.json"
-        b.write_text(json.dumps(base_obj))
-        c.write_text(json.dumps(cur_obj))
-        return subprocess.run(
-            [_sys.executable, str(tool), str(b), str(c)],
-            capture_output=True, text=True,
-        )
-
-    ctl_base = {"query": "q6", "start_s": 0.2, "end_s": 0.2}
-    ctl_cur = {"query": "q6", "start_s": 0.4, "end_s": 0.4}  # 2x > THRESHOLD
-    base = {"queries": {"a": 1.0, "b": 2.0}, "repeats": 3,
-            "control": ctl_base, "sf": 0.1, "cpus": 32}
-    # every query 2x slower AND the control 2x slower: pre-fix this was
-    # all-steady, note-only, exit 0
-    cur = {"queries": {"a": 2.0, "b": 4.0}, "repeats": 3,
-           "control": ctl_cur, "sf": 0.1, "cpus": 32}
-    r = run(base, cur)
-    assert r.returncode == 1, r.stdout + r.stderr
-    assert "CONTROL REGRESSED" in r.stdout
-
-    # different cpus: host drift is plausible; warn but do not gate
-    cur_other_host = dict(cur, cpus=8)
-    r2 = run(base, cur_other_host)
-    assert r2.returncode == 0, r2.stdout + r2.stderr
-    assert "CONTROL REGRESSED" in r2.stdout
-
-    # control inside the threshold: plain normalization note, no escalation
-    cur_ok = {"queries": {"a": 1.1, "b": 2.2}, "repeats": 3,
-              "control": {"query": "q6", "start_s": 0.22, "end_s": 0.22},
-              "sf": 0.1, "cpus": 32}
-    r3 = run(base, cur_ok)
-    assert r3.returncode == 0, r3.stdout + r3.stderr
-    assert "CONTROL REGRESSED" not in r3.stdout
-
-
-def test_family_normalization_catches_family_specific_drift():
-    """r13 lesson encoded: events queries 2x slower while the lineitem
-    control is steady.  Single-control normalization would flag them all;
-    per-family normalization clears the events family (its own control
-    also slowed 2x) while still flagging a genuine lineitem regression."""
-    from bench_trend import compare, family_host_ratios, family_of
-
-    assert family_of("ev_funnel_conversion") == "events"
-    assert family_of("msg_detail") == "events"
-    assert family_of("doc_phrase_search") == "documents"
-    assert family_of("mm_pixel_stats") == "documents"
-    assert family_of("emb_cosine_topk") == "embeddings"
-    assert family_of("q9_product_profit") == "lineitem"
-
-    base_meta = {"controls": {
-        "lineitem": _ctl("q6", 0.2, 0.2),
-        "events": _ctl("ev_json_props_typed", 0.3, 0.3),
-    }}
-    cur_meta = {"controls": {
-        "lineitem": _ctl("q6", 0.2, 0.2),             # lineitem host steady
-        "events": _ctl("ev_json_props_typed", 0.6, 0.6),  # events 2x slower
-    }}
-    fams = family_host_ratios(base_meta, cur_meta)
-    assert fams == {"lineitem": 1.0, "events": 2.0}
-    cmp = compare(
-        {"ev_funnel_conversion": 1.0, "q9_product_profit": 1.0},
-        {"ev_funnel_conversion": 2.0, "q9_product_profit": 2.0},
-        host=1.0, family_hosts=fams,
+def _gate(tmp_path, base: dict, cur: dict) -> subprocess.CompletedProcess:
+    paths = []
+    for name, line in (("base.json", base), ("cur.json", cur)):
+        p = tmp_path / name
+        p.write_text(json.dumps(line))
+        paths.append(str(p))
+    return subprocess.run(
+        [sys.executable, str(TOOL), *paths], capture_output=True, text=True, timeout=60
     )
-    # events 2x rides its family's 2x host factor: steady
-    assert "ev_funnel_conversion" in cmp["steady"]
-    # lineitem 2x against a steady lineitem control: real regression
-    assert "q9_product_profit" in cmp["regressed"]
 
 
-def test_family_of_derived_from_oracle_table_reads():
-    """ADVICE r13: family_of must derive from the registry oracle's ACTUAL
-    table references, not name prefixes.  Cross-family queries classify by
-    their largest referenced base table; unknown names fall back to the
-    prefix heuristic."""
-    from bench_trend import _registry_family_map, family_of
-
-    m = _registry_family_map()
-    assert len(m) > 150  # registry import worked; not the prefix fallback
-    # cross-family: events JOIN orders -- orders (150k) dominates events
-    # (100k), so it normalizes by the TPC-H control, now provably from reads
-    assert family_of("asof_last_order_before_event") == "lineitem"
-    # despite the agg_ prefix, its oracle reads only orders
-    assert family_of("agg_exact_percentiles") == "lineitem"
-    # the oracle=None entry (msg_detail_encrypted) uses the prefix fallback
-    assert "msg_detail_encrypted" not in m
-    assert family_of("msg_detail_encrypted") == "events"
-    # unknown names still resolve via prefixes
-    assert family_of("ev_not_a_real_query") == "events"
-    assert family_of("some_new_tpch_thing") == "lineitem"
-
-
-def test_truncated_tail_recovers_family_controls(tmp_path):
-    """The multi-control 'controls' map must survive the head-truncated
-    driver-file recovery path alongside the legacy 'control'."""
-    import json
-
-    f = tmp_path / "r.json"
-    f.write_text(json.dumps({
-        "parsed": None,
-        "tail": 'x": 1.0, "y": 2.0}, '
-                '"control": {"query": "q6", "start_s": 0.2, "end_s": 0.2, '
-                '"samples": []}, '
-                '"controls": {"lineitem": {"query": "q6", "start_s": 0.2, '
-                '"end_s": 0.2, "samples": []}, "events": {"query": '
-                '"ev_json_props_typed", "start_s": 0.3, "end_s": 0.31, '
-                '"samples": [{"after_n": 4, "sec": 0.29, "load": 2.0}]}}, '
-                '"sf": 0.1, "cpus": 32, "repeats": 3}\n',
-    }))
-    queries, repeats, control, meta = load_run(str(f))
-    assert control["query"] == "q6"
-    assert set(meta["controls"]) == {"lineitem", "events"}
-    assert meta["controls"]["events"]["samples"][0]["sec"] == 0.29
-
-
-def test_family_escalation_fires_without_a_primary_control(tmp_path):
-    """Review finding: the family-control escalation was nested under the
-    primary-control branch, so a rotated/missing primary control silently
-    disabled it while family normalization still classified a sweep-wide
-    family regression 'steady'.  With the primary incomparable (different
-    control query) but the events family control 2x slower under identical
-    cpus/sf, the gate must FAIL with the CONTROL REGRESSED warning."""
-    import json
-    import subprocess
-    import sys as _sys
-    from pathlib import Path
-
-    tool = Path(__file__).resolve().parents[1] / "tools" / "bench_trend.py"
-    base = {"queries": {"ev_a": 1.0}, "repeats": 3, "sf": 0.1, "cpus": 32,
-            "control": _ctl("q6", 0.2, 0.2),
-            "controls": {"lineitem": _ctl("q6", 0.2, 0.2),
-                         "events": _ctl("ev_json_props_typed", 0.3, 0.3)}}
-    cur = {"queries": {"ev_a": 2.0}, "repeats": 3, "sf": 0.1, "cpus": 32,
-           "control": _ctl("q6b", 0.2, 0.2),  # primary rotated: incomparable
-           "controls": {"lineitem": _ctl("q6b", 0.2, 0.2),
-                        "events": _ctl("ev_json_props_typed", 0.6, 0.6)}}
-    b, c = tmp_path / "b.json", tmp_path / "c.json"
-    b.write_text(json.dumps(base))
-    c.write_text(json.dumps(cur))
-    r = subprocess.run([_sys.executable, str(tool), str(b), str(c)],
-                       capture_output=True, text=True)
-    assert r.returncode == 1, r.stdout + r.stderr
-    assert "CONTROL REGRESSED" in r.stdout
-
-
-def test_methodology_change_suppresses_control_escalation(tmp_path):
-    """Review finding: a repeats change disarmed the gate AFTER the
-    escalation note was built, printing 'gate FAILS pending adjudication'
-    while exiting 0.  Under differing repeats the control ratio is as
-    incomparable as the query ratios, so the escalation text must not
-    appear at all."""
-    import json
-    import subprocess
-    import sys as _sys
-    from pathlib import Path
-
-    tool = Path(__file__).resolve().parents[1] / "tools" / "bench_trend.py"
-    base = {"queries": {"q": 1.0}, "repeats": 1, "sf": 0.1, "cpus": 32,
-            "control": _ctl("q6", 0.2, 0.2)}
-    cur = {"queries": {"q": 2.0}, "repeats": 3, "sf": 0.1, "cpus": 32,
-           "control": _ctl("q6", 0.4, 0.4)}  # 2x > THRESHOLD, same cpus/sf
-    b, c = tmp_path / "b.json", tmp_path / "c.json"
-    b.write_text(json.dumps(base))
-    c.write_text(json.dumps(cur))
-    r = subprocess.run([_sys.executable, str(tool), str(b), str(c)],
-                       capture_output=True, text=True)
+def test_identical_lines_pass(tmp_path):
+    r = _gate(tmp_path, _line(), _line())
     assert r.returncode == 0, r.stdout + r.stderr
-    assert "METHODOLOGY CHANGED" in r.stdout
-    assert "CONTROL REGRESSED" not in r.stdout
-    assert "gate FAILS" not in r.stdout
+    assert "ROSE" not in r.stdout and "slower" not in r.stdout
+    # a counter fall is not a failure
+    r = _gate(tmp_path, _line(), _line(counters={"q_a": [2, 3], "q_b": [3, 6]}))
+    assert r.returncode == 0 and "ROSE" not in r.stdout
 
 
-def test_write_report_archives_in_file_but_prints_one_report(tmp_path, monkeypatch):
-    """--write-report keeps BENCH_TREND.md to exactly one fresh report and
-    moves the prior report into BENCH_TREND_ARCHIVE.md, newest first
-    (r15 VERDICT task 8: three sweeps inline pushed the operative record
-    off the head of the document); stdout carries only the fresh report."""
-    import json
-    import subprocess
-    import sys as _sys
-    from pathlib import Path
+def test_counter_rise_fails_and_names_both_counts(tmp_path):
+    cur = _line(counters={"q_a": [2, 3], "q_b": [6, 10]})
+    r = _gate(tmp_path, _line(), cur)
+    assert r.returncode == 1
+    assert "q_b: [4, 6] -> [6, 10]" in r.stdout
+    assert "q_a" not in r.stdout
+    # a stage-only rise fails too
+    r = _gate(tmp_path, _line(), _line(counters={"q_a": [2, 4], "q_b": [4, 6]}))
+    assert r.returncode == 1 and "q_a: [2, 3] -> [2, 4]" in r.stdout
 
-    # run the tool from a COPY of the repo layout so we don't clobber the
-    # real BENCH_TREND.md: point it at a temp root via a copied tool dir
-    root = tmp_path / "repo"
-    (root / "tools").mkdir(parents=True)
-    tool_src = Path(__file__).resolve().parents[1] / "tools" / "bench_trend.py"
-    (root / "tools" / "bench_trend.py").write_text(tool_src.read_text())
-    (root / "BENCH_TREND.md").write_text("# OLD REPORT\n\nprior narrative\n")
-    b, c = tmp_path / "b.json", tmp_path / "c.json"
-    b.write_text(json.dumps({"queries": {"q": 1.0}, "repeats": 3}))
-    c.write_text(json.dumps({"queries": {"q": 1.0}, "repeats": 3}))
+
+def test_wall_slowdown_with_equal_counters_passes_and_is_listed(tmp_path):
+    cur = _line(queries={"q_a": 1.0, "q_b": 1.0})
+    r = _gate(tmp_path, _line(), cur)
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert "slower, counters unchanged: re-time in one window (1):" in r.stdout
+    assert "q_a: 0.500s -> 1.000s" in r.stdout
+
+
+def test_sub_floor_slowdown_not_listed(tmp_path):
+    base = _line(queries={"q_a": 0.1, "q_b": 1.0})
+    cur = _line(queries={"q_a": 0.2, "q_b": 1.0})
+    r = _gate(tmp_path, base, cur)
+    assert r.returncode == 0 and "slower" not in r.stdout
+
+
+def test_added_and_removed_reported(tmp_path):
+    cur = _line(queries={"q_a": 0.5, "q_c": 0.4}, counters={"q_a": [2, 3], "q_c": [1, 1]})
+    r = _gate(tmp_path, _line(), cur)
+    assert r.returncode == 0
+    assert "added (1):\n  q_c" in r.stdout
+    assert "removed (1):\n  q_b" in r.stdout
+
+
+def test_incomparable_lines_refused(tmp_path):
+    no_counters = _line()
+    del no_counters["counters"]
+    cases = {
+        "no per-query counters": (no_counters, _line()),
+        "cpus differs": (_line(), _line(cpus=8)),
+        "sf differs": (_line(sf=0.01), _line()),
+        "repeats=1": (_line(), _line(repeats=1)),
+    }
+    for why, (base, cur) in cases.items():
+        r = _gate(tmp_path, base, cur)
+        assert r.returncode == 2, (why, r.stdout, r.stderr)
+        assert why in r.stderr
+
+
+def test_bench_line_carries_counters_for_every_query(tmp_path, sf_dir):
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=sf_dir,
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_BENCH_QUERIES="q6_forecast_revenue,ev_hourly_gapfill",
+        SPARK_GRAFT_BENCH_REPEATS="2",
+    )
     r = subprocess.run(
-        [_sys.executable, str(root / "tools" / "bench_trend.py"),
-         str(b), str(c), "--write-report"],
-        capture_output=True, text=True)
+        [sys.executable, str(ROOT / "bench.py")],
+        capture_output=True, text=True, timeout=600, env=env, cwd=tmp_path,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    lines = r.stdout.strip().splitlines()
+    assert len(lines) == 1, r.stdout
+    out = json.loads(lines[0])
+    assert sorted(out["counters"]) == ["ev_hourly_gapfill", "q6_forecast_revenue"]
+    for jobs, stages in out["counters"].values():
+        assert jobs >= 1 and stages >= jobs
+    assert out["repeats"] == 2 and out["n_queries"] == out["n_registered"] == 2
+    assert not {"control", "controls", "load_gate"} & out.keys()
+    # the line gates cleanly against itself
+    r = _gate(tmp_path, out, out)
     assert r.returncode == 0, r.stdout + r.stderr
-    assert "prior narrative" not in r.stdout          # stdout: fresh only
-    written = (root / "BENCH_TREND.md").read_text()
-    assert "prior narrative" not in written           # head: fresh only
-    archived = (root / "BENCH_TREND_ARCHIVE.md").read_text()
-    assert "prior narrative" in archived              # archive file: moved
-    assert archived.startswith("# BENCH_TREND archive")
-
-    # a SECOND run must stack the new prior report ABOVE the older one
-    (root / "BENCH_TREND.md").write_text("# SECOND REPORT\n\nsecond narrative\n")
-    r2 = subprocess.run(
-        [_sys.executable, str(root / "tools" / "bench_trend.py"),
-         str(b), str(c), "--write-report"],
-        capture_output=True, text=True)
-    assert r2.returncode == 0, r2.stdout + r2.stderr
-    archived2 = (root / "BENCH_TREND_ARCHIVE.md").read_text()
-    assert archived2.count("# BENCH_TREND archive") == 1  # header once
-    assert archived2.index("second narrative") < archived2.index("prior narrative")
-
-
-def test_sql_table_refs_ignore_comments_and_strings():
-    """ADVICE r14: family classification must not match table names that
-    only appear in SQL comments or string literals; only FROM/JOIN
-    positions count."""
-    from bench_trend import _sql_table_refs
-
-    sql = (
-        "-- orders mentioned in a comment\n"
-        "SELECT d.doc_id, 'orders literal' AS tag /* lineitem */\n"
-        "FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id\n"
-        "WHERE d.lang <> 'events'"
-    )
-    refs = _sql_table_refs(sql)
-    assert "documents" in refs and "embeddings" in refs
-    assert "orders" not in refs and "lineitem" not in refs and "events" not in refs
-    # comma-separated FROM lists still resolve
-    assert {"orders", "lineitem"} <= _sql_table_refs(
-        "SELECT 1 FROM orders, lineitem WHERE o_orderkey = l_orderkey"
-    )
-
-
-def test_contention_invalid_families_exempt_from_trend():
-    """ADVICE r14: queries whose family the contention gate marked invalid
-    in EITHER run must not gate (their timings are contended) and must be
-    listed separately rather than silently counted steady."""
-    base = {"q1_pricing_summary": 1.0, "ev_funnel_conversion": 1.0}
-    cur = {"q1_pricing_summary": 1.1, "ev_funnel_conversion": 2.5}
-    cmp = compare(base, cur, exempt_families={"events"})
-    assert "ev_funnel_conversion" in cmp["exempt"]
-    assert not cmp["regressed"]
-    assert "q1_pricing_summary" in cmp["steady"]
-
-
-def test_load_run_recovers_load_gate(tmp_path):
-    """load_gate.invalid must survive both the parsed and truncated-tail
-    record shapes so the exemption can key off it."""
-    import json
-
-    f = tmp_path / "r.json"
-    f.write_text(json.dumps({
-        "queries": {"q": 1.0}, "repeats": 3, "sf": 0.1,
-        "load_gate": {"flagged": ["events"], "invalid": ["events"]},
-    }))
-    _, _, _, meta = load_run(str(f))
-    assert meta["load_gate"]["invalid"] == ["events"]
-
-    t = tmp_path / "t.json"
-    t.write_text(json.dumps({
-        "parsed": None,
-        "tail": 'x": 0.5, "q": 1.0}, "sf": 0.1, "repeats": 3, '
-                '"load_gate": {"flagged": [], "invalid": ["documents"]}}\n',
-    }))
-    _, _, _, meta = load_run(str(t))
-    assert meta["load_gate"]["invalid"] == ["documents"]

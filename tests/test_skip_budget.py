@@ -1,10 +1,11 @@
 """Skip-budget lint (VERDICT r16 task 8): the suite's recorded
 environment skips have been stable at EXACTLY TWO for 10+ rounds -- the
 no-Kafka-jar skip (tests/test_kafka_config.py) and the no-Avro-jar skip
-(tests/test_reference_paths.py).  A silently added third skip would hide
-a test that stopped running; this lint pins every skip SITE in the
-suite, so any new ``pytest.skip`` / ``skipif`` / ``mark.skip`` must be
-registered here deliberately (with a reason) or the lint fails."""
+(tests/test_reference_paths.py), and every skip site in the suite belongs
+to one of them.  A silently added third skip would hide a test that
+stopped running; this lint pins every skip SITE in the suite, so any new
+``pytest.skip`` / ``skipif`` / ``mark.skip`` must be registered here
+deliberately (with a reason) or the lint fails."""
 
 from __future__ import annotations
 
@@ -19,12 +20,9 @@ TESTS = Path(__file__).resolve().parent
 #: - test_reference_paths.py: 2 sites in one test (import probe, then
 #:   runtime jar probe) -- at most one fires per run, the second
 #:   recorded skip.
-#: - test_bench_trend.py: 2 guard sites that require the committed
-#:   BENCH_r12.json fixture; they must NEVER fire here (asserted below).
 ALLOWED_SKIP_SITES = {
     "test_kafka_config.py": 1,
     "test_reference_paths.py": 2,
-    "test_bench_trend.py": 2,
 }
 
 _SKIP_RE = re.compile(r"pytest\.skip\(|pytest\.mark\.skip|skipif")
@@ -43,17 +41,3 @@ def test_skip_sites_are_exactly_the_recorded_ones():
         f"needed, register it in ALLOWED_SKIP_SITES with a reason: {found}"
     )
 
-
-def test_bench_trend_skip_guards_cannot_fire():
-    """The two test_bench_trend.py guard sites skip only when the
-    committed BENCH_r12.json fixture is missing or no longer the
-    truncated driver-capture shape; both conditions are repo facts, so
-    in a clean checkout the runtime skip count stays at two."""
-    import json
-
-    p = TESTS.parent / "BENCH_r12.json"
-    assert p.is_file(), "BENCH_r12.json fixture missing -- a third skip now fires"
-    rec = json.loads(p.read_text())
-    assert rec.get("parsed") is None and "tail" in rec, (
-        "BENCH_r12.json no longer the truncated shape -- a third skip now fires"
-    )

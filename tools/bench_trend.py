@@ -1,563 +1,84 @@
-"""Per-query bench trend gate: flag regressions between two bench runs.
+"""Per-query bench gate: compare two ``bench.py`` lines by their counters.
 
 Usage:
-    python tools/bench_trend.py BASELINE.json CURRENT.json [--write-report]
+    python tools/bench_trend.py BASE.json CUR.json
 
-Each input is a ``bench.py`` output line (the driver's ``BENCH_r{N}.json``
-stores the same object under a ``parsed`` key; both shapes are accepted).
-Exits nonzero when any query regressed more than ``THRESHOLD`` x, so perf
-cannot silently rot between rounds.  ``--write-report`` also writes
-``BENCH_TREND.md`` at the repo root.
+Each input holds one ``bench.py`` output line.  ``counters`` gives every
+query's Spark job and stage counts over its warm repeats (see bench.py);
+they are fixed for a fixed plan, so a rise is a plan change, not host
+noise.
 
-Noise policy: queries faster than ``MIN_SECONDS`` in BOTH runs are exempt
-from the ratio gate (at sub-300ms, scheduler jitter dominates); they are
-still listed in the report.
-
-Host-speed normalization (r11 verdict item 5): when BOTH runs carry the
-bench.py ``control`` field (the same calibration query timed at sweep start
-and end), per-query ratios are divided by the control's own ratio before
-classification, so a uniformly slower host window no longer produces a page
-of phantom flags needing manual adjudication.  The normalization is only
-applied inside a sanity band (``MAX_HOST_RATIO``): a control shift beyond
-3x either way is more likely a control-query code change than host drift,
-and normalizing by it would mask sweep-wide regressions.
+Exit 1 when any query's jobs or stages rose from BASE to CUR.  Wall time
+never fails the gate on its own: a query more than ``THRESHOLD`` x slower
+(at ``MIN_SECONDS`` or more) with unchanged counters is listed for
+re-timing in one window.  Exit 2 when the lines cannot be compared: either
+side lacks ``counters`` (every line older than the counter gate, the
+``BENCH_r*.json`` files included), ``cpus`` or ``sf`` differ, or either
+side ran fewer than two repeats (a first repeat carries one-time jobs).
 """
 
 from __future__ import annotations
 
 import json
-import os
-import re
 import sys
+from pathlib import Path
 
 THRESHOLD = 1.5
 MIN_SECONDS = 0.3
-#: control-ratio band outside which normalization is refused (see module doc)
-MAX_HOST_RATIO = 3.0
 
 
-def _rebrace_object(text: str, key: str) -> dict | None:
-    """Extract the JSON object following ``"key": `` from a text fragment by
-    brace matching (the object may nest, e.g. control.samples), or None.
-    Safe here because bench.py output never puts brace characters inside
-    strings (query names and the control query name are identifiers)."""
-    m = re.search(rf'"{key}": \{{', text)
-    if not m:
-        return None
-    start, depth = m.end() - 1, 0
-    for i in range(start, len(text)):
-        if text[i] == "{":
-            depth += 1
-        elif text[i] == "}":
-            depth -= 1
-            if depth == 0:
-                try:
-                    return json.loads(text[start : i + 1])
-                except json.JSONDecodeError:
-                    return None
+def refusal(base: dict, cur: dict) -> str | None:
+    """Why the two lines cannot be compared, or None."""
+    for side, run in (("BASE", base), ("CUR", cur)):
+        if "counters" not in run:
+            return f"{side} has no per-query counters"
+        if run.get("repeats", 0) < 2:
+            return f"{side} ran repeats={run.get('repeats')}; counters need at least 2"
+    for key in ("cpus", "sf"):
+        if base.get(key) != cur.get(key):
+            return f"{key} differs: BASE {base.get(key)}, CUR {cur.get(key)}"
     return None
 
 
-def load_run(path: str) -> tuple[dict[str, float], int, dict | None, dict]:
-    """(per-query timings, timing repeats, control, run metadata) from a
-    bench.py output.  ``metadata`` carries the host-comparability facts the
-    control-regression escalation reads (cpus, sf) when present.
-
-    Accepts four shapes: a raw ``bench.py`` JSON line, the driver's
-    ``BENCH_r{N}.json`` with the line under ``parsed``, the driver file
-    when ``parsed`` is null but the head-truncated ``tail`` string still
-    contains the flat ``"queries": {...}`` object (the r03/r04 files:
-    the driver keeps only the last N chars of stdout, cutting the
-    ``{"metric"`` prefix so its own parse fails), and the harder
-    truncation where the tail starts MID-queries-object (r05: the cut
-    also ate ``"queries": {`` and the first entries) -- recovered by
-    re-bracing the fragment up to the object's closing ``}``; the lost
-    head entries just become absent queries, which compare() reports as
-    'added' rather than silently gating on them."""
-    with open(path) as f:
-        obj = json.load(f)
-    if "parsed" in obj and isinstance(obj["parsed"], dict):
-        obj = obj["parsed"]
-    if "queries" not in obj and isinstance(obj.get("tail"), str):
-        tail = obj["tail"]
-        r = re.search(r'"repeats": (\d+)', tail)
-        m = re.search(r'"queries": (\{[^{}]*\})', tail)
-        frag = None
-        if m:
-            frag = m.group(1)
-        else:
-            # tail begins inside the queries object: '<name-suffix>": 1.03,
-            # "next": ..., "last": 0.5}, "sf": ...'.  Re-brace from the
-            # first full entry (the leading truncated one is dropped).
-            end = re.search(r"\}", tail)
-            start = re.search(r', "', tail)
-            if end and start and start.start() < end.start():
-                frag = "{" + tail[start.end() - 1 : end.end()]
-        if frag:
-            queries = json.loads(frag)
-            # If the truncation ate the whole queries object, the re-brace
-            # lands on the run-metadata suffix ('{"sf": .., "repeats": ..}')
-            # -- refuse rather than gate the trend on phantom 'queries'.
-            if set(queries) & {"sf", "cpus", "repeats", "n_queries",
-                               "n_registered", "value"}:
-                raise SystemExit(
-                    f"{path}: tail truncated past the queries object; "
-                    "unrecoverable bench round"
-                )
-            obj = {
-                "queries": queries,
-                "repeats": int(r.group(1)) if r else 1,
-            }
-            # The tail is cut from the FRONT, so the trailing control/sf/cpus
-            # fields survive whenever queries did; recover them too --
-            # dropping control here silently disabled host normalization for
-            # exactly the driver-vs-driver comparisons that need it most
-            # (r12 verdict What's-wrong #1).
-            ctl = _rebrace_object(tail, "control")
-            if ctl is not None:
-                obj["control"] = ctl
-            ctls = _rebrace_object(tail, "controls")
-            if ctls is not None:
-                obj["controls"] = ctls
-            lg = _rebrace_object(tail, "load_gate")
-            if lg is not None:
-                obj["load_gate"] = lg
-            for key in ("sf", "cpus"):
-                km = re.search(rf'"{key}": ([0-9.]+)', tail)
-                if km:
-                    obj[key] = float(km.group(1)) if "." in km.group(1) else int(km.group(1))
-    if "queries" not in obj:
-        raise SystemExit(f"{path}: no 'queries' key (unparsed bench round?)")
-    control = obj.get("control") if isinstance(obj.get("control"), dict) else None
-    meta = {k: obj[k] for k in ("sf", "cpus") if k in obj}
-    if isinstance(obj.get("controls"), dict):
-        meta["controls"] = obj["controls"]
-    if isinstance(obj.get("load_gate"), dict):
-        meta["load_gate"] = obj["load_gate"]
-    return dict(obj["queries"]), int(obj.get("repeats", 1)), control, meta
-
-
-def _control_seconds(control: dict | None) -> float | None:
-    """Representative control-query wall seconds for one run: the MEDIAN of
-    every available measurement -- start, end, and (when the run carries
-    them) the mid-sweep quarter-point samples.  The median resists both a
-    single stalled endpoint and a transient mid-sweep spike; runs without
-    samples fall back to the start/end pair."""
-    if not control:
-        return None
-    vals = [control[k] for k in ("start_s", "end_s")
-            if isinstance(control.get(k), (int, float)) and control[k] > 0]
-    vals += [s["sec"] for s in control.get("samples") or []
-             if isinstance(s, dict) and isinstance(s.get("sec"), (int, float))
-             and s["sec"] > 0]
-    if not vals:
-        return None
-    vals.sort()
-    mid = len(vals) // 2
-    return vals[mid] if len(vals) % 2 else (vals[mid - 1] + vals[mid]) / 2
-
-
-def host_ratio(base_ctl: dict | None, cur_ctl: dict | None) -> float | None:
-    """cur/base host-speed factor from the two runs' controls, or None when
-    normalization is unavailable (missing control, different control query,
-    or a shift outside the MAX_HOST_RATIO sanity band)."""
-    b, c = _control_seconds(base_ctl), _control_seconds(cur_ctl)
-    if b is None or c is None:
-        return None
-    if base_ctl.get("query") != cur_ctl.get("query"):
-        return None
-    r = c / b
-    if r > MAX_HOST_RATIO or r < 1 / MAX_HOST_RATIO:
-        return None
-    return r
-
-
-#: control family per base table; the TPC-H tables share the lineitem control
-_FAMILY_BY_TABLE = {
-    "events": "events", "documents": "documents", "embeddings": "embeddings",
-    "lineitem": "lineitem", "orders": "lineitem", "customer": "lineitem",
-    "part": "lineitem", "supplier": "lineitem", "nation": "lineitem",
-    "region": "lineitem",
-}
-#: sf-proportional base-table row counts (sf0.1 figures; only the ORDER
-#: matters): a multi-family query normalizes by the family whose base
-#: table dominates its scan cost
-_TABLE_ROWS = {
-    "lineitem": 600_000, "orders": 150_000, "events": 100_000,
-    "part": 20_000, "customer": 15_000, "documents": 5_000,
-    "embeddings": 2_000, "supplier": 1_000, "nation": 25, "region": 5,
-}
-
-_family_map: dict[str, str] | None = None
-
-
-def _sql_table_refs(sql: str) -> set[str]:
-    """Base-table names a SQL statement actually reads: strip comments and
-    string literals first, then take only identifiers that follow FROM /
-    JOIN / comma-in-from positions (ADVICE r14: bare word-presence matched
-    table names inside comments and string literals, reclassifying e.g. a
-    query whose oracle mentions 'orders' in a doc comment)."""
-    s = sql.lower()
-    s = re.sub(r"--[^\n]*", " ", s)          # line comments
-    s = re.sub(r"/\*.*?\*/", " ", s, flags=re.S)  # block comments
-    s = re.sub(r"'(?:[^']|'')*'", " ", s)    # string literals ('' escape)
-    refs: set[str] = set()
-    # FROM a, b JOIN c ... — capture the identifier list after FROM and
-    # each identifier after JOIN.  CTE/subquery parens yield no match.
-    # Each comma-list element may carry an alias ("FROM orders o,
-    # lineitem l") — capture the first identifier of each element and
-    # drop the alias (ADVICE r15: the old regex stopped the list at the
-    # first alias, keeping only the first table).
-    _kw = {"join", "where", "group", "order", "having", "limit",
-           "union", "intersect", "except", "on", "using", "qualify",
-           "window", "cross", "inner", "left", "right", "full", "natural"}
-    for m in re.finditer(
-        r"\bfrom\s+([a-z_][a-z_0-9]*(?:\s+[a-z_][a-z_0-9]*)?"
-        r"(?:\s*,\s*[a-z_][a-z_0-9]*(?:\s+[a-z_][a-z_0-9]*)?)*)",
-        s,
-    ):
-        for elem in m.group(1).split(","):
-            first = elem.split()[0] if elem.split() else ""
-            if first and first not in _kw:
-                refs.add(first)
-    for m in re.finditer(r"\bjoin\s+([a-z_][a-z_0-9]*)", s):
-        refs.add(m.group(1))
-    return refs
-
-
-def _registry_family_map() -> dict[str, str]:
-    """query name -> family, derived from each spec's oracle SQL's ACTUAL
-    table references (ADVICE r13: the name-prefix heuristic misclassified
-    cross-family queries like asof_last_order_before_event).  Matching is
-    restricted to FROM/JOIN positions with comments/strings stripped
-    (ADVICE r14).  Lazy + cached; empty map (prefix fallback) with a
-    stderr warning if the registry can't import here."""
-    global _family_map
-    if _family_map is None:
-        try:
-            sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-            from flink_kafka_consumer_cassandra_output_spark.plans import all_specs
-            m: dict[str, str] = {}
-            for name, spec in all_specs().items():
-                refs = _sql_table_refs(spec.oracle or "")
-                tables = [t for t in _TABLE_ROWS if t in refs]
-                if tables:
-                    dom = max(tables, key=lambda t: _TABLE_ROWS[t])
-                    m[name] = _FAMILY_BY_TABLE[dom]
-            _family_map = m
-        except Exception as exc:  # pragma: no cover - environment-specific
-            print(
-                f"bench_trend: WARNING registry import failed ({exc!r}); "
-                "falling back to the name-prefix family heuristic",
-                file=sys.stderr,
-            )
-            _family_map = {}
-    return _family_map
-
-
-def family_of(query: str) -> str:
-    """Base-table family a query's runtime is dominated by, for per-family
-    host normalization (r13 lesson: one sweep window ran the events and
-    documents families 40-70% slower while the lineitem control got
-    FASTER — a single control cannot see family-specific drift).
-
-    Primary source: the registry oracle's actual table reads (largest
-    referenced base table wins).  Prefix fallback for names outside the
-    registry or the one oracle=None entry: msg_* derives from events
-    (messages_from_events); mm_* synthesizes media from documents."""
-    fam = _registry_family_map().get(query)
-    if fam is not None:
-        return fam
-    if query.startswith(("ev_", "msg_")):
-        return "events"
-    if query.startswith(("doc_", "mm_")):
-        return "documents"
-    if query.startswith("emb_"):
-        return "embeddings"
-    return "lineitem"
-
-
-def family_host_ratios(base_meta: dict, cur_meta: dict) -> dict[str, float]:
-    """Per-family cur/base host factors from the two runs' ``controls``
-    maps (bench.py r13+); empty when either side predates multi-controls.
-    Same sanity rules as host_ratio."""
-    b, c = base_meta.get("controls") or {}, cur_meta.get("controls") or {}
-    out: dict[str, float] = {}
-    for fam in set(b) & set(c):
-        r = host_ratio(b.get(fam), c.get(fam))
-        if r is not None:
-            out[fam] = r
-    return out
-
-
-def control_wobble(control: dict | None) -> float | None:
-    """max(interior)/MEDIAN(all) over the current run's control
-    measurements: well above 1 means some stretch of the sweep ran much
-    slower than its typical state, which a single normalization factor
-    cannot correct for — the exact failure mode of the discarded r12
-    sweep (a concurrent test run inflated 11 queries while both endpoint
-    controls looked fine).  The max spans only the INTERIOR measurements
-    (mid-sweep samples + the end point): the start measurement is
-    structurally warm (taken right after session start), and with
-    several fast quarter-point samples the median sits near the fast
-    values, so including the start in the max flagged every healthy
-    warm-start/fast-interior sweep (2.2x phantom observed on the r13b
-    record).  The median still includes the start so a sweep that is
-    slow throughout can't hide behind one fast sample."""
-    if not control:
-        return None
-    interior = [control["end_s"]] if (
-        isinstance(control.get("end_s"), (int, float)) and control["end_s"] > 0
-    ) else []
-    interior += [s["sec"] for s in control.get("samples") or []
-                 if isinstance(s, dict) and isinstance(s.get("sec"), (int, float))
-                 and s["sec"] > 0]
-    vals = list(interior)
-    if isinstance(control.get("start_s"), (int, float)) and control["start_s"] > 0:
-        vals.append(control["start_s"])
-    if not interior or len(vals) < 2:
-        return None
-    vals.sort()
-    mid = len(vals) // 2
-    med = vals[mid] if len(vals) % 2 else (vals[mid - 1] + vals[mid]) / 2
-    return max(interior) / med
-
-
-def compare(
-    base: dict[str, float],
-    cur: dict[str, float],
-    host: float = 1.0,
-    family_hosts: dict[str, float] | None = None,
-    exempt_families: set[str] | None = None,
-) -> dict:
-    """Classify every query: regressed / improved / steady / added / removed.
-
-    ``host`` is the primary control's cur/base host-speed factor; when
-    ``family_hosts`` carries a factor for a query's table family, that
-    factor is used instead (per-family normalization).  The gate
-    classifies on ``ratio / host`` (the normalized ratio) but reports both.
-
-    ``exempt_families`` are families EITHER run's contention gate marked
-    invalid (``load_gate.invalid`` in the bench JSON): their recorded
-    timings are contended, so a comparison against or from them would
-    either fabricate improvements or bake a poisoned baseline into a
-    clean-looking trend (ADVICE r14).  Such queries are reported under
-    ``exempt`` and neither gate nor count as steady.
-    """
-    out = {
-        "regressed": {}, "improved": {}, "steady": {},
-        "exempt": {}, "added": [], "removed": [],
+def compare(base: dict, cur: dict) -> dict[str, list]:
+    bc, cc = base["counters"], cur["counters"]
+    bq, cq = base["queries"], cur["queries"]
+    both = sorted(bc.keys() & cc.keys())
+    return {
+        "rose": [(q, bc[q], cc[q]) for q in both
+                 if cc[q][0] > bc[q][0] or cc[q][1] > bc[q][1]],
+        "slower": [(q, bq[q], cq[q]) for q in sorted(bq.keys() & cq.keys())
+                   if cq[q] >= MIN_SECONDS and cq[q] > THRESHOLD * bq[q]
+                   and bc.get(q) == cc.get(q)],
+        "added": sorted(cq.keys() - bq.keys()),
+        "removed": sorted(bq.keys() - cq.keys()),
     }
-    for name, t in sorted(cur.items()):
-        if name not in base:
-            out["added"].append(name)
-            continue
-        b = base[name]
-        ratio = t / b if b > 0 else float("inf")
-        fam = family_of(name)
-        h = (family_hosts or {}).get(fam, host)
-        norm = ratio / h
-        entry = {"base": b, "cur": t, "ratio": round(ratio, 2), "norm": round(norm, 2)}
-        if exempt_families and fam in exempt_families:
-            out["exempt"][name] = entry
-        elif norm > THRESHOLD and max(b, t) >= MIN_SECONDS:
-            out["regressed"][name] = entry
-        elif norm < 1 / THRESHOLD and max(b, t) >= MIN_SECONDS:
-            out["improved"][name] = entry
-        else:
-            out["steady"][name] = entry
-    out["removed"] = sorted(set(base) - set(cur))
-    return out
-
-
-def report_md(base_path: str, cur_path: str, cmp: dict, methodology_note: str = "") -> str:
-    lines = [
-        "# BENCH_TREND — per-query regression gate",
-        "",
-        f"`{os.path.basename(base_path)}` -> `{os.path.basename(cur_path)}`; "
-        f"gate: ratio > {THRESHOLD}x on queries >= {MIN_SECONDS}s.",
-        "",
-    ]
-    if methodology_note:
-        lines += [f"**{methodology_note}**", ""]
-    for title, key in [("Regressions (GATE)", "regressed"), ("Improvements", "improved")]:
-        lines.append(f"## {title}\n")
-        if not cmp[key]:
-            lines.append("none\n")
-        else:
-            lines.append("| query | base s | current s | ratio | normalized |")
-            lines.append("|---|---|---|---|---|")
-            for n, e in sorted(cmp[key].items(), key=lambda kv: -kv[1]["norm"]):
-                lines.append(
-                    f"| {n} | {e['base']} | {e['cur']} | {e['ratio']}x "
-                    f"| {e.get('norm', e['ratio'])}x |"
-                )
-            lines.append("")
-    if cmp.get("exempt"):
-        lines.append(
-            "## Exempt (family contention-gated in one of the runs — "
-            "timings not comparable)\n"
-        )
-        lines.append("| query | base s | current s | ratio |")
-        lines.append("|---|---|---|---|")
-        for n, e in sorted(cmp["exempt"].items()):
-            lines.append(f"| {n} | {e['base']} | {e['cur']} | {e['ratio']}x |")
-        lines.append("")
-    if cmp["added"]:
-        lines.append(f"## New queries\n\n{', '.join(cmp['added'])}\n")
-    if cmp["removed"]:
-        lines.append(f"## REMOVED queries (investigate)\n\n{', '.join(cmp['removed'])}\n")
-    n_steady = len(cmp["steady"])
-    lines.append(f"Steady (within {THRESHOLD}x or under noise floor): {n_steady} queries.")
-    return "\n".join(lines) + "\n"
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    if len(args) != 2:
-        raise SystemExit(__doc__)
-    base_path, cur_path = args
-    base, base_rep, base_ctl, base_meta = load_run(base_path)
-    cur, cur_rep, cur_ctl, cur_meta = load_run(cur_path)
-    host = host_ratio(base_ctl, cur_ctl)
-    fam_hosts = family_host_ratios(base_meta, cur_meta)
-    # Families either run's contention gate could not recover stay out of
-    # the trend entirely (ADVICE r14: a poisoned sweep must not become a
-    # clean-looking baseline next round).
-    exempt_fams = set()
-    for m in (base_meta, cur_meta):
-        exempt_fams.update((m.get("load_gate") or {}).get("invalid") or [])
-    cmp = compare(
-        base, cur,
-        host=host if host is not None else 1.0,
-        family_hosts=fam_hosts,
-        exempt_families=exempt_fams,
-    )
-    note = ""
-    if exempt_fams:
-        note += (
-            f"Families {sorted(exempt_fams)} were contention-gate INVALID "
-            "in at least one run: their queries are exempt from this "
-            "comparison (listed separately) and the affected run must NOT "
-            "serve as their baseline.  "
-        )
-    control_gate = False
-    if fam_hosts:
-        note = (
-            "Per-family host normalization ACTIVE: "
-            + ", ".join(f"{f}={r:.2f}x" for f, r in sorted(fam_hosts.items()))
-            + "; each query classifies on ratio/its-family-control.  "
-        )
-    if host is not None:
-        note += (
-            f"Primary control `{cur_ctl.get('query')}` ratio {host:.2f}x "
-            f"({_control_seconds(base_ctl):.3f}s -> "
-            f"{_control_seconds(cur_ctl):.3f}s)."
-        )
-    methodology_changed = base_rep != cur_rep
-    # The escalation reads EVERY available control ratio (primary plus
-    # per-family), not just the primary: a rotated/missing primary control
-    # must not silently disable the family-regression check (review
-    # finding).  Skipped entirely under a methodology change, where the
-    # control ratio is as incomparable as the query ratios.
-    ratios = [r for r in (host, *fam_hosts.values()) if r is not None]
-    if ratios and not methodology_changed:
-        worst = max(ratios)
-        if worst > THRESHOLD:
-            # A control slower than the gate threshold is indistinguishable
-            # from a sweep-wide regression viewed from inside the data
-            # (r12 ADVICE): normalizing by it would classify a genuine
-            # shared-path slowdown 'steady'.  When the two runs declare the
-            # same cpus/sf the host-drift explanation loses its footing, so
-            # escalate to a failing gate demanding old-tree adjudication;
-            # with differing or absent metadata it stays a loud warning.
-            same_host = (
-                base_meta.get("cpus") is not None
-                and base_meta.get("cpus") == cur_meta.get("cpus")
-                and base_meta.get("sf") == cur_meta.get("sf")
-            )
-            control_gate = same_host
-            note = (
-                f"CONTROL REGRESSED {worst:.2f}x (> gate threshold "
-                f"{THRESHOLD}x): a sweep-wide slowdown and host drift are "
-                "indistinguishable from inside the data — adjudicate by "
-                "re-timing an untouched old tree on the current host "
-                "before trusting any 'steady' classification.  "
-                + (
-                    "Runs declare IDENTICAL cpus/sf, so host drift is NOT "
-                    "assumed: gate FAILS pending adjudication.  "
-                    if same_host
-                    else "Runs declare different or missing cpus/sf "
-                    "metadata; not gating, but do not skip adjudication.  "
-                )
-                + note
-            )
-    wobbles = [control_wobble(cur_ctl)] + [
-        control_wobble(c) for c in (cur_meta.get("controls") or {}).values()
-    ]
-    wobble = max((w for w in wobbles if w is not None), default=None)
-    if wobble is not None and wobble > 2.0:
-        note = (
-            f"CONTROL WOBBLE {wobble:.1f}x across the current sweep's "
-            "control measurements: the host load varied DURING the sweep, "
-            "which a single normalization factor cannot correct — treat "
-            "per-query flags skeptically and re-measure before "
-            "adjudicating.  " + note
-        )
-    gate = bool(cmp["regressed"]) or control_gate
-    if methodology_changed:
-        # Min-of-N vs single-run timings are not comparable: the methodology
-        # change alone shifts values more than the gate threshold, masking
-        # real regressions and fabricating improvements.  Report ratios for
-        # context but DO NOT gate on them; the gate re-arms next round when
-        # both sides share a methodology.
-        note = (
-            f"METHODOLOGY CHANGED (timing repeats {base_rep} -> {cur_rep}): "
-            "ratios are apples-to-oranges this round — improvements are "
-            "partly measurement artifacts and the regression gate is NOT "
-            "armed.  It re-arms when both runs use the same repeats.  "
-            + note
-        )
-        gate = False
-    md = report_md(base_path, cur_path, cmp, note)
-    if "--write-report" in sys.argv:
-        # Prepend the fresh report, preserving prior rounds' adjudication
-        # narratives under an archive rule instead of overwriting them (the
-        # r13 overwrite silently dropped the judge-cited r12 incident notes
-        # and they had to be restored from git).
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        path = os.path.join(root, "BENCH_TREND.md")
-        arch_path = os.path.join(root, "BENCH_TREND_ARCHIVE.md")
-        old = ""
-        if os.path.exists(path):
-            with open(path) as f:
-                old = f.read()
-        if old.strip():
-            # Prior report moves to the archive FILE (r15 VERDICT task 8:
-            # three full sweeps inline made the head of BENCH_TREND.md
-            # scroll past the operative record); the head document always
-            # holds exactly one fresh report.  Archive is newest-first
-            # under a fixed one-line header.
-            arch_header = (
-                "# BENCH_TREND archive — prior reports, newest first "
-                "(moved by tools/bench_trend.py --write-report)\n"
-            )
-            prior = ""
-            if os.path.exists(arch_path):
-                with open(arch_path) as f:
-                    prior = f.read()
-            if prior.startswith(arch_header):
-                prior = prior[len(arch_header):]
-            first = old.splitlines()[0].lstrip("# ").strip()
-            with open(arch_path, "w") as f:
-                f.write(arch_header)
-                f.write(f"\n---\n\n# Archived report ({first})\n\n" + old)
-                f.write(prior)
-        with open(path, "w") as f:
-            f.write(md)
-    print(md)
-    if gate:
-        sys.exit(1)
+    if len(sys.argv) != 3:
+        print(__doc__, file=sys.stderr)
+        sys.exit(2)
+    base, cur = (json.loads(Path(p).read_text()) for p in sys.argv[1:])
+    why = refusal(base, cur)
+    if why:
+        print(f"bench_trend: cannot compare: {why}", file=sys.stderr)
+        sys.exit(2)
+    cmp = compare(base, cur)
+    print(f"{len(cur['counters'])} queries with counters in CUR")
+    sections = {
+        "COUNTERS ROSE, [jobs, stages]": [f"{q}: {b} -> {c}" for q, b, c in cmp["rose"]],
+        "slower, counters unchanged: re-time in one window": [
+            f"{q}: {b:.3f}s -> {c:.3f}s" for q, b, c in cmp["slower"]],
+        "added": cmp["added"],
+        "removed": cmp["removed"],
+    }
+    for title, lines in sections.items():
+        if lines:
+            print(f"{title} ({len(lines)}):")
+            for line in lines:
+                print(f"  {line}")
+    sys.exit(1 if cmp["rose"] else 0)
 
 
 if __name__ == "__main__":

@@ -6,7 +6,8 @@ Prints exactly ONE JSON line on stdout:
      "queries": {"<name>": <sec>, ...},
      "counters": {"<name>": [<jobs>, <stages>], ...},
      "shared_stage_seconds": <sec>, "shared_stages": {"<stage>": <sec>, ...},
-     "pre_sweep_load": <1-min load>, "sf": <sf>, "cpus": <n>,
+     "pre_sweep_load": <1-min load>, "peak_rss_mb": <MiB>,
+     "sf": <sf>, "cpus": <n>,
      "n_queries": <n>, "n_registered": <n>, "repeats": <n>,
      "failures": {"<name>": "<error>", ...}}     # only when a query failed
 
@@ -38,10 +39,12 @@ one-time jobs (file listing, ``session_memo`` shared-stage builds), so the
 recorded value is the smallest pair over the later repeats: AQE picks a
 join's build side from whichever input finishes first, and when both are
 small that choice can add a broadcast job in some repeats (observed on
-``emb_ann_recall_curve``), while a plan change shows in every repeat.
+``emb_ann_ivf``), while a plan change shows in every repeat.
 ``tools/bench_trend.py`` gates on these counts.  ``pre_sweep_load`` is the
 1-minute load average read before the Spark session exists: a record of
-the window, not a gate.
+the window, not a gate.  ``peak_rss_mb`` is the peak resident memory
+(``VmHWM``) of this process plus its driver JVM at the end of the sweep,
+as ``perfbench`` defines it; also a record, not a gate.
 """
 
 from __future__ import annotations
@@ -58,6 +61,7 @@ from flink_kafka_consumer_cassandra_output_spark.materialize import (  # noqa: E
 )
 from flink_kafka_consumer_cassandra_output_spark.plans import all_specs  # noqa: E402
 from flink_kafka_consumer_cassandra_output_spark.session import local_session  # noqa: E402
+from perfbench.harness import peak_rss_mb  # noqa: E402
 
 #: Untimed warm-up query: tiny, never session_memo-backed, so cold-JVM
 #: cost can't leak into the shared-stage billing (a memo-consumer warm-up
@@ -160,6 +164,7 @@ def main() -> None:
             k: round(v, 3) for k, v in sorted(SESSION_MEMO_BUILD_SECONDS.items())
         },
         "pre_sweep_load": round(pre_sweep_load, 2),
+        "peak_rss_mb": round(peak_rss_mb(spark), 1),
         "sf": _sf_from_dir(sf_dir),
         "cpus": cpus,
         "n_queries": len(timings),

@@ -4579,7 +4579,10 @@ def emb_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rank") <= 5)
             .select("query_id", "neighbor_id")
         )
-        hits = ivf.join(exact, ["query_id", "neighbor_id"]).agg(
+        # exact holds k x |q| rows.  Broadcast in every arm, it is one
+        # broadcast the three arms share; left to AQE, the build side is
+        # whichever input finishes first, and the ivf side costs a job.
+        hits = ivf.join(F.broadcast(exact), ["query_id", "neighbor_id"]).agg(
             F.count(F.lit(1)).alias("hits")
         )
         arm = hits.crossJoin(nq).select(

@@ -56,13 +56,15 @@ class QuerySpec:
     #: ``__spark_entry__.queries()``.  False => local-only: the query stays
     #: fully oracle-checked by tests/test_oracle_parity.py and plan-gated by
     #: tests/test_plan_invariants.py, but does not spend one of the driver
-    #: sweep's DRIVER_SWEEP_CAP slots because a driver-checked sibling
-    #: exercises the same operator (``sibling``; prose mapping in COVERAGE.md).
+    #: sweep's DRIVER_SWEEP_CAP slots (``sibling`` names its anchor).
     driver: bool = True
-    #: For ``driver=False`` entries: the name of the driver-checked query
-    #: that proves the same operator.  Required exactly when ``driver`` is
-    #: False; tests/test_registry_lint.py asserts the sibling exists and is
-    #: itself driver-facing.
+    #: For ``driver=False`` entries: an existing, driver-facing query that
+    #: anchors this entry in the driver sweep.  Required exactly when
+    #: ``driver`` is False; tests/test_registry_lint.py asserts the sibling
+    #: exists and is itself driver-facing, and nothing more.  The anchor
+    #: need not run the same operator (COVERAGE.md lists the entries whose
+    #: anchor runs a different one): the entry's own oracle and plan gates
+    #: check its operator.
     sibling: str | None = None
 
 

@@ -24,15 +24,42 @@ four-partition ``mapInPandas`` of 2 000 rows took about 0.48 s, and
 parent directory is prepended to ``spark.executorEnv.PYTHONPATH`` so the
 daemon, and every function pickled by reference to this package, imports
 in the workers from any working directory.
+
+Driver JVM collector: a ``local[...]`` session runs every executor thread
+in the driver JVM, and for it ``build_session`` puts
+``-XX:+UseParallelGC -XX:MetaspaceSize=256m`` in front of the caller's
+``spark.driver.extraJavaOptions`` (the caller's flags come after, so a
+caller's own ``-XX:MetaspaceSize=`` wins).  The engine keeps about 100 MB
+of old-generation data, but G1 spreads eden over every region of a fixed
+heap: one curation session with ``-Xms2g`` peaked at 2 489 MiB JVM
+``VmHWM`` beside 155 MiB for Python.  The Parallel collector reuses one
+young generation, so resident memory follows the live set: median peak
+2 702 -> 1 562 MiB on the benchmark's curation mix and 2 420 -> 1 505 MiB
+on its ingest stream (4-vCPU host, ``local[4]``, 10 pairs each).
+``MetaspaceSize`` lifts the first metaspace collection threshold above
+what the engine's loaded and generated classes need: without it one
+traced curation run paid five ``Pause Full (Metadata GC Threshold)``
+pauses of 31-200 ms; with it there were none.  A collector the caller
+already picks (in ``spark.driver.extraJavaOptions``,
+``spark.driver.defaultJavaOptions``, ``JAVA_TOOL_OPTIONS`` or
+``JDK_JAVA_OPTIONS``) wins, and no engine collector flag is added: the
+JVM refuses to start with two.  Other masters are left alone: their
+drivers do not run the tasks, and a cluster sets its own JVM options.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Driver JVM flags for local masters (module docstring: driver JVM collector).
+_PARALLEL_GC = "-XX:+UseParallelGC"
+_METASPACE_SIZE = "-XX:MetaspaceSize=256m"
+_GC_SELECTOR = re.compile(r"-XX:\+Use(?:Serial|Parallel|G1|Z|Shenandoah|Epsilon)GC\b")
 
 
 def default_parallelism() -> int:
@@ -90,6 +117,18 @@ def build_session(
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )
+    if master and (master == "local" or master.startswith("local[")):
+        caller = conf.get("spark.driver.extraJavaOptions")
+        chosen = [
+            caller,
+            conf.get("spark.driver.defaultJavaOptions"),
+            os.environ.get("JAVA_TOOL_OPTIONS"),
+            os.environ.get("JDK_JAVA_OPTIONS"),
+        ]
+        gc = None if any(_GC_SELECTOR.search(o or "") for o in chosen) else _PARALLEL_GC
+        conf["spark.driver.extraJavaOptions"] = " ".join(
+            p for p in (gc, _METASPACE_SIZE, caller) if p
+        )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

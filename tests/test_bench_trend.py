@@ -88,6 +88,16 @@ def test_added_and_removed_reported(tmp_path):
     assert "removed (1):\n  q_b" in r.stdout
 
 
+def test_peak_rss_printed_for_both_sides_never_gated(tmp_path):
+    r = _gate(tmp_path, _line(peak_rss_mb=1540.2), _line(peak_rss_mb=2630.5))
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert "peak_rss_mb: BASE 1540.2 -> CUR 2630.5" in r.stdout
+    # lines older than the field are still compared
+    r = _gate(tmp_path, _line(), _line(peak_rss_mb=1540.2))
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert "peak_rss_mb: BASE - -> CUR 1540.2" in r.stdout
+
+
 def test_incomparable_lines_refused(tmp_path):
     no_counters = _line()
     del no_counters["counters"]
@@ -124,6 +134,7 @@ def test_bench_line_carries_counters_for_every_query(tmp_path, sf_dir):
         assert jobs >= 1 and stages >= jobs
     assert out["repeats"] == 2 and out["n_queries"] == out["n_registered"] == 2
     assert not {"control", "controls", "load_gate"} & out.keys()
+    assert out["peak_rss_mb"] > 0
     # the line gates cleanly against itself
     r = _gate(tmp_path, out, out)
     assert r.returncode == 0, r.stdout + r.stderr

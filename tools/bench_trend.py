@@ -15,6 +15,8 @@ re-timing in one window.  Exit 2 when the lines cannot be compared: either
 side lacks ``counters`` (every line older than the counter gate, the
 ``BENCH_r*.json`` files included), ``cpus`` or ``sf`` differ, or either
 side ran fewer than two repeats (a first repeat carries one-time jobs).
+``peak_rss_mb`` (peak resident memory of the sweep) is printed for both
+sides, ``-`` where a line lacks it, and never gated on.
 """
 
 from __future__ import annotations
@@ -66,6 +68,8 @@ def main() -> None:
         sys.exit(2)
     cmp = compare(base, cur)
     print(f"{len(cur['counters'])} queries with counters in CUR")
+    print("peak_rss_mb: BASE {} -> CUR {}".format(
+        *(run.get("peak_rss_mb", "-") for run in (base, cur))))
     sections = {
         "COUNTERS ROSE, [jobs, stages]": [f"{q}: {b} -> {c}" for q, b, c in cmp["rose"]],
         "slower, counters unchanged: re-time in one window": [

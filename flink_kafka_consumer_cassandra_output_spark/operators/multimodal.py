@@ -7,54 +7,30 @@ extensions); required by the project brief: image/audio/video as opaque
 JVM-only policy, because codec work is inherently Python/native-library
 territory.
 
-Decode coverage (r11, extended r14): pixel/sample decode is REAL for the
-formats a pure-Python decoder honestly covers -- 24-bit BMP, binary PPM,
-16-bit PCM WAV (:func:`decode_bmp`/:func:`decode_ppm`/
-:func:`decode_wav_pcm`) and, since r14, 8-bit RGB/RGBA
-PNG (:func:`decode_png`: stdlib zlib inflate + the five spec filters),
-GIF (:func:`decode_gif`: pure-Python variable-width LZW),
-and baseline JPEG -- grayscale, 3-component 4:4:4 color, AND
-chroma-subsampled 4:2:0/4:2:2 (:func:`decode_jpeg_gray` /
-:func:`decode_jpeg_baseline`: real Huffman + IDCT with per-component
-tables, sampling-factor MCU walks, replication upsampling, and libjpeg
-integer fixed-point YCbCr->RGB; hash-gated on DC-exact images by
-``mm_pixel_stats``, on AC-bearing images by ``mm_jpeg_ac_stats``, on
-4:4:4 color by ``mm_jpeg_color_stats``, and on 4:2:0 by
-``mm_jpeg_420_stats``); MP4 gets real container-level DEMUX
-(:func:`demux_mp4_samples`: stsz/stsc/stco/co64/stss sample-table
-walk incl. largesize boxes, gated by ``mm_frame_sample``).  PNG decodes
-sequential AND Adam7-interlaced layouts (r15) across the full supported
-sample-layout matrix -- 8-bit RGB/RGBA, 8/16-bit grayscale, 16-bit RGB,
-and palette at depths 1/2/4/8 with MSB-first sub-byte packing (r17,
-gated by ``mm_png_types_stats``); GIF decodes the four-pass
-interlace (both r15, gated through the unchanged ``mm_pixel_stats``
-oracle since deinterlacing restores the identical raster).  Partial MCUs decode via
-pad-to-ceil-grid + crop, gated by ``mm_jpeg_partial_mcu_stats``;
-progressive (SOF2) scans -- spectral selection AND
-successive-approximation refinement -- decode via multi-scan
-coefficient accumulation, gated by ``mm_jpeg_progressive_stats``.
-JPEG is decode-complete for the sequential + progressive Huffman
-family INCLUDING restart intervals (r16: baseline and progressive
-DRI/RST decode for real, gated two-arm by ``mm_jpeg_restart_stats``)
-and 12-bit extended sequential SOF1 -- grayscale (r16, gated by
-``mm_jpeg12_stats``) AND 3-component color with 12-bit fixed-point
-YCbCr->RGB (r17, gated by ``mm_jpeg_color12_stats``) and arithmetic-coded
-sequential SOF9 (r17: the full T.81 Annex D QM-coder -- register
-discipline, carry/stuffing, flush -- plus the Annex F DC/AC
-statistical models and restart segmentation, gated by
-``mm_jpeg_arith_stats``; the Table D.3 transcription caveat is
-recorded at the coder), arithmetic-coded PROGRESSIVE SOF10 (r17:
-banded first scans, bit-plane refinements with the G.2.2
-correction-bit model, gated by ``mm_jpeg_arith_prog_stats``) and
-hierarchical Annex J pyramids (r17: DHP walk, EXP reference
-expansion, differential frames, gated by ``mm_jpeg_hier_stats``) and
-predictive LOSSLESS SOF3 (r17: all seven Table H.1 predictors,
-modulo-2^16 accumulation, gated by ``mm_jpeg_lossless_stats``) --
-every Huffman process and every non-lossless arithmetic process in
-T.81 Table B.1 now decodes (remaining: SOF11 arithmetic lossless and
-differential-hierarchical variants); the remaining stub is codec
-video payloads (:func:`decode_media` raises ``NotImplementedError`` for
-unrecognized bytes: no PIL/ffmpeg in this container); container HEADERS
+Decode coverage: pixel/sample decode is REAL for the formats a
+pure-Python decoder honestly covers -- 24-bit BMP, binary PPM, PCM WAV
+(:func:`decode_bmp`/:func:`decode_ppm`/:func:`decode_wav_pcm`), PNG
+(:func:`decode_png`: stdlib zlib inflate + the five spec filters,
+sequential and Adam7 layouts over the full sample-layout matrix, gated
+by ``mm_png_types_stats``), GIF (:func:`decode_gif`: pure-Python
+variable-width LZW, four-pass interlace) and JPEG.  MP4 gets real
+container-level DEMUX (:func:`demux_mp4_samples`: stsz/stsc/stco/co64/stss
+sample-table walk incl. largesize boxes, gated by ``mm_frame_sample``).
+JPEG runs on one codec core (the JPEG section below: a segment walker,
+one frame model, one entropy stage per process, one block-to-pixel
+emitter) behind :func:`decode_jpeg_gray`, which covers every Huffman
+process and every non-lossless arithmetic process of T.81 Table B.1:
+sequential SOF0/SOF1 at 8 and 12 bits, grayscale or color with 4:4:4 or
+subsampled chroma (replication upsampling, libjpeg's integer
+fixed-point YCbCr->RGB), partial MCUs, restart intervals, progressive
+SOF2 with successive approximation, arithmetic SOF9/SOF10 (the Annex D
+QM-coder with the Annex F/G models; the Table D.3 transcription caveat
+is recorded at the coder), lossless SOF3 and hierarchical Annex J
+pyramids -- each hash-gated by its ``mm_jpeg*_stats`` query (remaining:
+SOF11 arithmetic lossless and differential-hierarchical variants).  The
+remaining stub is codec video payloads (:func:`decode_media` raises
+``NotImplementedError`` for unrecognized bytes: no PIL/ffmpeg
+dependency); container HEADERS
 are parsed for real.  Everything
 around the stub is real and tested: the binary column synthesis, the Arrow
 batch iteration, the output schema contract, and header-level features
@@ -71,8 +47,11 @@ cost is uniform per task; the synthesized ``media_type`` column models that.
 from __future__ import annotations
 
 import hashlib
+import math
 from collections.abc import Iterator
+from functools import partial
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -1662,6 +1641,16 @@ def synth_wav_ima(nblocks: int, spb: int, doc_id: int) -> bytes:
     return blob + (b"\x00" if len(data) % 2 else b"")
 
 
+
+# --------------------------------------------------------------------------
+# JPEG codec core (ITU T.81).  Encode side: the ``synth_jpeg_*`` image
+# classes, each a closed form of (doc_id, block position), written through
+# one file assembler (:class:`_JpegWriter`) and two entropy coders
+# (Huffman, QM).  Decode side: one segment walker, one table/frame model
+# (:class:`_JpegModel`), one entropy stage per coding process, and one
+# block-to-pixel emitter (:func:`_jpeg_emit`).
+# --------------------------------------------------------------------------
+
 def _zigzag() -> list[tuple[int, int]]:
     """The JPEG zigzag scan order as (row, col) pairs, generated
     algorithmically: diagonals of constant row+col, direction
@@ -1674,11 +1663,17 @@ def _zigzag() -> list[tuple[int, int]]:
 
 
 _ZIGZAG = _zigzag()
-
-
-def _jpeg_category(v: int) -> int:
-    """DC/AC coefficient magnitude category (bit length of |v|)."""
-    return 0 if v == 0 else abs(v).bit_length()
+#: zigzag index of each row-major 8x8 position (the de-zigzag gather)
+_ZIGZAG_INV = [k for _, k in sorted((8 * r + c, k) for k, (r, c) in enumerate(_ZIGZAG))]
+#: IDCT basis ``C(v) * cos((2y+1) v pi / 16)``, C(0) = 1/sqrt(2), rows y
+_IDCT_BASIS = np.array([
+    [
+        (1.0 / math.sqrt(2.0) if v == 0 else 1.0)
+        * math.cos((2 * y + 1) * v * math.pi / 16)
+        for v in range(8)
+    ]
+    for y in range(8)
+])
 
 
 class _BitWriter:
@@ -1708,15 +1703,6 @@ class _BitWriter:
         return bytes(self.out)
 
 
-#: canonical Huffman tables the synthesizer writes into DHT (the decoder
-#: reads whatever DHT declares -- these are just OUR choice): DC symbols
-#: 0..11 all at code length 4; AC has the single EOB symbol at length 2.
-_DC_LENGTHS = [0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_DC_SYMBOLS = list(range(12))
-_AC_LENGTHS = [0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_AC_SYMBOLS = [0x00]
-
-
 def _canonical_codes(lengths: list[int], symbols: list[int]) -> dict[int, tuple[int, int]]:
     """symbol -> (code, nbits) per the JPEG canonical construction."""
     out: dict[int, tuple[int, int]] = {}
@@ -1731,554 +1717,289 @@ def _canonical_codes(lengths: list[int], symbols: list[int]) -> dict[int, tuple[
     return out
 
 
-def synth_jpeg_gray(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL baseline JFIF (grayscale, all-ones quant table, our own
-    DHT tables, every 8x8 block a CONSTANT value
-    ``(31*doc_id + 7*bx + 13*by) % 256``) -- unlike :func:`synth_jpeg`
-    (header-only), this round-trips through :func:`decode_jpeg_gray`
-    EXACTLY: a constant block's FDCT is DC-only with the DC a multiple
-    of 8, so the float IDCT is exact in IEEE doubles and the decode is
-    bit-for-bit.  Non-multiple-of-8 dimensions (r15) pad to the MCU grid
-    per the spec -- the decoder crops, and the per-block value formula
-    makes the cropped raster the same per-pixel expression."""
-    dc_codes = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_LENGTHS, _AC_SYMBOLS)
-    bw = _BitWriter()
-    prev_dc = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            v = (31 * doc_id + 7 * bx + 13 * by) % 256
-            dc = 8 * (v - 128)  # DC-only FDCT of a constant block
-            diff = dc - prev_dc
-            prev_dc = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            code, nbits = ac_codes[0x00]  # EOB: all 63 ACs zero
-            bw.write(code, nbits)
-    scan = bw.flush()
+def _ht(nbits: int, symbols) -> tuple[list[int], list[int], dict]:
+    """A DHT spec (lengths, symbols, canonical codes) with every symbol at
+    code length ``nbits``."""
+    symbols = list(symbols)
+    lengths = [len(symbols) if i == nbits - 1 else 0 for i in range(16)]
+    return lengths, symbols, _canonical_codes(lengths, symbols)
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
 
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_LENGTHS) + bytes(_AC_SYMBOLS))
+#: The synthesizers' Huffman tables (the decoders read whatever DHT
+#: declares -- these are just OUR choice).  Chroma tables sit one code
+#: length above their luma twins, so a decoder that picks the wrong table
+#: for a component desynchronizes instead of decoding by accident.
+_HT_DC = _ht(4, range(12))  # DC categories 0..11
+_HT_DC_C = _ht(5, range(12))
+_HT_DC12 = _ht(5, range(16))  # 12-bit DC diffs reach category 15
+_HT_DC12_C = _ht(6, range(16))
+_HT_EOB = _ht(2, [0x00])  # AC: the single EOB symbol
+#: AC: EOB, ZRL and run-6 symbols for categories 1..9 (index 39 = (4,4))
+_HT_AC6 = _ht(4, [0x00, 0xF0] + [(6 << 4) | s for s in range(1, 10)])
+_HT_AC6_C = _ht(5, _HT_AC6[1])
+#: progressive AC: EOBn runs (r << 4, r 0..4), ZRL, run-0 categories 1..9
+_HT_ACP = _ht(4, [0x00, 0x10, 0x20, 0x30, 0x40, 0xF0] + list(range(1, 10)))
+_HT_ACP_C = _ht(5, _HT_ACP[1])
+#: lossless differences 0..16; category 16 is the no-extra-bits 32768
+_HT_LOSSLESS = _ht(5, range(17))
+
+#: SOF component specs (id, sampling, table id): grayscale, and Y/Cb/Cr
+#: at 4:4:4 and 4:2:0 with both chroma components on tables 1
+_GRAY = ((1, 0x11, 0),)
+_YCC = ((1, 0x11, 0), (2, 0x11, 1), (3, 0x11, 1))
+_YCC420 = ((1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1))
+
+
+def _dht(*tables) -> tuple:
+    """DHT specs (class << 4 | id, lengths, symbols, codes) for luma DC,
+    luma AC, chroma DC, chroma AC -- as many as given, in that order."""
+    return tuple((tc, *t) for tc, t in zip((0x00, 0x10, 0x01, 0x11), tables))
+
+
+def _huff_put(bw: _BitWriter, codes: dict, v: int, run: int = 0) -> None:
+    """The one Huffman write: symbol ``(run << 4) | category(v)``, then
+    the category's low bits of ``v`` (negatives one's-complemented).
+    Covers DC differences (run 0), AC coefficients behind their zero run,
+    EOB (``v = 0``), ZRL (``v = 0, run = 15``) and EOBn (``v = 0, run =
+    n``; the caller appends the run bits); category 16 (the lossless
+    32768 escape) carries no bits."""
+    t = abs(v).bit_length()
+    code, nbits = codes[(run << 4) | t]
+    bw.write(code, nbits)
+    if 0 < t < 16:
+        bw.write(v if v >= 0 else v + (1 << t) - 1, t)
+
+
+def _rst_join(parts: list) -> bytes:
+    """Entropy-coded segments joined by RSTn markers cycling 0..7."""
+    return parts[0] + b"".join(
+        bytes((0xFF, 0xD0 + i % 8)) + p for i, p in enumerate(parts[1:])
     )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + sos + scan + b"\xff\xd9"
 
 
-#: DC table for the 12-bit synthesizer: categories 0..15 (12-bit DC
-#: diffs reach category 15), all at code length 5 (16 of 32 slots -- no
-#: all-ones code).  The decoder reads whatever DHT declares.
-_DC12_LENGTHS = [0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_DC12_SYMBOLS = list(range(16))
+class _JpegWriter:
+    """Encode-side file assembler shared by every ``synth_jpeg_*``.
 
+    The constructor opens the file with SOI and the table segments built
+    from specs: one DQT per ``quant`` entry (table id = position, all 64
+    entries equal), one DHT per ``huff`` spec ``(class << 4 | id,
+    lengths, symbols, codes)`` -- whose canonical codes land in
+    ``codes`` under the same key -- and, for arithmetic coding, a DAC
+    from ``cond`` (per table id: DC bounds L and U, AC Kx).  :meth:`frame` writes a SOFn or
+    DHP (plus DRI), :meth:`scan` an SOS with its entropy-coded data,
+    :meth:`seg` any other segment, and :meth:`done` closes with EOI."""
 
-def synth_jpeg_gray12(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL 12-bit extended sequential JFIF (SOF1, r16): grayscale,
-    all-ones quant, every 8x8 block the CONSTANT 12-bit value
-    ``(997*doc_id + 131*bx + 241*by) % 4096``.  Identical entropy
-    organization to baseline -- the 12-bit extension is only the sample
-    precision (level shift 2048, clamp 0..4095) and DC diff categories
-    reaching 15, which the synthesizer's DHT declares at length 5.  A
-    constant block's FDCT is DC-only with the DC a multiple of 8, so the
-    float IDCT is exact and the decode round-trips bit-for-bit (same
-    argument as :func:`synth_jpeg_gray`)."""
-    dc_codes = _canonical_codes(_DC12_LENGTHS, _DC12_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_LENGTHS, _AC_SYMBOLS)
-    bw = _BitWriter()
-    prev_dc = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            v = (997 * doc_id + 131 * bx + 241 * by) % 4096
-            dc = 8 * (v - 2048)
-            diff = dc - prev_dc
-            prev_dc = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            code, nbits = ac_codes[0x00]
-            bw.write(code, nbits)
-    scan = bw.flush()
+    def __init__(self, quant=(1,), huff=(), cond=()) -> None:
+        self.out = bytearray(b"\xff\xd8")
+        self.codes: dict[int, dict] = {}
+        self.cond = cond
+        for tq, q in enumerate(quant):
+            self.seg(0xDB, bytes((tq,)) + bytes([q] * 64))
+        for tc, lengths, symbols, codes in huff:
+            self.seg(0xC4, bytes((tc,)) + bytes(lengths) + bytes(symbols))
+            self.codes[tc] = codes
+        if cond:
+            dc = [b for tb, (lo, up, _) in enumerate(cond) for b in (tb, up << 4 | lo)]
+            ac = [b for tb, (*_, kx) in enumerate(cond) for b in (0x10 | tb, kx)]
+            self.seg(0xCC, bytes(dc + ac))
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
+    def seg(self, marker: int, body: bytes) -> None:
+        self.out += bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
 
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC12_LENGTHS) + bytes(_DC12_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_LENGTHS) + bytes(_AC_SYMBOLS))
-    )
-    sof1 = seg(
-        0xC1,
-        bytes((12,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof1 + sos + scan + b"\xff\xd9"
+    def frame(self, marker: int, width: int, height: int, comps=_GRAY,
+              precision: int = 8, restart: int = 0) -> None:
+        """SOFn/DHP header over ``comps``; later scans code this frame's
+        size with ``restart`` MCUs per segment, and a differential frame
+        (SOF5) codes its DC values unpredicted (F.1.5)."""
+        self.width, self.height, self.restart = width, height, restart
+        self.predict = marker != 0xC5
+        self.seg(marker, bytes((precision,)) + height.to_bytes(2, "big")
+                 + width.to_bytes(2, "big") + bytes((len(comps),))
+                 + b"".join(bytes(c) for c in comps))
+        if restart:
+            self.seg(0xDD, restart.to_bytes(2, "big"))
 
-
-#: 12-bit chroma DC table: the 16 diff categories at length 6 (vs the
-#: luma table's length 5), so a wrong-table pick desynchronizes loudly.
-_DC12_CHROMA_LENGTHS = [0, 0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-
-
-def synth_jpeg_color12(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL 12-bit extended-sequential 3-component 4:4:4 JFIF (SOF1,
-    r17) -- the "12-bit color" frontier item: every 8x8 block of every
-    component carries the integer-certifiable AC class of
-    :func:`synth_jpeg_gray_ac` (``F(0,0)=8m, F(4,4)=8n``) with 12-bit
-    per-component formulas
-
-    - Y:  ``m = (331d+17bx+29by)%3001-1500``, ``n = (7d+3bx+by)%27``
-    - Cb: ``m = (431d+23bx+41by)%2001-1000``, ``n = (11d+bx+5by)%23``
-    - Cr: ``m = (523d+31bx+37by)%2001-1000``, ``n = (5d+9bx+by)%23``
-
-    so every decoded component sample is exactly ``2048+m+n*s(x)*s(y)``
-    (Y within [522, 3574]: genuinely >8-bit, no component clamp) and the
-    12-bit fixed-point YCbCr->RGB (same libjpeg FIX() constants, center
-    2048, clamp 0..4095 -- precision changes only CENTERJSAMPLE /
-    MAXJSAMPLE, jdcolor.c semantics) is SQL-reproducible.  Wrong-table
-    decoding is loud by construction, as in :func:`synth_jpeg_color`:
-    chroma DC uses the 16 twelve-bit categories at length 6 (luma: 5),
-    chroma AC a different code length, and chroma coefficients are
-    stored HALVED against a dequant of 2s.  Luma DC diffs reach
-    category 15 (the 12-bit extension the gray gate pinned), chroma
-    category 13 under the independent per-component predictors."""
-    dc_y = _canonical_codes(_DC12_LENGTHS, _DC12_SYMBOLS)
-    ac_y = _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS)
-    dc_c = _canonical_codes(_DC12_CHROMA_LENGTHS, _DC12_SYMBOLS)
-    ac_c = _canonical_codes(_AC_RUN6_CHROMA_LENGTHS, _AC_RUN6_SYMBOLS)
-
-    def mn(ci: int, bx: int, by: int) -> tuple[int, int]:
-        d = doc_id
-        if ci == 0:
-            return (
-                (331 * d + 17 * bx + 29 * by) % 3001 - 1500,
-                (7 * d + 3 * bx + by) % 27,
-            )
-        if ci == 1:
-            return (
-                (431 * d + 23 * bx + 41 * by) % 2001 - 1000,
-                (11 * d + bx + 5 * by) % 23,
-            )
-        return (
-            (523 * d + 31 * bx + 37 * by) % 2001 - 1000,
-            (5 * d + 9 * bx + by) % 23,
+    def scan(self, block, comps=_GRAY, ss: int = 0, se: int = 63, ah: int = 0,
+             al: int = 0, data: bytes | None = None) -> None:
+        """SOS over ``comps`` (a component's table id selects its DC table
+        in scans with DC, its AC table in scans with AC) followed by
+        ``data``, or by ``block``'s blocks coded with the QM coder when a
+        DAC was written, else with Huffman."""
+        sel = b"".join(
+            bytes((cid, (tq << 4 if ss == 0 else 0) | (tq if se else 0)))
+            for cid, _samp, tq in comps
         )
+        self.seg(0xDA, bytes((len(comps),)) + sel + bytes((ss, se, ah << 4 | al)))
+        if data is None:
+            coder = _qm_encode_scan if self.cond else _huff_encode_scan
+            data = coder(self, block, comps, ss, se, ah, al)
+        self.out += data
 
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            for ci in range(3):
-                dc_codes, ac_codes = (dc_y, ac_y) if ci == 0 else (dc_c, ac_c)
-                scale = 8 if ci == 0 else 4  # chroma stored halved, q=2
-                m, n = mn(ci, bx, by)
-                dc = scale * m
-                diff = dc - prev[ci]
-                prev[ci] = dc
-                t = _jpeg_category(diff)
-                code, nbits = dc_codes[t]
-                bw.write(code, nbits)
-                if t:
-                    bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-                if n:
-                    zcode, znb = ac_codes[0xF0]
-                    bw.write(zcode, znb)
-                    bw.write(zcode, znb)
-                    ac = scale * n
-                    s = _jpeg_category(ac)
-                    code, nbits = ac_codes[(6 << 4) | s]
-                    bw.write(code, nbits)
-                    bw.write(ac, s)
-                code, nbits = ac_codes[0x00]
-                bw.write(code, nbits)
-    scan = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
-    )
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC12_LENGTHS) + bytes(_DC12_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_RUN6_LENGTHS) + bytes(_AC_RUN6_SYMBOLS))
-        + seg(0xC4, bytes((0x01,)) + bytes(_DC12_CHROMA_LENGTHS) + bytes(_DC12_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x11,)) + bytes(_AC_RUN6_CHROMA_LENGTHS) + bytes(_AC_RUN6_SYMBOLS),
-        )
-    )
-    sof1 = seg(
-        0xC1,
-        bytes((12,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    sos = seg(0xDA, bytes((3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof1 + sos + scan + b"\xff\xd9"
+    def done(self) -> bytes:
+        return bytes(self.out) + b"\xff\xd9"
 
 
-def synth_jpeg_gray_restart(
-    width: int, height: int, doc_id: int, interval: int | None = None
-) -> bytes:
-    """:func:`synth_jpeg_gray`'s image class (constant DC-only blocks,
-    value ``(31*doc_id + 7*bx + 13*by) % 256``) encoded WITH restart
-    intervals (r16): a DRI segment declares ``interval`` MCUs per
-    entropy-coded segment (default ``doc_id % 4 + 1``), each segment's
-    bitstream is independently 1-fill padded to a byte boundary, RSTn
-    markers (n cycling 0..7) separate consecutive segments, and the DC
-    predictor resets to 0 at every boundary per T.81 E.2.4 -- so a
-    decoder that ignores the reset (or the markers, or the byte
-    alignment) decodes wrong values, not merely an error.  Same closed
-    form as synth_jpeg_gray, so the two share an oracle shape."""
-    ri = interval if interval is not None else doc_id % 4 + 1
-    if ri <= 0:
-        raise ValueError("restart interval must be positive")
-    dc_codes = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_LENGTHS, _AC_SYMBOLS)
-    segments: list[bytes] = []
-    bw = _BitWriter()
-    prev_dc = 0
-    count = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            if count and count % ri == 0:
-                segments.append(bw.flush())
-                bw = _BitWriter()
-                prev_dc = 0
-            v = (31 * doc_id + 7 * bx + 13 * by) % 256
-            dc = 8 * (v - 128)
-            diff = dc - prev_dc
-            prev_dc = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            code, nbits = ac_codes[0x00]
-            bw.write(code, nbits)
-            count += 1
-    segments.append(bw.flush())
-    scan = bytearray()
-    for i, segdata in enumerate(segments):
-        scan += segdata
-        if i < len(segments) - 1:
-            scan += bytes((0xFF, 0xD0 + (i % 8)))
+def _huff_encode_scan(w: _JpegWriter, block, comps, ss: int, se: int,
+                      ah: int, al: int) -> bytes:
+    """Huffman entropy data of one scan.  Blocks go in MCU order (dx
+    fastest, components in ``comps`` order; a non-interleaved scan passes
+    its one component at 0x11); ``block(component index, bx, by)`` gives
+    a block's raw DC and its nonzero ACs as ascending ``(zigzag k,
+    value)`` pairs.  A sequential scan (Ss=0, Se>0) codes DC and AC with
+    an EOB per block; a progressive scan codes one stage of T.81 G.1.2:
+    DC first (``dc >> al``) or refinement (one raw bit), AC first (EOB
+    runs span blocks) or refinement (correction bits queue behind the
+    pending EOB run, as libjpeg's ``encode_mcu_AC_refine``).  Every
+    ``w.restart`` MCUs close an RST-joined segment, resetting the DC
+    predictors and flushing the EOB run."""
+    hmax = max(s >> 4 for _, s, _ in comps)
+    vmax = max(s & 15 for _, s, _ in comps)
+    mcu = [  # per block of an MCU: position in comps, block() index,
+        # offsets, sampling factors, DC and AC codes
+        (ci, cid - 1, dx, dy, samp >> 4, samp & 15,
+         w.codes.get(tq), w.codes.get(0x10 | tq))
+        for ci, (cid, samp, tq) in enumerate(comps)
+        for dy in range(samp & 15) for dx in range(samp >> 4)
+    ]
+    lo, seq, dc_first = max(ss, 1), ss == 0 and se > 0, ss == 0 and not ah
+    parts, bw, acc = [], _BitWriter(), None
+    prev = [0] * len(comps)
+    eob = [0, []]  # pending EOB run and the correction bits behind it
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_LENGTHS) + bytes(_AC_SYMBOLS))
-    )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    dri = seg(0xDD, ri.to_bytes(2, "big"))
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + dri + sos + bytes(scan) + b"\xff\xd9"
-
-
-#: AC table for the AC-bearing synthesizer: EOB, ZRL, and run-6 symbols
-#: for coefficient categories 1..9, all at code length 4 (11 codes, valid
-#: canonical space).  The decoder reads whatever DHT declares.
-_AC_RUN6_LENGTHS = [0, 0, 0, 11, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_AC_RUN6_SYMBOLS = [0x00, 0xF0] + [(6 << 4) | s for s in range(1, 10)]
-
-
-def synth_jpeg_gray_ac(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL baseline grayscale JFIF whose every block carries a nonzero
-    AC coefficient (r14 VERDICT What's-wrong #1: the DC-only synth never
-    pushed the implemented Huffman AC decode + general IDCT across the
-    external oracle).  Per 8x8 block at (bx, by):
-
-    - ``F(0,0) = 8*m`` with ``m = (17*doc_id + 5*bx + 11*by) % 129 - 64``
-    - ``F(4,4) = 8*n`` (zigzag index 39) with
-      ``n = (7*doc_id + 3*bx + by) % 27``
-
-    The (4,4) basis function is ``cos((2x+1)pi/4) * cos((2y+1)pi/4)``
-    whose exact value is ``+-1/2`` at every sample, so the TRUE
-    reconstruction is the integer ``m + n*s(x)*s(y)`` (``s(x) = +1`` for
-    ``x % 4 in (0, 3)``, else ``-1``); the float IDCT lands within
-    ~1e-14 of it and ``round()`` recovers it exactly -- an
-    integer-certifiable image class that still exercises the zero-run
-    (two ZRLs + a run-6 symbol to reach index 39), the AC magnitude
-    bits, dequantization at a non-DC position, and the full 64-term
-    IDCT.  Pixel range ``128 + m +- n`` stays inside [38, 218]: the
-    clamp never engages, so the oracle needs no CASE.  ``n == 0`` blocks
-    degrade to DC-only (EOB straight after DC), keeping the mixed-block
-    path honest.  Non-multiple-of-8 dimensions (r15) pad to the MCU grid
-    per the spec; the decoder crops, and each cropped pixel keeps the
-    same closed form ``128 + m(x//8, y//8) + n(x//8, y//8)*s(x)*s(y)``."""
-    dc_codes = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS)
-    bw = _BitWriter()
-    prev_dc = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            m = (17 * doc_id + 5 * bx + 11 * by) % 129 - 64
-            n = (7 * doc_id + 3 * bx + by) % 27
-            dc = 8 * m
-            diff = dc - prev_dc
-            prev_dc = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            if n:
-                # zigzag indices 1..38 are zero: ZRL skips 16 twice
-                # (k 1->17->33), the run-6 symbol lands on index 39 = (4,4)
-                zcode, znb = ac_codes[0xF0]
-                bw.write(zcode, znb)
-                bw.write(zcode, znb)
-                ac = 8 * n
-                s = _jpeg_category(ac)
-                code, nbits = ac_codes[(6 << 4) | s]
-                bw.write(code, nbits)
-                bw.write(ac, s)  # positive: magnitude bits verbatim
-            code, nbits = ac_codes[0x00]  # EOB for the rest of the block
-            bw.write(code, nbits)
-    scan = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x10,)) + bytes(_AC_RUN6_LENGTHS) + bytes(_AC_RUN6_SYMBOLS),
-        )
-    )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + sos + scan + b"\xff\xd9"
-
-
-#: chroma-side tables for the color synthesizer, at DIFFERENT code
-#: lengths (5) from the luma tables (4): a decoder that selects the wrong
-#: table per component desynchronizes immediately instead of accidentally
-#: decoding.
-_DC_CHROMA_LENGTHS = [0, 0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_AC_RUN6_CHROMA_LENGTHS = [0, 0, 0, 0, 11, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-
-
-def synth_jpeg_color(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL baseline 3-component 4:4:4 JFIF (r14 VERDICT task 4): every
-    8x8 block of every component is the integer-certifiable AC class of
-    :func:`synth_jpeg_gray_ac` -- ``F(0,0)=8m, F(4,4)=8n`` -- with
-    per-component formulas
-
-    - Y:  ``m = (17d+5bx+11by)%129-64``, ``n = (7d+3bx+by)%27``
-    - Cb: ``m = (13d+7bx+3by)%101-50``, ``n = (11d+bx+5by)%23``
-    - Cr: ``m = (19d+3bx+7by)%101-50``, ``n = (5d+9bx+by)%23``
-
-    so every decoded component sample is exactly ``128+m+n*s(x)*s(y)``
-    (within [38, 218]: no component clamp) and the libjpeg fixed-point
-    integer YCbCr->RGB in the decoder is SQL-reproducible.  The file is
-    built to make wrong-table decoding loud: chroma uses its own Huffman
-    tables at a different code length AND a dequant table of 2s with the
-    coefficients stored HALVED (4m/4n), so picking the luma table for
-    either lookup desynchronizes or halves the chroma plane.  Cb and Cr
-    share tables but carry independent DC predictors, exercising the
-    spec's per-component PRED."""
-    # non-multiple-of-8 dims (r15) pad to the MCU grid; the decoder crops
-    dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_y = _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS)
-    dc_c = _canonical_codes(_DC_CHROMA_LENGTHS, _DC_SYMBOLS)
-    ac_c = _canonical_codes(_AC_RUN6_CHROMA_LENGTHS, _AC_RUN6_SYMBOLS)
-
-    def mn(ci: int, bx: int, by: int) -> tuple[int, int]:
-        d = doc_id
-        if ci == 0:
-            return (17 * d + 5 * bx + 11 * by) % 129 - 64, (7 * d + 3 * bx + by) % 27
-        if ci == 1:
-            return (13 * d + 7 * bx + 3 * by) % 101 - 50, (11 * d + bx + 5 * by) % 23
-        return (19 * d + 3 * bx + 7 * by) % 101 - 50, (5 * d + 9 * bx + by) % 23
-
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            for ci in range(3):
-                dc_codes, ac_codes = (dc_y, ac_y) if ci == 0 else (dc_c, ac_c)
-                scale = 8 if ci == 0 else 4  # chroma stored halved, q=2
-                m, n = mn(ci, bx, by)
-                dc = scale * m
-                diff = dc - prev[ci]
-                prev[ci] = dc
-                t = _jpeg_category(diff)
-                code, nbits = dc_codes[t]
-                bw.write(code, nbits)
-                if t:
-                    bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-                if n:
-                    zcode, znb = ac_codes[0xF0]
-                    bw.write(zcode, znb)
-                    bw.write(zcode, znb)
-                    ac = scale * n
-                    s = _jpeg_category(ac)
-                    code, nbits = ac_codes[(6 << 4) | s]
-                    bw.write(code, nbits)
-                    bw.write(ac, s)
-                code, nbits = ac_codes[0x00]
-                bw.write(code, nbits)
-    scan = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
-    )
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_RUN6_LENGTHS) + bytes(_AC_RUN6_SYMBOLS))
-        + seg(0xC4, bytes((0x01,)) + bytes(_DC_CHROMA_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x11,)) + bytes(_AC_RUN6_CHROMA_LENGTHS) + bytes(_AC_RUN6_SYMBOLS),
-        )
-    )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    sos = seg(0xDA, bytes((3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + sos + scan + b"\xff\xd9"
-
-
-#: AC tables for the progressive synthesizer: EOBn run symbols (r<<4 for
-#: r 0..4), ZRL, and run-0 magnitude symbols for categories 1..9 -- 15
-#: codes at length 4 (luma) / 5 (chroma), canonical-valid.
-_AC_PROG_SYMBOLS = [0x00, 0x10, 0x20, 0x30, 0x40, 0xF0] + list(range(0x01, 0x0A))
-_AC_PROG_LENGTHS = [0, 0, 0, 15, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_AC_PROG_CHROMA_LENGTHS = [0, 0, 0, 0, 15, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-
-
-def synth_jpeg_progressive(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL progressive (SOF2) 4:4:4 JFIF (r15), spectral-selection
-    script: one interleaved DC scan (Ah=Al=0), then per component an AC
-    scan over band 1..38 (all-zero for the AC class: a single EOBn code
-    run-length-covers every block) and an AC scan over band 39..63
-    carrying the (4,4) coefficient behind a run-0 magnitude symbol with
-    EOBRUN terminators that extend across consecutive blocks.  Same
-    per-component (m, n) class, dequant tables (1s / halved-coefficient
-    2s), and wrong-table-loudness construction as
-    :func:`synth_jpeg_color`, so the decoded raster is IDENTICAL to
-    ``synth_jpeg_color(width, height, doc_id)``'s -- one oracle gates
-    both entropy organizations.  Dimensions should be multiples of 8
-    (the gate uses 8-multiples; the decoder itself handles partial
-    grids)."""
-    dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    dc_c = _canonical_codes(_DC_CHROMA_LENGTHS, _DC_SYMBOLS)
-    ac_y = _canonical_codes(_AC_PROG_LENGTHS, _AC_PROG_SYMBOLS)
-    ac_c = _canonical_codes(_AC_PROG_CHROMA_LENGTHS, _AC_PROG_SYMBOLS)
-    bh, bwid = (height + 7) // 8, (width + 7) // 8
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    # scan 1: interleaved DC (decoder order: MCU raster, components inner)
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-    for by in range(bh):
-        for bx in range(bwid):
-            for ci in range(3):
-                dc_codes = dc_y if ci == 0 else dc_c
-                scale = 8 if ci == 0 else 4
-                m, _n = _color_block_mn(ci, doc_id, bx, by)
-                dc = scale * m
-                diff = dc - prev[ci]
-                prev[ci] = dc
-                t = _jpeg_category(diff)
-                code, nbits = dc_codes[t]
-                bw.write(code, nbits)
-                if t:
-                    bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    dc_scan = seg(0xDA, bytes((3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0))) + bw.flush()
-
-    def eob_flush(bw: _BitWriter, ac_codes, run: int) -> None:
-        if not run:
-            return
-        r = run.bit_length() - 1
-        code, nbits = ac_codes[(r << 4) | 0]
-        bw.write(code, nbits)
-        if r:
+    def flush_eob() -> None:
+        run, corr = eob
+        if run:
+            r = run.bit_length() - 1
+            _huff_put(bw, acc, 0, r)
             bw.write(run - (1 << r), r)
+            for b in corr:
+                bw.write(b, 1)
+            eob[:] = [0, []]
 
-    ac_scans = b""
-    for ci in range(3):
-        ac_codes = ac_y if ci == 0 else ac_c
-        ac_id = 0 if ci == 0 else 1
-        scale = 8 if ci == 0 else 4
-        cid = ci + 1
-        # band 1..38: every block all-zero -> one EOBn covers the grid
-        bw = _BitWriter()
-        eob_flush(bw, ac_codes, bh * bwid)
-        ac_scans += seg(0xDA, bytes((1, cid, ac_id, 1, 38, 0))) + bw.flush()
-        # band 39..63: run-0 coefficient at 39, EOBRUN terminators
-        bw = _BitWriter()
-        pending = 0
-        for by in range(bh):
-            for bx in range(bwid):
-                _m, n = _color_block_mn(ci, doc_id, bx, by)
-                if n == 0:
-                    pending += 1
+    n, ri, predict = 0, w.restart, w.predict
+    for my in range((w.height + 8 * vmax - 1) // (8 * vmax)):
+        for mx in range((w.width + 8 * hmax - 1) // (8 * hmax)):
+            if ri and n and n % ri == 0:
+                flush_eob()
+                parts.append(bw.flush())
+                bw, prev = _BitWriter(), [0] * len(comps)
+            n += 1
+            for ci, c, dx, dy, hs, vs, dcc, acc in mcu:
+                dc, ac = block(c, mx * hs + dx, my * vs + dy)
+                if dc_first:
+                    _huff_put(bw, dcc, (dc >> al) - prev[ci])
+                    if predict:
+                        prev[ci] = dc >> al
+                elif ss == 0:
+                    bw.write((dc >> al) & 1, 1)
+                if seq:  # AC 1..63 behind zero runs, then EOB
+                    k0 = 1
+                    for k, v in ac:
+                        if v:
+                            for _ in range((k - k0) >> 4):
+                                _huff_put(bw, acc, 0, 15)
+                            _huff_put(bw, acc, v, (k - k0) & 15)
+                            k0 = k + 1
+                    if k0 <= 63:
+                        _huff_put(bw, acc, 0)
+                if seq or not se:
                     continue
-                eob_flush(bw, ac_codes, pending)
-                ac = scale * n
-                s = _jpeg_category(ac)
-                code, nbits = ac_codes[s]  # (0 << 4) | s
-                bw.write(code, nbits)
-                bw.write(ac, s)
-                pending = 1  # this block's terminator, extendable
-        eob_flush(bw, ac_codes, pending)
-        ac_scans += seg(0xDA, bytes((1, cid, ac_id, 39, 63, 0))) + bw.flush()
+                band = [(k, v) for k, v in ac if lo <= k <= se and abs(v) >> al]
+                k0, r, bits = lo, 0, []
+                if ah:
+                    last_new = max((k for k, v in band if abs(v) >> al == 1), default=0)
+                for k, v in band:
+                    t = abs(v) >> al
+                    r += k - k0
+                    k0 = k + 1
+                    if ah:
+                        while r > 15 and k <= last_new:
+                            flush_eob()
+                            _huff_put(bw, acc, 0, 15)
+                            r -= 16
+                            for b in bits:
+                                bw.write(b, 1)
+                            bits = []
+                        if t > 1:  # known nonzero: correction bit
+                            bits.append(t & 1)
+                            continue
+                    flush_eob()
+                    while r > 15:
+                        _huff_put(bw, acc, 0, 15)
+                        r -= 16
+                    _huff_put(bw, acc, t if v > 0 else -t, r)
+                    for b in bits:
+                        bw.write(b, 1)
+                    r, bits = 0, []
+                if r + se + 1 - k0 or bits:
+                    eob[0] += 1
+                    eob[1] += bits
+    flush_eob()
+    parts.append(bw.flush())
+    return _rst_join(parts)
 
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
-    )
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_PROG_LENGTHS) + bytes(_AC_PROG_SYMBOLS))
-        + seg(0xC4, bytes((0x01,)) + bytes(_DC_CHROMA_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x11,)) + bytes(_AC_PROG_CHROMA_LENGTHS) + bytes(_AC_PROG_SYMBOLS),
-        )
-    )
-    sof2 = seg(
-        0xC2,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    return b"\xff\xd8" + dqt + dht + sof2 + dc_scan + ac_scans + b"\xff\xd9"
+
+def _qm_encode_scan(w: _JpegWriter, block, comps, ss: int, se: int,
+                    ah: int, al: int) -> bytes:
+    """QM-coded entropy data of one 4:4:4 scan (``block`` as for
+    :func:`_huff_encode_scan`): the Annex F DC/AC models when it spans
+    0..63, else one Annex G stage.  Every ``w.restart`` MCUs start an
+    independent codeword -- fresh coder, statistics, DC predictor and
+    conditioning category -- joined by RSTn markers."""
+    nx = (w.width + 7) // 8
+    nblocks = nx * ((w.height + 7) // 8)
+    step = w.restart or nblocks
+    plan = [(ci, cid - 1, tq, *w.cond[tq]) for ci, (cid, _samp, tq) in enumerate(comps)]
+    lo, parts = max(ss, 1), []
+    for i in range(0, nblocks, step):
+        enc = _QMEncoder()
+        dc_bins = {tq: _qm_fresh_bins(_QM_DC_BINS) for *_, tq in comps} if ss == 0 and not ah else {}
+        ac_bins = {tq: _qm_fresh_bins(_QM_AC_BINS) for *_, tq in comps} if se else {}
+        prev, ctx = [0] * len(comps), [0] * len(comps)
+        for b in range(i, min(i + step, nblocks)):
+            by, bx = divmod(b, nx)
+            for ci, c, tq, low, up, kx in plan:
+                dc, pairs = block(c, bx, by)
+                if ss == 0 and ah:
+                    enc.encode_fixed((dc >> al) & 1)
+                elif ss == 0:
+                    ctx[ci] = _qm_enc_dc(enc, dc_bins[tq], (dc >> al) - prev[ci], ctx[ci], (low, up))
+                    prev[ci] = dc >> al
+                if not se:
+                    continue
+                ac = [0] * 64
+                for k, v in pairs:
+                    ac[k] = v
+                if ah:
+                    _qm_enc_ac_refine(enc, ac_bins[tq], ac, lo, se, al, ah)
+                else:
+                    _qm_enc_ac_band(enc, ac_bins[tq], ac, kx, lo, se, al)
+        parts.append(enc.flush())
+    return _rst_join(parts)
+
+
+def _synth_seq(width: int, height: int, block, huff=(), comps=_GRAY, quant=(1,),
+               marker: int = 0xC0, precision: int = 8, restart: int = 0,
+               cond=()) -> bytes:
+    """One-scan sequential file: Huffman under ``huff``, or QM-coded under
+    the DAC conditioning ``cond``."""
+    w = _JpegWriter(quant, huff, cond)
+    w.frame(marker, width, height, comps, precision, restart)
+    w.scan(block, comps)
+    return w.done()
+
+
+def _color_block_mn(ci: int, doc_id: int, bx: int, by: int) -> tuple[int, int]:
+    """Per-component (m, n) block formulas shared by the color
+    synthesizers and their SQL oracles: block coordinates are in the
+    COMPONENT's own block grid (full-res for Y, half-res for subsampled
+    chroma).  Y's pair is also the grayscale AC class."""
+    d = doc_id
+    if ci == 0:
+        return (17 * d + 5 * bx + 11 * by) % 129 - 64, (7 * d + 3 * bx + by) % 27
+    if ci == 1:
+        return (13 * d + 7 * bx + 3 * by) % 101 - 50, (11 * d + bx + 5 * by) % 23
+    return (19 * d + 3 * bx + 7 * by) % 101 - 50, (5 * d + 9 * bx + by) % 23
 
 
 def _refined_block_mn(doc_id: int, bx: int, by: int) -> tuple[int, int]:
@@ -2295,334 +2016,223 @@ def _refined_block_mn(doc_id: int, bx: int, by: int) -> tuple[int, int]:
     return m, n
 
 
+# Block classes (doc_id, component, bx, by) -> (raw DC, ((zigzag k, AC),)).
+# A constant block's FDCT is DC-only with the DC a multiple of 8, and the
+# (4,4) basis (zigzag 39) is exactly +-1/2 at every sample, so F(0,0)=8m,
+# F(4,4)=8n reconstructs to the integer m + n*s(x)*s(y) (s(x) = +1 for
+# x % 4 in (0, 3), else -1): the float IDCT lands within ~1e-14 of it and
+# every decode round-trips bit-for-bit.  Chroma coefficients are stored
+# HALVED against a dequant table of 2s (wrong-table decoding is loud).
+
+def _blk_gray(d: int, ci: int, bx: int, by: int) -> tuple:
+    return 8 * ((31 * d + 7 * bx + 13 * by) % 256 - 128), ()
+
+
+def _blk_gray12(d: int, ci: int, bx: int, by: int) -> tuple:
+    return 8 * ((997 * d + 131 * bx + 241 * by) % 4096 - 2048), ()
+
+
+def _blk_ycc(d: int, ci: int, bx: int, by: int) -> tuple:
+    m, n = _color_block_mn(ci, d, bx, by)
+    s = 8 if ci == 0 else 4
+    return s * m, ((39, s * n),)
+
+
+def _blk_ycc12(d: int, ci: int, bx: int, by: int) -> tuple:
+    a, b, c, mod = ((331, 17, 29, 3001), (431, 23, 41, 2001), (523, 31, 37, 2001))[ci]
+    s = 8 if ci == 0 else 4
+    n = _color_block_mn(ci, d, bx, by)[1]
+    return s * ((a * d + b * bx + c * by) % mod - mod // 2), ((39, s * n),)
+
+
+def _blk_refined(d: int, ci: int, bx: int, by: int) -> tuple:
+    m, n = _refined_block_mn(d, bx, by)
+    return m, ((39, n),)
+
+
+def _blk_arith_prog(d: int, ci: int, bx: int, by: int) -> tuple:
+    m = (17 * d + 5 * bx + 11 * by) % 129 - 64
+    o = (13 * d + bx + 7 * by) % 21
+    n = (7 * d + 3 * bx + by) % 27
+    return 8 * m, ((14, 8 * o), (39, 8 * n))  # zigzag 14 = (0,4)
+
+
+def synth_jpeg_gray(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL baseline JFIF (grayscale, all-ones quant table, our own
+    DHT tables, every 8x8 block a CONSTANT value
+    ``(31*doc_id + 7*bx + 13*by) % 256``) -- unlike :func:`synth_jpeg`
+    (header-only), this round-trips through :func:`decode_jpeg_gray`
+    EXACTLY.  Non-multiple-of-8 dimensions pad to the MCU grid per the
+    spec -- the decoder crops, and the per-block value formula makes the
+    cropped raster the same per-pixel expression."""
+    return _synth_seq(width, height, partial(_blk_gray, doc_id), _dht(_HT_DC, _HT_EOB))
+
+
+def synth_jpeg_gray12(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL 12-bit extended sequential JFIF (SOF1): grayscale,
+    all-ones quant, every 8x8 block the CONSTANT 12-bit value
+    ``(997*doc_id + 131*bx + 241*by) % 4096``.  Identical entropy
+    organization to baseline -- the 12-bit extension is only the sample
+    precision (level shift 2048, clamp 0..4095) and DC diff categories
+    reaching 15, which the synthesizer's DHT declares at length 5."""
+    return _synth_seq(width, height, partial(_blk_gray12, doc_id),
+                      _dht(_HT_DC12, _HT_EOB), marker=0xC1, precision=12)
+
+
+def synth_jpeg_color12(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL 12-bit extended-sequential 3-component 4:4:4 JFIF (SOF1):
+    every 8x8 block of every component carries the AC class of
+    :func:`synth_jpeg_gray_ac` (``F(0,0)=8m, F(4,4)=8n``) with 12-bit
+    per-component formulas
+
+    - Y:  ``m = (331d+17bx+29by)%3001-1500``, ``n = (7d+3bx+by)%27``
+    - Cb: ``m = (431d+23bx+41by)%2001-1000``, ``n = (11d+bx+5by)%23``
+    - Cr: ``m = (523d+31bx+37by)%2001-1000``, ``n = (5d+9bx+by)%23``
+
+    so every decoded component sample is exactly ``2048+m+n*s(x)*s(y)``
+    (Y within [522, 3574]: genuinely >8-bit, no component clamp) and the
+    12-bit fixed-point YCbCr->RGB (same libjpeg FIX() constants, center
+    2048, clamp 0..4095) is SQL-reproducible.  Chroma DC uses the 16
+    twelve-bit categories at length 6 (luma: 5); luma DC diffs reach
+    category 15, chroma 13 under the independent predictors."""
+    return _synth_seq(width, height, partial(_blk_ycc12, doc_id),
+                      _dht(_HT_DC12, _HT_AC6, _HT_DC12_C, _HT_AC6_C), _YCC,
+                      quant=(1, 2), marker=0xC1, precision=12)
+
+
+def synth_jpeg_gray_restart(
+    width: int, height: int, doc_id: int, interval: int | None = None
+) -> bytes:
+    """:func:`synth_jpeg_gray`'s image class encoded WITH restart
+    intervals: a DRI segment declares ``interval`` MCUs per
+    entropy-coded segment (default ``doc_id % 4 + 1``), each segment's
+    bitstream is independently 1-fill padded to a byte boundary, RSTn
+    markers (n cycling 0..7) separate consecutive segments, and the DC
+    predictor resets to 0 at every boundary per T.81 E.2.4 -- so a
+    decoder that ignores the reset (or the markers, or the byte
+    alignment) decodes wrong values, not merely an error."""
+    ri = interval if interval is not None else doc_id % 4 + 1
+    if ri <= 0:
+        raise ValueError("restart interval must be positive")
+    return _synth_seq(width, height, partial(_blk_gray, doc_id),
+                      _dht(_HT_DC, _HT_EOB), restart=ri)
+
+
+def synth_jpeg_gray_ac(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL baseline grayscale JFIF whose every block carries a nonzero
+    AC coefficient.  Per 8x8 block at (bx, by):
+
+    - ``F(0,0) = 8*m`` with ``m = (17*doc_id + 5*bx + 11*by) % 129 - 64``
+    - ``F(4,4) = 8*n`` (zigzag index 39) with
+      ``n = (7*doc_id + 3*bx + by) % 27``
+
+    so the true reconstruction is the integer ``128 + m + n*s(x)*s(y)``
+    -- an integer-certifiable class that still exercises the zero-run
+    (two ZRLs + a run-6 symbol to reach index 39), the AC magnitude
+    bits, dequantization at a non-DC position, and the full 64-term
+    IDCT.  Pixels stay inside [38, 218]: the clamp never engages.
+    ``n == 0`` blocks degrade to DC-only (EOB straight after DC).
+    Partial MCUs pad and crop as in :func:`synth_jpeg_gray`."""
+    return _synth_seq(width, height, partial(_blk_ycc, doc_id), _dht(_HT_DC, _HT_AC6))
+
+
+def synth_jpeg_color(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL baseline 3-component 4:4:4 JFIF: every 8x8 block of every
+    component is the AC class of :func:`synth_jpeg_gray_ac` --
+    ``F(0,0)=8m, F(4,4)=8n`` -- with per-component formulas
+
+    - Y:  ``m = (17d+5bx+11by)%129-64``, ``n = (7d+3bx+by)%27``
+    - Cb: ``m = (13d+7bx+3by)%101-50``, ``n = (11d+bx+5by)%23``
+    - Cr: ``m = (19d+3bx+7by)%101-50``, ``n = (5d+9bx+by)%23``
+
+    so every decoded component sample is exactly ``128+m+n*s(x)*s(y)``
+    (within [38, 218]: no component clamp) and the libjpeg fixed-point
+    integer YCbCr->RGB in the decoder is SQL-reproducible.  Chroma uses
+    its own Huffman tables at a different code length AND a dequant
+    table of 2s with the coefficients stored HALVED, so picking the luma
+    table for either lookup desynchronizes or halves the chroma plane.
+    Cb and Cr share tables but carry independent DC predictors."""
+    return _synth_seq(width, height, partial(_blk_ycc, doc_id),
+                      _dht(_HT_DC, _HT_AC6, _HT_DC_C, _HT_AC6_C), _YCC, quant=(1, 2))
+
+
+def synth_jpeg_color_420(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL baseline 4:2:0 JFIF: Y at 0x22 sampling (four 8x8 blocks
+    per 16x16 MCU), chroma at half resolution (one block each per MCU),
+    every block the AC class with the SAME per-component formulas as
+    :func:`synth_jpeg_color` -- chroma block coordinates live in the
+    half-res grid, so a decoded pixel reads chroma from block
+    ``(x//2//8, y//2//8)`` at in-block position ``((x//2)%8, (y//2)%8)``
+    under replication upsampling, all exactly SQL-expressible.
+    Non-multiple-of-16 dimensions pad to the MCU grid; the decoder
+    crops."""
+    return _synth_seq(width, height, partial(_blk_ycc, doc_id),
+                      _dht(_HT_DC, _HT_AC6, _HT_DC_C, _HT_AC6_C), _YCC420, quant=(1, 2))
+
+
+def synth_jpeg_progressive(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL progressive (SOF2) 4:4:4 JFIF, spectral-selection script:
+    one interleaved DC scan, then per component an AC scan over band
+    1..38 (all-zero for the AC class: one EOBn run covers every block)
+    and one over band 39..63 carrying the (4,4) coefficient behind a
+    run-0 magnitude symbol with EOB runs across blocks.  Same block
+    class, dequant tables and table-length construction as
+    :func:`synth_jpeg_color`, so the decoded raster is IDENTICAL to
+    ``synth_jpeg_color(width, height, doc_id)``'s -- one oracle gates
+    both entropy organizations."""
+    w = _JpegWriter((1, 2), _dht(_HT_DC, _HT_ACP, _HT_DC_C, _HT_ACP_C))
+    w.frame(0xC2, width, height, _YCC)
+    block = partial(_blk_ycc, doc_id)
+    w.scan(block, _YCC, 0, 0)
+    for comp in _YCC:
+        w.scan(block, (comp,), 1, 38)
+        w.scan(block, (comp,), 39, 63)
+    return w.done()
+
+
 def synth_jpeg_progressive_refined(width: int, height: int, doc_id: int) -> bytes:
     """A REAL progressive GRAYSCALE JFIF with SUCCESSIVE-APPROXIMATION
-    refinement (r15, the last JPEG entropy organization): raw
-    coefficients are the ODD values of :func:`_refined_block_mn` under
-    all-8 quant tables, so the Al=1 first scans carry the exact halves
-    (``m >> 1``, floor) and the refinement scans restore the odd low
-    bits -- DC refinement as one raw bit per block (all 1s), AC
-    refinement via the T.81 correction-bit algorithm where ``n >= 3``
-    blocks consume a correction bit (1), ``n == 1`` blocks introduce a
-    NEWLY-nonzero +-1 coefficient through the run/sign path, and
-    AC-free blocks ride EOB runs that still frame their neighbours'
-    corrections.  Every bit is pixel-DECISIVE (quant 8 makes a raw unit
-    one full pixel step).  Script: non-interleaved DC first (Al=1) ->
-    DC refinement -> AC band 1..38 first (all-zero EOBn) -> AC band
-    39..63 first (halves) -> AC 1..38 refinement (EOBn only) -> AC
-    39..63 refinement (corrections + new coefficients + EOB runs)."""
-    dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_y = _canonical_codes(_AC_PROG_LENGTHS, _AC_PROG_SYMBOLS)
-    bh, bwid = (height + 7) // 8, (width + 7) // 8
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    def eob_flush(bw: _BitWriter, run: int) -> None:
-        if not run:
-            return
-        r = run.bit_length() - 1
-        code, nbits = ac_y[(r << 4) | 0]
-        bw.write(code, nbits)
-        if r:
-            bw.write(run - (1 << r), r)
-
-    # scan 1: DC first at Al=1 -- diffs of m >> 1 (floor; m odd)
-    bw = _BitWriter()
-    prev = 0
-    for by in range(bh):
-        for bx in range(bwid):
-            m, _n = _refined_block_mn(doc_id, bx, by)
-            half = m >> 1
-            diff = half - prev
-            prev = half
-            t = _jpeg_category(diff)
-            code, nbits = dc_y[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    scans = seg(0xDA, bytes((1, 1, 0x00, 0, 0, 0x01))) + bw.flush()
-    # scan 2: DC refinement -- one raw bit per block, all 1 (m odd)
-    bw = _BitWriter()
-    for _ in range(bh * bwid):
-        bw.write(1, 1)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 0, 0, 0x10))) + bw.flush()
-    # scan 3: AC band 1..38 first at Al=1 -- all zero, one EOBn
-    bw = _BitWriter()
-    eob_flush(bw, bh * bwid)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 1, 38, 0x01))) + bw.flush()
-    # scan 4: AC band 39..63 first at Al=1 -- halves; n <= 1 rides EOBn
-    bw = _BitWriter()
-    pending = 0
-    for by in range(bh):
-        for bx in range(bwid):
-            _m, n = _refined_block_mn(doc_id, bx, by)
-            if n < 3:
-                pending += 1
-                continue
-            eob_flush(bw, pending)
-            half = n >> 1
-            t = _jpeg_category(half)
-            code, nbits = ac_y[t]
-            bw.write(code, nbits)
-            bw.write(half, t)
-            pending = 1
-    eob_flush(bw, pending)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 39, 63, 0x01))) + bw.flush()
-    # scan 5: AC band 1..38 refinement -- no history, no new -> EOBn only
-    bw = _BitWriter()
-    eob_flush(bw, bh * bwid)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 1, 38, 0x10))) + bw.flush()
-    # scan 6: AC band 39..63 refinement.  Bit layout mirrors the decoder:
-    # an EOBn code, then the covered blocks' correction bits in block
-    # order (one bit per nonzero-history coefficient); a block that
-    # introduces a NEW coefficient (n == 1) breaks the run with the
-    # (run 0, size 1) symbol + sign bit, then starts the next run as its
-    # own EOB terminator.
-    bw = _BitWriter()
-    pending = 0
-    pend_bits: list[int] = []
-    for by in range(bh):
-        for bx in range(bwid):
-            _m, n = _refined_block_mn(doc_id, bx, by)
-            if n >= 3:
-                pending += 1
-                pend_bits.append(1)  # correction bit: n odd, history even
-            elif n == 0:
-                pending += 1  # no nonzero history: no correction bit
-            else:  # n == 1: newly nonzero coefficient
-                eob_flush(bw, pending)
-                for b in pend_bits:
-                    bw.write(b, 1)
-                pend_bits = []
-                code, nbits = ac_y[0x01]  # run 0, size 1
-                bw.write(code, nbits)
-                bw.write(1, 1)  # sign: positive -> +(1 << Al)
-                pending = 1  # this block's own EOB terminator
-    eob_flush(bw, pending)
-    for b in pend_bits:
-        bw.write(b, 1)
-    scans += seg(0xDA, bytes((1, 1, 0x00, 39, 63, 0x10))) + bw.flush()
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([8] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_PROG_LENGTHS) + bytes(_AC_PROG_SYMBOLS))
-    )
-    sof2 = seg(
-        0xC2,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    return b"\xff\xd8" + dqt + dht + sof2 + scans + b"\xff\xd9"
+    refinement: raw coefficients are the ODD values of
+    :func:`_refined_block_mn` under all-8 quant tables, so the Al=1 first
+    scans carry the exact halves (``m >> 1``, floor) and the refinement
+    scans restore the odd low bits -- DC refinement as one raw bit per
+    block (all 1s), AC refinement via the T.81 correction-bit algorithm
+    where ``n >= 3`` blocks consume a correction bit (1), ``n == 1``
+    blocks introduce a NEWLY-nonzero +-1 coefficient through the
+    run/sign path, and AC-free blocks ride EOB runs that still frame
+    their neighbours' corrections.  Script: DC first (Al=1) -> DC
+    refinement -> AC 1..38 first (all-zero EOBn) -> AC 39..63 first
+    (halves) -> AC 1..38 refinement (EOBn only) -> AC 39..63 refinement
+    (corrections + new coefficients + EOB runs)."""
+    w = _JpegWriter((8,), _dht(_HT_DC, _HT_ACP))
+    w.frame(0xC2, width, height)
+    for ss, se, ah, al in ((0, 0, 0, 1), (0, 0, 1, 0), (1, 38, 0, 1),
+                           (39, 63, 0, 1), (1, 38, 1, 0), (39, 63, 1, 0)):
+        w.scan(partial(_blk_refined, doc_id), _GRAY, ss, se, ah, al)
+    return w.done()
 
 
 def synth_jpeg_progressive_restart(
     width: int, height: int, doc_id: int, interval: int | None = None
 ) -> bytes:
-    """A REAL progressive GRAYSCALE JFIF with RESTART INTERVALS (r16) in
-    every scan: a DRI segment declares ``interval`` units per segment
-    (default ``doc_id % 3 + 1``; a unit is an MCU in the interleaved DC
-    scan and a block in the AC scans -- identical counts for grayscale),
-    each scan's entropy data is split into independently byte-aligned
-    segments separated by RSTn markers cycling 0..7, the DC predictor
-    resets at every boundary, and EOB runs NEVER cross a boundary (the
-    per-segment flush is load-bearing: the decoder raises if a run
-    crosses).  Block class is :func:`_refined_block_mn` under all-8
-    quant encoded at Al=0 (no refinement), so the decoded raster is
-    EXACTLY ``128 + m + n*s(x)*s(y)`` -- the successive-approximation
-    gate's closed form, shared with its oracle.  Script: DC first ->
-    AC band 1..38 first (all-zero EOB runs, per-segment) -> AC band
-    39..63 first (``n`` at the band head, EOB terminators
-    per-segment)."""
+    """A REAL progressive GRAYSCALE JFIF with RESTART INTERVALS in every
+    scan: a DRI segment declares ``interval`` units per segment (default
+    ``doc_id % 3 + 1``; a unit is an MCU in the DC scan and a block in
+    the AC scans -- identical counts for grayscale), each scan's entropy
+    data is split into independently byte-aligned segments separated by
+    RSTn markers, the DC predictor resets at every boundary, and EOB
+    runs NEVER cross a boundary (the decoder raises if one does).  Block
+    class is :func:`_refined_block_mn` under all-8 quant at Al=0, so the
+    decoded raster is EXACTLY ``128 + m + n*s(x)*s(y)``.  Script: DC
+    first -> AC band 1..38 first -> AC band 39..63 first."""
     ri = interval if interval is not None else doc_id % 3 + 1
     if ri <= 0:
         raise ValueError("restart interval must be positive")
-    dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_y = _canonical_codes(_AC_PROG_LENGTHS, _AC_PROG_SYMBOLS)
-    bh, bwid = (height + 7) // 8, (width + 7) // 8
-    nblk = bh * bwid
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    def eob_flush(bw: _BitWriter, run: int) -> None:
-        if not run:
-            return
-        r = run.bit_length() - 1
-        code, nbits = ac_y[(r << 4) | 0]
-        bw.write(code, nbits)
-        if r:
-            bw.write(run - (1 << r), r)
-
-    def join_segments(parts: list[bytes]) -> bytes:
-        out = bytearray()
-        for i, p in enumerate(parts):
-            out += p
-            if i < len(parts) - 1:
-                out += bytes((0xFF, 0xD0 + (i % 8)))
-        return bytes(out)
-
-    blocks = [
-        _refined_block_mn(doc_id, bx, by)
-        for by in range(bh)
-        for bx in range(bwid)
-    ]
-
-    # scan 1: DC first (Al=0) -- per-segment predictor reset
-    parts: list[bytes] = []
-    bw = _BitWriter()
-    prev = 0
-    for i, (m, _n) in enumerate(blocks):
-        if i and i % ri == 0:
-            parts.append(bw.flush())
-            bw = _BitWriter()
-            prev = 0
-        diff = m - prev
-        prev = m
-        t = _jpeg_category(diff)
-        code, nbits = dc_y[t]
-        bw.write(code, nbits)
-        if t:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    parts.append(bw.flush())
-    scans = seg(0xDA, bytes((1, 1, 0x00, 0, 0, 0x00))) + join_segments(parts)
-
-    # scan 2: AC band 1..38 first -- all zero; one EOBn PER SEGMENT
-    parts = []
-    for lo in range(0, nblk, ri):
-        bw = _BitWriter()
-        eob_flush(bw, min(ri, nblk - lo))
-        parts.append(bw.flush())
-    scans += seg(0xDA, bytes((1, 1, 0x00, 1, 38, 0x00))) + join_segments(parts)
-
-    # scan 3: AC band 39..63 first -- n at the band head; EOB runs flushed
-    # at every segment boundary (never crossing one)
-    parts = []
-    bw = _BitWriter()
-    pending = 0
-    for i, (_m, n) in enumerate(blocks):
-        if i and i % ri == 0:
-            eob_flush(bw, pending)
-            pending = 0
-            parts.append(bw.flush())
-            bw = _BitWriter()
-        if n == 0:
-            pending += 1
-            continue
-        eob_flush(bw, pending)
-        t = _jpeg_category(n)
-        code, nbits = ac_y[t]
-        bw.write(code, nbits)
-        bw.write(n, t)
-        pending = 1  # EOB terminator for the rest of this block's band
-    eob_flush(bw, pending)
-    parts.append(bw.flush())
-    scans += seg(0xDA, bytes((1, 1, 0x00, 39, 63, 0x00))) + join_segments(parts)
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([8] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_PROG_LENGTHS) + bytes(_AC_PROG_SYMBOLS))
-    )
-    sof2 = seg(
-        0xC2,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    dri = seg(0xDD, ri.to_bytes(2, "big"))
-    return b"\xff\xd8" + dqt + dht + sof2 + dri + scans + b"\xff\xd9"
-
-
-def _color_block_mn(ci: int, doc_id: int, bx: int, by: int) -> tuple[int, int]:
-    """Per-component (m, n) block formulas shared by the 4:4:4 and 4:2:0
-    color synthesizers and their SQL oracles: block coordinates are in the
-    COMPONENT's own block grid (full-res for Y, half-res for subsampled
-    chroma)."""
-    d = doc_id
-    if ci == 0:
-        return (17 * d + 5 * bx + 11 * by) % 129 - 64, (7 * d + 3 * bx + by) % 27
-    if ci == 1:
-        return (13 * d + 7 * bx + 3 * by) % 101 - 50, (11 * d + bx + 5 * by) % 23
-    return (19 * d + 3 * bx + 7 * by) % 101 - 50, (5 * d + 9 * bx + by) % 23
-
-
-def synth_jpeg_color_420(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL baseline 4:2:0 JFIF (r15): Y at 0x22 sampling (four 8x8
-    blocks per 16x16 MCU), chroma at half resolution (one block each per
-    MCU), every block the integer-certifiable AC class with the SAME
-    per-component formulas as :func:`synth_jpeg_color` -- chroma block
-    coordinates live in the half-res grid, so a decoded pixel reads
-    chroma from block ``(x//2//8, y//2//8)`` at in-block position
-    ``((x//2)%8, (y//2)%8)`` under replication upsampling, all exactly
-    SQL-expressible.  Same wrong-table-loudness construction: chroma
-    tables at length 5, dequant 2s over halved coefficients.  Dimensions
-    must be multiples of 16 (no partial MCUs)."""
-    # non-multiple-of-16 dims (r15) pad to the 16x16 MCU grid; the
-    # decoder crops
-    dc_y = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_y = _canonical_codes(_AC_RUN6_LENGTHS, _AC_RUN6_SYMBOLS)
-    dc_c = _canonical_codes(_DC_CHROMA_LENGTHS, _DC_SYMBOLS)
-    ac_c = _canonical_codes(_AC_RUN6_CHROMA_LENGTHS, _AC_RUN6_SYMBOLS)
-
-    bw = _BitWriter()
-    prev = [0, 0, 0]
-
-    def put_block(ci: int, bx: int, by: int) -> None:
-        dc_codes, ac_codes = (dc_y, ac_y) if ci == 0 else (dc_c, ac_c)
-        scale = 8 if ci == 0 else 4
-        m, n = _color_block_mn(ci, doc_id, bx, by)
-        dc = scale * m
-        diff = dc - prev[ci]
-        prev[ci] = dc
-        t = _jpeg_category(diff)
-        code, nbits = dc_codes[t]
-        bw.write(code, nbits)
-        if t:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        if n:
-            zcode, znb = ac_codes[0xF0]
-            bw.write(zcode, znb)
-            bw.write(zcode, znb)
-            ac = scale * n
-            s = _jpeg_category(ac)
-            code, nbits = ac_codes[(6 << 4) | s]
-            bw.write(code, nbits)
-            bw.write(ac, s)
-        code, nbits = ac_codes[0x00]
-        bw.write(code, nbits)
-
-    for my in range((height + 15) // 16):
-        for mx in range((width + 15) // 16):
-            for dy in range(2):           # four Y blocks, dx fastest
-                for dx in range(2):
-                    put_block(0, 2 * mx + dx, 2 * my + dy)
-            put_block(1, mx, my)          # one Cb block (half-res grid)
-            put_block(2, mx, my)          # one Cr block
-    scan = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
-    )
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_RUN6_LENGTHS) + bytes(_AC_RUN6_SYMBOLS))
-        + seg(0xC4, bytes((0x01,)) + bytes(_DC_CHROMA_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(
-            0xC4,
-            bytes((0x11,)) + bytes(_AC_RUN6_CHROMA_LENGTHS) + bytes(_AC_RUN6_SYMBOLS),
-        )
-    )
-    sof0 = seg(
-        0xC0,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    sos = seg(0xDA, bytes((3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dht + sof0 + sos + scan + b"\xff\xd9"
+    w = _JpegWriter((8,), _dht(_HT_DC, _HT_ACP))
+    w.frame(0xC2, width, height, restart=ri)
+    for ss, se in ((0, 0), (1, 38), (39, 63)):
+        w.scan(partial(_blk_refined, doc_id), _GRAY, ss, se)
+    return w.done()
 
 
 class _BitReader:
@@ -2674,6 +2284,15 @@ class _BitReader:
             )
         self.pos += 2
 
+    def done(self) -> None:
+        """Refuse whole bytes left after the scan's final code (they would
+        desync the next scan's framing silently).  Legitimate slack: the
+        final partially consumed padding byte, plus its stuffing 0x00
+        when the 1-fill landed on 0xFF."""
+        slack = len(self.data) - self.pos
+        if slack > 1 and not (slack == 2 and self.data[-2:] == b"\xff\x00"):
+            raise ValueError(f"trailing bytes in JPEG scan ({slack})")
+
 
 def _huff_decode(br: "_BitReader", table: dict[tuple[int, int], int]) -> int:
     code, nbits = 0, 0
@@ -2691,9 +2310,92 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
+def _huff_diff(br: _BitReader, tab: dict) -> int:
+    """One Huffman magnitude category plus its EXTENDed bits: a DC (or
+    lossless) difference; category 16 is 32768 with no bits (H.1.2.2)."""
+    t = _huff_decode(br, tab)
+    if t == 16:
+        return 32768
+    return _extend(br.bits(t), t) if t else 0
+
+
+def _huff_ac(br: _BitReader, tab: dict, blk: list, ss: int, se: int, al: int) -> int:
+    """The shared Huffman AC block reader: band ``ss..se`` of one block
+    (sequential: 1..63) into the zigzag list ``blk`` at point transform
+    ``al``.  Returns the EOB run left after this block (0 after a plain
+    EOB or a band that runs to ``se``)."""
+    k = ss
+    while k <= se:
+        sym = _huff_decode(br, tab)
+        r, s = sym >> 4, sym & 0x0F
+        if s == 0:
+            if r == 15:
+                k += 16  # ZRL
+                continue
+            return (1 << r) + (br.bits(r) if r else 0) - 1
+        k += r
+        if k > se:
+            raise ValueError("corrupt JPEG: AC run past the scan band")
+        blk[k] = _extend(br.bits(s), s) << al
+        k += 1
+    return 0
+
+
+def _huff_refine(br: _BitReader, tab: dict, blk: list, ss: int, se: int,
+                 al: int, eobrun: int) -> int:
+    """AC successive-approximation refinement of one block (T.81
+    G.1.2.3, libjpeg ``decode_mcu_AC_refine``): run/size symbols place
+    NEW ``+-(1 << al)`` coefficients among zero-history positions while
+    a correction bit is read for every nonzero-history coefficient
+    passed over; a block inside an EOB run only takes its corrections.
+    Returns the EOB run left after this block."""
+    p1, n1 = 1 << al, -1 << al
+
+    def correct(k: int) -> None:
+        c = blk[k]
+        if br.bits(1) and (c & p1) == 0:
+            blk[k] = c + (p1 if c >= 0 else n1)
+
+    k = ss
+    if eobrun == 0:
+        while k <= se:
+            sym = _huff_decode(br, tab)
+            r, s = sym >> 4, sym & 0x0F
+            if s == 0:
+                if r != 15:
+                    eobrun = (1 << r) + (br.bits(r) if r else 0)
+                    break
+                val = 0  # ZRL: skip 16 zero-history slots
+            elif s == 1:
+                val = p1 if br.bits(1) else n1
+            else:
+                raise ValueError("corrupt JPEG: refinement magnitude > 1")
+            while k <= se:
+                if blk[k]:
+                    correct(k)
+                elif r == 0:
+                    break
+                else:
+                    r -= 1
+                k += 1
+            if val:
+                if k > se:
+                    raise ValueError(
+                        "corrupt JPEG: refinement AC run past the scan band")
+                blk[k] = val
+            k += 1
+    if eobrun > 0:
+        while k <= se:
+            if blk[k]:
+                correct(k)
+            k += 1
+        eobrun -= 1
+    return eobrun
+
+
 # --------------------------------------------------------------------------
-# Arithmetic-coded JPEG (SOF9) -- ITU T.81 Annex D QM-coder + Annex F
-# statistical models (r17).
+# Arithmetic coding -- ITU T.81 Annex D QM-coder + Annex F/G statistical
+# models.
 #
 # The coder below is the spec's binary arithmetic coder implemented
 # plainly from the Annex D flowcharts: 16-bit interval register A,
@@ -3055,631 +2757,28 @@ def _qm_dec_dc(dec: "_QMDecoder", bins: list, ctx: int,
     return (-v if sign else v), new_ctx
 
 
-def _qm_enc_ac(enc: "_QMEncoder", bins: list, ac: list, kx: int) -> None:
-    """Encode one block's 63 zigzag AC coefficients per F.1.4.2
-    (Figure F.5): EOB decision / zero-run / sign-on-the-fixed-state /
-    magnitude tree split at Kx."""
-    ke = 63
-    while ke >= 1 and ac[ke - 1] == 0:
-        ke -= 1
-    k = 1
-    while k <= ke:
-        st = 3 * (k - 1)
-        enc.encode(bins, st, 0)  # not EOB here
-        v = ac[k - 1]
-        while v == 0:
-            enc.encode(bins, st + 1, 0)
-            st += 3
-            k += 1
-            v = ac[k - 1]
-        enc.encode(bins, st + 1, 1)
-        if v > 0:
-            enc.encode_fixed(0)
-        else:
-            enc.encode_fixed(1)
-            v = -v
-        st += 2
-        m = 0
-        v -= 1
-        if v:
-            enc.encode(bins, st, 1)
-            m = 1
-            v2 = v
-            if v2 >> 1:
-                v2 >>= 1
-                enc.encode(bins, st, 1)
-                m = 2
-                st = 189 if k <= kx else 217
-                while v2 >> 1:
-                    v2 >>= 1
-                    enc.encode(bins, st, 1)
-                    m <<= 1
-                    st += 1
-        enc.encode(bins, st, 0)
-        st += 14
-        mm = m
-        while mm >> 1:
-            mm >>= 1
-            enc.encode(bins, st, 1 if (mm & v) else 0)
-        k += 1
-    if k <= 63:
-        enc.encode(bins, 3 * (k - 1), 1)  # EOB
-
-
-def _qm_dec_ac(dec: "_QMDecoder", bins: list, kx: int) -> list:
-    """Decode one block's 63 zigzag AC coefficients (Figure F.20)."""
-    ac = [0] * 63
-    k = 1
-    while k <= 63:
-        st = 3 * (k - 1)
-        if dec.decode(bins, st):
-            break  # EOB
-        while dec.decode(bins, st + 1) == 0:
-            st += 3
-            k += 1
-            if k > 63:
-                raise ValueError("corrupt arithmetic JPEG: AC run overflow")
-        sign = dec.decode_fixed()
-        st += 2
-        m = dec.decode(bins, st)
-        if m:
-            if dec.decode(bins, st):
-                m = 2
-                st = 189 if k <= kx else 217
-                while dec.decode(bins, st):
-                    m <<= 1
-                    if m == 0x8000:
-                        raise ValueError(
-                            "corrupt arithmetic JPEG: AC magnitude")
-                    st += 1
-        v = m
-        st += 14
-        mm = m
-        while mm >> 1:
-            mm >>= 1
-            if dec.decode(bins, st):
-                v |= mm
-        v += 1
-        ac[k - 1] = -v if sign else v
-        k += 1
-    return ac
-
-
-def synth_jpeg_gray_arith(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL arithmetic-coded (SOF9) grayscale JFIF, r17: the exact
-    image class of :func:`synth_jpeg_gray_ac` -- per 8x8 block
-    ``F(0,0) = 8*m`` with ``m = (17*doc_id + 5*bx + 11*by) % 129 - 64``
-    and ``F(4,4) = 8*n`` (zigzag 39) with ``n = (7*doc_id + 3*bx + by)
-    % 27``, true reconstruction the integer ``128 + m + n*s(x)*s(y)``
-    -- but entropy-coded with the T.81 Annex D QM-coder under the
-    Annex F DC/AC statistical models instead of Huffman tables: a DAC
-    segment declares the default conditioning (DC L=0/U=1, AC Kx=5)
-    explicitly, there is no DHT, and the frame marker is SOF9
-    (extended sequential, arithmetic).  Odd doc_ids add a DRI segment
-    (``doc_id % 3 + 1`` MCUs per entropy segment): each segment is an
-    INDEPENDENT arithmetic codeword -- fresh coder registers, fresh
-    statistics areas, DC predictor and conditioning category reset --
-    joined by cycling RSTn markers per F.1.4.4/E.2.4, so the same
-    closed form also gates arithmetic restart framing."""
-    mcus_x, mcus_y = (width + 7) // 8, (height + 7) // 8
-    order = [(bx, by) for by in range(mcus_y) for bx in range(mcus_x)]
-    restart = doc_id % 3 + 1 if doc_id % 2 else 0
-    segments = (
-        [order[i:i + restart] for i in range(0, len(order), restart)]
-        if restart else [order]
-    )
-    parts = []
-    for seg in segments:
-        enc = _QMEncoder()
-        dc_bins = _qm_fresh_bins(_QM_DC_BINS)
-        ac_bins = _qm_fresh_bins(_QM_AC_BINS)
-        dc_ctx = 0
-        prev_dc = 0
-        for bx, by in seg:
-            m = (17 * doc_id + 5 * bx + 11 * by) % 129 - 64
-            n = (7 * doc_id + 3 * bx + by) % 27
-            dc = 8 * m
-            dc_ctx = _qm_enc_dc(enc, dc_bins, dc - prev_dc, dc_ctx, (0, 1))
-            prev_dc = dc
-            ac = [0] * 63
-            ac[38] = 8 * n  # zigzag index 39 = the (4,4) basis
-            _qm_enc_ac(enc, ac_bins, ac, 5)
-        parts.append(enc.flush())
-    scan = parts[0] + b"".join(
-        bytes((0xFF, 0xD0 + (i % 8))) + p for i, p in enumerate(parts[1:])
-    )
-
-    def seg_hdr(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg_hdr(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    # DAC (B.2.4.3): DC table 0 with Cs=(U<<4)|L=0x10, AC table 0 Cs=Kx=5
-    dac = seg_hdr(0xCC, bytes((0x00, 0x10, 0x10, 0x05)))
-    sof9 = seg_hdr(
-        0xC9,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    dri = seg_hdr(0xDD, restart.to_bytes(2, "big")) if restart else b""
-    sos = seg_hdr(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dac + sof9 + dri + sos + scan + b"\xff\xd9"
-
-
-def synth_jpeg_color_arith(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL arithmetic-coded 3-component 4:4:4 SOF9 JFIF: the exact
-    image class of :func:`synth_jpeg_color` (per-component F(0,0)/F(4,4)
-    AC class, chroma coefficients stored HALVED against a dequant of 2s)
-    QM-coded under per-TABLE statistics areas -- luma on DC/AC
-    conditioning tables 0, Cb and Cr SHARING tables 1 while carrying
-    independent DC predictors and conditioning categories, exactly the
-    Annex F ownership split (statistics per table, PRED/category per
-    component).  The DAC declares DIFFERENT DC bounds per table (luma
-    U=1, chroma U=2), so a decoder that picks the wrong conditioning
-    table desynchronizes the category chain loudly.  Because the image
-    class matches the Huffman twin's, the decoded pixels must equal
-    ``decode_jpeg_gray(synth_jpeg_color(...))`` bit-for-bit -- pinned in
-    tests as a cross-entropy-coding invariant."""
-    enc = _QMEncoder()
-    dc_bins = {0: _qm_fresh_bins(_QM_DC_BINS), 1: _qm_fresh_bins(_QM_DC_BINS)}
-    ac_bins = {0: _qm_fresh_bins(_QM_AC_BINS), 1: _qm_fresh_bins(_QM_AC_BINS)}
-    cond = {0: (0, 1), 1: (0, 2)}
-    kx = {0: 5, 1: 3}
-
-    def mn(ci: int, bx: int, by: int) -> tuple[int, int]:
-        d = doc_id
-        if ci == 0:
-            return (17 * d + 5 * bx + 11 * by) % 129 - 64, (7 * d + 3 * bx + by) % 27
-        if ci == 1:
-            return (13 * d + 7 * bx + 3 * by) % 101 - 50, (11 * d + bx + 5 * by) % 23
-        return (19 * d + 3 * bx + 7 * by) % 101 - 50, (5 * d + 9 * bx + by) % 23
-
-    prev = [0, 0, 0]
-    ctx = [0, 0, 0]
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            for ci in range(3):
-                tb = 0 if ci == 0 else 1
-                scale = 8 if ci == 0 else 4  # chroma halved, q=2
-                m, n = mn(ci, bx, by)
-                dc = scale * m
-                ctx[ci] = _qm_enc_dc(
-                    enc, dc_bins[tb], dc - prev[ci], ctx[ci], cond[tb])
-                prev[ci] = dc
-                ac = [0] * 63
-                ac[38] = scale * n
-                _qm_enc_ac(enc, ac_bins[tb], ac, kx[tb])
-    scan = enc.flush()
-
-    def seg_hdr(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg_hdr(0xDB, bytes((0x00,)) + bytes([1] * 64)) + seg_hdr(
-        0xDB, bytes((0x01,)) + bytes([2] * 64)
-    )
-    dac = seg_hdr(0xCC, bytes((0x00, 0x10, 0x01, 0x20, 0x10, 0x05, 0x11, 0x03)))
-    sof9 = seg_hdr(
-        0xC9,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)),
-    )
-    sos = seg_hdr(0xDA, bytes((3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dac + sof9 + sos + scan + b"\xff\xd9"
-
-
-def synth_jpeg_gray12_arith(width: int, height: int, doc_id: int) -> bytes:
-    """A 12-bit arithmetic-coded SOF9 grayscale JFIF: the exact constant
-    -block class of :func:`synth_jpeg_gray12` (``(997d + 131bx + 241by)
-    % 4096``, level shift 2048) QM-coded -- DC-only blocks drive the
-    EOB-at-k=1 AC path and DC magnitude categories up to 15 through the
-    Annex F tree, where the Huffman twin needed a custom length-5 DHT.
-    Pixels must equal ``decode_jpeg_gray(synth_jpeg_gray12(...))``."""
-    enc = _QMEncoder()
-    dc_bins = _qm_fresh_bins(_QM_DC_BINS)
-    ac_bins = _qm_fresh_bins(_QM_AC_BINS)
-    ctx = 0
-    prev = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            v = (997 * doc_id + 131 * bx + 241 * by) % 4096
-            dc = 8 * (v - 2048)
-            ctx = _qm_enc_dc(enc, dc_bins, dc - prev, ctx, (0, 1))
-            prev = dc
-            _qm_enc_ac(enc, ac_bins, [0] * 63, 5)
-    scan = enc.flush()
-
-    def seg_hdr(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg_hdr(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dac = seg_hdr(0xCC, bytes((0x00, 0x10, 0x10, 0x05)))
-    sof9 = seg_hdr(
-        0xC9,
-        bytes((12,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    sos = seg_hdr(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return b"\xff\xd8" + dqt + dac + sof9 + sos + scan + b"\xff\xd9"
-
-
-# --------------------------------------------------------------------------
-# Hierarchical JPEG (Annex J, r17): DHP frame pyramid with EXP reference
-# expansion and differential sequential frames.
-# --------------------------------------------------------------------------
-
-def synth_jpeg_gray_hier(width: int, height: int, doc_id: int) -> bytes:
-    """A REAL hierarchical grayscale JPEG (T.81 Annex J, r17): a DHP
-    segment declares the full output dimensions, a non-differential
-    SOF1 frame codes a HALF-WIDTH reference of constant 8x8 blocks
-    ``r = 64 + (31*doc_id + 17*bx + 7*by) % 128``, an EXP segment
-    orders horizontal expansion (J.1.1.2: even output = reference
-    sample, odd output = the rounded mean of the two neighbours, right
-    edge by replication), and a differential SOF5 frame adds constant
-    per-block corrections ``d = (23*doc_id + 13*bx + 3*by) % 65 - 32``
-    at full resolution -- DC-only blocks coded with ZERO prediction
-    (F.1.5: PRED is 0 in differential frames) and no level shift.  The
-    final image is the integer closed form ``expand(r) + d`` (range
-    [32, 223]: no clamp engages), which the external oracle replays
-    arithmetically, so the hash proves the DHP walk, the expansion
-    filter, the differential entropy/IDCT path, and the frame
-    accumulation exactly."""
-    w1 = (width + 1) // 2
-    dc_codes = _canonical_codes(_DC_LENGTHS, _DC_SYMBOLS)
-    ac_codes = _canonical_codes(_AC_LENGTHS, _AC_SYMBOLS)
-
-    def frame_scan(dcs: list, predict: bool) -> bytes:
-        bw = _BitWriter()
-        prev = 0
-        for dc in dcs:
-            diff = dc - prev if predict else dc
-            if predict:
-                prev = dc
-            t = _jpeg_category(diff)
-            code, nbits = dc_codes[t]
-            bw.write(code, nbits)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            code, nbits = ac_codes[0x00]  # EOB
-            bw.write(code, nbits)
-        return bw.flush()
-
-    ref_dcs = [
-        8 * (64 + (31 * doc_id + 17 * bx + 7 * by) % 128 - 128)
-        for by in range((height + 7) // 8)
-        for bx in range((w1 + 7) // 8)
-    ]
-    dif_dcs = [
-        8 * ((23 * doc_id + 13 * bx + 3 * by) % 65 - 32)
-        for by in range((height + 7) // 8)
-        for bx in range((width + 7) // 8)
-    ]
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    def sof(marker: int, w: int) -> bytes:
-        return seg(
-            marker,
-            bytes((8,)) + height.to_bytes(2, "big") + w.to_bytes(2, "big")
-            + bytes((1, 1, 0x11, 0)),
-        )
-
-    dqt = seg(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dht = (
-        seg(0xC4, bytes((0x00,)) + bytes(_DC_LENGTHS) + bytes(_DC_SYMBOLS))
-        + seg(0xC4, bytes((0x10,)) + bytes(_AC_LENGTHS) + bytes(_AC_SYMBOLS))
-    )
-    dhp = seg(
-        0xDE,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    sos = seg(0xDA, bytes((1, 1, 0x00, 0, 63, 0)))
-    return (
-        b"\xff\xd8" + dqt + dht + dhp
-        + sof(0xC1, w1) + sos + frame_scan(ref_dcs, True)
-        + seg(0xDF, bytes((0x10,)))  # EXP: Eh=1, Ev=0
-        + sof(0xC5, width) + sos + frame_scan(dif_dcs, False)
-        + b"\xff\xd9"
-    )
-
-
-def _hier_expand(plane, eh: int, ev: int):
-    """J.1.1.2 reference expansion: double along the flagged axes; even
-    outputs copy the reference sample, odd outputs are the rounded mean
-    ``(a + b + 1) >> 1`` of the two neighbours, with the trailing
-    sample's right/bottom neighbour replicated at the edge."""
-    import numpy as np
-
-    if eh:
-        h, w = plane.shape
-        out = np.zeros((h, 2 * w), dtype=plane.dtype)
-        out[:, 0::2] = plane
-        right = np.concatenate([plane[:, 1:], plane[:, -1:]], axis=1)
-        out[:, 1::2] = (plane + right + 1) >> 1
-        plane = out
-    if ev:
-        h, w = plane.shape
-        out = np.zeros((2 * h, w), dtype=plane.dtype)
-        out[0::2, :] = plane
-        below = np.concatenate([plane[1:, :], plane[-1:, :]], axis=0)
-        out[1::2, :] = (plane + below + 1) >> 1
-        plane = out
-    return plane
-
-
-def _hier_frame_scan(content: bytes, scan_at: int, sof: bytes,
-                     differential: bool, sos: bytes, qt: dict,
-                     huff: dict):
-    """Decode one hierarchical frame's single interleaved scan into an
-    int64 plane of the frame's declared dimensions: Huffman DC/AC per
-    block, dequant, batched IDCT, level shift for non-differential
-    frames only (differential frames code signed corrections, F.1.5),
-    MCU-grid padding cropped at emission.  Returns ``(plane, position
-    of the marker after the entropy data)``."""
-    import math
-
-    import numpy as np
-
-    if len(sof) < 9:
-        raise ValueError(f"short hierarchical SOF body ({len(sof)} bytes)")
-    precision = sof[0]
-    fh = int.from_bytes(sof[1:3], "big")
-    fw = int.from_bytes(sof[3:5], "big")
-    if precision != 8:
-        raise ValueError(
-            f"hierarchical frames decode at precision 8 only (got "
-            f"{precision})"
-        )
-    if sof[5] != 1 or sof[7] != 0x11:
-        raise ValueError(
-            "hierarchical decode is 1-component, unsampled only here")
-    if fw <= 0 or fh <= 0:
-        raise ValueError(f"degenerate hierarchical frame {fw}x{fh}")
-    qid = sof[8]
-    if qid not in qt:
-        raise ValueError(f"JPEG references missing quant table {qid}")
-    q = qt[qid]
-    if len(sos) < 6 or sos[0] != 1:
-        raise ValueError("hierarchical SOS must carry one component")
-    dc_id, ac_id = sos[2] >> 4, sos[2] & 0x0F
-    if (0, dc_id) not in huff or (1, ac_id) not in huff:
-        raise ValueError("JPEG scan references missing Huffman tables")
-    dc_tab, ac_tab = huff[(0, dc_id)], huff[(1, ac_id)]
-
-    # entropy data runs to the next non-stuffing marker (EXP / SOF / EOI;
-    # restart intervals are not part of the hierarchical envelope here)
-    end = scan_at
-    while True:
-        if end + 1 >= len(content):
-            raise ValueError("truncated JPEG: hierarchical scan ran out")
-        if content[end] == 0xFF and content[end + 1] not in (0x00,):
-            break
-        end += 1
-    br = _BitReader(content[scan_at:end])
-    mcus_x, mcus_y = (fw + 7) // 8, (fh + 7) // 8
-    coeff_blocks = []
-    prev_dc = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            coeffs = [0] * 64
-            t = _huff_decode(br, dc_tab)
-            diff = _extend(br.bits(t), t) if t else 0
-            if differential:
-                coeffs[0] = diff * q[0]  # PRED = 0 (F.1.5)
-            else:
-                prev_dc += diff
-                coeffs[0] = prev_dc * q[0]
-            k = 1
-            while k < 64:
-                sym = _huff_decode(br, ac_tab)
-                if sym == 0x00:
-                    break
-                run, size = sym >> 4, sym & 0x0F
-                if size == 0:
-                    if run != 15:
-                        raise ValueError(f"corrupt JPEG: AC symbol {sym:02x}")
-                    k += 16
-                    continue
-                k += run
-                if k >= 64:
-                    raise ValueError("corrupt JPEG: AC run past block end")
-                coeffs[k] = _extend(br.bits(size), size) * q[k]
-                k += 1
-            block = np.zeros((8, 8))
-            for k2, (r, c) in enumerate(_ZIGZAG):
-                if coeffs[k2]:
-                    block[r][c] = float(coeffs[k2])
-            coeff_blocks.append((8 * my, 8 * mx, block))
-    c_norm = [1.0 / math.sqrt(2.0)] + [1.0] * 7
-    cos_tab = [
-        [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-        for x in range(8)
-    ]
-    m_basis = np.array(
-        [[c_norm[v] * cos_tab[y][v] for v in range(8)] for y in range(8)]
-    )
-    plane = np.zeros((mcus_y * 8, mcus_x * 8), dtype=np.int64)
-    b = np.stack([t[2] for t in coeff_blocks])
-    spat = np.einsum("yv,nvu,xu->nyx", m_basis, b, m_basis)
-    shift = 0 if differential else 128
-    vals = np.round(spat / 4.0).astype(np.int64) + shift
-    for (oy, ox, _), sp in zip(coeff_blocks, vals):
-        plane[oy : oy + 8, ox : ox + 8] = sp
-    return plane[:fh, :fw], end
-
-
-def _decode_jpeg_hierarchical(content: bytes) -> dict:
-    """Hierarchical JPEG decode (T.81 Annex J, r17): DHP-declared output
-    frame, a non-differential first frame, then EXP reference
-    expansions and differential frames accumulated onto the reference.
-    Non-differential reconstructions clamp to [0, 255] as any
-    sequential output does; differential corrections add SIGNED values
-    and the running reference clamps after each accumulation (per-stage
-    reconstruction clamping).  Grayscale Huffman frames only --
-    matching the synthesizer's envelope; anything else raises.
-    Strictness contract identical to the other decoders."""
-    import numpy as np
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    dhp = None
-    ref = None
-    pending_exp: tuple[int, int] | None = None
-    cur_sof = None
-    cur_diff = False
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
-        if marker == 0xDB:
-            at = 0
-            while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                if at + 65 > len(body):
-                    raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
-                at += 65
-        elif marker == 0xC4:
-            at = 0
-            while at < len(body):
-                tc, th = body[at] >> 4, body[at] & 0x0F
-                lengths = list(body[at + 1 : at + 17])
-                nsym = sum(lengths)
-                symbols = list(body[at + 17 : at + 17 + nsym])
-                if len(symbols) < nsym:
-                    raise ValueError("truncated JPEG: DHT cut")
-                codes = _canonical_codes(lengths, symbols)
-                huff[(tc, th)] = {(c, n): s for s, (c, n) in codes.items()}
-                at += 17 + nsym
-        elif marker == 0xDE:
-            if dhp is not None:
-                raise ValueError("duplicate DHP segment")
-            dhp = body
-        elif marker == 0xDF:
-            if len(body) < 1:
-                raise ValueError("truncated JPEG: EXP cut")
-            eh, ev = body[0] >> 4, body[0] & 0x0F
-            if (eh, ev) not in ((1, 0), (0, 1), (1, 1)):
-                raise ValueError(f"bad EXP expansion flags 0x{body[0]:02x}")
-            if ref is None:
-                raise ValueError("EXP before any reference frame")
-            pending_exp = (eh, ev)
-        elif marker in (0xC0, 0xC1, 0xC5):
-            cur_sof = body
-            cur_diff = marker == 0xC5
-        elif marker in (0xC2, 0xC3, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                f"unsupported hierarchical frame SOF 0x{marker:02x} "
-                "(sequential Huffman frames only here)"
-            )
-        elif marker == 0xDA:
-            if dhp is None:
-                raise ValueError("hierarchical scan before DHP")
-            if cur_sof is None:
-                raise ValueError("hierarchical scan before a frame header")
-            plane, pos = _hier_frame_scan(
-                content, pos + ln, cur_sof, cur_diff, body, qt, huff)
-            if pending_exp is not None:
-                ref = _hier_expand(ref, *pending_exp)
-                pending_exp = None
-            fh, fw = plane.shape
-            if cur_diff:
-                if ref is None:
-                    raise ValueError("differential frame without reference")
-                if ref.shape[0] < fh or ref.shape[1] < fw:
-                    raise ValueError(
-                        "differential frame exceeds the (expanded) "
-                        f"reference: {fw}x{fh} vs "
-                        f"{ref.shape[1]}x{ref.shape[0]}"
-                    )
-                ref = np.clip(ref[:fh, :fw] + plane, 0, 255)
-            else:
-                if ref is not None:
-                    raise ValueError(
-                        "second non-differential frame in a hierarchical "
-                        "sequence"
-                    )
-                ref = np.clip(plane, 0, 255)
-            cur_sof = None
-            continue  # pos already sits at the next marker
-        pos += ln
-    if pos != len(content):
-        raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - pos})")
-    if dhp is None or ref is None:
-        raise ValueError("hierarchical JPEG without DHP or frames")
-    if len(dhp) < 9:
-        raise ValueError(f"short DHP body ({len(dhp)} bytes)")
-    if dhp[0] != 8 or dhp[5] != 1:
-        raise ValueError(
-            f"unsupported DHP (precision={dhp[0]}, components={dhp[5]}); "
-            "8-bit grayscale only"
-        )
-    oh = int.from_bytes(dhp[1:3], "big")
-    ow = int.from_bytes(dhp[3:5], "big")
-    if ow <= 0 or oh <= 0:
-        raise ValueError(f"degenerate DHP dimensions {ow}x{oh}")
-    if ref.shape[0] < oh or ref.shape[1] < ow:
-        raise ValueError(
-            f"hierarchical pyramid ended below the DHP dimensions: "
-            f"{ref.shape[1]}x{ref.shape[0]} vs {ow}x{oh}"
-        )
-    return {
-        "fmt": "jpeg_gray_hier",
-        "width": ow,
-        "height": oh,
-        "pixels": ref[:oh, :ow].ravel().tolist(),
-    }
-
-
-# --------------------------------------------------------------------------
-# Arithmetic-coded progressive JPEG (SOF10, r17): the Annex G scan
-# scripts (spectral selection + successive approximation) driven by the
-# same QM-coder.  The banded first-scan model generalizes the
-# sequential Figure F.5 coder to G.2.2's Ss..Se bounds and Al point
-# transform; refinement scans use the G.2.2 correction-bit model (EOB
-# decision only beyond the previous stage's end-of-block, correction
-# bits on the st+2 bin for known coefficients, newly-significant
-# +-(1<<Al) placements with the sign on the fixed state).  Statistics
-# areas reset at every scan start and at every restart marker.
-# --------------------------------------------------------------------------
 
 def _qm_enc_ac_band(enc: "_QMEncoder", bins: list, ac: list, kx: int,
                     ss: int, se: int, al: int) -> None:
-    """Encode one block's AC band ``ss..se`` at point transform ``al``
-    (first scan, Ah=0).  ``ac`` is the 63-length zigzag AC list; the
-    sequential coder is the ``(1, 63, 0)`` special case."""
+    """Encode one block's AC band ``ss..se`` of the 64-entry zigzag list
+    ``ac`` at point transform ``al`` (Figure F.5 generalized by G.2.2 to
+    first progressive scans): EOB decision, zero run, sign on the fixed
+    state, magnitude tree split at Kx.  The sequential coder is the
+    ``(1, 63, 0)`` case."""
     ke = se
-    while ke >= ss and abs(ac[ke - 1]) >> al == 0:
+    while ke >= ss and abs(ac[ke]) >> al == 0:
         ke -= 1
     k = ss
     while k <= ke:
         st = 3 * (k - 1)
         enc.encode(bins, st, 0)  # not EOB here
-        v = ac[k - 1]
+        v = ac[k]
         t = abs(v) >> al
         while t == 0:
             enc.encode(bins, st + 1, 0)
             st += 3
             k += 1
-            v = ac[k - 1]
+            v = ac[k]
             t = abs(v) >> al
         enc.encode(bins, st + 1, 1)
         enc.encode_fixed(1 if v < 0 else 0)
@@ -3714,7 +2813,8 @@ def _qm_enc_ac_band(enc: "_QMEncoder", bins: list, ac: list, kx: int,
 def _qm_dec_ac_band(dec: "_QMDecoder", bins: list, ac: list, kx: int,
                     ss: int, se: int, al: int) -> None:
     """Decode one block's AC band ``ss..se`` at point transform ``al``
-    into the 63-length zigzag list (first scan, Ah=0)."""
+    into the 64-entry zigzag list (Figure F.20; sequential = ``(1, 63,
+    0)``)."""
     k = ss
     while k <= se:
         st = 3 * (k - 1)
@@ -3746,7 +2846,7 @@ def _qm_dec_ac_band(dec: "_QMDecoder", bins: list, ac: list, kx: int,
             if dec.decode(bins, st):
                 t |= mm
         t += 1
-        ac[k - 1] = (-t if sign else t) << al
+        ac[k] = (-t if sign else t) << al
         k += 1
 
 
@@ -3756,10 +2856,10 @@ def _qm_enc_ac_refine(enc: "_QMEncoder", bins: list, ac: list,
     (G.2.2): ``ac`` holds FINAL coefficient values; this scan carries
     bit ``al`` given the previous stage coded down to bit ``ah``."""
     ke = se
-    while ke >= ss and abs(ac[ke - 1]) >> al == 0:
+    while ke >= ss and abs(ac[ke]) >> al == 0:
         ke -= 1
     kex = ke
-    while kex >= 1 and abs(ac[kex - 1]) >> ah == 0:
+    while kex >= 1 and abs(ac[kex]) >> ah == 0:
         kex -= 1
     k = ss
     while k <= ke:
@@ -3767,7 +2867,7 @@ def _qm_enc_ac_refine(enc: "_QMEncoder", bins: list, ac: list,
         if k > kex:
             enc.encode(bins, st, 0)  # not EOB yet
         while True:
-            v = ac[k - 1]
+            v = ac[k]
             if abs(v) >> ah:  # known-nonzero from the previous stage
                 enc.encode(bins, st + 2, (abs(v) >> al) & 1)
                 break
@@ -3794,7 +2894,7 @@ def _qm_dec_ac_refine(dec: "_QMDecoder", bins: list, ac: list,
     toward zero-history/known-history per G.2.2."""
     p1, m1 = 1 << al, -(1 << al)
     kex = se
-    while kex >= 1 and ac[kex - 1] == 0:
+    while kex >= 1 and ac[kex] == 0:
         kex -= 1
     k = ss
     while k <= se:
@@ -3803,12 +2903,12 @@ def _qm_dec_ac_refine(dec: "_QMDecoder", bins: list, ac: list,
             if dec.decode(bins, st):
                 break  # EOB
         while True:
-            if ac[k - 1]:
+            if ac[k]:
                 if dec.decode(bins, st + 2):
-                    ac[k - 1] += m1 if ac[k - 1] < 0 else p1
+                    ac[k] += m1 if ac[k] < 0 else p1
                 break
             if dec.decode(bins, st + 1):
-                ac[k - 1] = m1 if dec.decode_fixed() else p1
+                ac[k] = m1 if dec.decode_fixed() else p1
                 break
             st += 3
             k += 1
@@ -3816,6 +2916,50 @@ def _qm_dec_ac_refine(dec: "_QMDecoder", bins: list, ac: list,
                 raise ValueError(
                     "corrupt arithmetic JPEG: AC refinement overflow")
         k += 1
+
+
+#: DAC conditioning the arithmetic synthesizers declare, per table id:
+#: (DC L, DC U, AC Kx).  Chroma's DC bound differs (U=2 against luma's
+#: U=1), so a decoder that picks the wrong table desynchronizes the
+#: category chain loudly.
+_QM_COND = ((0, 1, 5), (0, 2, 3))
+
+
+def synth_jpeg_gray_arith(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL arithmetic-coded (SOF9) grayscale JFIF: the exact image
+    class of :func:`synth_jpeg_gray_ac` (true reconstruction the integer
+    ``128 + m + n*s(x)*s(y)``) entropy-coded with the T.81 Annex D
+    QM-coder under the Annex F DC/AC statistical models instead of
+    Huffman tables: a DAC segment declares the default conditioning (DC
+    L=0/U=1, AC Kx=5) explicitly, there is no DHT, and the frame marker
+    is SOF9.  Odd doc_ids add a DRI segment (``doc_id % 3 + 1`` MCUs
+    per entropy segment): each segment is an INDEPENDENT arithmetic
+    codeword joined by cycling RSTn markers per F.1.4.4/E.2.4, so the
+    same closed form also gates arithmetic restart framing."""
+    return _synth_seq(width, height, partial(_blk_ycc, doc_id), marker=0xC9,
+                      restart=doc_id % 3 + 1 if doc_id % 2 else 0, cond=_QM_COND[:1])
+
+
+def synth_jpeg_color_arith(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL arithmetic-coded 3-component 4:4:4 SOF9 JFIF: the exact
+    image class of :func:`synth_jpeg_color` QM-coded under per-TABLE
+    statistics areas -- luma on DC/AC conditioning tables 0, Cb and Cr
+    SHARING tables 1 while carrying independent DC predictors and
+    conditioning categories, exactly the Annex F ownership split.  The
+    decoded pixels must equal ``decode_jpeg_gray(synth_jpeg_color(...))``
+    bit-for-bit -- pinned in tests as a cross-entropy-coding invariant."""
+    return _synth_seq(width, height, partial(_blk_ycc, doc_id), comps=_YCC,
+                      quant=(1, 2), marker=0xC9, cond=_QM_COND)
+
+
+def synth_jpeg_gray12_arith(width: int, height: int, doc_id: int) -> bytes:
+    """A 12-bit arithmetic-coded SOF9 grayscale JFIF: the exact constant
+    -block class of :func:`synth_jpeg_gray12` QM-coded -- DC-only blocks
+    drive the EOB-at-k=1 AC path and DC magnitude categories up to 15
+    through the Annex F tree.  Pixels must equal
+    ``decode_jpeg_gray(synth_jpeg_gray12(...))``."""
+    return _synth_seq(width, height, partial(_blk_gray12, doc_id), marker=0xC9,
+                      precision=12, cond=_QM_COND[:1])
 
 
 def synth_jpeg_gray_arith_prog(width: int, height: int, doc_id: int) -> bytes:
@@ -3830,328 +2974,77 @@ def synth_jpeg_gray_arith_prog(width: int, height: int, doc_id: int) -> bytes:
     refinements at bits 4 and 3.  Stopping at Al=3 is lossless for
     this class (coefficients are multiples of 8), and because the
     block constants are NOT generally multiples of 32, the refinement
-    scans carry real bits -- including newly-significant placements
-    (e.g. ``o in (2,3)`` first appears at bit 4).  Odd doc_ids add
-    restart segmentation in EVERY scan (fresh coder, statistics and DC
-    predictor per segment).  Statistics areas reset at every scan
-    start per G.2.2/F.1.4.4.1.4."""
-    mcus_x, mcus_y = (width + 7) // 8, (height + 7) // 8
-    order = [(bx, by) for by in range(mcus_y) for bx in range(mcus_x)]
-    restart = doc_id % 3 + 1 if doc_id % 2 else 0
-
-    def coefs(bx: int, by: int) -> tuple[int, list]:
-        m = (17 * doc_id + 5 * bx + 11 * by) % 129 - 64
-        o = (13 * doc_id + bx + 7 * by) % 21
-        n = (7 * doc_id + 3 * bx + by) % 27
-        ac = [0] * 63
-        ac[13] = 8 * o  # zigzag 14 = (0,4)
-        ac[38] = 8 * n  # zigzag 39 = (4,4)
-        return 8 * m, ac
-
-    def segments() -> list:
-        if not restart:
-            return [order]
-        return [order[i:i + restart] for i in range(0, len(order), restart)]
-
-    def join(parts: list) -> bytes:
-        return parts[0] + b"".join(
-            bytes((0xFF, 0xD0 + (i % 8))) + p for i, p in enumerate(parts[1:])
-        )
-
-    def scan_dc_first(al: int) -> bytes:
-        parts = []
-        for seg in segments():
-            enc = _QMEncoder()
-            bins = _qm_fresh_bins(_QM_DC_BINS)
-            ctx = 0
-            prev = 0
-            for bx, by in seg:
-                dc, _ = coefs(bx, by)
-                sv = dc >> al
-                ctx = _qm_enc_dc(enc, bins, sv - prev, ctx, (0, 1))
-                prev = sv
-            parts.append(enc.flush())
-        return join(parts)
-
-    def scan_dc_refine(al: int) -> bytes:
-        parts = []
-        for seg in segments():
-            enc = _QMEncoder()
-            for bx, by in seg:
-                dc, _ = coefs(bx, by)
-                enc.encode_fixed((dc >> al) & 1)
-            parts.append(enc.flush())
-        return join(parts)
-
-    def scan_ac_first(ss: int, se: int, al: int) -> bytes:
-        parts = []
-        for seg in segments():
-            enc = _QMEncoder()
-            bins = _qm_fresh_bins(_QM_AC_BINS)
-            for bx, by in seg:
-                _, ac = coefs(bx, by)
-                _qm_enc_ac_band(enc, bins, ac, 5, ss, se, al)
-            parts.append(enc.flush())
-        return join(parts)
-
-    def scan_ac_refine(ss: int, se: int, al: int) -> bytes:
-        parts = []
-        for seg in segments():
-            enc = _QMEncoder()
-            bins = _qm_fresh_bins(_QM_AC_BINS)
-            for bx, by in seg:
-                _, ac = coefs(bx, by)
-                _qm_enc_ac_refine(enc, bins, ac, ss, se, al, al + 1)
-            parts.append(enc.flush())
-        return join(parts)
-
-    def seg_hdr(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    def sos(ss: int, se: int, ah: int, al: int, scan: bytes) -> bytes:
-        return seg_hdr(
-            0xDA, bytes((1, 1, 0x00, ss, se, (ah << 4) | al))) + scan
-
-    dqt = seg_hdr(0xDB, bytes((0x00,)) + bytes([1] * 64))
-    dac = seg_hdr(0xCC, bytes((0x00, 0x10, 0x10, 0x05)))
-    sof10 = seg_hdr(
-        0xCA,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    dri = seg_hdr(0xDD, restart.to_bytes(2, "big")) if restart else b""
-    return (
-        b"\xff\xd8" + dqt + dac + sof10 + dri
-        + sos(0, 0, 0, 5, scan_dc_first(5))
-        + sos(0, 0, 5, 4, scan_dc_refine(4))
-        + sos(0, 0, 4, 3, scan_dc_refine(3))
-        + sos(1, 31, 0, 5, scan_ac_first(1, 31, 5))
-        + sos(32, 63, 0, 5, scan_ac_first(32, 63, 5))
-        + sos(1, 31, 5, 4, scan_ac_refine(1, 31, 4))
-        + sos(32, 63, 5, 4, scan_ac_refine(32, 63, 4))
-        + sos(1, 31, 4, 3, scan_ac_refine(1, 31, 3))
-        + sos(32, 63, 4, 3, scan_ac_refine(32, 63, 3))
-        + b"\xff\xd9"
-    )
+    scans carry real bits -- including newly-significant placements.
+    Odd doc_ids add restart segmentation in EVERY scan.  Statistics
+    areas reset at every scan start per G.2.2/F.1.4.4.1.4."""
+    w = _JpegWriter((1,), cond=_QM_COND[:1])
+    w.frame(0xCA, width, height, restart=doc_id % 3 + 1 if doc_id % 2 else 0)
+    for ss, se, ah, al in ((0, 0, 0, 5), (0, 0, 5, 4), (0, 0, 4, 3),
+                           (1, 31, 0, 5), (32, 63, 0, 5), (1, 31, 5, 4),
+                           (32, 63, 5, 4), (1, 31, 4, 3), (32, 63, 4, 3)):
+        w.scan(partial(_blk_arith_prog, doc_id), _GRAY, ss, se, ah, al)
+    return w.done()
 
 
-def _decode_jpeg_arith_progressive(content: bytes) -> dict:
-    """Arithmetic-coded progressive JPEG decode (SOF10, r17): the scan
-    script accumulates per-block coefficient arrays -- DC first scans
-    under the Annex F conditioning model at the scan's point transform,
-    DC refinements as fixed-state bits ORed into position Al, AC first
-    scans under the banded Figure F.5 model, AC refinements under the
-    G.2.2 correction-bit model -- with statistics areas reset at every
-    scan start and at every restart marker (fresh coder registers, DC
-    predictor and conditioning category per entropy segment), then one
-    dequantization + batched IDCT + emission through the shared
-    :func:`_jpeg_emit` tail.  Grayscale (1-component) 8-bit frames
-    only, matching the synthesizer's envelope.  Refused loudly:
-    multi-component SOF10, non-decrementing approximation (Ah != Al+1
-    on refinements), band/approximation violations.  Strictness
-    contract identical to the other decoders."""
-    import numpy as np
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qt: dict[int, list[int]] = {}
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_cond: dict[int, int] = {}
-    sof = None
-    restart_interval = 0
-    width = height = 0
-    qid = 0
-    td = ta = 0
-    nblocks_x = nblocks_y = 0
-    blocks: list = []  # per block index: [dc] + 63 AC zigzag values
-    saw_scan = False
-    dc_al_seen: int | None = None
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
-        if marker == 0xDB:
-            at = 0
-            while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                if at + 65 > len(body):
-                    raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
-                at += 65
-        elif marker == 0xCC:
-            at = 0
-            while at + 1 < len(body):
-                tc, tb = body[at] >> 4, body[at] & 0x0F
-                cs = body[at + 1]
-                if tc == 0:
-                    low, up = cs & 0x0F, cs >> 4
-                    if low > up or up > 15:
-                        raise ValueError(
-                            f"bad DC arithmetic conditioning 0x{cs:02x}")
-                    dc_cond[tb] = (low, up)
-                elif tc == 1:
-                    if not 1 <= cs <= 63:
-                        raise ValueError(
-                            f"bad AC arithmetic conditioning {cs}")
-                    ac_cond[tb] = cs
-                else:
-                    raise ValueError(f"bad DAC table class {tc}")
-                at += 2
-        elif marker == 0xCA:
-            if sof is not None:
-                raise ValueError("corrupt JPEG: multiple SOF markers")
-            sof = body
-            if len(sof) < 9:
-                raise ValueError(f"short JPEG SOF10 body ({len(sof)} bytes)")
-            if sof[0] != 8 or sof[5] != 1 or sof[7] != 0x11:
-                raise ValueError(
-                    "arithmetic progressive decode is 8-bit grayscale, "
-                    "unsampled only here"
-                )
-            height = int.from_bytes(sof[1:3], "big")
-            width = int.from_bytes(sof[3:5], "big")
-            if width <= 0 or height <= 0:
-                raise ValueError(
-                    f"degenerate JPEG dimensions {width}x{height}")
-            qid = sof[8]
-            nblocks_x = (width + 7) // 8
-            nblocks_y = (height + 7) // 8
-            blocks = [[0] * 64 for _ in range(nblocks_x * nblocks_y)]
-        elif marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG: DRI cut")
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:
-            if sof is None:
-                raise ValueError("arithmetic progressive scan before SOF10")
-            if len(body) < 6 or body[0] != 1:
-                raise ValueError(
-                    "arithmetic progressive SOS must carry one component")
-            td, ta = body[2] >> 4, body[2] & 0x0F
-            ss_, se_ = body[3], body[4]
-            ah, al = body[5] >> 4, body[5] & 0x0F
-            if ss_ == 0:
-                if se_ != 0:
-                    raise ValueError(
-                        "DC scan must have Se=0 (spectral selection)")
-            else:
-                if not 1 <= ss_ <= se_ <= 63:
-                    raise ValueError(
-                        f"bad AC band {ss_}..{se_} in progressive scan")
-            if ah != 0 and ah != al + 1:
-                raise ValueError(
-                    f"non-decrementing successive approximation "
-                    f"(Ah={ah}, Al={al})"
-                )
-            if ss_ == 0:
-                if ah == 0:
-                    dc_al_seen = al
-                elif dc_al_seen is None:
-                    raise ValueError("DC refinement before DC first scan")
-            scan_at = pos + ln
-            end = scan_at
-            while True:
-                if end + 1 >= len(content):
-                    raise ValueError("truncated JPEG: no scan terminator")
-                if content[end] == 0xFF and content[end + 1] not in (0x00,):
-                    if content[end + 1] in range(0xD0, 0xD8):
-                        end += 2  # restart marker: inside the scan
-                        continue
-                    break
-                end += 1
-            scan = content[scan_at:end]
-            dec = _QMDecoder(scan)
-            dc_bins = _qm_fresh_bins(_QM_DC_BINS)
-            ac_bins = _qm_fresh_bins(_QM_AC_BINS)
-            prev = 0
-            ctx = 0
-            for bi in range(len(blocks)):
-                if restart_interval and bi and bi % restart_interval == 0:
-                    mk, nxt = dec.seek_marker()
-                    want = 0xD0 + (bi // restart_interval - 1) % 8
-                    if mk != want:
-                        raise ValueError(
-                            f"arithmetic JPEG: expected RST{want - 0xD0}, "
-                            f"got marker 0x{mk:02x}"
-                        )
-                    dec = _QMDecoder(scan, nxt)
-                    dc_bins = _qm_fresh_bins(_QM_DC_BINS)
-                    ac_bins = _qm_fresh_bins(_QM_AC_BINS)
-                    prev = 0
-                    ctx = 0
-                b = blocks[bi]
-                if ss_ == 0:
-                    if ah == 0:
-                        diff, ctx = _qm_dec_dc(
-                            dec, dc_bins, ctx, dc_cond.get(td, (0, 1)))
-                        prev += diff
-                        b[0] = prev << al
-                    else:
-                        if dec.decode_fixed():
-                            b[0] |= 1 << al
-                else:
-                    ac = b[1:]  # 63-length zigzag AC view
-                    if ah == 0:
-                        _qm_dec_ac_band(
-                            dec, ac_bins, ac, ac_cond.get(ta, 5),
-                            ss_, se_, al)
-                    else:
-                        _qm_dec_ac_refine(dec, ac_bins, ac, ss_, se_, al)
-                    b[1:] = ac
-            saw_scan = True
-            pos = end
-            continue
-        pos += ln
-    if pos != len(content):
-        raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - pos})")
-    if sof is None or not saw_scan:
-        raise ValueError("arithmetic progressive JPEG without SOF10/scan")
-    if qid not in qt:
-        raise ValueError(f"JPEG references missing quant table {qid}")
-    q = qt[qid]
-    out_blocks = []
-    for bi, b in enumerate(blocks):
-        by, bx = divmod(bi, nblocks_x)
-        block = np.zeros((8, 8))
-        for k2, (r, c) in enumerate(_ZIGZAG):
-            if b[k2]:
-                block[r][c] = float(b[k2] * q[k2])
-        out_blocks.append((8 * by, 8 * bx, block))
-    comps = [(1, q, 1, 1)]
-    return _jpeg_emit([out_blocks], comps, 1, 1,
-                      [nblocks_x * 8], [nblocks_y * 8], width, height,
-                      precision=8)
+def synth_jpeg_gray_hier(width: int, height: int, doc_id: int) -> bytes:
+    """A REAL hierarchical grayscale JPEG (T.81 Annex J): a DHP segment
+    declares the full output dimensions, a non-differential SOF1 frame
+    codes a HALF-WIDTH reference of constant 8x8 blocks
+    ``r = 64 + (31*doc_id + 17*bx + 7*by) % 128``, an EXP segment
+    orders horizontal expansion (J.1.1.2: even output = reference
+    sample, odd output = the rounded mean of the two neighbours, right
+    edge by replication), and a differential SOF5 frame adds constant
+    per-block corrections ``d = (23*doc_id + 13*bx + 3*by) % 65 - 32``
+    at full resolution -- DC-only blocks coded with ZERO prediction
+    (F.1.5: PRED is 0 in differential frames) and no level shift.  The
+    final image is the integer closed form ``expand(r) + d`` (range
+    [32, 223]: no clamp engages), which the external oracle replays
+    arithmetically."""
+    w = _JpegWriter((1,), _dht(_HT_DC, _HT_EOB))
+    w.frame(0xDE, width, height)
+    w.frame(0xC1, (width + 1) // 2, height)
+    w.scan(lambda ci, bx, by: (8 * ((31 * doc_id + 17 * bx + 7 * by) % 128 - 64), ()))
+    w.seg(0xDF, bytes((0x10,)))  # EXP: Eh=1, Ev=0
+    w.frame(0xC5, width, height)
+    w.scan(lambda ci, bx, by: (8 * ((23 * doc_id + 13 * bx + 3 * by) % 65 - 32), ()))
+    return w.done()
 
 
-# --------------------------------------------------------------------------
-# Lossless JPEG (SOF3, Annex H, r17): predictive coding, no DCT.
-# --------------------------------------------------------------------------
+def _hier_expand(plane, eh: int, ev: int):
+    """J.1.1.2 reference expansion: double along the flagged axes; even
+    outputs copy the reference sample, odd outputs are the rounded mean
+    ``(a + b + 1) >> 1`` of the two neighbours, with the trailing
+    sample's right/bottom neighbour replicated at the edge."""
+    if eh:
+        h, w = plane.shape
+        out = np.zeros((h, 2 * w), dtype=plane.dtype)
+        out[:, 0::2] = plane
+        right = np.concatenate([plane[:, 1:], plane[:, -1:]], axis=1)
+        out[:, 1::2] = (plane + right + 1) >> 1
+        plane = out
+    if ev:
+        h, w = plane.shape
+        out = np.zeros((2 * h, w), dtype=plane.dtype)
+        out[0::2, :] = plane
+        below = np.concatenate([plane[1:, :], plane[-1:, :]], axis=0)
+        out[1::2, :] = (plane + below + 1) >> 1
+        plane = out
+    return plane
 
-#: lossless DHT: difference categories 0..16 all at code length 5
-#: (canonical-valid: 17 of 32 slots).  Category 16 is the spec's
-#: no-extra-bits "difference = 32768" escape.
-_DC_LOSSLESS_LENGTHS = [0, 0, 0, 0, 17, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_DC_LOSSLESS_SYMBOLS = list(range(17))
 
-
-def _lossless_predict(ra: int, rb: int, rc: int, sel: int) -> int:
-    """T.81 Table H.1 predictors 1..7 (full-precision arithmetic, no
-    clamping of the predictor value)."""
+def _lossless_pred(v: list, i: int, width: int, start: int, sel: int) -> int:
+    """Prediction of sample ``i`` (Annex H, 8-bit, point transform 0):
+    ``2^(P-1)`` at the first sample of the scan or restart segment
+    beginning at ``start``, Ra along that segment's first line, Rb at
+    later line starts, else Table H.1 predictor ``sel`` (full-precision
+    arithmetic, no clamping of the predictor value)."""
+    if i == start:
+        return 128
+    if i // width == start // width:
+        return v[i - 1]
+    if i % width == 0:
+        return v[i - width]
+    ra, rb, rc = v[i - 1], v[i - width], v[i - width - 1]
     if sel == 1:
         return ra
     if sel == 2:
@@ -4175,93 +3068,53 @@ def synth_jpeg_gray_lossless(width: int, height: int, doc_id: int) -> bytes:
     DCT), predictor selector ``doc_id % 7 + 1`` in the scan header so
     all seven Table H.1 predictors rotate through the gate, point
     transform 0.  Differences are coded with DC-style Huffman
-    categories (modulo-2^16 arithmetic per H.1.2.1); the first sample
-    predicts ``2^(P-1)``, the rest of the first line predicts from Ra,
-    later line starts from Rb, interior samples from the selected
-    predictor.  Odd doc_ids add a DRI segment (``(doc_id % 5 + 2) * 8``
-    samples per restart interval): at each RSTn the entropy coder
-    byte-aligns and the prediction resets to the scan-start state
-    (H.2.2 -- the next sample predicts as a first sample again)."""
+    categories (modulo-2^16 arithmetic per H.1.2.1), predicted by
+    :func:`_lossless_pred`.  Odd doc_ids add a DRI segment
+    (``(doc_id % 5 + 2) * 8`` samples per restart interval): at each
+    RSTn the entropy coder byte-aligns and the prediction resets to the
+    scan-start state (H.2.2)."""
     sel = doc_id % 7 + 1
     restart = (doc_id % 5 + 2) * 8 if doc_id % 2 else 0
-    dc_codes = _canonical_codes(_DC_LOSSLESS_LENGTHS, _DC_LOSSLESS_SYMBOLS)
-
-    def px(x: int, y: int) -> int:
-        return (7 * doc_id + 3 * x + 5 * y) % 256
-
-    parts = []
-    bw = _BitWriter()
-    n_in_segment = 0
-    seg_start = 0  # raster index where the current segment begins
-    for i in range(width * height):
-        if restart and n_in_segment == restart:
+    w = _JpegWriter((), _dht(_HT_LOSSLESS))
+    w.frame(0xC3, width, height, restart=restart)
+    vals = [(7 * doc_id + 3 * x + 5 * y) % 256 for y in range(height) for x in range(width)]
+    parts, bw, start = [], _BitWriter(), 0
+    for i, v in enumerate(vals):
+        if restart and i and i % restart == 0:
             parts.append(bw.flush())
-            bw = _BitWriter()
-            n_in_segment = 0
-            seg_start = i
-        y, x = divmod(i, width)
-        sy = seg_start // width
-        if i == seg_start:
-            pred = 128  # 2^(P-1-Pt)
-        elif y == sy:
-            # still on the segment's first line: predict from Ra
-            pred = px(x - 1, y)
-        elif x == 0:
-            pred = px(x, y - 1)  # line start: Rb
-        else:
-            pred = _lossless_predict(
-                px(x - 1, y), px(x, y - 1), px(x - 1, y - 1), sel)
-        diff = (px(x, y) - pred) & 0xFFFF
-        if diff >= 0x8000:
-            diff -= 0x10000
-        t = _jpeg_category(diff)
-        code, nbits = dc_codes[t]
-        bw.write(code, nbits)
-        if t and t < 16:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        n_in_segment += 1
+            bw, start = _BitWriter(), i
+        diff = (v - _lossless_pred(vals, i, width, start, sel)) & 0xFFFF
+        _huff_put(bw, w.codes[0x00], diff - 0x10000 if diff >= 0x8000 else diff)
     parts.append(bw.flush())
-    scan = parts[0] + b"".join(
-        bytes((0xFF, 0xD0 + (i % 8))) + p for i, p in enumerate(parts[1:])
-    )
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes((0xFF, marker)) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dht = seg(
-        0xC4,
-        bytes((0x00,)) + bytes(_DC_LOSSLESS_LENGTHS)
-        + bytes(_DC_LOSSLESS_SYMBOLS),
-    )
-    sof3 = seg(
-        0xC3,
-        bytes((8,)) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-        + bytes((1, 1, 0x11, 0)),
-    )
-    dri = seg(0xDD, restart.to_bytes(2, "big")) if restart else b""
-    sos = seg(0xDA, bytes((1, 1, 0x00, sel, 0, 0)))
-    return b"\xff\xd8" + dht + sof3 + dri + sos + scan + b"\xff\xd9"
+    w.scan(None, ss=sel, se=0, data=_rst_join(parts))
+    return w.done()
 
 
-def _decode_jpeg_lossless(content: bytes) -> dict:
-    """Lossless JPEG decode (SOF3, Annex H, r17): marker walk (DHT from
-    the file, no DQT needed), then sample-serial predictive decode --
-    the scan header's Ss field selects the Table H.1 predictor, the
-    first sample of a scan (or restart segment) predicts
-    ``2^(P-1-Pt)``, the remainder of that first line predicts from Ra,
-    later line starts from Rb, interior samples from the selected
-    predictor -- with DC-category Huffman differences accumulated in
-    modulo-2^16 arithmetic (H.1.2.1; category 16 is +32768 with no
-    extra bits).  Restart markers byte-align and reset the prediction
-    to the scan-start state.  Grayscale 8-bit, point transform 0 only,
-    matching the synthesizer's envelope.  Strictness contract identical
-    to the other decoders."""
+# --------------------------------------------------------------------------
+# Decode side: walker, frame model, entropy stages, emitter.
+# --------------------------------------------------------------------------
+
+def _scan_end(content: bytes, pos: int) -> int:
+    """Offset of the marker that ends the entropy-coded data starting at
+    ``pos``: the first 0xFF that is neither stuffing (0xFF00) nor part
+    of an RSTn marker."""
+    while True:
+        pos = content.find(b"\xff", pos)
+        if pos < 0 or pos + 1 >= len(content):
+            raise ValueError("truncated JPEG: scan without terminator")
+        if content[pos + 1] != 0x00 and not 0xD0 <= content[pos + 1] <= 0xD7:
+            return pos
+        pos += 2
+
+
+def _jpeg_segments(content: bytes):
+    """The one JPEG marker walk: checks SOI, then yields ``(marker, body,
+    offset)`` per segment, ``offset`` being the byte after it; past an
+    SOS it skips the entropy-coded data to the next marker.  Owns the
+    truncation, marker-sync and trailing-bytes errors; ends at EOI."""
     if content[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     pos = 2
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    sof = None
-    restart_interval = 0
     while True:
         if pos + 2 > len(content):
             raise ValueError("truncated JPEG: marker walk ran out")
@@ -4270,636 +3123,458 @@ def _decode_jpeg_lossless(content: bytes) -> dict:
         marker = content[pos + 1]
         pos += 2
         if marker == 0xD9:
-            raise ValueError("JPEG EOI before any scan")
+            if pos != len(content):
+                raise ValueError(
+                    f"trailing bytes after JPEG EOI ({len(content) - pos})")
+            return
         if pos + 2 > len(content):
             raise ValueError("truncated JPEG: segment length cut")
         ln = int.from_bytes(content[pos : pos + 2], "big")
         body = content[pos + 2 : pos + ln]
         if ln < 2 or len(body) < ln - 2:
             raise ValueError("truncated JPEG: segment body cut")
-        if marker == 0xC4:
-            at = 0
-            while at < len(body):
-                tc, th = body[at] >> 4, body[at] & 0x0F
-                lengths = list(body[at + 1 : at + 17])
-                nsym = sum(lengths)
-                symbols = list(body[at + 17 : at + 17 + nsym])
-                if len(symbols) < nsym:
-                    raise ValueError("truncated JPEG: DHT cut")
-                codes = _canonical_codes(lengths, symbols)
-                huff[(tc, th)] = {(c, n): s for s, (c, n) in codes.items()}
-                at += 17 + nsym
-        elif marker == 0xC3:
-            sof = body
-        elif marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG: DRI cut")
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:
-            scan_at = pos + ln
-            sos = body
-            break
         pos += ln
-    if sof is None:
-        raise ValueError("lossless JPEG missing SOF3")
-    if len(sof) < 9:
-        raise ValueError(f"short JPEG SOF3 body ({len(sof)} bytes)")
-    precision = sof[0]
-    height = int.from_bytes(sof[1:3], "big")
-    width = int.from_bytes(sof[3:5], "big")
-    if precision != 8 or sof[5] != 1 or sof[7] != 0x11:
-        raise ValueError(
-            "lossless decode is 8-bit grayscale, unsampled only here")
-    if width <= 0 or height <= 0:
-        raise ValueError(f"degenerate JPEG dimensions {width}x{height}")
-    if len(sos) < 6 or sos[0] != 1:
-        raise ValueError("lossless SOS must carry one component")
-    dc_id = sos[2] >> 4
-    if (0, dc_id) not in huff:
-        raise ValueError("JPEG scan references missing Huffman table")
-    table = huff[(0, dc_id)]
-    sel = sos[3]  # Ss = predictor selector
-    pt = sos[5] & 0x0F  # Al = point transform
-    if not 1 <= sel <= 7:
-        raise ValueError(f"bad lossless predictor selector {sel}")
-    if pt != 0:
-        raise ValueError("lossless point transform != 0 not decoded here")
-
-    end = scan_at
-    while True:
-        if end + 1 >= len(content):
-            raise ValueError("truncated JPEG: no EOI")
-        if content[end] == 0xFF and content[end + 1] == 0xD9:
-            break
-        end += 1
-    if end + 2 != len(content):
-        raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - end - 2})")
-    br = _BitReader(content[scan_at:end])
-    out = [0] * (width * height)
-    n_in_segment = 0
-    seg_start = 0
-    seg_n = 0
-    for i in range(width * height):
-        if restart_interval and n_in_segment == restart_interval:
-            br.consume_restart(seg_n % 8)
-            seg_n += 1
-            n_in_segment = 0
-            seg_start = i
-        y, x = divmod(i, width)
-        sy = seg_start // width
-        if i == seg_start:
-            pred = 1 << (precision - 1 - pt)
-        elif y == sy:
-            pred = out[i - 1]  # segment's first line: Ra
-        elif x == 0:
-            pred = out[i - width]  # line start: Rb
-        else:
-            pred = _lossless_predict(
-                out[i - 1], out[i - width], out[i - width - 1], sel)
-        t = _huff_decode(br, table)
-        if t == 16:
-            diff = 32768  # H.1.2.2: no appended bits
-        elif t:
-            diff = _extend(br.bits(t), t)
-        else:
-            diff = 0
-        out[i] = (pred + diff) & 0xFFFF
-        n_in_segment += 1
-    return {
-        "fmt": "jpeg_gray_lossless",
-        "width": width,
-        "height": height,
-        "pixels": out,
-    }
+        yield marker, body, pos
+        if marker == 0xDA:
+            pos = _scan_end(content, pos)
 
 
-def _decode_jpeg_arith(content: bytes) -> dict:
-    """Arithmetic-coded sequential JPEG decode (SOF9, r17): marker walk
-    with DAC conditioning parse (the conditioning COMES FROM THE FILE;
-    T.81 defaults L=0/U=1/Kx=5 apply per table only when no DAC names
-    it), QM entropy decode under the Annex F DC/AC models with
-    per-component conditioning categories and per-table statistics
-    areas, restart-marker segmentation with full coder/statistics/
-    predictor reset (F.1.4.4), then the same dequant + batched IDCT +
-    level shift emission as the Huffman decoders (shared
-    :func:`_jpeg_emit`).  Supports 1- and 3-component frames with
-    sampling factors 1-2 and 8- or 12-bit precision, mirroring the
-    sequential Huffman decoder's envelope.  Strictness contract
-    identical: truncations, bad markers, missing tables raise
-    ``ValueError``."""
-    import numpy as np
+#: Frame envelope the decoders cover, per SOFn/DHP marker: (precisions,
+#: component counts).  SOF5 occurs only as a hierarchical frame.
+_JPEG_FRAMES = {
+    0xC0: ((8,), (1, 3)), 0xC1: ((8, 12), (1, 3)), 0xC2: ((8,), (1, 3)),
+    0xC3: ((8,), (1,)), 0xC5: ((8,), (1,)), 0xC9: ((8, 12), (1, 3)),
+    0xCA: ((8,), (1,)), 0xDE: ((8,), (1,)),
+}
 
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qt: dict[int, list[int]] = {}
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_cond: dict[int, int] = {}
-    sof = None
-    scan_at = None
-    restart_interval = 0
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            raise ValueError("JPEG EOI before any scan")
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
+
+class _JpegModel:
+    """The frame model every decoder fills.  :meth:`table` parses the
+    table segments into ``qt`` (DQT), ``huff`` (DHT), ``dc_cond`` /
+    ``ac_cond`` (DAC), ``restart`` (DRI) and ``exp`` (EXP);
+    :meth:`frame` parses a SOFn/DHP into ``precision``, ``width``,
+    ``height``, ``comps`` [(id, quant table, h, v)], the MCU grid and
+    ``coef`` -- per component its padded block grid in raster order,
+    each block 64 raw coefficients in zigzag order; :meth:`scan` parses
+    an SOS.  ``process`` is the first frame marker (it picks the entropy
+    stage), ``sof`` the current frame's."""
+
+    def __init__(self) -> None:
+        self.qt: dict[int, list[int]] = {}
+        self.huff: dict[tuple[int, int], dict] = {}
+        self.dc_cond: dict[int, tuple[int, int]] = {}
+        self.ac_cond: dict[int, int] = {}
+        self.restart = 0
+        self.process = self.sof = self.dhp = self.exp = self.ref = None
+        self.dc_first = False
+        self.scans = 0
+
+    def table(self, marker: int, body: bytes) -> bool:
+        """Parse a DQT/DHT/DAC/DRI/EXP segment; False for other markers."""
+        at = 0
         if marker == 0xDB:
-            at = 0
             while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
+                if body[at] >> 4:
                     raise ValueError("16-bit quant tables not supported")
                 if at + 65 > len(body):
                     raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
-                at += 65
-        elif marker == 0xCC:  # DAC
-            at = 0
-            while at + 1 < len(body):
-                tc, tb = body[at] >> 4, body[at] & 0x0F
-                cs = body[at + 1]
-                if tc == 0:
-                    low, up = cs & 0x0F, cs >> 4
-                    if low > up or up > 15:
-                        raise ValueError(
-                            f"bad DC arithmetic conditioning 0x{cs:02x}")
-                    dc_cond[tb] = (low, up)
-                elif tc == 1:
-                    if not 1 <= cs <= 63:
-                        raise ValueError(
-                            f"bad AC arithmetic conditioning {cs}")
-                    ac_cond[tb] = cs
-                else:
-                    raise ValueError(f"bad DAC table class {tc}")
-                at += 2
-        elif marker == 0xC9:
-            sof = body
-        elif marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG: DRI cut")
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:
-            scan_at = pos + ln
-            sos = body
-            break
-        pos += ln
-    if sof is None:
-        raise ValueError("arithmetic JPEG missing SOF9")
-    if len(sof) < 9:
-        raise ValueError(f"short JPEG SOF9 body ({len(sof)} bytes)")
-    precision = sof[0]
-    height = int.from_bytes(sof[1:3], "big")
-    width = int.from_bytes(sof[3:5], "big")
-    ncomp = sof[5]
-    if precision not in (8, 12) or ncomp not in (1, 3):
-        raise ValueError(
-            f"unsupported arithmetic JPEG (precision={precision}, "
-            f"components={ncomp}); 8/12-bit, 1/3-component only"
-        )
-    if len(sof) < 6 + 3 * ncomp:
-        raise ValueError(f"short JPEG SOF9 body ({len(sof)} bytes)")
-    if width <= 0 or height <= 0:
-        raise ValueError(f"degenerate JPEG dimensions {width}x{height}")
-    comps = []  # (component id, dequant table, h factor, v factor)
-    for i in range(ncomp):
-        cid, samp, qid = sof[6 + 3 * i], sof[7 + 3 * i], sof[8 + 3 * i]
-        hs, vs = samp >> 4, samp & 0x0F
-        if hs not in (1, 2) or vs not in (1, 2):
-            raise ValueError(
-                f"unsupported JPEG sampling 0x{samp:02x}; factors beyond "
-                "1-2 not decoded here"
-            )
-        if ncomp == 1 and samp != 0x11:
-            raise ValueError(
-                f"unsupported JPEG sampling 0x{samp:02x} for grayscale")
-        if qid not in qt:
-            raise ValueError(f"JPEG references missing quant table {qid}")
-        comps.append((cid, qt[qid], hs, vs))
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    if any(hmax % c[2] or vmax % c[3] for c in comps):
-        raise ValueError(
-            "unsupported JPEG sampling: factors must divide the maxima "
-            "(integral replication upsampling only)"
-        )
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = (width + mcu_w - 1) // mcu_w
-    mcus_y = (height + mcu_h - 1) // mcu_h
-    if len(sos) < 4 + 2 * ncomp:
-        raise ValueError(f"short JPEG SOS body ({len(sos)} bytes)")
-    if sos[0] != ncomp:
-        raise ValueError(
-            "SOS component count must match SOF (single interleaved "
-            "arithmetic scan only)"
-        )
-    tabs = []  # (dc conditioning id, ac conditioning id) per component
-    for i in range(ncomp):
-        sid, tt = sos[1 + 2 * i], sos[2 + 2 * i]
-        if sid != comps[i][0]:
-            raise ValueError("SOS component order must match SOF")
-        tabs.append((tt >> 4, tt & 0x0F))
-
-    # locate EOI (RSTn markers inside the scan are not 0xD9, so the
-    # first FF D9 is the terminator, same as the Huffman walk)
-    end = scan_at
-    while True:
-        if end + 1 >= len(content):
-            raise ValueError("truncated JPEG: no EOI")
-        if content[end] == 0xFF and content[end + 1] == 0xD9:
-            break
-        end += 1
-    if end + 2 != len(content):
-        raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - end - 2})")
-    scan = content[scan_at:end]
-
-    def fresh_stats():
-        dc_b = {tb: _qm_fresh_bins(_QM_DC_BINS) for tb, _ in tabs}
-        ac_b = {tb: _qm_fresh_bins(_QM_AC_BINS) for _, tb in tabs}
-        return dc_b, ac_b
-
-    dec = _QMDecoder(scan)
-    dc_bins, ac_bins = fresh_stats()
-    prev = [0] * ncomp
-    dc_ctx = [0] * ncomp
-    pw = [mcus_x * 8 * c[2] for c in comps]
-    ph = [mcus_y * 8 * c[3] for c in comps]
-    blocks: list[list] = [[] for _ in range(ncomp)]
-    mcu_n = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_n and mcu_n % restart_interval == 0:
-                marker, nxt = dec.seek_marker()
-                want = 0xD0 + (mcu_n // restart_interval - 1) % 8
-                if marker != want:
-                    raise ValueError(
-                        f"arithmetic JPEG: expected RST{want - 0xD0}, got "
-                        f"marker 0x{marker:02x}"
-                    )
-                dec = _QMDecoder(scan, nxt)
-                dc_bins, ac_bins = fresh_stats()
-                prev = [0] * ncomp
-                dc_ctx = [0] * ncomp
-            for ci in range(ncomp):
-                _cid, q, hs, vs = comps[ci]
-                dtb, atb = tabs[ci]
-                for dy in range(vs):
-                    for dx in range(hs):
-                        diff, dc_ctx[ci] = _qm_dec_dc(
-                            dec, dc_bins[dtb], dc_ctx[ci],
-                            dc_cond.get(dtb, (0, 1)),
-                        )
-                        prev[ci] += diff
-                        ac = _qm_dec_ac(dec, ac_bins[atb],
-                                        ac_cond.get(atb, 5))
-                        block = np.zeros((8, 8))
-                        block[0][0] = float(prev[ci] * q[0])
-                        for k in range(1, 64):
-                            if ac[k - 1]:
-                                r, c = _ZIGZAG[k]
-                                block[r][c] = float(ac[k - 1] * q[k])
-                        blocks[ci].append(
-                            (8 * (my * vs + dy), 8 * (mx * hs + dx), block)
-                        )
-            mcu_n += 1
-    return _jpeg_emit(blocks, comps, hmax, vmax, pw, ph, width, height,
-                      precision=precision)
-
-
-def decode_jpeg_gray(content: bytes) -> dict:
-    """Pure-Python baseline JPEG decode for non-progressive 1-component
-    (grayscale) and 3-component color images -- 4:4:4 (r15) and
-    subsampled 4:2:0/4:2:2/4:4:0 with factors in 1-2 (r15, replication
-    upsampling) -- via: marker walk,
-    DQT/DHT table parsing (the tables COME FROM THE FILE, not from
-    constants), per-component table selection, interleaved-MCU Huffman
-    entropy decode with byte-unstuffing and per-component DC predictors,
-    zigzag dequantization, float IDCT, level shift, and -- for color --
-    libjpeg's 16-bit fixed-point integer YCbCr->RGB (jdcolor.c
-    constants), which an external SQL oracle reproduces bit-for-bit.
-    The AC path is hash-gated by ``mm_jpeg_ac_stats``.  Chroma
-    subsampling (anything but 1x1 factors) and progressive scans raise.
-    Strict: truncations, unexpected markers, missing tables, and
-    trailing bytes after EOI raise ``ValueError``.  (The name predates
-    color support; ``decode_jpeg_baseline`` is the accurate alias.)"""
-    import math
-
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    sof = None
-    sof_marker = 0xC0
-    scan_at = None
-    restart_interval = 0
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            raise ValueError("JPEG EOI before any scan")
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
-        if marker == 0xDB:
-            at = 0
-            while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                if at + 65 > len(body):
-                    raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
+                self.qt[body[at] & 0x0F] = list(body[at + 1 : at + 65])
                 at += 65
         elif marker == 0xC4:
-            at = 0
             while at < len(body):
-                tc, th = body[at] >> 4, body[at] & 0x0F
                 lengths = list(body[at + 1 : at + 17])
-                nsym = sum(lengths)
-                symbols = list(body[at + 17 : at + 17 + nsym])
-                if len(symbols) < nsym:
+                symbols = list(body[at + 17 : at + 17 + sum(lengths)])
+                if len(lengths) < 16 or len(symbols) < sum(lengths):
                     raise ValueError("truncated JPEG: DHT cut")
                 codes = _canonical_codes(lengths, symbols)
-                huff[(tc, th)] = {(c, n): s for s, (c, n) in codes.items()}
-                at += 17 + nsym
-        elif marker in (0xC0, 0xC1):
-            # SOF0 baseline (8-bit) or SOF1 extended sequential Huffman
-            # (8- or 12-bit, r16) -- identical entropy organization
-            sof = body
-            sof_marker = marker
-        elif marker == 0xC2:
-            # progressive DCT (r15): dedicated multi-scan decoder
-            return _decode_jpeg_progressive(content)
-        elif marker == 0xC9:
-            # extended sequential, arithmetic coding (r17): dedicated
-            # QM-coder decoder
-            return _decode_jpeg_arith(content)
-        elif marker == 0xDE:
-            # hierarchical (Annex J, r17): DHP before any frame header;
-            # without this route the walk would skip the DHP and decode
-            # the half-resolution first frame as the whole image
-            return _decode_jpeg_hierarchical(content)
-        elif marker == 0xCA:
-            # progressive, arithmetic coding (r17): dedicated QM decoder
-            return _decode_jpeg_arith_progressive(content)
-        elif marker == 0xC3:
-            # lossless, Huffman (Annex H, r17): predictive decoder
-            return _decode_jpeg_lossless(content)
-        elif marker in (0xC5, 0xC6, 0xC7,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(f"non-baseline JPEG (SOF 0x{marker:02x}) not supported")
+                self.huff[(body[at] >> 4, body[at] & 0x0F)] = {
+                    (c, n): s for s, (c, n) in codes.items()}
+                at += 17 + len(symbols)
+        elif marker == 0xCC:
+            for at in range(0, len(body) - 1, 2):
+                tc, tb, cs = body[at] >> 4, body[at] & 0x0F, body[at + 1]
+                if tc == 0:
+                    if cs & 0x0F > cs >> 4:
+                        raise ValueError(
+                            f"bad DC arithmetic conditioning 0x{cs:02x}")
+                    self.dc_cond[tb] = (cs & 0x0F, cs >> 4)
+                elif tc == 1:
+                    if not 1 <= cs <= 63:
+                        raise ValueError(f"bad AC arithmetic conditioning {cs}")
+                    self.ac_cond[tb] = cs
+                else:
+                    raise ValueError(f"bad DAC table class {tc}")
         elif marker == 0xDD:
-            # DRI (r16): restart intervals decode for real -- the MCU
-            # loop consumes RSTn markers at segment boundaries and resets
-            # the DC predictors per T.81 E.2.4.
             if len(body) < 2:
                 raise ValueError("truncated JPEG: DRI cut")
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:
-            scan_at = pos + ln
-            sos = body
-            break
-        pos += ln
-    if sof is None:
-        raise ValueError("JPEG missing SOF0")
-    # A length-consistent but short SOF0/SOS body must raise ValueError
-    # (which decode_media's strictness fallthrough catches), not IndexError
-    # (which would crash the operator) -- ADVICE r14.  A 1-component SOF0
-    # body is precision(1) + dims(4) + ncomp(1) + 3 bytes per component.
-    if len(sof) < 9:
-        raise ValueError(f"short JPEG SOF0 body ({len(sof)} bytes)")
-    precision = sof[0]
-    height = int.from_bytes(sof[1:3], "big")
-    width = int.from_bytes(sof[3:5], "big")
-    ncomp = sof[5]
-    # SOF0 is 8-bit by definition (T.81 Table B.2); SOF1 adds 12-bit,
-    # supported for grayscale (r16) AND color (r17: the fixed-point
-    # YCbCr constants are precision-independent ratios -- 12-bit libjpeg
-    # only moves CENTERJSAMPLE/MAXJSAMPLE to 2048/4095, jdcolor.c).
-    ok = (precision == 8 and ncomp in (1, 3)) or (
-        precision == 12 and sof_marker == 0xC1 and ncomp in (1, 3)
-    )
-    if not ok:
-        raise ValueError(
-            f"unsupported JPEG (precision={precision}, components={ncomp}, "
-            f"SOF 0x{sof_marker:02x}); 8-bit sequential or 12-bit SOF1, "
-            "1/3-component only"
-        )
-    # SOF0 body: precision(1) + dims(4) + ncomp(1) + 3 bytes/component.
-    if len(sof) < 6 + 3 * ncomp:
-        raise ValueError(f"short JPEG SOF0 body ({len(sof)} bytes)")
-    if width <= 0 or height <= 0:
-        raise ValueError(f"degenerate JPEG dimensions {width}x{height}")
-    comps = []  # (component id, dequant table, h factor, v factor)
-    for i in range(ncomp):
-        cid, samp, qid = sof[6 + 3 * i], sof[7 + 3 * i], sof[8 + 3 * i]
-        hs, vs = samp >> 4, samp & 0x0F
-        if hs not in (1, 2) or vs not in (1, 2):
+            self.restart = int.from_bytes(body[:2], "big")
+        elif marker == 0xDF:
+            if len(body) < 1:
+                raise ValueError("truncated JPEG: EXP cut")
+            if body[0] not in (0x10, 0x01, 0x11):
+                raise ValueError(f"bad EXP expansion flags 0x{body[0]:02x}")
+            if self.ref is None:
+                raise ValueError("EXP before any reference frame")
+            self.exp = (body[0] >> 4, body[0] & 0x0F)
+        else:
+            return False
+        return True
+
+    def frame(self, marker: int, body: bytes, want: int | None) -> None:
+        """Parse a SOFn/DHP body.  The first frame marker picks the
+        process (``want``, when given, must match); after it only a
+        hierarchical pyramid takes more frames (SOF0/1/5 under its DHP)."""
+        if self.process is None:
+            if marker not in _JPEG_STAGES:
+                raise ValueError(f"non-baseline JPEG (SOF 0x{marker:02x}) not supported")
+            if want not in (None, marker):
+                raise ValueError(
+                    f"JPEG process SOF 0x{marker:02x}, not 0x{want:02x}")
+            self.process = marker
+        elif self.process != 0xDE:
+            raise ValueError("corrupt JPEG: multiple SOF markers")
+        elif marker not in (0xC0, 0xC1, 0xC5):
             raise ValueError(
-                f"unsupported JPEG sampling 0x{samp:02x}; factors beyond "
-                "1-2 not decoded here"
-            )
-        if ncomp == 1 and samp != 0x11:
+                f"unsupported hierarchical frame SOF 0x{marker:02x} "
+                "(sequential Huffman frames only here)")
+        name = "DHP" if marker == 0xDE else f"SOF{marker - 0xC0}"
+        if len(body) < 6:
+            raise ValueError(f"short JPEG {name} body ({len(body)} bytes)")
+        precision, ncomp = body[0], body[5]
+        height = int.from_bytes(body[1:3], "big")
+        width = int.from_bytes(body[3:5], "big")
+        precisions, ncomps = _JPEG_FRAMES[marker]
+        if precision not in precisions or ncomp not in ncomps or (
+                self.process == 0xDE and (precision, ncomp) != (8, 1)):
             raise ValueError(
-                f"unsupported JPEG sampling 0x{samp:02x} for grayscale"
-            )
-        if qid not in qt:
-            raise ValueError(f"JPEG references missing quant table {qid}")
-        comps.append((cid, qt[qid], hs, vs))
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    if any(hmax % c[2] or vmax % c[3] for c in comps):
-        raise ValueError(
-            "unsupported JPEG sampling: factors must divide the maxima "
-            "(integral replication upsampling only)"
-        )
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    # Partial MCUs (r15): the scan always carries a WHOLE number of MCUs
-    # (the encoder pads the image to the MCU grid per the spec); the
-    # decoder decodes the ceil grid and crops to the declared dimensions.
-    mcus_x = (width + mcu_w - 1) // mcu_w
-    mcus_y = (height + mcu_h - 1) // mcu_h
-    # SOS body: Ns(1) + (id, tables)(2) per component + Ss/Se/AhAl(3).
-    if len(sos) < 4 + 2 * ncomp:
-        raise ValueError(f"short JPEG SOS body ({len(sos)} bytes)")
-    if sos[0] != ncomp:
-        raise ValueError(
-            "SOS component count must match SOF (single interleaved "
-            "baseline scan only)"
-        )
-    tabs = []  # (dc table, ac table) per component, in SOF order
-    for i in range(ncomp):
-        sid, tt = sos[1 + 2 * i], sos[2 + 2 * i]
-        if sid != comps[i][0]:
+                f"unsupported JPEG {name} (precision={precision}, "
+                f"components={ncomp})")
+        if len(body) < 6 + 3 * ncomp:
+            raise ValueError(f"short JPEG {name} body ({len(body)} bytes)")
+        if width <= 0 or height <= 0:
+            raise ValueError(f"degenerate JPEG dimensions {width}x{height}")
+        if marker == 0xDE:
+            self.dhp = (width, height)
+            return
+        comps = []
+        for i in range(ncomp):
+            cid, samp, qid = body[6 + 3 * i : 9 + 3 * i]
+            if samp >> 4 not in (1, 2) or samp & 0x0F not in (1, 2):
+                raise ValueError(
+                    f"unsupported JPEG sampling 0x{samp:02x}; factors beyond "
+                    "1-2 not decoded here")
+            if ncomp == 1 and samp != 0x11:
+                raise ValueError(
+                    f"unsupported JPEG sampling 0x{samp:02x} for grayscale")
+            comps.append((cid, qid, samp >> 4, samp & 0x0F))
+        self.sof, self.precision, self.width, self.height = marker, precision, width, height
+        self.comps = comps
+        self.hmax = max(c[2] for c in comps)
+        self.vmax = max(c[3] for c in comps)
+        # the scan always carries a WHOLE number of MCUs (the encoder pads
+        # the image to the MCU grid); emission crops
+        self.mcus_x = (width + 8 * self.hmax - 1) // (8 * self.hmax)
+        self.mcus_y = (height + 8 * self.vmax - 1) // (8 * self.vmax)
+        self.coef = [
+            [[0] * 64 for _ in range(self.mcus_x * h * self.mcus_y * v)]
+            for _cid, _qid, h, v in comps
+        ]
+
+    def scan(self, body: bytes) -> tuple:
+        """Parse an SOS body into ``([(component index, DC table, AC
+        table)], Ss, Se, Ah, Al)``, checking the scan against the
+        process: a progressive scan is one legal stage, a sequential one
+        interleaves every component."""
+        ns = body[0] if body else 0
+        if len(body) < 4 + 2 * ns:
+            raise ValueError(f"short JPEG SOS body ({len(body)} bytes)")
+        ids = [c[0] for c in self.comps]
+        sel = []
+        for i in range(ns):
+            sid, tt = body[1 + 2 * i], body[2 + 2 * i]
+            if sid not in ids:
+                raise ValueError(f"JPEG scan references unknown component {sid}")
+            sel.append((ids.index(sid), tt >> 4, tt & 0x0F))
+        if any(a[0] >= b[0] for a, b in zip(sel, sel[1:])):
             raise ValueError("SOS component order must match SOF")
-        dc_id, ac_id = tt >> 4, tt & 0x0F
-        if (0, dc_id) not in huff or (1, ac_id) not in huff:
+        ss, se, a = body[1 + 2 * ns : 4 + 2 * ns]
+        ah, al = a >> 4, a & 0x0F
+        if self.sof in (0xC2, 0xCA):
+            if ss == 0 and se != 0:
+                raise ValueError("corrupt JPEG: DC scan with Se != 0")
+            if ss > se or se > 63:
+                raise ValueError(f"corrupt JPEG: scan band {ss}..{se}")
+            if ss and ns != 1:
+                raise ValueError("corrupt JPEG: interleaved AC scan")
+            if ah and ah != al + 1:
+                raise ValueError(
+                    f"non-decrementing successive approximation (Ah={ah}, Al={al})")
+            if ss == 0 and ah and not self.dc_first:
+                raise ValueError("DC refinement before DC first scan")
+            self.dc_first |= ss == 0
+        elif ns != len(self.comps):
+            raise ValueError(
+                "SOS component count must match SOF (single interleaved "
+                "sequential scan only)")
+        elif self.sof != 0xC3:  # sequential DCT: the band is always 0..63
+            ss, se, ah, al = 0, 63, 0, 0
+        return sel, ss, se, ah, al
+
+
+def _scan_units(m: _JpegModel, sel: list):
+    """Coding order of one scan (T.81 A.2): per unit -- an MCU when the
+    scan interleaves components, else one block of the component's own
+    grid (ceil of its sample dimensions over 8, which can be smaller
+    than the padded MCU grid) -- the ``(selection index, coefficient
+    block)`` pairs."""
+    if len(sel) == 1:
+        _cid, _qid, hs, vs = m.comps[sel[0][0]]
+        grid, stride = m.coef[sel[0][0]], m.mcus_x * hs
+        gh = ((m.height * vs + m.vmax - 1) // m.vmax + 7) // 8
+        gw = ((m.width * hs + m.hmax - 1) // m.hmax + 7) // 8
+        for by in range(gh):
+            for bx in range(gw):
+                yield ((0, grid[by * stride + bx]),)
+        return
+    comps = [(j, m.coef[ci], m.comps[ci][2], m.comps[ci][3])
+             for j, (ci, _td, _ta) in enumerate(sel)]
+    for my in range(m.mcus_y):
+        for mx in range(m.mcus_x):
+            yield [(j, grid[(my * vs + dy) * m.mcus_x * hs + mx * hs + dx])
+                   for j, grid, hs, vs in comps
+                   for dy in range(vs) for dx in range(hs)]
+
+
+def _huff_decode_scan(m: _JpegModel, sel, ss, se, ah, al, data) -> None:
+    """Huffman entropy stage: a sequential scan (SOF0/1, hierarchical
+    frames) decodes DC + AC 1..63 per block with per-component DC
+    predictors (none in a differential SOF5 frame, F.1.5); a progressive
+    scan (SOF2) decodes one stage -- DC first/refinement bits, AC first
+    with EOB runs across blocks, AC refinement.  Every ``m.restart``
+    units consume the next RSTn and reset the predictors; an EOB run
+    that would cross the boundary is corrupt."""
+    tabs = []
+    for _ci, td, ta in sel:
+        dct = m.huff.get((0, td)) if ss == 0 and not ah else None
+        act = m.huff.get((1, ta)) if se else None
+        if (dct is None and ss == 0 and not ah) or (act is None and se):
             raise ValueError("JPEG scan references missing Huffman tables")
-        tabs.append((huff[(0, dc_id)], huff[(1, ac_id)]))
-
-    # locate EOI: entropy data runs to the 0xFFD9 marker (0xFF00 is data)
-    end = scan_at
-    while True:
-        if end + 1 >= len(content):
-            raise ValueError("truncated JPEG: no EOI")
-        if content[end] == 0xFF and content[end + 1] == 0xD9:
-            break
-        end += 1
-    if end + 2 != len(content):
-        raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - end - 2})"
-        )
-    br = _BitReader(content[scan_at:end])
-
-    # the batched-einsum IDCT + emission live in _jpeg_emit (shared with
-    # the progressive decoder)
-    import numpy as np
-
-    def read_coeffs(dc_tab, ac_tab, q, prev_dc):
-        coeffs = [0] * 64
-        t = _huff_decode(br, dc_tab)
-        diff = _extend(br.bits(t), t) if t else 0
-        prev_dc += diff
-        coeffs[0] = prev_dc * q[0]
-        k = 1
-        while k < 64:
-            sym = _huff_decode(br, ac_tab)
-            if sym == 0x00:  # EOB
-                break
-            run, size = sym >> 4, sym & 0x0F
-            if size == 0:
-                if run != 15:
-                    raise ValueError(f"corrupt JPEG: AC symbol {sym:02x}")
-                k += 16  # ZRL
+        tabs.append((dct, act))
+    br = _BitReader(data)
+    seq, ri = m.sof != 0xC2, m.restart
+    prev = [0] * len(sel)
+    eobrun = 0
+    for u, unit in enumerate(_scan_units(m, sel)):
+        if ri and u and u % ri == 0:
+            br.consume_restart((u // ri - 1) % 8)
+            if eobrun:
+                raise ValueError("corrupt JPEG: EOB run crosses restart boundary")
+            prev = [0] * len(sel)
+        for j, blk in unit:
+            dct, act = tabs[j]
+            if ss == 0 and ah:
+                blk[0] |= br.bits(1) << al
+            elif ss == 0:
+                diff = _huff_diff(br, dct)
+                prev[j] = diff if m.sof == 0xC5 else prev[j] + diff
+                blk[0] = prev[j] << al
+            if not se:
                 continue
-            k += run
-            if k >= 64:
-                raise ValueError("corrupt JPEG: AC run past block end")
-            coeffs[k] = _extend(br.bits(size), size) * q[k]
-            k += 1
-        # de-zigzag into the 8x8 frequency block
-        block = np.zeros((8, 8))
-        for k2, (r, c) in enumerate(_ZIGZAG):
-            if coeffs[k2]:
-                block[r][c] = float(coeffs[k2])
-        return block, prev_dc
-
-    # Interleaved MCU scan: per MCU each component contributes h*v 8x8
-    # blocks in raster order (dx fastest), in SOF component order, with an
-    # independent DC predictor per component (the spec's per-component
-    # PRED).  Entropy decode stays bit-serial Python (inherently
-    # sequential); the IDCT + round + clamp runs as ONE batched numpy
-    # einsum per component afterwards.  Component i's plane is padded to
-    # the MCU grid and cropped at emission; subsampled planes are
-    # upsampled by sample REPLICATION (nearest-neighbor -- the simple
-    # conformant choice; JFIF leaves the upsampling filter to the
-    # decoder), which keeps the whole decode integer-certifiable.
-    pw = [mcus_x * 8 * c[2] for c in comps]  # PADDED plane dims (MCU grid)
-    ph = [mcus_y * 8 * c[3] for c in comps]
-    blocks: list[list] = [[] for _ in range(ncomp)]  # (oy, ox, coeff block)
-    prev = [0] * ncomp
-    mcu_n = 0  # MCUs decoded so far (restart bookkeeping, T.81 E.2.4)
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_n and mcu_n % restart_interval == 0:
-                # segment boundary: byte-align, consume RSTn (n cycles
-                # 0..7 in segment order), reset every DC predictor
-                br.consume_restart((mcu_n // restart_interval - 1) % 8)
-                prev = [0] * ncomp
-            for ci in range(ncomp):
-                _cid, q, hs, vs = comps[ci]
-                dc_tab, ac_tab = tabs[ci]
-                for dy in range(vs):
-                    for dx in range(hs):
-                        blk, prev[ci] = read_coeffs(dc_tab, ac_tab, q, prev[ci])
-                        blocks[ci].append(
-                            (8 * (my * vs + dy), 8 * (mx * hs + dx), blk)
-                        )
-            mcu_n += 1
-    return _jpeg_emit(blocks, comps, hmax, vmax, pw, ph, width, height,
-                      precision=precision)
+            if ah:
+                eobrun = _huff_refine(br, act, blk, ss, se, al, eobrun)
+            elif eobrun:
+                eobrun -= 1
+            else:
+                eobrun = _huff_ac(br, act, blk, max(ss, 1), se, al)
+                if seq and eobrun:
+                    raise ValueError("corrupt JPEG: EOB run in a sequential scan")
+    br.done()
 
 
-def _jpeg_emit(blocks, comps, hmax, vmax, pw, ph, width, height,
-               precision: int = 8) -> dict:
-    """Shared tail of the baseline and progressive decoders: batched IDCT
-    over each component's de-zigzagged DEQUANTIZED blocks, level shift,
-    clamp, padded-plane scatter, crop, and (for 3 components) libjpeg's
-    16-bit fixed-point integer YCbCr->RGB (jdcolor.c constants
+def _qm_decode_scan(m: _JpegModel, sel, ss, se, ah, al, data) -> None:
+    """QM entropy stage (SOF9 sequential, SOF10 progressive): DC under the
+    Annex F conditioning model at the scan's point transform (the
+    conditioning COMES FROM THE FILE; T.81 defaults L=0/U=1/Kx=5 apply
+    per table only when no DAC names it), DC refinements as fixed-state
+    bits, AC bands under Figure F.5, AC refinements under the G.2.2
+    correction-bit model; statistics areas are per table, predictors
+    and conditioning categories per component.  Every restart segment
+    is an independent codeword: fresh coder, statistics, predictors and
+    categories after the expected RSTn."""
+    ri, lo = m.restart, max(ss, 1)
+    for u, unit in enumerate(_scan_units(m, sel)):
+        if u == 0 or ri and u % ri == 0:
+            nxt = 0
+            if u:
+                mk, nxt = dec.seek_marker()
+                want = 0xD0 + (u // ri - 1) % 8
+                if mk != want:
+                    raise ValueError(
+                        f"arithmetic JPEG: expected RST{want - 0xD0}, got "
+                        f"marker 0x{mk:02x}")
+            dec = _QMDecoder(data, nxt)
+            dc_bins = {td: _qm_fresh_bins(_QM_DC_BINS) for _, td, _ in sel} if ss == 0 and not ah else {}
+            ac_bins = {ta: _qm_fresh_bins(_QM_AC_BINS) for *_, ta in sel} if se else {}
+            prev, ctx = [0] * len(sel), [0] * len(sel)
+        for j, blk in unit:
+            _ci, td, ta = sel[j]
+            if ss == 0 and ah:
+                if dec.decode_fixed():
+                    blk[0] |= 1 << al
+            elif ss == 0:
+                diff, ctx[j] = _qm_dec_dc(dec, dc_bins[td], ctx[j], m.dc_cond.get(td, (0, 1)))
+                prev[j] += diff
+                blk[0] = prev[j] << al
+            if se and ah:
+                _qm_dec_ac_refine(dec, ac_bins[ta], blk, lo, se, al)
+            elif se:
+                _qm_dec_ac_band(dec, ac_bins[ta], blk, m.ac_cond.get(ta, 5), lo, se, al)
+
+
+def _lossless_decode_scan(m: _JpegModel, sel, ss, se, ah, al, data) -> None:
+    """Lossless stage (SOF3, Annex H): sample-serial predictive decode --
+    Ss selects the Table H.1 predictor (:func:`_lossless_pred`) -- with
+    DC-category Huffman differences accumulated modulo 2^16.  Restart
+    markers byte-align and reset the prediction to the scan-start state.
+    Point transform 0 only."""
+    tab = m.huff.get((0, sel[0][1]))
+    if tab is None:
+        raise ValueError("JPEG scan references missing Huffman table")
+    if not 1 <= ss <= 7:
+        raise ValueError(f"bad lossless predictor selector {ss}")
+    if al:
+        raise ValueError("lossless point transform != 0 not decoded here")
+    br = _BitReader(data)
+    out = m.samples = [0] * (m.width * m.height)
+    start = 0
+    for i in range(len(out)):
+        if m.restart and i and i % m.restart == 0:
+            br.consume_restart((i // m.restart - 1) % 8)
+            start = i
+        out[i] = (_lossless_pred(out, i, m.width, start, ss) + _huff_diff(br, tab)) & 0xFFFF
+    br.done()
+
+
+def _hier_decode_scan(m: _JpegModel, sel, ss, se, ah, al, data) -> None:
+    """Hierarchical stage (Annex J): the frame's sequential Huffman scan
+    becomes an unclamped plane (:func:`_jpeg_emit`), then either the
+    pyramid's reference (the one non-differential frame) or a
+    differential correction added onto the reference after any pending
+    EXP expansion; the running reference clamps to [0, 255] after each
+    accumulation (per-stage reconstruction clamping)."""
+    _huff_decode_scan(m, sel, ss, se, ah, al, data)
+    plane = _jpeg_emit(m)
+    if m.exp is not None:
+        m.ref, m.exp = _hier_expand(m.ref, *m.exp), None
+    fh, fw = plane.shape
+    if m.sof == 0xC5:
+        if m.ref is None:
+            raise ValueError("differential frame without reference")
+        if m.ref.shape[0] < fh or m.ref.shape[1] < fw:
+            raise ValueError(
+                "differential frame exceeds the (expanded) reference: "
+                f"{fw}x{fh} vs {m.ref.shape[1]}x{m.ref.shape[0]}")
+        m.ref = np.clip(m.ref[:fh, :fw] + plane, 0, 255)
+    elif m.ref is not None:
+        raise ValueError("second non-differential frame in a hierarchical sequence")
+    else:
+        m.ref = np.clip(plane, 0, 255)
+    m.sof = None  # one scan per frame
+
+
+#: entropy stage per process (first frame marker)
+_JPEG_STAGES = {
+    0xC0: _huff_decode_scan, 0xC1: _huff_decode_scan, 0xC2: _huff_decode_scan,
+    0xC3: _lossless_decode_scan, 0xC9: _qm_decode_scan, 0xCA: _qm_decode_scan,
+    0xDE: _hier_decode_scan,
+}
+
+
+def _jpeg_decode(content: bytes, want: int | None = None) -> dict:
+    """Decode through the shared core: walk the segments into the frame
+    model, run each SOS through the process's entropy stage, then emit.
+    Strict: truncations, unexpected markers, missing tables and trailing
+    bytes after EOI raise ``ValueError``."""
+    m = _JpegModel()
+    for marker, body, at in _jpeg_segments(content):
+        if m.table(marker, body):
+            continue
+        if marker in _JPEG_SOF or marker == 0xDE:
+            m.frame(marker, body, want)
+        elif marker == 0xDA:
+            if m.sof is None:
+                raise ValueError("JPEG scan before a frame header")
+            sel, ss, se, ah, al = m.scan(body)
+            data = content[at : _scan_end(content, at)]
+            if not m.restart and any(bytes((0xFF, 0xD0 + i)) in data for i in range(8)):
+                raise ValueError("corrupt JPEG: restart marker without DRI")
+            _JPEG_STAGES[m.process](m, sel, ss, se, ah, al, data)
+            m.scans += 1
+    if not m.scans:
+        raise ValueError("JPEG EOI before any scan")
+    if m.process == 0xC3:
+        return {"fmt": "jpeg_gray_lossless", "width": m.width,
+                "height": m.height, "pixels": m.samples}
+    if m.process == 0xDE:
+        ow, oh = m.dhp
+        if m.ref.shape[0] < oh or m.ref.shape[1] < ow:
+            raise ValueError(
+                "hierarchical pyramid ended below the DHP dimensions: "
+                f"{m.ref.shape[1]}x{m.ref.shape[0]} vs {ow}x{oh}")
+        return {"fmt": "jpeg_gray_hier", "width": ow, "height": oh,
+                "pixels": m.ref[:oh, :ow].ravel().tolist()}
+    return _jpeg_emit(m)
+
+
+def _jpeg_emit(m: _JpegModel):
+    """The one block-to-pixel emitter: per component, dequantize the
+    zigzag coefficients, de-zigzag, run the batched float IDCT (one
+    einsum), round, level shift and clamp, scatter the blocks onto the
+    padded MCU-grid plane and crop; 3 components then go through
+    libjpeg's 16-bit fixed-point integer YCbCr->RGB (jdcolor.c constants
     FIX(1.40200)=91881, FIX(0.34414)=22554, FIX(0.71414)=46802,
     FIX(1.77200)=116130; >> on int64 is an arithmetic floor shift in
     numpy exactly as on a Python int, same as libjpeg's DESCALE -- pure
     INTEGER arithmetic, so an external SQL oracle reproduces the
-    conversion bit-for-bit).  Subsampled chroma reads via replication
-    index grids (x // rx, y // ry), vectorized."""
-    import math
-
-    import numpy as np
-
-    ncomp = len(comps)
-    c_norm = [1.0 / math.sqrt(2.0)] + [1.0] * 7
-    cos_tab = [
-        [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-        for x in range(8)
-    ]
-    m_basis = np.array(
-        [[c_norm[v] * cos_tab[y][v] for v in range(8)] for y in range(8)]
-    )
+    conversion bit-for-bit), subsampled chroma read by replication
+    (x // rx, y // ry).  A hierarchical frame returns its cropped plane
+    instead: unclamped, level-shifted unless differential (F.1.5)."""
+    hier = m.process == 0xDE
+    shift = 0 if m.sof == 0xC5 else 1 << (m.precision - 1)
+    maxv = (1 << m.precision) - 1
     planes = []
-    for ci in range(ncomp):
-        plane = np.zeros((ph[ci], pw[ci]), dtype=np.int64)
-        if blocks[ci]:
-            b = np.stack([t[2] for t in blocks[ci]])
-            spat = np.einsum("yv,nvu,xu->nyx", m_basis, b, m_basis)
-            vals = np.clip(
-                np.round(spat / 4.0).astype(np.int64) + (1 << (precision - 1)),
-                0,
-                (1 << precision) - 1,
-            )
-            for (oy, ox, _), sp in zip(blocks[ci], vals):
-                plane[oy : oy + 8, ox : ox + 8] = sp
-        planes.append(plane)
-    if ncomp == 1:
-        # crop the padded MCU-grid plane to the declared dimensions
-        pixels = planes[0][:height, :width].ravel().tolist()
+    for ci, (_cid, qid, hs, vs) in enumerate(m.comps):
+        if qid not in m.qt:
+            raise ValueError(f"JPEG references missing quant table {qid}")
+        bh, bw = m.mcus_y * vs, m.mcus_x * hs
+        coef = np.array(m.coef[ci], dtype=np.int64) * np.array(m.qt[qid], dtype=np.int64)
+        blocks = coef.take(_ZIGZAG_INV, axis=1).reshape(-1, 8, 8).astype(np.float64)
+        spat = np.einsum("yv,nvu,xu->nyx", _IDCT_BASIS, blocks, _IDCT_BASIS)
+        vals = np.round(spat / 4.0).astype(np.int64) + shift
+        if not hier:
+            vals = np.clip(vals, 0, maxv)
+        planes.append(vals.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(8 * bh, 8 * bw))
+    width, height = m.width, m.height
+    if hier:
+        return planes[0][:height, :width]
+    if len(planes) == 1:
         return {
-            "fmt": "jpeg_gray" if precision == 8 else "jpeg_gray12",
+            "fmt": "jpeg_gray" if m.precision == 8 else "jpeg_gray12",
             "width": width, "height": height,
-            "pixels": pixels,
+            "pixels": planes[0][:height, :width].ravel().tolist(),
         }
     xs = np.arange(width)
     ys = np.arange(height)
 
     def up(ci: int) -> "np.ndarray":
-        rx, ry = hmax // comps[ci][2], vmax // comps[ci][3]
+        rx, ry = m.hmax // m.comps[ci][2], m.vmax // m.comps[ci][3]
         return planes[ci][(ys // ry)[:, None], (xs // rx)[None, :]]
 
-    # 12-bit color (r17): the FIX() constants are precision-independent
-    # ratios; libjpeg's 12-bit build changes only CENTERJSAMPLE (2048)
-    # and MAXJSAMPLE (4095), which is exactly what the level shift above
-    # already parameterized.  Products stay < 2^28, exact in binary64,
-    # so the SQL oracle's floor-division replay remains bit-for-bit.
-    center = 1 << (precision - 1)
-    maxv = (1 << precision) - 1
+    # 12-bit color: the FIX() constants are precision-independent ratios;
+    # libjpeg's 12-bit build changes only CENTERJSAMPLE (2048) and
+    # MAXJSAMPLE (4095).  Products stay < 2^28, exact in binary64, so the
+    # SQL oracle's floor-division replay remains bit-for-bit.
+    center = 1 << (m.precision - 1)
     yy = up(0)
     cb = up(1) - center
     cr = up(2) - center
@@ -4908,416 +3583,57 @@ def _jpeg_emit(blocks, comps, hmax, vmax, pw, ph, width, height,
     b = np.clip(yy + ((116130 * cb + 32768) >> 16), 0, maxv)
     pixels = list(zip(r.ravel().tolist(), g.ravel().tolist(), b.ravel().tolist()))
     return {
-        "fmt": "jpeg_rgb" if precision == 8 else "jpeg_rgb12",
+        "fmt": "jpeg_rgb" if m.precision == 8 else "jpeg_rgb12",
         "width": width, "height": height, "pixels": pixels,
     }
 
 
-#: accurate name for the 1-or-3-component baseline decoder above
-decode_jpeg_baseline = decode_jpeg_gray
+def decode_jpeg_gray(content: bytes) -> dict:
+    """Pure-Python JPEG decode for every process the codec core covers,
+    picked by the first frame marker: sequential Huffman SOF0/SOF1
+    (8/12-bit, grayscale or 3-component color with sampling factors 1-2
+    under replication upsampling, partial MCUs padded and cropped),
+    progressive SOF2, lossless SOF3, arithmetic SOF9/SOF10 and
+    hierarchical (DHP) pyramids.  The tables COME FROM THE FILE; color
+    converts with libjpeg's fixed-point YCbCr->RGB, which an external SQL
+    oracle reproduces bit-for-bit.  Other processes (SOF5-7, SOF11,
+    SOF13-15 as a first frame) raise.  Strict: truncations, unexpected
+    markers, missing tables and trailing bytes after EOI raise
+    ``ValueError``.  (The name predates color support.)"""
+    return _jpeg_decode(content)
 
 
 def _decode_jpeg_progressive(content: bytes) -> dict:
-    """Progressive (SOF2) JPEG decode, spectral-selection profile (r15):
-    multiple scans accumulate the coefficient arrays -- an interleaved DC
-    scan (or per-component non-interleaved DC scans), then per-component
-    AC scans over ``Ss..Se`` bands with EOBRUN run-length coding across
-    blocks, ZRL, and the ``Al`` point transform on first scans -- then
-    one dequantization + batched IDCT + emission through the same
-    :func:`_jpeg_emit` tail as the baseline decoder.
+    """Progressive (SOF2) decode: multi-scan coefficient accumulation --
+    DC scans interleaved or per component, AC band scans with EOB runs,
+    successive-approximation refinement of both (T.81 G.1.2), restart
+    intervals in every scan type -- then :func:`_jpeg_emit`."""
+    return _jpeg_decode(content, 0xC2)
 
-    Successive-approximation refinement scans (Ah > 0) decode too
-    (r15): DC refinement reads one raw bit per block into position Al;
-    AC refinement runs the T.81 G.1.2.3 correction-bit algorithm (new
-    +-(1<<Al) placements among zero-history positions, correction bits
-    for every nonzero-history coefficient passed over, EOBRUN-covered
-    blocks still consuming their corrections).  Restart intervals
-    decode for real (r16): RSTn markers are consumed at unit boundaries
-    (MCUs in interleaved scans, blocks in non-interleaved ones) with
-    byte re-alignment, DC predictor reset, and a loud raise when an EOB
-    run would cross a restart boundary.  Refused loudly:
-    non-decrementing approximation sequences.
-    Strictness contract as baseline: truncations, missing tables, band
-    violations, trailing bytes after EOI raise."""
-    import numpy as np
 
-    if content[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    sof = None
-    comps: list[tuple[int, int, int, int]] = []  # (cid, qid, h, v)
-    coeffs: list = []  # per comp: np (blocks_y, blocks_x, 64) raw values
-    hmax = vmax = mcus_x = mcus_y = width = height = 0
-    saw_scan = False
-    ri_state = {"ri": 0}  # DRI restart interval (units per segment)
+def _decode_jpeg_arith(content: bytes) -> dict:
+    """Arithmetic-coded sequential (SOF9) decode: the QM stage under the
+    file's DAC conditioning, 1 or 3 components, 8 or 12 bits."""
+    return _jpeg_decode(content, 0xC9)
 
-    def parse_sof(body: bytes) -> None:
-        nonlocal sof, comps, coeffs, hmax, vmax, mcus_x, mcus_y, width, height
-        if sof is not None:
-            raise ValueError("corrupt JPEG: multiple SOF markers")
-        sof = body
-        if len(body) < 6:
-            raise ValueError(f"short JPEG SOF2 body ({len(body)} bytes)")
-        precision = body[0]
-        height = int.from_bytes(body[1:3], "big")
-        width = int.from_bytes(body[3:5], "big")
-        ncomp = body[5]
-        if precision != 8 or ncomp not in (1, 3):
-            raise ValueError(
-                f"unsupported progressive JPEG (precision={precision}, "
-                f"components={ncomp})"
-            )
-        if len(body) < 6 + 3 * ncomp:
-            raise ValueError(f"short JPEG SOF2 body ({len(body)} bytes)")
-        if width <= 0 or height <= 0:
-            raise ValueError(f"degenerate JPEG dimensions {width}x{height}")
-        for i in range(ncomp):
-            cid, samp, qid = body[6 + 3 * i], body[7 + 3 * i], body[8 + 3 * i]
-            hs, vs = samp >> 4, samp & 0x0F
-            if hs not in (1, 2) or vs not in (1, 2):
-                raise ValueError(f"unsupported JPEG sampling 0x{samp:02x}")
-            comps.append((cid, qid, hs, vs))
-        hmax = max(c[2] for c in comps)
-        vmax = max(c[3] for c in comps)
-        if any(hmax % c[2] or vmax % c[3] for c in comps):
-            raise ValueError("unsupported JPEG sampling: non-dividing factors")
-        mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-        mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-        coeffs = [
-            np.zeros((mcus_y * c[3], mcus_x * c[2], 64), dtype=np.int64)
-            for c in comps
-        ]
 
-    def comp_grid(ci: int) -> tuple[int, int]:
-        """Non-interleaved scan block grid: ceil of the COMPONENT's sample
-        dims over 8 (T.81 A.2.2), which can be smaller than the padded
-        interleaved MCU grid when dimensions are partial."""
-        _cid, _qid, hs, vs = comps[ci]
-        cw = (width * hs + hmax - 1) // hmax
-        ch = (height * vs + vmax - 1) // vmax
-        return (ch + 7) // 8, (cw + 7) // 8
+def _decode_jpeg_arith_progressive(content: bytes) -> dict:
+    """Arithmetic-coded progressive (SOF10) decode: the QM stage's Annex G
+    scan stages over a grayscale 8-bit frame."""
+    return _jpeg_decode(content, 0xCA)
 
-    def do_scan(body: bytes, data: bytes) -> None:
-        if len(body) < 1:
-            raise ValueError("short JPEG SOS body (0 bytes)")
-        ns = body[0]
-        if len(body) < 4 + 2 * ns:
-            raise ValueError(f"short JPEG SOS body ({len(body)} bytes)")
-        sel = []
-        for i in range(ns):
-            sid, tt = body[1 + 2 * i], body[2 + 2 * i]
-            try:
-                ci = next(j for j, c in enumerate(comps) if c[0] == sid)
-            except StopIteration:
-                raise ValueError(f"JPEG scan references unknown component {sid}")
-            sel.append((ci, tt >> 4, tt & 0x0F))
-        ss, se, a = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-        ah, al = a >> 4, a & 0x0F
-        if ah != 0 and ah != al + 1:
-            raise ValueError(
-                f"corrupt JPEG: refinement approximation Ah={ah} Al={al}"
-            )
-        if ss > se or se > 63:
-            raise ValueError(f"corrupt JPEG: scan band {ss}..{se}")
-        br = _BitReader(data)
-        ri = ri_state["ri"]
-        rst_unit = [0]  # MCUs (interleaved scans) / blocks (non-interleaved)
 
-        def at_restart_boundary() -> bool:
-            """Call at the top of every unit: consumes the expected RSTn
-            (byte re-aligning) when this unit starts a new restart
-            segment and returns True so the caller resets per-segment
-            entropy state (T.81 E.2.4)."""
-            u = rst_unit[0]
-            rst_unit[0] = u + 1
-            if ri and u and u % ri == 0:
-                br.consume_restart((u // ri - 1) % 8)
-                return True
-            return False
+def _decode_jpeg_lossless(content: bytes) -> dict:
+    """Lossless (SOF3) decode: the Annex H predictive stage, grayscale
+    8-bit, point transform 0."""
+    return _jpeg_decode(content, 0xC3)
 
-        if ss == 0 and ah > 0:
-            # DC REFINEMENT scan (T.81 G.1.2.1): one raw bit per block,
-            # ORed into the coefficient at position Al.  No Huffman.
-            if se != 0:
-                raise ValueError("corrupt JPEG: DC scan with Se != 0")
-            if ns == len(comps):
-                for my in range(mcus_y):
-                    for mx in range(mcus_x):
-                        at_restart_boundary()  # raw bits: no state to reset
-                        for ci, _dc, _ac in sel:
-                            _cid, _qid, hs, vs = comps[ci]
-                            for dy in range(vs):
-                                for dx in range(hs):
-                                    if br.bits(1):
-                                        coeffs[ci][my * vs + dy][mx * hs + dx][0] |= (
-                                            1 << al
-                                        )
-            elif ns == 1:
-                ci = sel[0][0]
-                gh, gw = comp_grid(ci)
-                for by in range(gh):
-                    for bx in range(gw):
-                        at_restart_boundary()  # raw bits: no state to reset
-                        if br.bits(1):
-                            coeffs[ci][by][bx][0] |= 1 << al
-            else:
-                raise ValueError(
-                    "unsupported progressive DC scan component subset"
-                )
-        elif ss > 0 and ah > 0:
-            # AC REFINEMENT scan (T.81 G.1.2.3 / libjpeg
-            # decode_mcu_AC_refine): per block, run/size symbols place NEW
-            # +-(1<<Al) coefficients among ZERO-history positions while a
-            # correction bit is read for every nonzero-history coefficient
-            # passed over; EOBn starts a run whose covered blocks still
-            # consume correction bits for their nonzero coefficients.
-            if ns != 1:
-                raise ValueError("corrupt JPEG: interleaved AC scan")
-            ci, _dc, ac_id = sel[0]
-            if (1, ac_id) not in huff:
-                raise ValueError("JPEG scan references missing AC table")
-            tab = huff[(1, ac_id)]
-            gh, gw = comp_grid(ci)
-            p1, n1 = 1 << al, -1 << al
-            eobrun = 0
 
-            def correct(blk, k):
-                c = int(blk[k])
-                if br.bits(1) and (c & p1) == 0:
-                    blk[k] = c + (p1 if c >= 0 else n1)
-
-            for by in range(gh):
-                for bx in range(gw):
-                    if at_restart_boundary():
-                        if eobrun:
-                            raise ValueError(
-                                "corrupt JPEG: EOB run crosses restart boundary"
-                            )
-                    blk = coeffs[ci][by][bx]
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            sym = _huff_decode(br, tab)
-                            r, s = sym >> 4, sym & 0x0F
-                            if s == 0:
-                                if r != 15:
-                                    eobrun = (1 << r) + (br.bits(r) if r else 0)
-                                    break
-                                val = 0  # ZRL: skip 16 zero-history slots
-                            elif s == 1:
-                                val = p1 if br.bits(1) else n1
-                            else:
-                                raise ValueError(
-                                    "corrupt JPEG: refinement magnitude > 1"
-                                )
-                            while k <= se:
-                                if blk[k]:
-                                    correct(blk, k)
-                                else:
-                                    if r == 0:
-                                        break
-                                    r -= 1
-                                k += 1
-                            if val:
-                                if k > se:
-                                    raise ValueError(
-                                        "corrupt JPEG: refinement AC run "
-                                        "past the scan band"
-                                    )
-                                blk[k] = val
-                            k += 1
-                    if eobrun > 0:
-                        # finish this block under the EOB run: corrections
-                        # only, for every nonzero-history coefficient left
-                        while k <= se:
-                            if blk[k]:
-                                correct(blk, k)
-                            k += 1
-                        eobrun -= 1
-        elif ss == 0:
-            # DC scan: Se must be 0; interleaved when Ns == ncomp, else a
-            # single-component non-interleaved walk
-            if se != 0:
-                raise ValueError("corrupt JPEG: DC scan with Se != 0")
-            for ci, dc_id, _ac in sel:
-                if (0, dc_id) not in huff:
-                    raise ValueError("JPEG scan references missing DC table")
-            prev = {ci: 0 for ci, _, _ in sel}
-            if ns == len(comps):
-                for my in range(mcus_y):
-                    for mx in range(mcus_x):
-                        if at_restart_boundary():
-                            for c in prev:
-                                prev[c] = 0
-                        for ci, dc_id, _ac in sel:
-                            _cid, _qid, hs, vs = comps[ci]
-                            tab = huff[(0, dc_id)]
-                            for dy in range(vs):
-                                for dx in range(hs):
-                                    t = _huff_decode(br, tab)
-                                    diff = _extend(br.bits(t), t) if t else 0
-                                    prev[ci] += diff
-                                    coeffs[ci][my * vs + dy][mx * hs + dx][0] = (
-                                        prev[ci] << al
-                                    )
-            elif ns == 1:
-                ci, dc_id, _ac = sel[0]
-                gh, gw = comp_grid(ci)
-                tab = huff[(0, dc_id)]
-                for by in range(gh):
-                    for bx in range(gw):
-                        if at_restart_boundary():
-                            prev[ci] = 0
-                        t = _huff_decode(br, tab)
-                        diff = _extend(br.bits(t), t) if t else 0
-                        prev[ci] += diff
-                        coeffs[ci][by][bx][0] = prev[ci] << al
-            else:
-                raise ValueError(
-                    "unsupported progressive DC scan component subset"
-                )
-        else:
-            # AC scan: single component, non-interleaved, EOBRUN coding
-            if ns != 1:
-                raise ValueError("corrupt JPEG: interleaved AC scan")
-            ci, _dc, ac_id = sel[0]
-            if (1, ac_id) not in huff:
-                raise ValueError("JPEG scan references missing AC table")
-            tab = huff[(1, ac_id)]
-            gh, gw = comp_grid(ci)
-            eobrun = 0
-            for by in range(gh):
-                for bx in range(gw):
-                    if at_restart_boundary():
-                        if eobrun:
-                            raise ValueError(
-                                "corrupt JPEG: EOB run crosses restart boundary"
-                            )
-                    if eobrun:
-                        eobrun -= 1
-                        continue
-                    blk = coeffs[ci][by][bx]
-                    k = ss
-                    while k <= se:
-                        sym = _huff_decode(br, tab)
-                        r, s = sym >> 4, sym & 0x0F
-                        if s == 0:
-                            if r == 15:
-                                k += 16  # ZRL
-                                continue
-                            eobrun = (1 << r) + (br.bits(r) if r else 0) - 1
-                            break
-                        k += r
-                        if k > se:
-                            raise ValueError(
-                                "corrupt JPEG: AC run past the scan band"
-                            )
-                        blk[k] = _extend(br.bits(s), s) << al
-                        k += 1
-        # trailing full bytes after the final code desync the next scan's
-        # framing silently; refuse.  Legitimate slack: the final partially
-        # consumed padding byte, plus its stuffing 0x00 when the 1-fill
-        # landed on 0xFF.
-        slack = len(data) - br.pos
-        if slack > 1 and not (slack == 2 and data[-2:] == b"\xff\x00"):
-            raise ValueError(f"trailing bytes in JPEG scan ({slack})")
-
-    while True:
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: marker walk ran out")
-        if content[pos] != 0xFF:
-            raise ValueError(f"corrupt JPEG: lost marker sync at {pos}")
-        marker = content[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if pos + 2 > len(content):
-            raise ValueError("truncated JPEG: segment length cut")
-        ln = int.from_bytes(content[pos : pos + 2], "big")
-        body = content[pos + 2 : pos + ln]
-        if ln < 2 or len(body) < ln - 2:
-            raise ValueError("truncated JPEG: segment body cut")
-        if marker == 0xDB:
-            at = 0
-            while at < len(body):
-                pq, tq = body[at] >> 4, body[at] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                if at + 65 > len(body):
-                    raise ValueError("truncated JPEG: DQT cut")
-                qt[tq] = list(body[at + 1 : at + 65])
-                at += 65
-        elif marker == 0xC4:
-            at = 0
-            while at < len(body):
-                tc, th = body[at] >> 4, body[at] & 0x0F
-                lengths = list(body[at + 1 : at + 17])
-                nsym = sum(lengths)
-                symbols = list(body[at + 17 : at + 17 + nsym])
-                if len(symbols) < nsym:
-                    raise ValueError("truncated JPEG: DHT cut")
-                codes = _canonical_codes(lengths, symbols)
-                huff[(tc, th)] = {(c, n): s for s, (c, n) in codes.items()}
-                at += 17 + nsym
-        elif marker == 0xC2:
-            parse_sof(body)
-        elif marker == 0xDD:
-            # DRI (r16): restart intervals decode for real in every
-            # progressive scan type.
-            if len(body) < 2:
-                raise ValueError("truncated JPEG: DRI cut")
-            ri_state["ri"] = int.from_bytes(body[:2], "big")
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("corrupt JPEG: mixed SOF markers")
-        elif marker == 0xDA:
-            if sof is None:
-                raise ValueError("JPEG scan before SOF2")
-            # entropy data runs to the next non-stuffing, non-RST marker
-            end = pos + ln
-            while True:
-                if end + 1 >= len(content):
-                    raise ValueError("truncated JPEG: scan without terminator")
-                if content[end] == 0xFF and content[end + 1] != 0x00:
-                    if 0xD0 <= content[end + 1] <= 0xD7:
-                        if not ri_state["ri"]:
-                            raise ValueError(
-                                "corrupt JPEG: restart marker without DRI"
-                            )
-                        end += 2  # interior RSTn: part of this scan's data
-                        continue
-                    break
-                end += 1
-            do_scan(body, content[pos + ln : end])
-            saw_scan = True
-            pos = end
-            continue
-        pos += ln
-    if pos != len(content):
-        raise ValueError(
-            f"trailing bytes after JPEG EOI ({len(content) - pos})"
-        )
-    if sof is None or not saw_scan:
-        raise ValueError("progressive JPEG missing SOF2 or scans")
-    # dequantize + de-zigzag + shared IDCT/emission
-    blocks: list[list] = [[] for _ in comps]
-    for ci, (_cid, qid, hs, vs) in enumerate(comps):
-        if qid not in qt:
-            raise ValueError(f"JPEG references missing quant table {qid}")
-        q = np.array(qt[qid], dtype=np.int64)
-        arr = coeffs[ci] * q  # (by, bx, 64) dequantized, zigzag order
-        dez = np.zeros(arr.shape[:2] + (8, 8))
-        for k2, (r, c) in enumerate(_ZIGZAG):
-            dez[:, :, r, c] = arr[:, :, k2]
-        for by in range(arr.shape[0]):
-            for bx in range(arr.shape[1]):
-                blocks[ci].append((8 * by, 8 * bx, dez[by][bx]))
-    pw = [mcus_x * 8 * c[2] for c in comps]
-    ph = [mcus_y * 8 * c[3] for c in comps]
-    emit_comps = [(c[0], None, c[2], c[3]) for c in comps]
-    return _jpeg_emit(blocks, emit_comps, hmax, vmax, pw, ph, width, height)
+def _decode_jpeg_hierarchical(content: bytes) -> dict:
+    """Hierarchical (DHP, Annex J) decode: a non-differential first frame,
+    then EXP reference expansions and differential frames accumulated
+    onto the reference; grayscale 8-bit sequential Huffman frames."""
+    return _jpeg_decode(content, 0xDE)
 
 
 def _box(btype: bytes, body: bytes) -> bytes:
@@ -6428,17 +4744,11 @@ def decode_media(content: bytes, media_type: str, strict: bool = False):
     REAL pixel/sample decode for the formats a pure-Python decoder can
     honestly cover: 24-bit BMP, binary PPM, 16-bit PCM WAV, 8-bit
     RGB/RGBA PNG (stdlib zlib is the whole codec),
-    GIF (sequential or four-pass interlaced), and baseline JPEG
-    (grayscale, 4:4:4 color, and 4:2:0/4:2:2 chroma-subsampled via
-    replication upsampling); PNG covers sequential and Adam7 layouts.
-    Partial-MCU dimensions decode via pad + crop.
-    Progressive (SOF2) scans decode for real, including
-    successive-approximation refinement; restart intervals (DRI/RST)
-    decode for real in BOTH baseline and progressive streams, and
-    12-bit grayscale SOF1 decodes for real (r16).
-    r17 closed the JPEG matrix (arithmetic sequential + progressive,
-    hierarchical, lossless), the PNG layout matrix (gray+alpha,
-    RGBA16), compressed audio (G.711 both laws, IMA ADPCM, 8/24/32-bit
+    GIF (sequential or four-pass interlaced), and JPEG through
+    :func:`decode_jpeg_gray` (sequential, progressive, arithmetic,
+    lossless and hierarchical processes); PNG covers sequential and
+    Adam7 layouts.  The decoders also cover the PNG layout matrix
+    (gray+alpha, RGBA16), compressed audio (G.711 both laws, IMA ADPCM, 8/24/32-bit
     PCM), RLE8 BMP, and baseline TIFF (both byte orders, strips,
     PackBits).  The remaining payload class (codec video) returns
     header metadata only --
@@ -6481,7 +4791,7 @@ def decode_media(content: bytes, media_type: str, strict: bool = False):
         except ValueError:
             if strict:
                 raise
-            pass  # subsampled/progressive/synthetic JPEG: header metadata
+            pass  # unsupported/synthetic JPEG: header metadata
     if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
         try:
             return decode_wav_pcm(content)

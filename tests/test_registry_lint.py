@@ -71,6 +71,29 @@ def test_every_local_only_query_names_a_driver_checked_sibling():
         )
 
 
+def test_coverage_local_only_notes_match_registry():
+    """Every ```name` *(... local-only -> `X` ...)*`` note in COVERAGE.md
+    names a ``driver=False`` query whose registry ``sibling`` is ``X``:
+    the notes restate the registry, so a re-pointed sibling or a promoted
+    query must update its note in the same change."""
+    import re
+    from pathlib import Path
+
+    text = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
+    specs = all_specs()
+    notes = [
+        (name, m.group(1))
+        for name, inner in re.findall(r"`(\w+)` \*\((.*?)\)\*", text)
+        for m in re.finditer(r"local-only(?: r\d+)? -> `(\w+)`", inner)
+    ]
+    assert notes, "no local-only notes found; the lint is vacuous"
+    bad = [
+        (name, sib) for name, sib in notes
+        if name not in specs or specs[name].driver or specs[name].sibling != sib
+    ]
+    assert not bad, f"COVERAGE.md notes contradicting the registry: {bad}"
+
+
 def test_never_driver_checked_entries_hold_a_driver_slot():
     """Freshness-era rule (r13): the never-driver-checked backlog drained
     to 0 and must STAY empty — any entry that has never appeared in a
